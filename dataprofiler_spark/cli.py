@@ -115,9 +115,10 @@ def build_parser() -> argparse.ArgumentParser:
         "--equality-udf-mode",
         choices=["auto", "full", "prefilter"],
         default="auto",
-        help="token-equality check: full = UDF over all rows (bit-exact); "
-        "prefilter = xxhash64 digest join, UDF confirms mismatches (scale "
-        "path); auto = full when exact, prefilter with --approx",
+        help="token-equality check: full = Arrow UDF over every joined row "
+        "(bit-exact); prefilter = join on (xxhash64, size) digests, no UDF "
+        "(scale path; equal digests read as equal); auto = full when exact, "
+        "prefilter with --approx",
     )
     p.add_argument(
         "--violation-cap",

@@ -1,30 +1,43 @@
-"""Constraint suite: per-partition pass/fail verdicts + violation rows.
+"""Constraint suite: per-partition verdicts and the violation rows behind them.
 
-The reference only *records* constraints as metadata (FKs at
-/root/reference/src/db/schema_extractor.py:231-278, uniqueness as the
-is_unique profile verdict at /root/reference/src/core/metrics.py:287, row
-counts at profiler.py:91's ``row_count > 0`` SodaCL check). The rebuild
-upgrades them to actual **data checks** (north_star): every check emits
+The reference only *records* constraints as metadata (foreign keys in its
+schema_extractor.py:231-278, uniqueness as the is_unique profile verdict
+in metrics.py:287, the generated SodaCL ``row_count > 0`` check in
+profiler.py:91). Here they are data checks with two outputs:
 
-  verdicts:   (table_name, <part_col>, check_name, row_count,
+  verdicts:   (table_name, partition_value, check_name, row_count,
                violation_count, passed)
-  violations: (check_name, <part_col>, key, detail) — capped per check,
-              never collected unbounded to the driver (SURVEY.md §7.4).
+  violations: (check_name, partition_value, key, detail) — at most
+              ``violation_cap`` rows per (check, partition), never
+              collected unbounded to the driver (SURVEY.md §7.4).
 
-Scale notes (10^12-row design point):
-  * All row-level invariants fold into ONE conditional-aggregation scan
-    (no per-check scans).
-  * Uniqueness = single shuffle on the key via a count window (one
-    exchange; a groupBy+join-back would shuffle the table twice).
-  * RI = broadcast left-anti join when the parent is small (dimension
-    tables always are); falls back to shuffle anti-join + AQE otherwise.
-  * Reference-equality = shuffle join on doc_id + ONE vectorized Arrow
-    pandas UDF (with the BPE encoder, one of the engine's two UDFs).
+Every check builds ONE check frame (``FRAME_COLS``) that holds its failing
+rows and the rows its verdict counts:
+
+  * a failing row stands for ``n`` >= 1 identical input rows and has
+    ``row_count`` 0;
+  * a count row has ``key`` and ``detail`` NULL, ``n`` 0, and in
+    ``row_count`` the rows of its partition that the check covers.
+
+``verdicts_and_violations`` derives both outputs from that frame: verdicts
+sum ``n`` and ``row_count`` per (check, partition) under the check's pass
+rule; violations repeat each failing row ``n`` times under the
+per-(check, partition) cap. A caller that persists the frame runs every
+check plan, and the equality UDF, once for both outputs.
+
+Plans (10^12-row design point):
+  * Row checks, referential integrity and row_count_gt_0: ONE scan through
+    a broadcast join with the registered partitions and ONE aggregate.
+  * Uniqueness: a two-level aggregate — (key, partition) pair counts
+    combined map-side, the global per-key count a window over the pairs.
+  * Token equality with the golden copy: ONE join on doc_id. ``full`` mode
+    runs the Arrow UDF once per joined row; ``prefilter`` joins
+    (xxhash64, size) digests and runs no UDF.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -33,10 +46,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataprofiler_spark.functions.expressions import token_range_ok
+from dataprofiler_spark.plans.windows import top_rows_per_group
 from dataprofiler_spark.sources.synthetic import VOCAB_SIZE
 
 VERDICT_COLS = ["table_name", "partition_value", "check_name", "row_count", "violation_count", "passed"]
 VIOLATION_COLS = ["check_name", "partition_value", "key", "detail"]
+FRAME_COLS = ["check_name", "partition_value", "key", "detail", "n", "row_count"]
+EMPTY_CHECK = "row_count_gt_0"
 
 
 @dataclass(frozen=True)
@@ -85,246 +101,151 @@ def sequence_row_checks(
     ]
 
 
-def run_row_checks(
-    df: DataFrame,
-    checks: list[RowCheck],
-    table_name: str,
-    part_col: str = "source",
-    key_col: str = "doc_id",
-    violation_cap: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
-    """All row-level checks in ONE conditional-aggregation pass (verdicts)
-    plus one filtered scan (violations; filter is pushed to the scan)."""
-    aggs = [F.count(F.lit(1)).alias("row_count")]
-    for i, ck in enumerate(checks):
-        aggs.append(F.sum(F.when(ck.fail_predicate, 1).otherwise(0)).alias(f"__v_{i}"))
-    wide = df.groupBy(part_col).agg(*aggs)
+def _frame_entry(check_name: Column, n: Column, row_count: Column) -> Column:
+    return F.struct(
+        check_name.alias("check_name"),
+        n.cast("long").alias("n"),
+        row_count.cast("long").alias("row_count"),
+    )
 
-    entries = F.array(
-        *[
+
+def _tally(
+    rows: DataFrame,
+    part_col: str,
+    failures: list[tuple[str, Column, Column, Column]],
+    counted: list[str],
+    weight: Column | None = None,
+    registered: DataFrame | None = None,
+) -> DataFrame:
+    """Check frame of `failures` from ONE aggregate over `rows`.
+
+    failures: (check_name, fail_predicate, key, detail) per check. Each row
+    of `rows` stands for `weight` input rows (default 1). Identical failing
+    rows collapse into one with their count in `n`. Every partition with
+    rows gets one count row per `counted` check; with `registered` (a frame
+    of `part_col` values) every registered partition, observed or not,
+    also gets a row_count_gt_0 count row."""
+    none = F.lit(None).cast("string")
+    count_mark = F.struct(none.alias("check_name"), none.alias("key"), none.alias("detail"))
+    entries = [count_mark] + [
+        F.when(
+            pred,
             F.struct(
-                F.lit(ck.name).alias("check_name"),
-                F.col(f"__v_{i}").cast("long").alias("violation_count"),
-                F.lit(ck.threshold_rate).alias("threshold"),
-            )
-            for i, ck in enumerate(checks)
-        ]
-    )
-    verdicts = (
-        wide.select(F.col(part_col), F.col("row_count"), F.explode(entries).alias("e"))
-        .select(
-            F.lit(table_name).alias("table_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.col("e.check_name").alias("check_name"),
-            F.col("row_count").cast("long").alias("row_count"),
-            F.col("e.violation_count").alias("violation_count"),
-            (
-                F.col("e.violation_count")
-                <= F.col("e.threshold") * F.col("row_count")
-            ).alias("passed"),
-        )
-    )
-
-    # Violation rows: one scan, filter(any-fail) pushed down; per-check cap
-    # via window (violations are sparse by construction, so this is cheap).
-    fails = F.array_compact(
-        F.array(
-            *[
-                F.when(ck.fail_predicate, F.struct(F.lit(ck.name).alias("check_name"), ck.detail.alias("detail")))
-                for ck in checks
-            ]
-        )
-    )
-    any_fail = None
-    for ck in checks:
-        any_fail = ck.fail_predicate if any_fail is None else (any_fail | ck.fail_predicate)
-    # Cap per (check, PARTITION): a window keyed on check_name alone is a
-    # single-reducer funnel — under mass failure (wholly-corrupt input,
-    # exactly when violations matter) every violating row of one check
-    # would shuffle to ONE task before the row_number cap. top_rows_per_group
-    # additionally pre-trims map-side so even one partition's mass failure
-    # never sorts in a single task.
-    from dataprofiler_spark.plans.windows import top_rows_per_group
-
-    violations = top_rows_per_group(
-        df.filter(any_fail)
-        .select(
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.col(key_col).cast("string").alias("key"),
-            F.explode(fails).alias("f"),
-        )
-        .select(F.col("f.check_name").alias("check_name"), "partition_value", "key", F.col("f.detail").alias("detail")),
-        ["check_name", "partition_value"],
-        ["key"],
-        violation_cap,
-    )
-    return verdicts, violations
-
-
-def _cap_per_partition(violations: DataFrame, cap: int) -> DataFrame:
-    """Violation cap PER (check, partition) — each single-check violation
-    frame has a constant check_name, so a window on partition_value alone
-    gives the documented cap × partitions bound. A global .limit() would
-    both funnel rows through one task under mass failure AND starve later
-    partitions of their violation budget (rows beyond the first cap's
-    worth read as 'partition clean').
-
-    Skew-safe via plans/windows.top_rows_per_group: under a mass failure
-    (a whole 10¹²-row partition violating — exactly when violations
-    matter) a single rank window would sort the partition's entire
-    violation set in one task."""
-    from dataprofiler_spark.plans.windows import top_rows_per_group
-
-    return top_rows_per_group(violations, ["partition_value"], ["key"], cap)
-
-
-def uniqueness_check(
-    df: DataFrame,
-    table_name: str,
-    key_col: str = "doc_id",
-    part_col: str = "source",
-    violation_cap: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
-    """Exact uniqueness with violation rows, reference verdict semantics
-    at metrics.py:287. Duplication is GLOBAL per key; violations and
-    counts are attributed to partitions. NULL keys are never duplicates
-    (COUNT DISTINCT semantics — the null-rate check's job) but do count
-    toward row_count.
-
-    Plan (r4 rewrite): TWO-LEVEL AGGREGATE, not a count window. The
-    window plan shuffled every row on the key and funneled each hot
-    duplicate key (and every NULL) through one task — windows cannot
-    map-side combine. Here groupBy(key, partition) collapses duplicates
-    map-side (a key duplicated 10⁹× in one partition leaves each map task
-    as ONE narrow row), the global per-key count is a second narrow
-    aggregate, and the per-partition verdict rolls up from
-    distinct-(key, partition)-sized frames. One scan, shuffles carry
-    distinct pairs instead of rows, no skew funnel for ANY key
-    distribution. Violation rows (one per duplicate ROW, identical
-    content per key) are reconstructed from the pair counts with
-    explode(sequence(...)) — no second scan; the sequence length is
-    clamped to the violation cap so a 10⁹-duplicate key materializes cap
-    rows, not 10⁹ (same capped output: rows of one key are
-    interchangeable)."""
-    key = F.col(key_col)
-    pk = df.groupBy(key.alias("__k"), F.col(part_col)).agg(
-        F.count(F.lit(1)).alias("__cnt_pk")
-    )
-    # global per-key count via a window over the PAIR frame (not a
-    # self-join — referencing pk twice re-executes its scan, gotcha 16).
-    # This window is safe where the old row-level one wasn't: a key's
-    # group holds at most #partitions pair rows regardless of how many
-    # duplicate ROWS it has, so there is no funnel to salt away.
-    joined = pk.withColumn(
-        "__cnt_k", F.sum("__cnt_pk").over(Window.partitionBy("__k"))
-    )
-    is_dup = F.col("__k").isNotNull() & (F.col("__cnt_k") > 1)
-    verdicts = (
-        joined.groupBy(part_col)
-        .agg(
-            F.sum("__cnt_pk").alias("row_count"),
-            F.sum(F.when(is_dup, F.col("__cnt_pk")).otherwise(0)).alias(
-                "violation_count"
+                F.lit(name).alias("check_name"),
+                key.cast("string").alias("key"),
+                detail.alias("detail"),
             ),
         )
-        .select(
-            F.lit(table_name).alias("table_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.lit(f"unique_{key_col}").alias("check_name"),
-            F.col("row_count").cast("long"),
-            F.col("violation_count").cast("long").alias("violation_count"),
-            (F.col("violation_count") == 0).alias("passed"),
-        )
-    )
-    violations = _cap_per_partition(
-        joined.filter(is_dup)
-        .select(
-            F.lit(f"unique_{key_col}").alias("check_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.col("__k").cast("string").alias("key"),
-            F.concat(
-                F.lit("duplicate_count="), F.col("__cnt_k").cast("string")
-            ).alias("detail"),
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.least(F.col("__cnt_pk"), F.lit(violation_cap).cast("long")),
-                )
-            ).alias("__i"),
-        )
-        .drop("__i"),
-        violation_cap,
-    )
-    return verdicts, violations
-
-
-def referential_integrity_check(
-    child: DataFrame,
-    parent: DataFrame,
-    table_name: str,
-    key_col: str = "source",
-    part_col: str = "source",
-    key_col_parent: str | None = None,
-    violation_cap: int = 1000,
-    broadcast_parent: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """RI as a real data check (left-anti join), upgrading the reference's
-    FK-metadata capture (schema_extractor.py:231-278) per north_star.
-    Parent key sets are tiny → broadcast; no shuffle of the child."""
-    pk = key_col_parent or key_col
-    keys = parent.select(F.col(pk).alias(key_col)).distinct()
-    if broadcast_parent:
-        keys = F.broadcast(keys)
-    # SQL FK semantics (MATCH SIMPLE): a NULL foreign key does NOT
-    # violate referential integrity — null-ness is the NOT-NULL check's
-    # job. The anti join would otherwise count every NULL key as an
-    # orphan (found by the randomized differential test).
-    orphans = child.filter(F.col(key_col).isNotNull()).join(keys, key_col, "left_anti")
-
-    per_part = child.groupBy(part_col).agg(F.count(F.lit(1)).alias("row_count"))
-    bad_part = orphans.groupBy(part_col).agg(F.count(F.lit(1)).alias("violation_count"))
-    verdicts = per_part.join(bad_part, part_col, "left").select(
-        F.lit(table_name).alias("table_name"),
+        for name, pred, key, detail in failures
+    ]
+    staged = rows.select(
         F.col(part_col).cast("string").alias("partition_value"),
-        F.lit(f"ri_{key_col}").alias("check_name"),
-        F.col("row_count").cast("long"),
-        F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-        (F.coalesce(F.col("violation_count"), F.lit(0)) == 0).alias("passed"),
+        (F.lit(1) if weight is None else weight).cast("long").alias("__w"),
+        F.lit(False).alias("__reg"),
+        F.array_compact(F.array(*entries)).alias("__e"),
     )
-    violations = _cap_per_partition(
-        orphans.select(
-            F.lit(f"ri_{key_col}").alias("check_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.col(key_col).cast("string").alias("key"),
-            F.concat(F.lit("orphan "), F.lit(key_col), F.lit("=") , F.col(key_col).cast("string")).alias("detail"),
-        ),
-        violation_cap,
+    if registered is not None:
+        staged = staged.unionByName(
+            registered.select(
+                F.col(part_col).cast("string").alias("partition_value"),
+                F.lit(0).cast("long").alias("__w"),
+                F.lit(True).alias("__reg"),
+                F.array(count_mark).alias("__e"),
+            )
+        )
+    # explode_outer, though the count mark keeps every array non-empty: for
+    # an inner explode the optimizer infers a size(array) > 0 filter below
+    # it, which evaluates every fail predicate — and the equality UDF — twice
+    tallied = (
+        staged.select("partition_value", "__w", "__reg", F.explode_outer("__e").alias("e"))
+        .select("partition_value", "__w", "__reg", "e.*")
+        .groupBy("check_name", "partition_value", "key", "detail")
+        .agg(F.sum("__w").alias("__c"), F.max("__reg").alias("__reg"))
     )
-    return verdicts, violations
+    c = F.col("__c")
+    count_rows = [F.when(c > 0, _frame_entry(F.lit(name), F.lit(0), c)) for name in counted]
+    if registered is not None:
+        count_rows.append(F.when(F.col("__reg"), _frame_entry(F.lit(EMPTY_CHECK), F.lit(0), c)))
+    expanded = F.when(
+        F.col("check_name").isNull(), F.array_compact(F.array(*count_rows))
+    ).otherwise(F.array(_frame_entry(F.col("check_name"), c, F.lit(0))))
+    return (
+        tallied.select("partition_value", "key", "detail", F.explode(expanded).alias("e"))
+        .select("partition_value", "key", "detail", "e.*")
+        .select(*FRAME_COLS)
+    )
 
 
-def empty_partition_check(
+def row_check_frame(
     df: DataFrame,
-    parts_ref: DataFrame,
-    table_name: str,
+    checks: list[RowCheck],
+    part_col: str = "source",
+    key_col: str = "doc_id",
+    registered: DataFrame | None = None,
+) -> DataFrame:
+    """Check frame of the row checks, from ONE scan of `df` and one
+    aggregate (the scan never re-runs per check).
+
+    With `registered` (the registered partitions, one `part_col` value per
+    row) the same scan adds:
+      * ri_<part_col>: referential integrity of the partition value, the
+        reference's FK metadata (schema_extractor.py:231-278) as a data
+        check. A broadcast join flags orphans and never shuffles `df`.
+        A NULL value never violates (SQL MATCH SIMPLE; null-ness is the
+        null check's job).
+      * row_count_gt_0 for every registered partition, observed or not
+        (profiler.py:91's SodaCL check): empty ones are visible at all only
+        because the registered list says they exist."""
+    key = F.col(key_col)
+    failures = [(ck.name, ck.fail_predicate, key, ck.detail) for ck in checks]
+    counted = [ck.name for ck in checks]
+    if registered is not None:
+        part = F.col(part_col)
+        known = registered.select(part_col).distinct().withColumn("__known", F.lit(True))
+        df = df.join(F.broadcast(known), part_col, "left")
+        ri = f"ri_{part_col}"
+        failures.append(
+            (
+                ri,
+                part.isNotNull() & F.col("__known").isNull(),
+                key,
+                F.concat(F.lit(f"orphan {part_col}="), part.cast("string")),
+            )
+        )
+        counted.append(ri)
+    return _tally(df, part_col, failures, counted, registered=registered)
+
+
+def uniqueness_frame(
+    df: DataFrame,
+    key_col: str = "doc_id",
     part_col: str = "source",
 ) -> DataFrame:
-    """row_count > 0 per *registered* partition (reference precedent:
-    the generated SodaCL `row_count > 0` check, profiler.py:91).
-    Registered partitions come from the parent/reference table so empty
-    ones are visible at all."""
-    observed = df.groupBy(part_col).agg(F.count(F.lit(1)).alias("row_count"))
-    return (
-        F.broadcast(parts_ref.select(part_col).distinct())
-        .join(observed, part_col, "left")
-        .select(
-            F.lit(table_name).alias("table_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.lit("row_count_gt_0").alias("check_name"),
-            F.coalesce(F.col("row_count"), F.lit(0)).cast("long").alias("row_count"),
-            F.when(F.coalesce(F.col("row_count"), F.lit(0)) == 0, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("violation_count"),
-            (F.coalesce(F.col("row_count"), F.lit(0)) > 0).alias("passed"),
-        )
+    """Check frame of unique_<key_col>: exact uniqueness with the reference's
+    is_unique semantics (metrics.py:287). Duplication is GLOBAL per key;
+    each row of a duplicated key counts against its own partition. NULL
+    keys are never duplicates (COUNT DISTINCT semantics — the null check's
+    job) but do count toward row_count.
+
+    Plan: a TWO-LEVEL AGGREGATE. groupBy(key, partition) collapses
+    duplicates map-side (a key duplicated 10^9 times in one partition
+    leaves each map task as ONE narrow row), and the global per-key count
+    is a window over those pairs — a key's window group holds at most
+    #partitions rows however many duplicate ROWS it has, so neither a hot
+    key nor the NULL key funnels through one task. A duplicated pair is one
+    failing row with its pair count as `n`."""
+    pairs = df.groupBy(F.col(key_col).alias("__k"), F.col(part_col)).agg(
+        F.count(F.lit(1)).alias("__cnt_pk")
+    )
+    # a window over the PAIR frame, not a self-join: referencing pairs
+    # twice would re-execute its scan
+    pairs = pairs.withColumn("__cnt_k", F.sum("__cnt_pk").over(Window.partitionBy("__k")))
+    name = f"unique_{key_col}"
+    duplicated = F.col("__k").isNotNull() & (F.col("__cnt_k") > 1)
+    detail = F.concat(F.lit("duplicate_count="), F.col("__cnt_k").cast("string"))
+    return _tally(
+        pairs, part_col, [(name, duplicated, F.col("__k"), detail)], [name],
+        weight=F.col("__cnt_pk"),
     )
 
 
@@ -384,105 +305,110 @@ def arrays_equal(a: Column, b: Column) -> Column:
     return udf(a, b)
 
 
-def reference_equality_check(
+def equality_frame(
     df: DataFrame,
     reference: DataFrame,
-    table_name: str,
     key_col: str = "doc_id",
     array_col: str = "tokens",
     part_col: str = "source",
-    violation_cap: int = 1000,
     udf_mode: str = "full",
-) -> tuple[DataFrame, DataFrame]:
-    """Per-row invariant: tokens must equal the golden copy exactly
-    (input_hint). Shuffle equi-join on doc_id, then the Arrow-vectorized
-    pandas UDF over the joined pair. Rows missing from the reference are
-    not compared (uniqueness/RI checks own those).
+) -> DataFrame:
+    """Check frame of <array_col>_match_reference: the array must equal the
+    golden copy's exactly (both NULL counts as equal). ONE inner join on
+    `key_col`; row_count is the joined rows, so only partitions with
+    joined rows get a verdict. Rows missing from the reference are not
+    compared (uniqueness and RI own those).
 
     udf_mode:
-      "full"      — UDF over every joined row: bit-exact, but ships both
-                    token arrays through Arrow (~2× table bytes).
-      "prefilter" — JVM-side xxhash64(tokens) comparison routes rows; the
-                    UDF re-confirms ONLY hash-mismatched rows (the
-                    violations, by construction sparse), so Arrow traffic
-                    is proportional to violations, not table size. A
-                    violation can never be missed by a collision (unequal
-                    arrays with equal hashes read as equal: probability
-                    2^-64 per row — documented trade-off for the
-                    10^12-row path)."""
-    check_name = f"{array_col}_match_reference"
+      "full"      — the Arrow UDF compares every joined pair once: bit-exact,
+                    but both arrays cross the shuffle and Arrow.
+      "prefilter" — both sides reduce map-side to (key, xxhash64, size)
+                    digests, so the join never moves an array, and no UDF
+                    runs: a digest mismatch proves the arrays differ, and
+                    the `len=… ref_len=…` detail comes from the sizes.
+                    Unequal arrays with equal digests read as equal: a hash
+                    collision (2^-64 per row), or arrays that differ only
+                    in where their NULL elements sit (xxhash64 skips NULL
+                    elements; token ids are never NULL)."""
+    name = f"{array_col}_match_reference"
+    left = df.filter(F.col(key_col).isNotNull())
     if udf_mode == "prefilter":
-        # Scale path: NEVER shuffle the token arrays. Both sides reduce to
-        # (key, xxhash64(tokens)) map-side — the equi-join moves fixed-width
-        # digests (a sort-merge join on full arrays at 10^12 rows sorts and
-        # spills terabytes of payload; measured 6× slower at bench scale).
-        # The pandas UDF then re-confirms ONLY the hash-mismatched keys,
-        # fetched back via a broadcast semi-join (sparse by construction).
-        # Note: a when(hash_eq, udf(...)) would NOT skip the UDF —
-        # ExtractPythonUDFs evaluates python UDFs unconditionally.
-        left = df.filter(F.col(key_col).isNotNull()).select(
-            key_col, part_col, F.xxhash64(F.col(array_col)).alias("__h1")
+        left = left.select(
+            key_col, part_col,
+            F.xxhash64(array_col).alias("__h"), F.size(array_col).alias("__len"),
         )
-        right = reference.select(key_col, F.xxhash64(F.col(array_col)).alias("__h2"))
-        # SHUFFLE_HASH: rows are fixed-width digests, so the build side is
-        # tiny per partition — a sort-merge join would sort both sides for
-        # nothing (measured ~2× slower at 8M rows)
-        joined = left.join(right.hint("SHUFFLE_HASH"), key_col, "inner")
-        eq = F.col("__h1") == F.col("__h2")
-
-        # fetch budget per PARTITION (skew-safe rank), not a global limit —
-        # under mass mismatch a global budget is spent entirely on the
-        # first partition and the rest report zero confirmed violations
-        from dataprofiler_spark.plans.windows import top_rows_per_group
-
-        mismatch_keys = top_rows_per_group(
-            joined.filter(~eq).select(key_col, part_col),
-            [part_col],
-            [key_col],
-            violation_cap * 2,
+        right = reference.select(
+            key_col, F.xxhash64(array_col).alias("__ref_h"), F.size(array_col).alias("__ref_len")
         )
-        arrs = df.join(F.broadcast(mismatch_keys.select(key_col)), key_col).select(
-            key_col, part_col, array_col
+        # SHUFFLE_HASH: fixed-width digest rows make the build side tiny
+        # per partition; a sort-merge join would sort both sides for nothing
+        joined = left.join(right.hint("SHUFFLE_HASH"), key_col)
+        mismatch = (F.col("__h") != F.col("__ref_h")) | ~F.col("__len").eqNullSafe(
+            F.col("__ref_len")
         )
-        ref_arrs = reference.join(
-            F.broadcast(mismatch_keys.select(key_col)), key_col
-        ).select(key_col, F.col(array_col).alias("__ref_arr"))
-        mismatched = arrs.join(ref_arrs, key_col)
-        confirm = arrays_equal(F.col(array_col), F.col("__ref_arr"))
     else:
-        ref = reference.select(F.col(key_col), F.col(array_col).alias("__ref_arr"))
-        joined = (
-            df.filter(F.col(key_col).isNotNull())
-            .select(key_col, array_col, part_col)
-            .join(ref, key_col, "inner")
-            .withColumn("__eq", arrays_equal(F.col(array_col), F.col("__ref_arr")))
+        right = reference.select(key_col, F.col(array_col).alias("__ref_arr"))
+        joined = left.select(key_col, part_col, array_col).join(right, key_col).select(
+            key_col, part_col,
+            arrays_equal(F.col(array_col), F.col("__ref_arr")).alias("__eq"),
+            F.size(array_col).alias("__len"), F.size("__ref_arr").alias("__ref_len"),
         )
-        eq = F.col("__eq")
-        mismatched = joined.filter(~eq)
-        confirm = F.lit(False)  # already exact
+        mismatch = ~F.col("__eq")
+    detail = F.concat(
+        F.lit("len="), F.col("__len").cast("string"),
+        F.lit(" ref_len="), F.col("__ref_len").cast("string"),
+    )
+    return _tally(joined, part_col, [(name, mismatch, F.col(key_col), detail)], [name])
 
-    per_part = joined.groupBy(part_col).agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.sum(F.when(~eq, 1).otherwise(0)).alias("violation_count"),
+
+def verdicts_and_violations(
+    frame: DataFrame,
+    table_name: str,
+    violation_cap: int = 1000,
+    thresholds: dict[str, float] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Verdicts and capped violation rows, both from one check frame.
+
+    Verdicts: per (check, partition), violation_count = sum(n) and
+    row_count = sum(row_count); the check passes while violation_count <=
+    its rate in `thresholds` (default 0) × row_count. row_count_gt_0 has no
+    failing rows: its one violation is an empty registered partition.
+
+    Violations: each failing row repeated n times — at most the cap, rows
+    of one failing row being identical — then at most `violation_cap` rows
+    per (check, partition). The cap window is keyed on both: keyed on the
+    check alone, one reducer would take every violating row of a check
+    under mass failure, and a global limit would starve later partitions
+    of their budget (rows beyond the first cap's worth would read as
+    'partition clean'). top_rows_per_group pre-trims map-side, so even one
+    partition's mass failure never sorts in a single task."""
+    check, rc = F.col("check_name"), F.col("row_count")
+    rate = F.lit(0.0)
+    for name, t in (thresholds or {}).items():
+        rate = F.when(check == name, F.lit(t)).otherwise(rate)
+    vc = F.when(check == EMPTY_CHECK, (rc == 0).cast("long")).otherwise(F.col("violation_count"))
+    verdicts = (
+        frame.groupBy("check_name", "partition_value")
+        .agg(F.sum("n").alias("violation_count"), F.sum("row_count").alias("row_count"))
+        .select(
+            F.lit(table_name).alias("table_name"),
+            "partition_value",
+            "check_name",
+            "row_count",
+            vc.alias("violation_count"),
+            (vc <= rate * rc).alias("passed"),
+        )
     )
-    verdicts = per_part.select(
-        F.lit(table_name).alias("table_name"),
-        F.col(part_col).cast("string").alias("partition_value"),
-        F.lit(f"{array_col}_match_reference").alias("check_name"),
-        F.col("row_count").cast("long"),
-        F.col("violation_count").cast("long"),
-        (F.col("violation_count") == 0).alias("passed"),
-    )
-    violations = _cap_per_partition(
-        mismatched.filter(~confirm).select(
-            F.lit(f"{array_col}_match_reference").alias("check_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.col(key_col).cast("string").alias("key"),
-            F.concat(
-                F.lit("len="), F.size(array_col).cast("string"),
-                F.lit(" ref_len="), F.size("__ref_arr").cast("string"),
-            ).alias("detail"),
-        ),
+    cap = F.lit(violation_cap).cast("long")
+    violations = top_rows_per_group(
+        frame.filter(F.col("n") > 0)
+        .select(
+            *VIOLATION_COLS,
+            F.explode(F.sequence(F.lit(1).cast("long"), F.least(F.col("n"), cap))).alias("__i"),
+        )
+        .drop("__i"),
+        ["check_name", "partition_value"],
+        ["key"],
         violation_cap,
     )
     return verdicts, violations
@@ -492,92 +418,9 @@ def reference_equality_check(
 class SuiteResult:
     verdicts: DataFrame
     violations: DataFrame
-    checks: list[str] = field(default_factory=list)
-
-
-def fused_partition_verdicts(
-    df: DataFrame,
-    checks: list[RowCheck],
-    parts_ref: DataFrame,
-    table_name: str,
-    part_col: str = "source",
-    ri_key_col: str | None = None,
-) -> DataFrame:
-    """Row-invariant + RI + empty-partition verdicts in ONE scan of the
-    input. Run as three operators they are three independent aggregate
-    scans inside the same action (Spark does not share FileScan nodes
-    across plan branches) — at 10^12 rows every extra pass is the dominant
-    cost, and on a page-cache-bound single disk the 20M-row suite measured
-    3× slower purely from the extra scans.
-
-    Shape: one broadcast left join against the parent key set (flags
-    orphans — no extra scan), one groupBy(part) computing row counts, every
-    row-check conditional sum, and the orphan sum; then a full-outer join
-    with the (tiny) registered-partition list so empty registered
-    partitions surface. Verdict semantics are bit-identical to the
-    separate operators (same gates: row-check/RI rows only for OBSERVED
-    partitions, row_count_gt_0 only for REGISTERED ones)."""
-    ri_key = ri_key_col or part_col
-    parent = (
-        parts_ref.select(F.col(ri_key)).distinct().withColumn("__known", F.lit(1))
-    )
-    staged = df.join(F.broadcast(parent), ri_key, "left")
-    aggs = [F.count(F.lit(1)).alias("row_count")]
-    for i, ck in enumerate(checks):
-        aggs.append(F.sum(F.when(ck.fail_predicate, 1).otherwise(0)).alias(f"__v_{i}"))
-    # NULL FK never violates RI (MATCH SIMPLE) — same rule as
-    # referential_integrity_check so the fused path stays bit-identical
-    aggs.append(
-        F.sum(
-            F.when(F.col(ri_key).isNotNull() & F.col("__known").isNull(), 1).otherwise(0)
-        ).alias("__ri")
-    )
-    wide = staged.groupBy(part_col).agg(*aggs)
-
-    registered = parts_ref.select(F.col(part_col)).distinct().withColumn("__reg", F.lit(1))
-    base = wide.join(registered, part_col, "full_outer")
-
-    observed = F.col("row_count").isNotNull()
-    rc = F.coalesce(F.col("row_count"), F.lit(0))
-    entries = []
-    for i, ck in enumerate(checks):
-        v = F.col(f"__v_{i}")
-        entries.append(
-            F.struct(
-                F.lit(ck.name).alias("check_name"),
-                v.cast("long").alias("violation_count"),
-                (v <= F.lit(ck.threshold_rate) * F.col("row_count")).alias("passed"),
-                observed.alias("include"),
-            )
-        )
-    entries.append(
-        F.struct(
-            F.lit(f"ri_{ri_key}").alias("check_name"),
-            F.col("__ri").cast("long").alias("violation_count"),
-            (F.col("__ri") == 0).alias("passed"),
-            observed.alias("include"),
-        )
-    )
-    entries.append(
-        F.struct(
-            F.lit("row_count_gt_0").alias("check_name"),
-            F.when(rc == 0, 1).otherwise(0).cast("long").alias("violation_count"),
-            (rc > 0).alias("passed"),
-            F.coalesce(F.col("__reg") == 1, F.lit(False)).alias("include"),
-        )
-    )
-    return (
-        base.select(F.col(part_col), rc.alias("__rc"), F.explode(F.array(*entries)).alias("e"))
-        .filter(F.col("e.include"))
-        .select(
-            F.lit(table_name).alias("table_name"),
-            F.col(part_col).cast("string").alias("partition_value"),
-            F.col("e.check_name").alias("check_name"),
-            F.col("__rc").cast("long").alias("row_count"),
-            F.col("e.violation_count").alias("violation_count"),
-            F.col("e.passed").alias("passed"),
-        )
-    )
+    # the check frame both outputs derive from; persist it to run every
+    # check plan once for both
+    frame: DataFrame
 
 
 def run_sequence_suite(
@@ -590,39 +433,20 @@ def run_sequence_suite(
     null_rate_threshold: float = 0.0,
     equality_udf_mode: str = "full",
 ) -> SuiteResult:
-    """The full constraint suite of the north_star: row invariants +
-    uniqueness + RI + empty-partition (+ reference equality when the
-    golden copy is supplied). Verdict/violation DataFrames are lazy —
-    callers union/write them in one job.
-
-    The row-invariant/RI/empty VERDICTS come from the fused single-scan
-    aggregate (fused_partition_verdicts) — the separate operators' verdict
-    frames would add two more full scans per action. Their VIOLATION
-    frames are still built by the individual operators: building a lazy
-    frame costs nothing, and violations execute only when a caller
-    writes/collects them."""
+    """The full constraint suite: row invariants, uniqueness, RI against
+    the registered partitions of `sources_ref`, row_count_gt_0, and token
+    equality when the golden copy `reference` is supplied. Everything is
+    lazy. The verdict plan reads `df` twice (row checks, uniqueness), plus
+    `df` and `reference` once each for equality."""
     checks = sequence_row_checks(null_rate_threshold=null_rate_threshold)
-    _, x1 = run_row_checks(
-        df, checks, table_name, part_col=part_col, violation_cap=violation_cap,
+    frame = row_check_frame(df, checks, part_col=part_col, registered=sources_ref).unionByName(
+        uniqueness_frame(df, part_col=part_col)
     )
-    v2, x2 = uniqueness_check(df, table_name, part_col=part_col, violation_cap=violation_cap)
-    _, x3 = referential_integrity_check(
-        df, sources_ref, table_name, key_col=part_col, part_col=part_col, violation_cap=violation_cap
-    )
-    fused = fused_partition_verdicts(
-        df, checks, sources_ref, table_name, part_col=part_col
-    )
-
-    verdicts = fused.unionByName(v2)
-    violations = x1.unionByName(x2).unionByName(x3)
-    names = ["n_tok_matches_size", "token_range", "doc_id_not_null",
-             "unique_doc_id", f"ri_{part_col}", "row_count_gt_0"]
     if reference is not None:
-        v5, x5 = reference_equality_check(
-            df, reference, table_name, part_col=part_col,
-            violation_cap=violation_cap, udf_mode=equality_udf_mode,
+        frame = frame.unionByName(
+            equality_frame(df, reference, part_col=part_col, udf_mode=equality_udf_mode)
         )
-        verdicts = verdicts.unionByName(v5)
-        violations = violations.unionByName(x5)
-        names.append("tokens_match_reference")
-    return SuiteResult(verdicts, violations, names)
+    verdicts, violations = verdicts_and_violations(
+        frame, table_name, violation_cap, {ck.name: ck.threshold_rate for ck in checks}
+    )
+    return SuiteResult(verdicts, violations, frame)

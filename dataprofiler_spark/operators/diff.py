@@ -3,7 +3,7 @@
 The reference compares METRIC deltas between snapshots (dashboard panels);
 it cannot answer "which rows changed, and in which columns". This operator
 does, with the engine's established payload-off-the-shuffle shape
-(checks.reference_equality_check lineage): each side is reduced map-side
+(the checks.equality_frame prefilter lineage): each side is reduced map-side
 to (key, one 8-byte xxhash64 per compared column), the full-outer join
 moves ONLY those narrow digest rows, and change classification + per-column
 attribution happen on the hashes. Payload values never ride the shuffle —

@@ -347,7 +347,7 @@ def profile(
     else:
         # HLL++ estimate: exact equality would flap within the rsd band —
         # verdict is "unique within sketch tolerance". The binding check at
-        # scale is uniqueness_check's exact duplicate materialization.
+        # scale is checks.uniqueness_frame's exact duplicate count.
         is_unique = (dc >= nn * (1 - 3 * cfg.approx_rsd)) & (nn > 0)
 
     return (

@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataprofiler_spark.operators.checks import SuiteResult, run_sequence_suite
+from dataprofiler_spark.operators.checks import run_sequence_suite
 from dataprofiler_spark.operators.drift import drift_by_group, histogram
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.plans.manifest import Manifest, PartitionRecord, Snapshot
@@ -33,8 +33,8 @@ class ValidationConfig:
     violation_cap: int = 1000
     null_rate_threshold: float = 0.0
     exact: bool = True  # exact metrics in tests; sketches at scale
-    # "auto" resolves to "prefilter" (hash-gated UDF — the scale path) when
-    # exact=False: a 10^12-row config must never silently run the
+    # "auto" resolves to "prefilter" (digest join, no UDF — the scale path)
+    # when exact=False: a 10^12-row config must never silently run the
     # anti-scaling full-UDF mode. "full"/"prefilter" force a mode.
     equality_udf_mode: str = "auto"
 
@@ -74,10 +74,14 @@ def run_validation(
 ) -> ValidationResult:
     """Run the full constraint suite with checkpoint/resume.
 
-    Resume semantics: partitions whose manifest entry matches the current
-    input lineage are filtered OUT of the scan up front — the filter is
-    pushed into the source read, so skipped partitions cost nothing
-    (partition pruning on a partitioned table)."""
+    Resume semantics depend on the mode:
+      * global `lineage`: partitions whose manifest entry matches the
+        lineage are filtered OUT of the scan up front — the filter is
+        pushed into the source read, so they cost nothing (partition
+        pruning on a partitioned table).
+      * `snapshot`: the partitions whose data files are unchanged are
+        reported as skipped, but they are NOT pruned: the whole table is
+        still scanned, and every partition is re-validated and recorded."""
     cfg = cfg or ValidationConfig()
     manifest = Manifest(cfg.manifest_dir) if cfg.manifest_dir else None
 
@@ -93,13 +97,11 @@ def run_validation(
             )
 
     # With output_dir set the run needs MULTIPLE actions over the same
-    # input (verdict collect + violations write) — fresh plans do NOT reuse
-    # shuffle outputs, so without a cache the whole check suite would
-    # execute per action (~3× measured). Persist the input across them;
-    # MEMORY_AND_DISK in local/bench scale — on a cluster where the table
-    # doesn't fit, swap for DISK_ONLY or accept the second pass (the
-    # aggregate-sized frames below are collect-funneled either way, so the
-    # worst case is exactly 2 input passes, never 3+).
+    # input (profile, verdict collect, drift) — fresh plans do NOT reuse
+    # shuffle outputs, so each would re-read the source. Persist the input
+    # across them; MEMORY_AND_DISK in local/bench scale — on a cluster
+    # where the table doesn't fit, swap for DISK_ONLY or accept the extra
+    # passes.
     persisted = False
     if cfg.output_dir:
         df = df.persist()
@@ -118,7 +120,7 @@ def run_validation(
     if expectations or cfg.output_dir:
         profiles = spark.createDataFrame(profiles.collect(), profiles.schema)
 
-    suite: SuiteResult = run_sequence_suite(
+    suite = run_sequence_suite(
         df,
         sources_ref,
         reference=reference,
@@ -129,6 +131,11 @@ def run_validation(
         equality_udf_mode=cfg.equality_udf_mode,
     )
     verdicts, violations = suite.verdicts, suite.violations
+    if persisted:
+        # both outputs derive from the suite's check frame: the verdict
+        # collect fills it, the violations write reads it back, so no
+        # check plan (nor the equality UDF) runs twice
+        suite.frame.persist()
 
     if expectations:
         from dataprofiler_spark.operators.expectations import evaluate_expectations
@@ -176,22 +183,21 @@ def run_validation(
 
     # verdict matrix is small (partitions × checks) — safe to collect for
     # the manifest + summary (violation ROWS stay distributed/capped).
-    # Collect ONCE and write the sink from the collected rows: a second
-    # action on the unpersisted lazy plan would re-run every scan/shuffle
-    # of the whole check suite (fresh plans do not reuse shuffle outputs).
+    # Collect ONCE and write the sink from the collected rows.
     collected = verdicts.collect()
     verdict_rows = spark.createDataFrame(collected, verdicts.schema)
 
     if cfg.output_dir:
         # profiles/verdicts/drift are local (collect-funneled) frames here —
         # their writes execute no input scans; violations is the one
-        # distributed write and reads the persisted input.
+        # distributed write and reads the persisted check frame.
         profiles.write.mode("append").parquet(f"{cfg.output_dir}/data_profiles")
         verdict_rows.write.mode("append").parquet(f"{cfg.output_dir}/validation_verdicts")
         violations.write.mode("append").parquet(f"{cfg.output_dir}/violations")
         if drift is not None:
             drift.write.mode("append").parquet(f"{cfg.output_dir}/drift_metrics")
     if persisted:
+        suite.frame.unpersist()
         df.unpersist()
     by_part: dict[str, dict] = {}
     for r in collected:

@@ -29,8 +29,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dataprofiler_spark.operators.checks import (
     RowCheck,
-    run_row_checks,
+    row_check_frame,
     sequence_row_checks,
+    verdicts_and_violations,
 )
 
 
@@ -62,11 +63,15 @@ def validate_stream(
     as lineage. availableNow=True drains all pending files then stops
     (deterministic for tests/backfills); False = continuous."""
     checks = checks or sequence_row_checks()
+    thresholds = {ck.name: ck.threshold_rate for ck in checks}
     stream = spark.readStream.schema(sequence_schema()).parquet(input_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts, violations = run_row_checks(
-            batch_df, checks, table_name, part_col=part_col, violation_cap=violation_cap
+        verdicts, violations = verdicts_and_violations(
+            row_check_frame(batch_df, checks, part_col=part_col),
+            table_name,
+            violation_cap,
+            thresholds,
         )
         (
             verdicts.withColumn("batch_id", F.lit(batch_id))

@@ -12,7 +12,11 @@ import pytest
 
 from dataprofiler_spark.operators.checks import (
     _lists_equal_batch,
+    equality_frame,
+    row_check_frame,
     run_sequence_suite,
+    uniqueness_frame,
+    verdicts_and_violations,
 )
 from dataprofiler_spark.sources import gen_sequences, gen_sources_ref, violation_spec
 
@@ -98,16 +102,20 @@ def test_lists_equal_batch_vectorized():
 def test_prefilter_equality_same_counts(spark):
     """hash-prefiltered equality must produce the same verdict counts and
     violation rows as the full-UDF mode (collision probability 2^-64)."""
-    from dataprofiler_spark.operators.checks import reference_equality_check
-
     bad = gen_sequences(spark, N, violations=True)
     ref = gen_sequences(spark, N, violations=False)
-    v_full, x_full = reference_equality_check(bad, ref, "t", udf_mode="full", violation_cap=10_000)
-    v_pre, x_pre = reference_equality_check(bad, ref, "t", udf_mode="prefilter", violation_cap=10_000)
+    v_full, x_full = verdicts_and_violations(
+        equality_frame(bad, ref, udf_mode="full"), "t", violation_cap=10_000
+    )
+    v_pre, x_pre = verdicts_and_violations(
+        equality_frame(bad, ref, udf_mode="prefilter"), "t", violation_cap=10_000
+    )
     full = {(r.partition_value): r.violation_count for r in v_full.collect()}
     pre = {(r.partition_value): r.violation_count for r in v_pre.collect()}
     assert full == pre
     assert x_full.count() == x_pre.count() == 2 * violation_spec(N).dup_rows[1]
+    # the digest join yields the same violation rows, detail included
+    assert sorted(x_full.collect()) == sorted(x_pre.collect())
 
 
 def test_lists_equal_both_null_passes():
@@ -123,8 +131,6 @@ def test_lists_equal_both_null_passes():
 def test_null_tokens_same_verdict_both_modes(spark):
     """A null-vs-null token row must get the SAME verdict from both
     udf_modes (it passes): previously full mode counted it a violation."""
-    from dataprofiler_spark.operators.checks import reference_equality_check
-
     df = spark.createDataFrame(
         [(1, None, "a"), (2, [1, 2], "a"), (3, None, "a")],
         "doc_id bigint, tokens array<int>, source string",
@@ -134,16 +140,17 @@ def test_null_tokens_same_verdict_both_modes(spark):
         "doc_id bigint, tokens array<int>",
     )
     for mode in ("full", "prefilter"):
-        v, _ = reference_equality_check(df, ref, "t", udf_mode=mode)
+        v, _ = verdicts_and_violations(equality_frame(df, ref, udf_mode=mode), "t")
         row = v.collect()[0]
         assert row.violation_count == 1, mode  # only doc 3 (null vs value)
+        assert row.row_count == 3, mode
 
 
 def test_violation_cap_is_per_check_per_partition(spark):
     """Mass failure: the cap window is keyed on (check_name,
     partition_value), so each partition contributes up to `cap` rows —
     not one global reducer funneling every violating row of a check."""
-    from dataprofiler_spark.operators.checks import RowCheck, run_row_checks
+    from dataprofiler_spark.operators.checks import RowCheck
     from pyspark.sql import functions as F
 
     df = spark.range(0, 1000).select(
@@ -151,8 +158,8 @@ def test_violation_cap_is_per_check_per_partition(spark):
         (F.col("id") % 4).cast("string").alias("source"),
     )
     checks = [RowCheck("always_fails", F.lit(True), F.lit("boom"))]
-    _, violations = run_row_checks(
-        df, checks, "t", part_col="source", key_col="doc_id", violation_cap=10
+    _, violations = verdicts_and_violations(
+        row_check_frame(df, checks, part_col="source", key_col="doc_id"), "t", violation_cap=10
     )
     per_part = {r["partition_value"]: r["count"] for r in
                 violations.groupBy("partition_value").count().collect()}
@@ -164,14 +171,9 @@ def test_violation_caps_are_per_partition_everywhere(spark):
     partition) — a global limit starves later partitions of their budget
     (mass failure in one partition would read as 'other partitions
     clean')."""
-    from dataprofiler_spark.operators.checks import (
-        referential_integrity_check,
-        uniqueness_check,
-    )
-
     rows = [(f"dup{i % 3}", p) for p in ("p1", "p2") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id string, source string")
-    _, v = uniqueness_check(df, "t", violation_cap=5)
+    _, v = verdicts_and_violations(uniqueness_frame(df), "t", violation_cap=5)
     per_part = {r.partition_value: 0 for r in v.collect()}
     for r in v.collect():
         per_part[r.partition_value] += 1
@@ -182,11 +184,11 @@ def test_violation_caps_are_per_partition_everywhere(spark):
         [(f"k{i}", p) for p in ("p1", "p2") for i in range(20)],
         "doc_id string, source2 string",
     ).withColumnRenamed("source2", "source")
-    _, rv = referential_integrity_check(
-        orphans, parents, "t", key_col="source", part_col="source", violation_cap=3
+    _, rv = verdicts_and_violations(
+        row_check_frame(orphans, [], registered=parents), "t", violation_cap=3
     )
     counts = {}
-    for r in rv.collect():
+    for r in rv.filter(rv.check_name == "ri_source").collect():
         counts[r.partition_value] = counts.get(r.partition_value, 0) + 1
     assert all(c == 3 for c in counts.values()) and len(counts) == 2
 
@@ -197,11 +199,9 @@ def test_uniqueness_null_keys_spread_not_funneled(spark):
     collapses every (key, partition) group map-side before any shuffle.
     Correctness is unchanged — NULLs are never duplicates, but still
     count toward row_count."""
-    from dataprofiler_spark.operators.checks import uniqueness_check
-
     rows = [(None, "s") for _ in range(50)] + [("a", "s"), ("a", "s"), ("b", "s")]
     df = spark.createDataFrame(rows, "doc_id string, source string")
-    verdicts, violations = uniqueness_check(df, "t")
+    verdicts, violations = verdicts_and_violations(uniqueness_frame(df), "t")
     v = verdicts.collect()[0]
     assert (v.row_count, v.violation_count, v.passed) == (53, 2, False)
     assert sorted(r.key for r in violations.collect()) == ["a", "a"]

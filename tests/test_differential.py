@@ -11,7 +11,7 @@ exactly.
 
 import duckdb
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -124,73 +124,125 @@ def test_differential_seeded_regression(spark, tmp_path):
         con.close()
 
 
-ck_longs = st.one_of(st.none(), st.integers(0, 12))
+# small key / token ranges so duplicates (within and across partitions),
+# NULLs, empty arrays and mismatches against the reference all occur
+ck_tokens = st.one_of(st.none(), st.lists(st.integers(-2, 3), max_size=3))
 ck_rows = st.lists(
-    st.tuples(ck_longs, st.sampled_from(["p1", "p2", "p3"])),
-    min_size=0,
-    max_size=50,
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 6)),  # doc_id
+        st.one_of(st.none(), st.sampled_from(["p1", "p2", "p3", "orphan"])),  # source
+        ck_tokens,
+        st.one_of(st.none(), st.integers(0, 3)),  # n_tok
+    ),
+    max_size=40,
+)
+ck_ref_rows = st.lists(st.tuples(st.integers(0, 6), ck_tokens), max_size=12)
+# 'orphan' is never registered; 'empty' is registered and never has rows
+CK_REGISTERED = ["p1", "p2", "p3", "empty"]
+CK_CAP = 2
+CK_ROW_LEVEL = (
+    "n_tok_matches_size", "token_range", "doc_id_not_null",
+    "unique_doc_id", "ri_source", "tokens_match_reference",
 )
 
 
-@given(ck_rows, st.lists(st.integers(0, 12), min_size=0, max_size=8))
+def _suite_sql(con, vocab: int, null_rate: float) -> dict:
+    """(partition, check) -> (passed, violation_count, row_count), straight
+    from the check definitions."""
+    m = {}
+    for src, rc, ntok, rng, nulls, ri, dup in con.execute(f"""
+        WITH k AS (SELECT doc_id, count(*) AS c FROM t WHERE doc_id IS NOT NULL GROUP BY doc_id)
+        SELECT t.source, count(*),
+          count(*) FILTER (WHERE t.tokens IS NOT NULL AND t.n_tok != len(t.tokens)),
+          count(*) FILTER (WHERE t.tokens IS NOT NULL AND
+                           len(list_filter(t.tokens, x -> x < 0 OR x >= {vocab})) > 0),
+          count(*) FILTER (WHERE t.doc_id IS NULL),
+          count(*) FILTER (WHERE t.source NOT IN (SELECT source FROM parents)),
+          count(*) FILTER (WHERE k.c > 1)
+        FROM t LEFT JOIN k ON t.doc_id = k.doc_id GROUP BY t.source""").fetchall():
+        m[(src, "n_tok_matches_size")] = (ntok == 0, ntok, rc)
+        m[(src, "token_range")] = (rng == 0, rng, rc)
+        m[(src, "doc_id_not_null")] = (nulls <= null_rate * rc, nulls, rc)
+        m[(src, "ri_source")] = (ri == 0, ri, rc)
+        m[(src, "unique_doc_id")] = (dup == 0, dup, rc)
+    for src, rc in con.execute(
+        "SELECT p.source, count(t.source) FROM parents p "
+        "LEFT JOIN t ON p.source = t.source GROUP BY p.source"
+    ).fetchall():
+        m[(src, "row_count_gt_0")] = (rc > 0, 0 if rc > 0 else 1, rc)
+    for src, rc, bad in con.execute("""
+        SELECT t.source, count(*), count(*) FILTER (WHERE t.tokens IS DISTINCT FROM r.tokens)
+        FROM t JOIN r ON t.doc_id = r.doc_id GROUP BY t.source""").fetchall():
+        m[(src, "tokens_match_reference")] = (bad == 0, bad, rc)
+    return m
+
+
+@given(ck_rows, ck_ref_rows, st.sampled_from([0.0, 0.25]))
+@example(
+    # every case at once: doc_id 1 duplicated within p1 and across p1/p2,
+    # NULL doc_ids and NULL tokens, an orphan source, the empty registered
+    # partition, a NULL partition, and more token_range failures in p1
+    # than the cap
+    rows=[
+        (1, "p1", [0, 1], 2), (1, "p1", [0, 1], 2), (1, "p2", None, 1),
+        (None, "p1", [-1], 1), (None, "p2", [3], 1), (2, "p1", [-2, 0], 2),
+        (3, "p1", [-1, -2], 2), (4, "orphan", [0], 0), (5, None, [], 0),
+        (6, "p3", None, None),
+    ],
+    ref_rows=[(1, [0, 1]), (1, None), (2, [-2, 0]), (3, []), (5, None), (6, None)],
+    null_rate=0.25,
+)
 @settings(max_examples=6, deadline=None)
-def test_uniqueness_and_ri_verdicts_match_sql(tmp_path_factory, rows, parent_keys):
-    """Check-suite verdicts (uniqueness duplicate counts, RI orphan
-    counts) equal the direct SQL definition on random key/partition
-    shapes — including NULL keys and empty inputs."""
+def test_uniqueness_and_ri_verdicts_match_sql(tmp_path_factory, rows, ref_rows, null_rate):
+    """The whole suite (row checks, uniqueness, RI, row_count_gt_0, token
+    equality in both modes) vs direct SQL on random tables: the full
+    verdict matrix (passed, violation_count, row_count), and per (check,
+    partition) violation rows == min(violation_count, cap). Uniqueness is
+    GLOBAL per key with each duplicated row counted against its own
+    partition; NULL keys are never duplicates, NULL foreign keys never
+    orphans, both-NULL token arrays equal."""
     from dataprofiler_spark import get_spark
-    from dataprofiler_spark.operators.checks import (
-        referential_integrity_check,
-        uniqueness_check,
-    )
+    from dataprofiler_spark.operators.checks import run_sequence_suite
+    from dataprofiler_spark.sources.synthetic import VOCAB_SIZE
 
     spark = get_spark(master="local[2]", shuffle_partitions=2)
     base = str(tmp_path_factory.mktemp("ckdiff"))
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    df.write.mode("overwrite").parquet(f"{base}/t.parquet")
+    spark.createDataFrame(
+        rows, "doc_id long, source string, tokens array<int>, n_tok int"
+    ).write.mode("overwrite").parquet(f"{base}/t.parquet")
+    spark.createDataFrame(ref_rows, "doc_id long, tokens array<int>").write.mode(
+        "overwrite"
+    ).parquet(f"{base}/r.parquet")
     stored = spark.read.parquet(f"{base}/t.parquet")
-    parents = spark.createDataFrame(
-        [(k,) for k in sorted(set(parent_keys))] or [(None,)], "doc_id long"
-    )
-    parents.write.mode("overwrite").parquet(f"{base}/p.parquet")
-    stored_p = spark.read.parquet(f"{base}/p.parquet")
+    ref = spark.read.parquet(f"{base}/r.parquet")
+    registered = spark.createDataFrame([(p,) for p in CK_REGISTERED], "source string")
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW t AS SELECT * FROM read_parquet('{base}/t.parquet/*.parquet')")
-    con.execute(f"CREATE VIEW p AS SELECT * FROM read_parquet('{base}/p.parquet/*.parquet')")
-
-    uv, _ = uniqueness_check(stored, "t", key_col="doc_id", part_col="source")
-    got = {r.partition_value: r.violation_count for r in uv.collect()}
-    # engine semantics: keys must be GLOBALLY unique; each row of a
-    # globally-duplicated key counts against ITS OWN partition. NULL keys
-    # are never duplicates.
-    want = dict(
-        con.execute(
-            """SELECT source, COALESCE(SUM(flag), 0) FROM (
-                 SELECT source,
-                   CASE WHEN doc_id IS NOT NULL
-                        AND COUNT(*) OVER (PARTITION BY doc_id) > 1
-                        THEN 1 ELSE 0 END AS flag
-                 FROM t)
-               GROUP BY source"""
-        ).fetchall()
-    )
-    assert got == {k: int(v) for k, v in want.items()}, (got, want)
-
-    rv, _ = referential_integrity_check(
-        stored, stored_p, "t", key_col="doc_id", part_col="source"
-    )
-    got_r = {r.partition_value: r.violation_count for r in rv.collect()}
-    want_r = dict(
-        con.execute(
-            """SELECT source, COUNT(*) FILTER (
-                 WHERE doc_id IS NOT NULL
-                 AND doc_id NOT IN (SELECT doc_id FROM p WHERE doc_id IS NOT NULL))
-               FROM t GROUP BY source"""
-        ).fetchall()
-    )
-    assert got_r == {k: int(v) for k, v in want_r.items()}, (got_r, want_r)
+    con.execute(f"CREATE VIEW r AS SELECT * FROM read_parquet('{base}/r.parquet/*.parquet')")
+    con.execute("CREATE TABLE parents (source VARCHAR)")
+    con.executemany("INSERT INTO parents VALUES (?)", [(p,) for p in CK_REGISTERED])
+    want = _suite_sql(con, VOCAB_SIZE, null_rate)
     con.close()
+    want_v = {
+        k: min(vc, CK_CAP) for k, (_, vc, _) in want.items() if k[1] in CK_ROW_LEVEL and vc
+    }
+
+    for mode in ("full", "prefilter"):
+        res = run_sequence_suite(
+            stored, registered, reference=ref, violation_cap=CK_CAP,
+            null_rate_threshold=null_rate, equality_udf_mode=mode,
+        )
+        got = {
+            (r.partition_value, r.check_name): (r.passed, r.violation_count, r.row_count)
+            for r in res.verdicts.collect()
+        }
+        assert got == want, (mode, got, want)
+        got_v = {
+            (r.partition_value, r.check_name): r["count"]
+            for r in res.violations.groupBy("partition_value", "check_name").count().collect()
+        }
+        assert got_v == want_v, (mode, got_v, want_v)
 
 
 @given(

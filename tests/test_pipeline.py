@@ -39,10 +39,15 @@ def test_pipeline_end_to_end(spark, tmp_path):
 
 def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
     """With output_dir set, the suite's input scans must not re-execute per
-    sink write (the round-2 ~3× regression): the input is persisted across
-    the verdict collect + violations write, and the aggregate-sized frames
-    (profiles, drift) are collect-funneled into LOCAL frames whose writes
-    execute no input scans."""
+    sink write (the round-2 ~3× regression): the input and the check frame
+    are persisted across the verdict collect + violations write, and the
+    aggregate-sized frames (profiles, drift) are collect-funneled into
+    LOCAL frames whose writes execute no input scans. The equality UDF sees
+    each joined row exactly once across both actions."""
+    import pandas as pd
+
+    from dataprofiler_spark.operators import checks
+
     # patch the CONCRETE class (pyspark.sql.DataFrame is an abstract parent
     # in Spark 4; instances are classic.dataframe.DataFrame)
     DataFrame = type(spark.range(1))
@@ -58,7 +63,16 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
         calls["unpersist"] += 1
         return orig_unpersist(self, *a, **k)
 
+    udf_rows = spark.sparkContext.accumulator(0)
+    kernel = checks._lists_equal_batch
+
+    def counting_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
+        out = kernel(a, b)
+        udf_rows.add(len(out))
+        return out
+
     DataFrame.persist, DataFrame.unpersist = counting_persist, counting_unpersist
+    checks._lists_equal_batch = counting_kernel
     try:
         bad = gen_sequences(spark, N, violations=True)
         ref = gen_sequences(spark, N)
@@ -70,9 +84,15 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
         )
     finally:
         DataFrame.persist, DataFrame.unpersist = orig_persist, orig_unpersist
+        checks._lists_equal_batch = kernel
 
-    # input persisted exactly once for the multi-action phase, then released
-    assert calls["persist"] == 1 and calls["unpersist"] == 1
+    joined = sum(
+        r.row_count for r in res.verdicts.collect() if r.check_name == "tokens_match_reference"
+    )
+    assert udf_rows.value == joined > 0
+    # the input and the suite's check frame are persisted once each for
+    # the multi-action phase, then both released
+    assert calls["persist"] == 2 and calls["unpersist"] == 2
     # profiles + drift are local (collect-funneled) frames: executing or
     # writing them cannot re-run any input scan
     for frame in (res.profiles, res.drift, res.verdicts):

@@ -4,12 +4,16 @@ broadcast for dimension joins, whole-stage codegen on the hot path, salted
 exchanges, digest (not payload) shuffles. A regression that silently
 changes the plan shape fails here even if results stay correct."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.checks import (
-    referential_integrity_check,
-    reference_equality_check,
+    equality_frame,
+    row_check_frame,
+    run_sequence_suite,
+    verdicts_and_violations,
 )
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.sources import gen_sources_ref
@@ -43,34 +47,41 @@ def test_profile_scan_prunes_to_projected_columns(spark):
 
 
 def test_ri_check_uses_broadcast(spark):
-    seqs = spark.read.parquet(f"{SF}/documents.parquet").withColumnRenamed("lang", "source2")
+    """RI flags orphans through a broadcast LEFT join with the registered
+    partitions inside the row-check scan: the child is never shuffled for
+    the join (no sort-merge or shuffled-hash join)."""
     from dataprofiler_spark.sources.synthetic import gen_sequences
 
     df = gen_sequences(spark, 1000)
-    v, _ = referential_integrity_check(df, gen_sources_ref(spark), "t")
+    v, _ = verdicts_and_violations(row_check_frame(df, [], registered=gen_sources_ref(spark)), "t")
     p = plan_of(v)
-    assert "BroadcastHashJoin" in p and "LeftAnti" in p
+    assert "BroadcastHashJoin" in p and "LeftOuter" in p
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
 
 
 def test_equality_prefilter_shuffles_digests_not_arrays(spark):
     from dataprofiler_spark.sources.synthetic import gen_sequences
 
     a, b = gen_sequences(spark, 1000), gen_sequences(spark, 1000)
-    v, _ = reference_equality_check(a, b, "t", udf_mode="prefilter")
+    v, _ = verdicts_and_violations(equality_frame(a, b, udf_mode="prefilter"), "t")
     p = plan_of(v)
     assert "ShuffledHashJoin" in p
-    # verdict path must not ship token arrays through the exchange — the
+    # the join must not ship token arrays through the exchange — the
     # digest projection (xxhash64) happens below the join
     assert "xxhash64" in p
-    assert "ArrowEvalPython" not in p  # no UDF on the verdict path
+    # no UDF anywhere in the prefilter suite: verdicts nor violations
+    suite = run_sequence_suite(a, gen_sources_ref(spark), reference=b, equality_udf_mode="prefilter")
+    for frame in (suite.verdicts, suite.violations):
+        assert "ArrowEvalPython" not in plan_of(frame)
 
 
 def test_equality_full_mode_uses_arrow_udf(spark):
     from dataprofiler_spark.sources.synthetic import gen_sequences
 
     a, b = gen_sequences(spark, 1000), gen_sequences(spark, 1000)
-    v, _ = reference_equality_check(a, b, "t", udf_mode="full")
-    assert "ArrowEvalPython" in plan_of(v)  # vectorized, never BatchEvalPython
+    v, _ = verdicts_and_violations(equality_frame(a, b, udf_mode="full"), "t")
+    # vectorized, never BatchEvalPython — and evaluated once per joined row
+    assert plan_of(v).count("ArrowEvalPython") == 1
 
 
 def test_profile_wholestage_codegen(spark):
@@ -138,13 +149,13 @@ def test_violation_cap_window_keyed_per_partition(spark):
     """The violation-cap window must partition on (check_name,
     partition_value) — a check_name-only key funnels every violating row
     of a check through ONE reducer under mass failure."""
-    from dataprofiler_spark.operators.checks import RowCheck, run_row_checks
+    from dataprofiler_spark.operators.checks import RowCheck
 
     df = spark.range(100).select(
         F.col("id").alias("doc_id"), (F.col("id") % 4).cast("string").alias("source")
     )
-    _, violations = run_row_checks(
-        df, [RowCheck("always", F.lit(True), F.lit("x"))], "t"
+    _, violations = verdicts_and_violations(
+        row_check_frame(df, [RowCheck("always", F.lit(True), F.lit("x"))]), "t"
     )
     p = optimized_of(violations)
     w = p[p.index("Window") :].split("\n")[0]
@@ -153,12 +164,11 @@ def test_violation_cap_window_keyed_per_partition(spark):
 
 def test_suite_verdicts_scan_count(spark, tmp_path):
     """The verdict action must read the input exactly TWICE without a
-    reference (fused row-invariant/RI/empty aggregate + the uniqueness
-    window) and FOUR times with one (+ the two digest scans of the
+    reference (the row-check/RI/empty aggregate + the uniqueness pair
+    aggregate) and FOUR times with one (+ the two digest scans of the
     prefilter equality join) — Spark does not share FileScan nodes across
     plan branches, so every un-fused operator is a whole extra pass at
     10^12 rows."""
-    from dataprofiler_spark.operators.checks import run_sequence_suite
     from dataprofiler_spark.sources import gen_sources_ref
     from dataprofiler_spark.sources.synthetic import gen_sequences
 
@@ -711,8 +721,11 @@ def test_pair_family_sizes_aggregate_materialized_once(spark):
     out = ngram_jaccard_pairs(df, "doc_id", threshold=0.1)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # partial + final of the pair-count aggregate and nothing else:
-    # sizes and the hot-shingle set are pre-materialized RDD scans
-    assert plan.count("HashAggregate") == 2, plan
+    # sizes and the hot-shingle set are pre-materialized RDD scans. Whole
+    # node names only: a substring count would also match
+    # ObjectHashAggregate and miss a fall to SortAggregate
+    nodes = re.findall(r"\b(\w*Aggregate)\(", plan)
+    assert nodes == ["HashAggregate", "HashAggregate"], plan
 
 
 def test_spread_probe_never_executes_shuffled_lineage(spark):

@@ -32,11 +32,16 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     batches1 = [r.batch_id for r in v1.select("batch_id").distinct().collect()]
 
     # totals must equal the batch suite on the same data
-    from dataprofiler_spark.operators.checks import run_row_checks, sequence_row_checks
+    from dataprofiler_spark.operators.checks import (
+        row_check_frame,
+        sequence_row_checks,
+        verdicts_and_violations,
+    )
 
-    bv, _ = run_row_checks(
-        spark.read.schema(sequence_schema()).parquet(f"{inp}/f1"),
-        sequence_row_checks(),
+    bv, _ = verdicts_and_violations(
+        row_check_frame(
+            spark.read.schema(sequence_schema()).parquet(f"{inp}/f1"), sequence_row_checks()
+        ),
         "sequences_stream",
     )
     stream_totals = {
