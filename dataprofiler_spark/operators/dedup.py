@@ -509,6 +509,12 @@ def ngram_jaccard_pairs(
     the |A|/|B| set sizes, so Jaccard values shift slightly vs uncapped —
     the standard approximation trade, disclosed.
 
+    Contract: `key_col` must be unique per row. Rows sharing a key are
+    shingled as one document (shingle_hash_rows orders words per key), so
+    a duplicate key yields phantom shingles spanning the copies and
+    plausible but wrong scores; nothing checks this. Deduplicate or key
+    by a row id first.
+
     Side effect: CONSTRUCTION runs the corpus scan eagerly (the shared
     skeleton checkpoints its digest frame eager — r5 ADVICE disclosure;
     gotcha 44 explains why lazy is unsafe here)."""
@@ -538,7 +544,11 @@ def ngram_containment_pairs(
     in differing chrome, and partial mirrors. Same capped one-scan shape
     as ngram_jaccard_pairs (shared skeleton; the hot-shingle cap bounds
     the quadratic identically). Construction runs the corpus scan
-    eagerly (shared-skeleton checkpoint — r5 ADVICE disclosure)."""
+    eagerly (shared-skeleton checkpoint — r5 ADVICE disclosure).
+
+    Contract: `key_col` must be unique per row, as for
+    ngram_jaccard_pairs — a duplicate key merges its rows' words into
+    phantom shingles and the scores come out wrong without an error."""
     base = _shingle_pair_counts(df, key_col, text_col, shingle_k, max_shingle_doc_freq)
     return base.select(
         "key1",

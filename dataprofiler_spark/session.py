@@ -15,6 +15,13 @@ from pyspark.sql import SparkSession
 
 _JIT_FLAG = "-XX:-DontCompileHugeMethods"
 
+# Generated classes Spark keeps compiled per JVM. The default (100) is
+# below one run_validation's working set (~180 classes on the exact
+# suite), so every run evicted what the previous run compiled and paid
+# Janino + JIT for all of it again: perfbench suite_exact measured 177
+# compiles per warm run with the default, 6 with this size.
+_CODEGEN_CACHE_ENTRIES = 2000
+
 
 def _ensure_driver_jit_flags() -> None:
     """Let HotSpot JIT-compile large generated methods in the local JVM.
@@ -25,10 +32,11 @@ def _ensure_driver_jit_flags() -> None:
     threshold (~8000 bytecodes); the JVM then refuses to JIT it and the
     hot loop runs in the BYTECODE INTERPRETER — measured 16× on the
     25 M-pair SemDeDup scoring stage (32.2 s → 2.0 s, see
-    OPTIMIZATION_r06.md). `spark.driver.extraJavaOptions` set via the
-    session builder does NOT reach the driver JVM in PySpark client mode
-    (the gateway JVM is already being launched with default flags), so
-    the flag rides JAVA_TOOL_OPTIONS, set only when no JVM exists yet.
+    OPTIMIZATION_r06.md). The flag rides JAVA_TOOL_OPTIONS, set only
+    when no JVM exists yet, rather than `spark.driver.extraJavaOptions`:
+    a builder-set value of that key does reach the driver JVM, but a
+    caller's `extra_conf` entry for the same key (perfbench passes
+    `-Xms1g`) replaces ours instead of adding to it.
     Scale-independent: on a real cluster the same flag belongs in
     spark.executor.extraJavaOptions (set in the builder below)."""
     from pyspark import SparkContext
@@ -51,7 +59,9 @@ def get_spark(
     Defaults are sized for local[N] testing but every knob is the one
     you would set on a 1000-executor cluster too: AQE on (runtime
     shuffle coalescing + skew-join splitting), Arrow on (all pandas-UDF
-    traffic is Arrow batches), UTC session TZ (oracle comparability).
+    traffic is Arrow batches), UTC session TZ (oracle comparability),
+    and a codegen cache that holds a whole validation run's generated
+    classes, so repeated runs and micro-batches reuse them.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
@@ -75,6 +85,9 @@ def get_spark(
         # cluster path for the same JIT flag the driver gets via
         # JAVA_TOOL_OPTIONS (_ensure_driver_jit_flags); no-op in local mode
         .config("spark.executor.extraJavaOptions", _JIT_FLAG)
+        # static conf: must be set before the session (and its executors)
+        # start
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

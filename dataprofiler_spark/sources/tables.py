@@ -25,13 +25,15 @@ TABLES = (
 )
 
 
-def _parquet_row_groups(path: str) -> int | None:
-    """Total parquet row groups under `path` (file or directory) from
-    the footers — the TRUE ceiling on scan parallelism: Spark splits
-    files by BYTE RANGES, but a row group is read entirely by the split
+def _parquet_row_groups(path: str, limit: int) -> int | None:
+    """Parquet row groups under `path` (file or directory) from the
+    footers — the TRUE ceiling on scan parallelism: Spark splits files
+    by BYTE RANGES, but a row group is read entirely by the split
     containing its midpoint, so a 260 MB single-row-group file yields 32
     splits of which 31 are EMPTY. Footer reads are metadata-only
-    (milliseconds, no data scan)."""
+    (milliseconds, no data scan), but one per file: reading stops once
+    the running count exceeds `limit`, so the result is exact up to
+    `limit` and some value above it otherwise."""
     try:
         import pyarrow.parquet as pq
 
@@ -43,7 +45,12 @@ def _parquet_row_groups(path: str) -> int | None:
             ]
         else:
             files = [path]
-        return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+        total = 0
+        for f in files:
+            total += pq.ParquetFile(f).metadata.num_row_groups
+            if total > limit:
+                break
+        return total
     except Exception:
         return None
 
@@ -93,8 +100,9 @@ def _spread_scan(df: DataFrame, path: str | None = None) -> DataFrame:
     if n >= target:
         # >= cores byte-range splits: only a catastrophic row-group
         # deficit (all-but-a-few splits EMPTY) justifies the shuffle
-        rg = _parquet_row_groups(path) if path is not None else None
-        if rg is None or rg > max(1, target // 8):
+        limit = max(1, target // 8)
+        rg = _parquet_row_groups(path, limit) if path is not None else None
+        if rg is None or rg > limit:
             return df
     # hash-partition on the leading column instead of round-robin:
     # round-robin pays a local sort of the full rows first

@@ -104,6 +104,38 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out" / "drift_metrics")).count() > 0
 
 
+def test_repeated_run_reuses_generated_code(spark, tmp_path):
+    """A repeated run_validation reuses the classes the previous run
+    compiled: the session's codegen cache must hold one run's working set
+    (~170 classes here; Spark's default keeps 100, so every run evicted
+    and recompiled nearly all of them). The cache is emptied first so the
+    first run is cold whatever ran earlier in the session."""
+    jvm = spark.sparkContext._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+
+    def compiles():
+        return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+    bad = gen_sequences(spark, N, violations=True)
+    ref = gen_sequences(spark, N)
+    baseline = histogram(ref, "n_tok", 16.0, group_by=["source"])
+    cfg = ValidationConfig(output_dir=str(tmp_path / "out"))
+    per_run = []
+    for _ in range(2):
+        before = compiles()
+        run_validation(
+            spark, bad, gen_sources_ref(spark), reference=ref,
+            baseline_hist=baseline, cfg=cfg,
+        )
+        per_run.append(compiles() - before)
+    first, second = per_run
+    assert first > 0 and second <= first // 4, per_run
+
+
 def test_pipeline_resume_skips_validated(spark, tmp_path):
     clean = gen_sequences(spark, N)
     cfg = ValidationConfig(

@@ -109,3 +109,43 @@ def test_spread_guard_sees_row_groups_not_byte_splits(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+
+
+def test_spread_guard_stops_reading_footers_past_the_limit(spark, tmp_path, monkeypatch):
+    """The row-group probe only answers "at most cores/8?": with more
+    files than that limit it stops after the footer that crosses it,
+    and the spread decision is the one the full count gives (many row
+    groups, no spread)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    spark.range(2000).repartition(12).write.parquet(str(tmp_path / "t.parquet"))
+    path = str(tmp_path / "t.parquet")
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    limit = max(1, spark.sparkContext.defaultParallelism // 8)
+    total = sum(pq.ParquetFile(os.path.join(path, f)).metadata.num_row_groups for f in files)
+    assert len(files) == 12 and total > limit
+
+    reads = []
+    real = pq.ParquetFile
+
+    def counting(f, *a, **k):
+        reads.append(f)
+        return real(f, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    # one split per file at least, so the row-group probe decides
+    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+        raw = load_table(spark, str(tmp_path), "t", spread=False)
+        df = load_table(spark, str(tmp_path), "t")
+        assert raw.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+        assert len(reads) == limit + 1  # one row group per file
+        # same decision as the full count: no spread, the bare scan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert df.rdd.getNumPartitions() == raw.rdd.getNumPartitions()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
