@@ -25,7 +25,7 @@ from dataprofiler_spark import get_spark
 from dataprofiler_spark.operators.drift import histogram
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.pipeline import ValidationConfig, run_validation
-from dataprofiler_spark.plans.manifest import input_fingerprint
+from dataprofiler_spark.plans.manifest import Snapshot, snapshot_from_path
 from dataprofiler_spark.report import FORMATTERS, write_report
 from dataprofiler_spark.sources.synthetic import gen_sequences, gen_sources_ref
 
@@ -195,9 +195,10 @@ def run_config(spark, args) -> int:
         try:
             df = spark.read.parquet(spec["input"])
             part_col = spec.get("partition_col", args.partition_col)
+            part_col = part_col if part_col in df.columns else "source"
             cfg = ValidationConfig(
                 table_name=name,
-                part_col=part_col if part_col in df.columns else "source",
+                part_col=part_col,
                 violation_cap=args.violation_cap,
                 exact=not args.approx,
                 equality_udf_mode=args.equality_udf_mode,
@@ -205,7 +206,7 @@ def run_config(spark, args) -> int:
                 manifest_dir=(
                     f"{args.manifest_dir}/{name}" if args.manifest_dir else None
                 ),
-                lineage=input_fingerprint(spec["input"]),
+                snapshot=snapshot_from_path(spec["input"], part_prefix=part_col),
             )
             res = run_validation(spark, df, gen_sources_ref(spark), cfg=cfg)
             print(json.dumps(res.summary))
@@ -244,10 +245,13 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.synthetic_rows:
         df = gen_sequences(spark, args.synthetic_rows, violations=args.synthetic_violations)
-        lineage = f"synthetic:{args.synthetic_rows}:{args.synthetic_violations}"
+        snapshot = Snapshot(
+            snapshot_id=f"synthetic:{args.synthetic_rows}:{args.synthetic_violations}",
+            partition_lineage={},
+        )
     else:
         df = spark.read.parquet(args.input)
-        lineage = input_fingerprint(args.input)
+        snapshot = snapshot_from_path(args.input, part_prefix=args.partition_col)
 
     exit_code = 0
 
@@ -323,7 +327,7 @@ def main(argv: list[str] | None = None) -> int:
             equality_udf_mode=args.equality_udf_mode,
             output_dir=args.output_dir,
             manifest_dir=args.manifest_dir,
-            lineage=lineage,
+            snapshot=snapshot,
         )
         res = run_validation(
             spark,

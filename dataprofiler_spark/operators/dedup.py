@@ -1387,8 +1387,9 @@ def dedup_against_history(
 
     Returns one row per NEW distinct content: (digest, survivor_<key>,
     batch_copies). Appending exactly these digests to the ledger commits
-    the batch — the same commit-after-validate ordering as
-    plans/incremental_files.FileLedger."""
+    the batch — the same commit-after-validate ordering as the resume
+    manifest (plans/manifest.py), which records a partition only after
+    its verdicts are collected."""
     staged = new_df.withColumn("__digest", content_hash(*cols))
     collapsed = staged.groupBy(F.col("__digest").alias(digest_col)).agg(
         F.min(F.col(key_col)).alias(f"survivor_{key_col}"),

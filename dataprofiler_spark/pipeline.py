@@ -37,19 +37,19 @@ class ValidationConfig:
     # when exact=False: a 10^12-row config must never silently run the
     # anti-scaling full-UDF mode. "full"/"prefilter" force a mode.
     equality_udf_mode: str = "auto"
-
-    def __post_init__(self):
-        if self.equality_udf_mode == "auto":
-            self.equality_udf_mode = "full" if self.exact else "prefilter"
     drift_bucket_width: float = 16.0  # n_tok histogram bucket
     psi_threshold: float = 0.25  # standard major-shift cut
     output_dir: str | None = None
     manifest_dir: str | None = None
-    lineage: str = ""
-    # per-partition resume against a table snapshot (plans/manifest.py
-    # Snapshot): overrides the global `lineage` token when set — an
-    # append to one partition only re-validates THAT partition
+    # the table state resume is judged against (plans/manifest.py
+    # Snapshot): an append to one partition only re-validates THAT
+    # partition; a snapshot with no per-partition entries is one global
+    # token for the whole input
     snapshot: "Snapshot | None" = None
+
+    def __post_init__(self):
+        if self.equality_udf_mode == "auto":
+            self.equality_udf_mode = "full" if self.exact else "prefilter"
 
 
 @dataclass
@@ -74,27 +74,31 @@ def run_validation(
 ) -> ValidationResult:
     """Run the full constraint suite with checkpoint/resume.
 
-    Resume semantics depend on the mode:
-      * global `lineage`: partitions whose manifest entry matches the
-        lineage are filtered OUT of the scan up front — the filter is
-        pushed into the source read, so they cost nothing (partition
-        pruning on a partitioned table).
-      * `snapshot`: the partitions whose data files are unchanged are
-        reported as skipped, but they are NOT pruned: the whole table is
-        still scanned, and every partition is re-validated and recorded."""
+    Resume needs both `manifest_dir` and `snapshot`; every run with a
+    `manifest_dir` records its partitions' verdicts. A partition is
+    skipped when its manifest record is 'validated' under the token the
+    partition has in `snapshot` (`Snapshot.token`: its own lineage entry,
+    else the snapshot_id). A skipped partition whose record also carries
+    the current snapshot_id was validated against this exact table, so it
+    is filtered out of `df` and `sources_ref` up front — the filter is
+    pushed into the source read, so it costs nothing (partition pruning
+    on a partitioned table). Any other skipped partition (the table
+    changed elsewhere since it validated) is still scanned, re-validated
+    and recorded; it is only reported as skipped."""
     cfg = cfg or ValidationConfig()
     manifest = Manifest(cfg.manifest_dir) if cfg.manifest_dir else None
+    # without a snapshot the manifest still records every partition (under
+    # an empty token), but nothing is looked up or skipped
+    snap = cfg.snapshot or Snapshot(snapshot_id="", partition_lineage={})
 
     skipped: set[str] = set()
     if manifest is not None and cfg.snapshot is not None:
-        skipped = manifest.validated_partitions_for(cfg.snapshot)
-    elif manifest is not None and cfg.lineage:
-        skipped = manifest.validated_partitions(cfg.lineage)
-        if skipped:
-            df = df.filter(~F.col(cfg.part_col).isin(list(skipped)))
-            sources_ref = sources_ref.filter(
-                ~F.col(cfg.part_col).isin(list(skipped))
-            )
+        records = manifest.validated_partitions_for(snap)
+        skipped = set(records)
+        pruned = sorted(p for p, rec in records.items() if rec.snapshot_id == snap.snapshot_id)
+        if pruned:
+            df = df.filter(~F.col(cfg.part_col).isin(pruned))
+            sources_ref = sources_ref.filter(~F.col(cfg.part_col).isin(pruned))
 
     # With output_dir set the run needs MULTIPLE actions over the same
     # input (profile, verdict collect, drift) — fresh plans do NOT reuse
@@ -216,21 +220,18 @@ def run_validation(
             # a partition with ANY failed check must not be recorded as
             # 'validated' — a resumed run would silently skip known-bad
             # partitions and report a clean summary
-            snap = cfg.snapshot
             manifest.record(
                 PartitionRecord(
                     partition_value=part,
                     status="validated" if all(d["checks"].values()) else "failed",
-                    # snapshot mode records the partition's OWN data-file
-                    # token (so a later snapshot skips it iff its files
-                    # are untouched) + the snapshot id for provenance
-                    lineage=snap.partition_lineage.get(part, "")
-                    if snap is not None
-                    else cfg.lineage,
+                    # the partition's own token, so a later snapshot skips
+                    # it iff that token is unchanged; the snapshot id lets
+                    # a run against the same table prune it
+                    lineage=snap.token(part),
                     row_count=d["row_count"],
                     metrics=d["metrics"],
                     checks=d["checks"],
-                    snapshot_id=snap.snapshot_id if snap is not None else "",
+                    snapshot_id=snap.snapshot_id,
                 )
             )
 

@@ -6,11 +6,15 @@ partitions."
 
 Design: one JSON file per (run-scope, partition) under the manifest dir —
 written atomically (temp file + rename) so a killed run never leaves a
-half-record, and a resumed run simply skips partitions whose manifest entry
-matches the current input lineage. Lineage here is an input fingerprint
-(Iceberg snapshot id in production; content fingerprint for path inputs) —
-skipping is only sound while the input hasn't changed underneath
-(SURVEY.md §7.4).
+half-record. Resume has one mechanism: a table `Snapshot` (snapshot_id +
+per-partition lineage tokens). A partition's token is its own
+`partition_lineage` entry, or the snapshot_id when it has none — so a
+snapshot with no entries is one global token for the whole input. A
+resumed run skips a partition whose record is 'validated' under the token
+the partition has in the current snapshot (`Manifest.validated_partitions_for`).
+Lineage is an input fingerprint (Iceberg snapshot metadata in production;
+a file walk for path inputs, `snapshot_from_path`) — skipping is only sound
+while the input hasn't changed underneath (SURVEY.md §7.4).
 
 Reference analog: the closed-loop metrics store that the auto-increment
 module reads back (/root/reference/src/core/autoincrement_metrics.py:155-212)
@@ -19,6 +23,7 @@ and the per-table failure isolation of main.py:792-794.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -73,28 +78,18 @@ class Manifest:
                 out[d["partition_value"]] = PartitionRecord(**d)
         return out
 
-    def validated_partitions(self, lineage: str) -> set[str]:
-        """Partitions safe to skip: validated AND same input lineage.
-        A lineage change (new snapshot appended) invalidates the skip."""
+    def validated_partitions_for(self, snapshot: "Snapshot") -> dict[str, PartitionRecord]:
+        """The records of the partitions a run against SNAPSHOT may skip:
+        validated under the exact token the partition has in this
+        snapshot (`Snapshot.token`). An append to partition X flips X's
+        token (and the snapshot_id) but leaves other partitions' tokens —
+        so only X re-validates. Stale-manifest partitions (recorded under
+        a token the snapshot no longer carries) are excluded by
+        construction."""
         return {
-            p
+            p: rec
             for p, rec in self.load().items()
-            if rec.status == "validated" and rec.lineage == lineage
-        }
-
-    def validated_partitions_for(self, snapshot: "Snapshot") -> set[str]:
-        """Per-partition resume against a table SNAPSHOT: a partition is
-        skippable iff it validated against the exact lineage token its
-        data files have in this snapshot. An append to partition X flips
-        X's token (and the snapshot_id) but leaves other partitions'
-        tokens — so only X re-validates. Stale-manifest partitions
-        (recorded under a token the snapshot no longer carries) are
-        excluded by construction."""
-        return {
-            p
-            for p, rec in self.load().items()
-            if rec.status == "validated"
-            and snapshot.partition_lineage.get(p) == rec.lineage
+            if rec.status == "validated" and rec.lineage == snapshot.token(p)
         }
 
 
@@ -105,22 +100,27 @@ class Snapshot:
     id is content-addressed over the per-partition tokens, so ANY append/
     rewrite produces a new snapshot_id — and resume-after-append is
     provably sound per partition: a partition is skippable iff ITS data
-    files are unchanged, regardless of appends elsewhere. (The global
-    `input_fingerprint` token invalidates every partition on any append —
-    sound but maximally wasteful; this is the per-partition refinement.)
-    In production the id and per-partition file lists come from the
-    Iceberg snapshot metadata instead of a directory walk."""
+    files are unchanged, regardless of appends elsewhere. A partition
+    with no lineage entry takes the snapshot_id as its token, so
+    `Snapshot(snapshot_id=tok, partition_lineage={})` is one global token
+    (any change re-validates every partition). In production the id and
+    per-partition file lists come from the Iceberg snapshot metadata
+    instead of a directory walk."""
 
     snapshot_id: str
     partition_lineage: dict[str, str]  # partition_value -> lineage token
+
+    def token(self, partition: str) -> str:
+        """The lineage token a partition is recorded and looked up under."""
+        return self.partition_lineage.get(partition, self.snapshot_id)
 
 
 def snapshot_from_path(path: str, part_prefix: str | None = None) -> Snapshot:
     """Build a Snapshot from a hive-layout directory: each
     `<col>=<value>` subdirectory is a partition whose lineage token
     fingerprints ITS files only. `part_prefix` (e.g. "source") restricts
-    to that partition column's dirs; files outside any partition dir
-    fingerprint under the "" partition.
+    to that partition column's dirs; files outside any partition dir (or
+    a single-file path) fingerprint under the "" partition.
 
     LAYOUT-SENSITIVE by design: the token is a file fingerprint, so a
     compaction (same rows rewritten into fewer files) flips it and forces
@@ -140,20 +140,15 @@ def snapshot_from_path(path: str, part_prefix: str | None = None) -> Snapshot:
                     part_lineage[val] = input_fingerprint(full)
                     continue
             loose.append(name)
+    elif os.path.exists(path):
+        part_lineage[""] = input_fingerprint(path)
     if loose:
         parts = []
         for name in loose:
             full = os.path.join(path, name)
             parts.append(f"{name}:{input_fingerprint(full)}")
-        import hashlib
-
         part_lineage[""] = hashlib.md5("|".join(parts).encode()).hexdigest()
-    import hashlib
-
-    sid = hashlib.md5(
-        "|".join(f"{p}={t}" for p, t in sorted(part_lineage.items())).encode()
-    ).hexdigest()
-    return Snapshot(snapshot_id=sid, partition_lineage=part_lineage)
+    return Snapshot(snapshot_id=_snapshot_id(part_lineage), partition_lineage=part_lineage)
 
 
 def input_fingerprint(path: str) -> str:
@@ -168,8 +163,6 @@ def input_fingerprint(path: str) -> str:
     elif os.path.exists(path):
         st = os.stat(path)
         parts.append(f"{os.path.basename(path)}:{st.st_size}:{int(st.st_mtime)}")
-    import hashlib
-
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
@@ -190,8 +183,6 @@ def input_fingerprint(path: str) -> str:
 
 
 def _snapshot_id(partition_lineage: dict[str, str]) -> str:
-    import hashlib
-
     return hashlib.md5(
         "|".join(f"{p}={t}" for p, t in sorted(partition_lineage.items())).encode()
     ).hexdigest()
@@ -201,24 +192,19 @@ def snapshot_append(parent: Snapshot, partition: str, files_token: str) -> Snaps
     """Iceberg `append` to one partition: its lineage token evolves as a
     hash chain over (old token, appended-files token) — the partition
     re-validates; every other partition's token (and skip) is untouched."""
-    import hashlib
-
     lineage = dict(parent.partition_lineage)
     old = lineage.get(partition, "")
     lineage[partition] = hashlib.md5(f"{old}+{files_token}".encode()).hexdigest()
     return Snapshot(snapshot_id=_snapshot_id(lineage), partition_lineage=lineage)
 
 
-def snapshot_compact(parent: Snapshot, partitions: list[str] | None = None) -> Snapshot:
+def snapshot_compact(parent: Snapshot) -> Snapshot:
     """Iceberg `replace` (compaction): files are rewritten, DATA identity
     is unchanged — per-partition lineage tokens carry over verbatim, so a
     resumed run still skips every previously-validated partition. The
     snapshot_id is content-addressed over the (unchanged) tokens and
     therefore also unchanged: two table states with identical data
-    identity are the same snapshot for validation purposes. `partitions`
-    is accepted for API symmetry/documentation; compaction never touches
-    lineage regardless."""
-    _ = partitions
+    identity are the same snapshot for validation purposes."""
     lineage = dict(parent.partition_lineage)
     return Snapshot(snapshot_id=_snapshot_id(lineage), partition_lineage=lineage)
 
@@ -227,8 +213,6 @@ def snapshot_overwrite(parent: Snapshot, partition: str, files_token: str) -> Sn
     """Iceberg `overwrite` of one partition: data identity is replaced —
     a fresh token derived from the new files only (NOT chained from the
     old token), so the partition re-validates."""
-    import hashlib
-
     lineage = dict(parent.partition_lineage)
     lineage[partition] = hashlib.md5(f"overwrite:{files_token}".encode()).hexdigest()
     return Snapshot(snapshot_id=_snapshot_id(lineage), partition_lineage=lineage)
@@ -254,6 +238,4 @@ def content_lineage(df, cols: list[str] | None = None) -> str:
         F.count(F.lit(1)).alias("n"),
     )
     row = agg.collect()[0]
-    import hashlib
-
     return hashlib.md5(f"{row['s']}:{row['n']}".encode()).hexdigest()

@@ -180,12 +180,11 @@ def test_materialize_packed_skips_empty_docs(spark):
     assert out == {0: [7, 8], 1: [9]}
 
 
-def test_bpe_to_packed_sequences_composition(spark):
-    """End-to-end product drive: train BPE on the corpus, Arrow-encode
-    every document, map tokens to ids, materialize packed chunks. Token
-    mass is conserved and every chunk is full except each group's final
-    partial — the documents->training-batches path in one flow."""
-    from dataprofiler_spark.operators.bpe import bpe_encode_udf, train_bpe
+def test_tokenized_docs_to_packed_sequences_composition(spark):
+    """End-to-end product drive: split every document into words, map
+    words to ids, materialize packed chunks. Token mass is conserved and
+    every chunk is full except each group's final partial — the
+    documents->training-batches path in one flow."""
     from dataprofiler_spark.operators.packing import materialize_packed_sequences
 
     docs = (
@@ -193,11 +192,12 @@ def test_bpe_to_packed_sequences_composition(spark):
         .select("doc_id", "source", "text")
         .limit(120)
     )
-    merges = train_bpe(docs, num_merges=30)
-    enc = bpe_encode_udf(merges)
-    toks = docs.withColumn("toks", enc("text")).withColumn(
+    toks = docs.withColumn(
         "tokens",
-        F.transform("toks", lambda t: (F.xxhash64(t) % 50257).cast("int")),
+        F.transform(
+            F.split(F.trim("text"), r"\s+"),
+            lambda t: (F.xxhash64(t) % 50257).cast("int"),
+        ),
     )
     total = toks.agg(F.sum(F.size("tokens"))).collect()[0][0]
     packed = materialize_packed_sequences(

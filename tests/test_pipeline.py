@@ -6,10 +6,16 @@ from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.drift import histogram
 from dataprofiler_spark.pipeline import ValidationConfig, run_validation
-from dataprofiler_spark.plans.manifest import Manifest
+from dataprofiler_spark.plans.manifest import Manifest, Snapshot
 from dataprofiler_spark.sources import gen_sequences, gen_sources_ref
 
 N = 5_000
+
+
+def one_token(token: str) -> Snapshot:
+    """A snapshot with no per-partition entries: every partition's token
+    is the snapshot id, so any change re-validates every partition."""
+    return Snapshot(snapshot_id=token, partition_lineage={})
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -18,7 +24,7 @@ def test_pipeline_end_to_end(spark, tmp_path):
     cfg = ValidationConfig(
         output_dir=str(tmp_path / "out"),
         manifest_dir=str(tmp_path / "manifest"),
-        lineage="snap-1",
+        snapshot=one_token("snap-1"),
     )
     res = run_validation(spark, bad, gen_sources_ref(spark), reference=ref, cfg=cfg)
     assert res.summary["passed"] is False
@@ -139,7 +145,7 @@ def test_repeated_run_reuses_generated_code(spark, tmp_path):
 def test_pipeline_resume_skips_validated(spark, tmp_path):
     clean = gen_sequences(spark, N)
     cfg = ValidationConfig(
-        manifest_dir=str(tmp_path / "manifest"), lineage="snap-A"
+        manifest_dir=str(tmp_path / "manifest"), snapshot=one_token("snap-A")
     )
     r1 = run_validation(spark, clean, gen_sources_ref(spark), cfg=cfg)
     assert r1.summary["partitions_skipped"] == 0
@@ -153,26 +159,26 @@ def test_pipeline_resume_skips_validated(spark, tmp_path):
         rec.status == "validated" for p, rec in recs.items() if p != "empty_src"
     )
 
-    # resubmission with the same lineage: every PASSING partition skipped;
-    # the failing empty partition is re-checked
+    # resubmission with the same token: every PASSING partition skipped
+    # (and pruned from the scan); the failing empty partition is re-checked
     r2 = run_validation(spark, clean, gen_sources_ref(spark), cfg=cfg)
     assert r2.summary["partitions_skipped"] == n_parts - 1
     assert r2.summary["partitions_validated"] == 1
     assert r2.summary["rows_validated"] == 0
 
-    # lineage change (new snapshot) invalidates the skip
-    cfg2 = ValidationConfig(manifest_dir=cfg.manifest_dir, lineage="snap-B")
+    # token change (new snapshot) invalidates the skip
+    cfg2 = ValidationConfig(manifest_dir=cfg.manifest_dir, snapshot=one_token("snap-B"))
     r3 = run_validation(spark, clean, gen_sources_ref(spark), cfg=cfg2)
     assert r3.summary["partitions_skipped"] == 0
 
 
 def test_pipeline_failed_partitions_not_skipped_on_resume(spark, tmp_path):
-    """A rerun on bad data with the same lineage must RE-validate the
+    """A rerun on bad data with the same token must RE-validate the
     failing partitions and report the failures again — a 'validated' status
     for failed partitions would make known violations read as a clean run."""
     bad = gen_sequences(spark, N, violations=True)
     cfg = ValidationConfig(
-        manifest_dir=str(tmp_path / "manifest"), lineage="snap-bad"
+        manifest_dir=str(tmp_path / "manifest"), snapshot=one_token("snap-bad")
     )
     r1 = run_validation(spark, bad, gen_sources_ref(spark), cfg=cfg)
     assert r1.summary["checks_failed"] > 0
@@ -324,7 +330,9 @@ def test_snapshot_resume_reinvalidates_only_appended_partition(spark, tmp_path):
     validate a hive-partitioned input against its Snapshot; append data to
     ONE partition → the new snapshot has a new snapshot_id, the stale
     partition's skip is invalidated, every untouched partition still
-    skips. The global-fingerprint mode would re-validate everything."""
+    skips. The table changed, so nothing is pruned: the resumed run gives
+    the verdicts of a run without a manifest over every row. A rerun
+    against the unchanged snapshot prunes every validated partition."""
     from dataprofiler_spark.plans.manifest import snapshot_from_path
 
     inp = str(tmp_path / "table")
@@ -365,6 +373,27 @@ def test_snapshot_resume_reinvalidates_only_appended_partition(spark, tmp_path):
         p for p in untouched if recs[p].status == "validated"
     }
     assert validated_untouched <= r2.skipped_partitions
+
+    def matrix(res):
+        return {
+            (r.partition_value, r.check_name): (r.passed, r.row_count, r.violation_count)
+            for r in res.verdicts.collect()
+        }
+
+    full = run_validation(spark, spark.read.parquet(inp), gen_sources_ref(spark))
+    assert matrix(r2) == matrix(full)
+    assert r2.summary["rows_validated"] == spark.read.parquet(inp).count()
+
+    # same snapshot again: the partitions r2 validated are pruned, only
+    # the failing ones are read
+    passed = {p for p, rec in Manifest(cfg.manifest_dir).load().items() if rec.status == "validated"}
+    r3 = run_validation(
+        spark, spark.read.parquet(inp), gen_sources_ref(spark), cfg=cfg2
+    )
+    assert passed and r3.skipped_partitions == passed
+    assert r3.summary["rows_validated"] == spark.read.parquet(inp).filter(
+        ~F.col("source").isin(sorted(passed))
+    ).count()
 
 
 def test_curate_with_paragraph_dedup(spark):
@@ -512,29 +541,45 @@ def test_snapshot_ops_replay_append_compact_overwrite(spark, tmp_path):
     man = Manifest(str(tmp_path / "m"))
     for p, tok in snap0.partition_lineage.items():
         man.record(PartitionRecord(p, "validated", tok, 100))
-    assert man.validated_partitions_for(snap0) == {"web", "books", "code"}
+    assert set(man.validated_partitions_for(snap0)) == {"web", "books", "code"}
 
     # append to web: only web re-validates
     snap1 = snapshot_append(snap0, "web", "files-batch-2")
-    assert man.validated_partitions_for(snap1) == {"books", "code"}
+    assert set(man.validated_partitions_for(snap1)) == {"books", "code"}
     assert snap1.snapshot_id != snap0.snapshot_id
     man.record(PartitionRecord("web", "validated", snap1.partition_lineage["web"], 150))
 
     # compaction: every skip survives, nothing re-validates
     snap2 = snapshot_compact(snap1)
-    assert man.validated_partitions_for(snap2) == {"web", "books", "code"}
+    assert set(man.validated_partitions_for(snap2)) == {"web", "books", "code"}
     assert snap2.partition_lineage == snap1.partition_lineage
 
     # overwrite books: exactly books re-validates, and the fresh token is
     # NOT the append-chain evolution of the old one
     snap3 = snapshot_overwrite(snap2, "books", "rewrite-1")
-    assert man.validated_partitions_for(snap3) == {"web", "code"}
+    assert set(man.validated_partitions_for(snap3)) == {"web", "code"}
     assert snap3.partition_lineage["books"] != snapshot_append(
         snap2, "books", "rewrite-1"
     ).partition_lineage["books"]
 
     # same data identity == same snapshot id (content-addressed)
     assert snapshot_compact(snap3).snapshot_id == snap3.snapshot_id
+
+
+def test_snapshot_from_single_file_tracks_the_file(tmp_path):
+    """A single-file input fingerprints under the "" partition, so the
+    snapshot id (every partition's token) changes with the file."""
+    import os
+
+    from dataprofiler_spark.plans.manifest import snapshot_from_path
+
+    f = tmp_path / "t.parquet"
+    f.write_bytes(b"a")
+    before = snapshot_from_path(str(f), part_prefix="source")
+    assert set(before.partition_lineage) == {""}
+    f.write_bytes(b"ab")
+    os.utime(f, (1, 1))
+    assert snapshot_from_path(str(f), part_prefix="source").snapshot_id != before.snapshot_id
 
 
 def test_content_lineage_survives_physical_compaction(spark, tmp_path):

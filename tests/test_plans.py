@@ -219,43 +219,6 @@ def test_connected_components_shuffles_narrow_rows(spark):
     assert [f.name for f in out.schema.fields] == ["node", "component"]
 
 
-def test_incremental_file_validation(spark, tmp_path):
-    """File-level resume: rows from already-validated files are dropped by
-    a broadcast anti-join on _metadata.file_path; newly-appended files are
-    the only work left, and committing them advances the ledger."""
-    from dataprofiler_spark.plans.incremental_files import (
-        FileLedger,
-        filter_new_files,
-        input_files,
-        validate_incremental,
-    )
-
-    base = str(tmp_path / "table")
-    spark.range(0, 100).selectExpr("id", "'a' AS src").coalesce(1).write.mode(
-        "append"
-    ).parquet(base)
-    ledger = FileLedger(str(tmp_path / "manifest"))
-
-    df1 = spark.read.parquet(base)
-    fresh1, files1 = validate_incremental(df1, ledger)
-    assert fresh1.count() == 100 and len(files1) == 1
-    ledger.record_files(files1)  # commit AFTER successful validation
-
-    # append a second file: only its rows are new work
-    spark.range(100, 130).selectExpr("id", "'b' AS src").coalesce(1).write.mode(
-        "append"
-    ).parquet(base)
-    df2 = spark.read.parquet(base)
-    fresh2, files2 = validate_incremental(df2, ledger)
-    assert fresh2.count() == 30
-    assert set(files2) == set(input_files(df2)) - set(files1)
-    # the anti-join is broadcast (file list is tiny metadata)
-    plan = filter_new_files(df2, ledger)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    ledger.record_files(files2)
-    assert validate_incremental(spark.read.parquet(base), ledger)[0].count() == 0
-
-
 def test_new_ops_plan_shapes(spark):
     """Round-3 operators keep their designed physical shapes: the
     contamination benchmark side and the anomaly stats side are BROADCAST
@@ -295,23 +258,6 @@ def test_contamination_single_corpus_scan(spark):
     )
     # exactly 2 scans total: one corpus side, one benchmark side
     assert plan_of(q).count("Scan parquet") == 2
-
-
-def test_file_ledger_concurrent_records_never_lose_entries(tmp_path):
-    """Two racing runs record different file sets without re-reading each
-    other: append-only shards mean the union survives (a read-merge-write
-    of one shared file would be last-writer-wins)."""
-    from dataprofiler_spark.plans.incremental_files import FileLedger
-
-    a = FileLedger(str(tmp_path / "m"))
-    b = FileLedger(str(tmp_path / "m"))
-    # both observe the empty ledger, then record independently
-    a.record_files(["f1.parquet"])
-    b.record_files(["f2.parquet"])
-    assert a.validated_files() == {"f1.parquet", "f2.parquet"}
-    # idempotent re-record: same content, same shard
-    a.record_files(["f1.parquet"])
-    assert a.validated_files() == {"f1.parquet", "f2.parquet"}
 
 
 def test_round3_addition_plan_shapes(spark):
@@ -423,23 +369,6 @@ def test_join_size_estimate(spark):
     na = spark.createDataFrame([(None,), (1,)], "k int")
     r3 = join_size_estimate(na, na, "k").collect()[0]
     assert r3.rows_a == 1 and r3.estimated_rows == 1
-
-
-def test_file_ledger_reads_legacy_format(tmp_path):
-    """A ledger dir written by the pre-shard release (one
-    validated_files.json) must not read as empty — that would re-validate
-    and double-append everything."""
-    import json
-
-    from dataprofiler_spark.plans.incremental_files import FileLedger
-
-    d = tmp_path / "m"
-    d.mkdir()
-    (d / "validated_files.json").write_text(json.dumps(["old1.parquet", "old2.parquet"]))
-    led = FileLedger(str(d))
-    assert led.validated_files() == {"old1.parquet", "old2.parquet"}
-    led.record_files(["new.parquet"])
-    assert led.validated_files() == {"old1.parquet", "old2.parquet", "new.parquet"}
 
 
 def test_connected_components_execute_pair_plan_once(spark):

@@ -259,3 +259,39 @@ def test_cli_pii_and_layout(spark, tmp_path):
 
     args = build_parser().parse_args(["--layout-report", "--synthetic-rows", "10"])
     assert "--layout-report" in validate_args(args)
+
+
+def test_cli_resume_skips_validated_partitions(spark, tmp_path):
+    """--input with --manifest-dir resumes per partition: a second run over
+    the unchanged hive-partitioned table skips every partition that passed
+    and reads none of their rows; only the failing registered-but-empty
+    partition is re-validated."""
+    import contextlib
+    import io
+
+    from dataprofiler_spark.cli import main
+    from dataprofiler_spark.plans.manifest import Manifest
+    from dataprofiler_spark.sources import gen_sequences
+
+    inp = str(tmp_path / "table")
+    gen_sequences(spark, 2_000).write.partitionBy("source").parquet(inp)
+    argv = ["--input", inp, "--validate", "--manifest-dir", str(tmp_path / "manifest")]
+
+    def run():
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            rc = main(argv)
+        return rc, json.loads(buf.getvalue().strip().splitlines()[-1])
+
+    rc1, first = run()
+    assert rc1 == 1  # empty_src fails row_count_gt_0
+    assert first["partitions_skipped"] == 0 and first["rows_validated"] == 2_000
+    recs = Manifest(str(tmp_path / "manifest")).load()
+    passed = {p for p, rec in recs.items() if rec.status == "validated"}
+    assert passed and set(recs) - passed == {"empty_src"}
+
+    rc2, second = run()
+    assert rc2 == 1
+    assert second["partitions_skipped"] == len(passed)
+    assert second["partitions_validated"] == 1
+    assert second["rows_validated"] == 0
