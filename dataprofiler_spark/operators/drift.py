@@ -5,16 +5,19 @@ The reference's "drift" is metric-delta display and schema/inventory set-diffs
 distributional test. The north_star requires PSI / chi-squared over n_tok
 histograms and token-frequency sketches vs a stored baseline profile, so this
 module is a designed extension (SURVEY.md §2.4 A15), built as plain DataFrame
-math: two histogram DataFrames joined on bucket — no UDF, one shuffle each.
+math: no UDF and no join.
 
 Scale shape: a histogram of a 10^12-row table is groupBy(bucket) over ~1e3
-buckets → partial aggregation collapses everything map-side; the PSI/χ² join
-is a tiny broadcast join of two histogram frames.
+buckets → partial aggregation collapses everything map-side. Every
+two-sided statistic merges its sides the same way: a tagged union and ONE
+hash aggregate over the keys (so rows sharing a key add up), then totals
+as window sums and one aggregate for the statistic — each input is
+scanned once and no aggregated side is shuffled a second time.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -35,39 +38,50 @@ def histogram(
     )
 
 
-def _joined_proportions(
-    baseline: DataFrame, current: DataFrame, key_cols: list[str], eps: float
+def _merged(
+    baseline: DataFrame,
+    current: DataFrame,
+    group_cols: list[str],
+    key_cols: list[str],
 ) -> DataFrame:
-    """Full-outer join of two histograms with epsilon-smoothed proportions
-    (buckets present on one side only must not produce ±inf). Totals ride
-    the joined frame as unpartitioned window sums (histogram-sized input),
-    so the caller's aggregate is ONE job — no separate driver round-trips
-    for the totals."""
-    b = baseline.withColumnRenamed("cnt", "b_cnt").alias("b")
-    c = current.withColumnRenamed("cnt", "c_cnt").alias("c")
-    # null-safe equality: the NULL bucket (null-rate mass) must match the
-    # other side's NULL bucket — an equi-join would read each side's null
-    # mass as absent on the other and report phantom drift
-    cond = None
-    for k in key_cols:
-        eq = F.col(f"b.{k}").eqNullSafe(F.col(f"c.{k}"))
-        cond = eq if cond is None else (cond & eq)
-    joined = b.join(c, cond, "full_outer").select(
-        *[F.coalesce(F.col(f"b.{k}"), F.col(f"c.{k}")).alias(k) for k in key_cols],
-        F.coalesce(F.col("b_cnt"), F.lit(0)).alias("b_cnt"),
-        F.coalesce(F.col("c_cnt"), F.lit(0)).alias("c_cnt"),
+    """The one merge of two count frames ((*group_cols, *key_cols, cnt)
+    each) → (*group_cols, *key_cols, b_cnt, c_cnt, b_tot, c_tot), with the
+    totals per group (over the whole frame when group_cols is empty).
+
+    Tagged union + ONE hash aggregate over the keys: rows that share a
+    key add up on either side, so a side may be a histogram or
+    un-aggregated (key, cnt) rows. groupBy keys
+    NULL like any other value, so each side's NULL bucket (null-rate mass)
+    and NULL group pair with the other side's, and a key or group present
+    on one side only gets 0 on the other. The totals are window sums over
+    the merged rows (group-sized: at most a group's bucket count), so no
+    input is read twice and no aggregated side is re-shuffled by a join."""
+    keys = [*group_cols, *key_cols]
+    tagged = baseline.select(
+        *keys, F.col("cnt").alias("__b"), F.lit(0).alias("__c")
+    ).unionByName(
+        current.select(*keys, F.lit(0).alias("__b"), F.col("cnt").alias("__c"))
     )
-    w_all = Window.partitionBy()
-    b_tot = F.greatest(F.sum("b_cnt").over(w_all), F.lit(1))
-    c_tot = F.greatest(F.sum("c_cnt").over(w_all), F.lit(1))
-    return joined.select(
-        *key_cols,
-        "b_cnt",
-        "c_cnt",
-        c_tot.alias("c_tot"),
-        F.greatest(F.col("b_cnt") / b_tot, F.lit(eps)).alias("p_base"),
-        F.greatest(F.col("c_cnt") / c_tot, F.lit(eps)).alias("p_cur"),
+    w = Window.partitionBy(*group_cols)
+    return (
+        tagged.groupBy(*keys)
+        .agg(F.sum("__b").alias("b_cnt"), F.sum("__c").alias("c_cnt"))
+        .select(
+            *keys,
+            "b_cnt",
+            "c_cnt",
+            F.sum("b_cnt").over(w).alias("b_tot"),
+            F.sum("c_cnt").over(w).alias("c_tot"),
+        )
     )
+
+
+def _proportions(eps: float) -> tuple[Column, Column]:
+    """(p_base, p_cur) over _merged's rows, epsilon-smoothed: a bucket
+    present on one side only must not produce ±inf."""
+    p_base = F.greatest(F.col("b_cnt") / F.greatest(F.col("b_tot"), F.lit(1)), F.lit(eps))
+    p_cur = F.greatest(F.col("c_cnt") / F.greatest(F.col("c_tot"), F.lit(1)), F.lit(eps))
+    return p_base, p_cur
 
 
 def psi(
@@ -80,13 +94,12 @@ def psi(
 
     Rule of thumb thresholds: <0.1 stable, 0.1-0.25 moderate, >0.25 major
     shift (standard PSI convention; the reference has no analog)."""
-    key_cols = key_cols or ["bucket"]
-    j = _joined_proportions(baseline, current, key_cols, eps)
-    row = j.agg(
-        F.sum(
-            (F.col("p_cur") - F.col("p_base")) * F.log(F.col("p_cur") / F.col("p_base"))
-        ).alias("psi")
-    ).collect()[0]
+    p_base, p_cur = _proportions(eps)
+    row = (
+        _merged(baseline, current, [], key_cols or ["bucket"])
+        .agg(F.sum((p_cur - p_base) * F.log(p_cur / p_base)).alias("psi"))
+        .collect()[0]
+    )
     return float(row["psi"] or 0.0)
 
 
@@ -98,57 +111,16 @@ def chi_squared(
     """Pearson χ² of current counts vs expected counts scaled from the
     baseline distribution. Returns (statistic, degrees_of_freedom).
     Buckets with zero baseline mass are excluded (no expected count)."""
-    key_cols = key_cols or ["bucket"]
-    j = _joined_proportions(baseline, current, key_cols, eps=0.0)
-    expected = F.col("p_base") * F.col("c_tot")
+    p_base, _ = _proportions(0.0)
+    expected = p_base * F.greatest(F.col("c_tot"), F.lit(1))
     stats = (
-        j.filter(F.col("b_cnt") > 0)
+        _merged(baseline, current, [], key_cols or ["bucket"])
+        .filter(F.col("b_cnt") > 0)
         .select(((F.col("c_cnt") - expected) ** 2 / expected).alias("term"))
         .agg(F.sum("term").alias("stat"), F.count(F.lit(1)).alias("k"))
         .collect()[0]
     )
     return float(stats["stat"] or 0.0), max(int(stats["k"]) - 1, 0)
-
-
-def _grouped_joined(
-    baseline: DataFrame, current: DataFrame, group_col: str
-) -> DataFrame:
-    """Shared merge for the grouped drift statistics: null-safe full-outer
-    join of two grouped histograms plus per-group totals →
-    (group, bucket, b_cnt, c_cnt, b_tot, c_tot)."""
-    b_tot = baseline.groupBy(group_col).agg(F.sum("cnt").alias("b_tot"))
-    c_tot = current.groupBy(group_col).agg(F.sum("cnt").alias("c_tot"))
-    b = baseline.withColumnRenamed("cnt", "b_cnt").alias("b")
-    c = current.withColumnRenamed("cnt", "c_cnt").alias("c")
-    # bucket joined null-safely: each side's NULL bucket (null-rate mass)
-    # must pair with the other side's, not read as absent (phantom PSI)
-    cond = F.col(f"b.{group_col}").eqNullSafe(F.col(f"c.{group_col}")) & F.col(
-        "b.bucket"
-    ).eqNullSafe(F.col("c.bucket"))
-    merged = b.join(c, cond, "full_outer").select(
-        F.coalesce(F.col(f"b.{group_col}"), F.col(f"c.{group_col}")).alias(group_col),
-        F.coalesce(F.col("b.bucket"), F.col("c.bucket")).alias("bucket"),
-        F.coalesce(F.col("b_cnt"), F.lit(0)).alias("b_cnt"),
-        F.coalesce(F.col("c_cnt"), F.lit(0)).alias("c_cnt"),
-    )
-    # totals joined null-safely too: a NULL group value survives the
-    # full-outer merge above, so dropping it here (plain equi-join) would
-    # undo the null-safety — a left join with eqNullSafe + coalesce(tot, 0)
-    # keeps groups that exist on only one side as well
-    bt = b_tot.withColumnRenamed(group_col, "__bg").alias("bt")
-    ct = c_tot.withColumnRenamed(group_col, "__cg").alias("ct")
-    return (
-        merged.join(bt, F.col(group_col).eqNullSafe(F.col("__bg")), "left")
-        .join(ct, F.col(group_col).eqNullSafe(F.col("__cg")), "left")
-        .select(
-            group_col,
-            "bucket",
-            "b_cnt",
-            "c_cnt",
-            F.coalesce(F.col("b_tot"), F.lit(0)).alias("b_tot"),
-            F.coalesce(F.col("c_tot"), F.lit(0)).alias("c_tot"),
-        )
-    )
 
 
 def drift_by_group(
@@ -157,22 +129,28 @@ def drift_by_group(
     group_col: str,
     eps: float = 1e-6,
 ) -> DataFrame:
-    """Per-group PSI and χ² between two grouped histograms
+    """Per-group PSI and χ² between two grouped count frames
     ((group, bucket, cnt) each) — fully distributed, one row per group:
     (group, psi, chi2_stat, chi2_dof). This is the per-partition drift
-    verdict input for the validation pipeline."""
-    j = _grouped_joined(baseline, current, group_col)
-    p_base = F.greatest(F.col("b_cnt") / F.greatest(F.col("b_tot"), F.lit(1)), F.lit(eps))
-    p_cur = F.greatest(F.col("c_cnt") / F.greatest(F.col("c_tot"), F.lit(1)), F.lit(eps))
+    verdict input for the validation pipeline.
+
+    Rows that share a (group, bucket) add up, on either side: `current`
+    may be raw (group, bucket, cnt = 1) rows, as the pipeline's
+    token-frequency check passes them. Plan: the tagged union of both
+    sides, one hash aggregate over (group, bucket) (map-side partials
+    collapse raw rows to bucket counts), the per-group totals as window
+    sums over group, then this per-group aggregate — no join, and each
+    input is scanned once."""
+    p_base, p_cur = _proportions(eps)
     expected = p_base * F.col("c_tot")
-    return j.groupBy(group_col).agg(
+    return _merged(baseline, current, [group_col], ["bucket"]).groupBy(group_col).agg(
         F.round(F.sum((p_cur - p_base) * F.log(p_cur / p_base)), 6).alias("psi"),
         F.round(
             F.sum(
                 # expected = p_base * c_tot is 0 for a group with NO
-                # current rows (possible now that baseline-only groups
-                # survive the null-safe totals join): χ² has no defined
-                # term there, so it contributes nothing
+                # current rows (a baseline-only group survives the
+                # merge): χ² has no defined term there, so it
+                # contributes nothing
                 F.when(
                     (F.col("b_cnt") > 0) & (expected > 0),
                     (F.col("c_cnt") - expected) ** 2 / expected,
@@ -195,19 +173,51 @@ def jsd_by_group(
     epsilon smoothing needed — a bucket absent on one side contributes a
     bounded term, where PSI's log-ratio diverges and needs eps).
 
-    Same distributed shape as drift_by_group: null-safe full-outer merge +
-    one hash aggregate per group. The reference has no distributional test
+    Same merge and plan as drift_by_group (rows sharing a (group, bucket)
+    add up; tagged-union aggregate + per-group window totals) and one
+    hash aggregate per group. The reference has no distributional test
     (this module's header); designed extension like PSI/χ²."""
-    j = _grouped_joined(baseline, current, group_col)
-    p = F.col("b_cnt") / F.greatest(F.col("b_tot"), F.lit(1))
-    q = F.col("c_cnt") / F.greatest(F.col("c_tot"), F.lit(1))
+    p, q = _proportions(0.0)
     m = (p + q) / F.lit(2.0)
     # 0·log(0/m) ≡ 0 (limit), so gate each KL term on its own mass
     term = (
         F.when(F.col("b_cnt") > 0, p * F.log(p / m) / 2).otherwise(F.lit(0.0))
         + F.when(F.col("c_cnt") > 0, q * F.log(q / m) / 2).otherwise(F.lit(0.0))
     )
-    return j.groupBy(group_col).agg(F.round(F.sum(term), 6).alias("jsd"))
+    return (
+        _merged(baseline, current, [group_col], ["bucket"])
+        .groupBy(group_col)
+        .agg(F.round(F.sum(term), 6).alias("jsd"))
+    )
+
+
+def _cdfs(
+    baseline: DataFrame, current: DataFrame, col: str, keys: list[str]
+) -> DataFrame:
+    """Both sides' empirical CDFs at every observed non-NULL value of
+    `col`, per group: (*keys, v, cb, cc, nb, nc) with cb/nb and cc/nc the
+    CDFs at v. _merged over one count per row (map-side partials collapse
+    rows to distinct values), then a cumulative-sum window per group
+    ordered by value."""
+
+    def values(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(col).isNotNull()).select(
+            *keys, F.col(col).alias("v"), F.lit(1).alias("cnt")
+        )
+
+    w_cum = (
+        Window.partitionBy(*keys)
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return _merged(values(baseline), values(current), keys, ["v"]).select(
+        *keys,
+        "v",
+        F.sum("b_cnt").over(w_cum).alias("cb"),
+        F.sum("c_cnt").over(w_cum).alias("cc"),
+        F.greatest(F.col("b_tot"), F.lit(1)).alias("nb"),
+        F.greatest(F.col("c_tot"), F.lit(1)).alias("nc"),
+    )
 
 
 def ks_statistic(
@@ -224,10 +234,10 @@ def ks_statistic(
     critical value c(α)·√((n+m)/(n·m)).
 
     Distributed shape: tag each side, union, and run ONE hash aggregate
-    over (group, value) with conditional sums — map-side partials collapse
-    row count to distinct-value count, and the tagged union replaces the
-    two-aggregate + full-outer-join merge (3 shuffles) with a single
-    shuffle. Then a cumulative-sum window per group ordered by value. The
+    over (group, value) — map-side partials collapse row count to
+    distinct-value count, and the tagged union needs a single shuffle
+    where a two-aggregate + full-outer-join merge needs three. Then a
+    cumulative-sum window per group ordered by value. The
     window sorts only DISTINCT values within each group (bounded by value
     cardinality, not row count); for truly continuous high-cardinality
     columns at corpus scale, quantize first (histogram()) and accept the
@@ -235,30 +245,7 @@ def ks_statistic(
     exact test on any engine.
     """
     keys = [group_col] if group_col else []
-    tagged = baseline.filter(F.col(col).isNotNull()).select(
-        *keys, F.col(col).alias("v"), F.lit(1).alias("__b"), F.lit(0).alias("__c")
-    ).unionByName(
-        current.filter(F.col(col).isNotNull()).select(
-            *keys, F.col(col).alias("v"), F.lit(0).alias("__b"), F.lit(1).alias("__c")
-        )
-    )
-    merged = tagged.groupBy(*keys, "v").agg(
-        F.sum("__b").alias("b_cnt"), F.sum("__c").alias("c_cnt")
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy(*keys)
-    staged = merged.select(
-        *keys,
-        (F.sum("b_cnt").over(w_cum)).alias("cb"),
-        (F.sum("c_cnt").over(w_cum)).alias("cc"),
-        F.greatest(F.sum("b_cnt").over(w_all), F.lit(1)).alias("nb"),
-        F.greatest(F.sum("c_cnt").over(w_all), F.lit(1)).alias("nc"),
-    )
-    return staged.groupBy(*keys).agg(
+    return _cdfs(baseline, current, col, keys).groupBy(*keys).agg(
         F.round(
             F.max(F.abs(F.col("cb") / F.col("nb") - F.col("cc") / F.col("nc"))), 6
         ).alias("ks_stat"),
@@ -285,35 +272,13 @@ def wasserstein_1d(
     over distinct values → per-group ordered window); numeric columns
     only (the distance needs a metric). NULLs are excluded as in KS."""
     keys = [group_col] if group_col else []
-    tagged = baseline.filter(F.col(col).isNotNull()).select(
-        *keys, F.col(col).alias("v"), F.lit(1).alias("__b"), F.lit(0).alias("__c")
-    ).unionByName(
-        current.filter(F.col(col).isNotNull()).select(
-            *keys, F.col(col).alias("v"), F.lit(0).alias("__b"), F.lit(1).alias("__c")
-        )
-    )
-    merged = tagged.groupBy(*keys, "v").agg(
-        F.sum("__b").alias("b_cnt"), F.sum("__c").alias("c_cnt")
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy(*keys)
     w_next = Window.partitionBy(*keys).orderBy("v")
-    staged = merged.select(
-        *keys,
-        F.col("v").cast("double").alias("v"),
-        (F.sum("b_cnt").over(w_cum)).alias("cb"),
-        (F.sum("c_cnt").over(w_cum)).alias("cc"),
-        F.greatest(F.sum("b_cnt").over(w_all), F.lit(1)).alias("nb"),
-        F.greatest(F.sum("c_cnt").over(w_all), F.lit(1)).alias("nc"),
-    ).select(
+    v = F.col("v").cast("double")
+    staged = _cdfs(baseline, current, col, keys).select(
         *keys,
         (
             F.abs(F.col("cb") / F.col("nb") - F.col("cc") / F.col("nc"))
-            * (F.lead("v").over(w_next) - F.col("v"))
+            * (F.lead(v).over(w_next) - v)
         ).alias("__seg"),
     )
     return staged.groupBy(*keys).agg(

@@ -57,6 +57,7 @@ class ValidationResult:
     profiles: DataFrame
     verdicts: DataFrame
     violations: DataFrame
+    # one row per (partition, drift check), labelled by check_name
     drift: DataFrame | None
     skipped_partitions: set[str] = field(default_factory=set)
     summary: dict = field(default_factory=dict)
@@ -148,42 +149,53 @@ def run_validation(
             evaluate_expectations(profiles, expectations, part_col=cfg.part_col)
         )
 
-    def _drift_verdicts(drift_df: DataFrame, check_name: str) -> DataFrame:
-        return drift_df.select(
-            F.lit(cfg.table_name).alias("table_name"),
-            F.col(cfg.part_col).cast("string").alias("partition_value"),
-            F.lit(check_name).alias("check_name"),
-            F.lit(None).cast("long").alias("row_count"),
-            F.lit(None).cast("long").alias("violation_count"),
-            (F.col("psi") <= cfg.psi_threshold).alias("passed"),
-        )
-
-    def _small(frame: DataFrame) -> DataFrame:
+    def _small(frame: DataFrame, check_name: str) -> DataFrame:
         # drift frames are group-sized (one row per partition). They feed
         # BOTH the verdict union and the drift sink — collect once so the
-        # histogram scans don't re-execute per consumer.
-        return spark.createDataFrame(frame.collect(), frame.schema)
+        # histogram scans don't re-execute per consumer. The check label
+        # goes on the local frame: the frame collected must be the one
+        # drift_by_group returned (perfbench/tracing.py attributes that
+        # collect to the drift layer by frame identity).
+        local = spark.createDataFrame(frame.collect(), frame.schema)
+        return local.withColumn("check_name", F.lit(check_name))
 
-    drift = None
+    drifts = []
     if baseline_hist is not None:
         cur_hist = histogram(df, "n_tok", cfg.drift_bucket_width, group_by=[cfg.part_col])
-        drift = _small(drift_by_group(baseline_hist, cur_hist, cfg.part_col))
-        verdicts = verdicts.unionByName(_drift_verdicts(drift, "n_tok_drift_psi"))
+        drifts.append(
+            _small(drift_by_group(baseline_hist, cur_hist, cfg.part_col), "n_tok_drift_psi")
+        )
 
     if baseline_token_freq is not None:
         # token-frequency drift per partition (north_star: PSI over token
-        # sketches as well as n_tok histograms). Explode collapses map-side
-        # (bounded vocab); the per-group PSI join is histogram-sized.
-        cur_freq = (
-            df.select(cfg.part_col, F.explode("tokens").alias("bucket"))
-            .groupBy(cfg.part_col, "bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        # sketches as well as n_tok histograms). The exploded tokens go in
+        # as raw (partition, token, 1) rows: drift_by_group's one merge
+        # aggregate counts them, collapsing the explosion map-side
+        # (bounded vocab).
+        cur_tokens = df.select(
+            cfg.part_col, F.explode("tokens").alias("bucket"), F.lit(1).alias("cnt")
         )
-        tok_drift = _small(
-            drift_by_group(baseline_token_freq, cur_freq, cfg.part_col, eps=1e-9)
+        drifts.append(
+            _small(
+                drift_by_group(baseline_token_freq, cur_tokens, cfg.part_col, eps=1e-9),
+                "token_freq_drift_psi",
+            )
         )
-        verdicts = verdicts.unionByName(_drift_verdicts(tok_drift, "token_freq_drift_psi"))
-        drift = tok_drift if drift is None else drift.unionByName(tok_drift)
+
+    drift = None
+    for d in drifts:
+        drift = d if drift is None else drift.unionByName(d)
+    if drift is not None:
+        verdicts = verdicts.unionByName(
+            drift.select(
+                F.lit(cfg.table_name).alias("table_name"),
+                F.col(cfg.part_col).cast("string").alias("partition_value"),
+                "check_name",
+                F.lit(None).cast("long").alias("row_count"),
+                F.lit(None).cast("long").alias("violation_count"),
+                (F.col("psi") <= cfg.psi_threshold).alias("passed"),
+            )
+        )
 
     # verdict matrix is small (partitions × checks) — safe to collect for
     # the manifest + summary (violation ROWS stay distributed/capped).

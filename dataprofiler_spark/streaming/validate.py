@@ -243,9 +243,9 @@ def drift_stream(
     validate_stream: ONE implementation of the drift semantics — the
     static baseline join is ordinary batch code inside the micro-batch.
     The baseline frame is histogram-sized (groups × buckets), so each
-    batch adds one broadcast-sized join, no streaming state at all:
-    a restarted query resumes from the checkpoint with nothing to
-    rebuild.
+    batch adds one histogram-sized merge (tagged union + one aggregate,
+    no join) and no streaming state at all: a restarted query resumes
+    from the checkpoint with nothing to rebuild.
 
     At-least-once caveat: a batch whose parquet append succeeded but
     whose checkpoint commit did not is REPLAYED with the same batch_id,

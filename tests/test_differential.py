@@ -248,46 +248,63 @@ def test_uniqueness_and_ri_verdicts_match_sql(tmp_path_factory, rows, ref_rows, 
 @given(
     st.lists(
         st.tuples(
-            st.sampled_from(["g1", "g2"]),
-            st.integers(0, 8),         # bucket
+            st.sampled_from(["g1", "g2", None]),
+            st.one_of(st.none(), st.integers(0, 8)),  # bucket (None = NULL bucket)
             st.integers(1, 50),        # baseline cnt
             st.integers(0, 50),        # current cnt (0 = absent)
+            st.integers(1, 3),         # rows the current cnt is split into
         ),
         min_size=1,
         max_size=30,
         unique_by=lambda t: (t[0], t[1]),
     )
 )
+@example(rows=[("g1", None, 10, 10, 2), (None, 0, 5, 7, 3), (None, None, 3, 0, 1), ("g2", 1, 4, 4, 1)])
 @settings(max_examples=6, deadline=None)
 def test_psi_jsd_match_sql_on_random_histograms(rows):
     """drift_by_group PSI and jsd_by_group vs direct SQL formulas on
-    random grouped histograms, including one-sided buckets."""
+    random grouped histograms, including one-sided buckets, NULL buckets
+    and a NULL group (each must pair with the other side's, as a
+    null-safe merge does). The current side is fed both as a histogram
+    and as un-aggregated rows whose counts add up to it (the pipeline
+    passes raw token rows): both must give the same statistics."""
     import math
 
     from dataprofiler_spark import get_spark
     from dataprofiler_spark.operators.drift import drift_by_group, jsd_by_group
 
+    def bucket(bk):
+        return None if bk is None else float(bk)
+
+    def split(n, k):
+        return [n // k + (1 if i < n % k else 0) for i in range(k)]
+
     spark = get_spark(master="local[2]", shuffle_partitions=2)
-    b = spark.createDataFrame(
-        [(g, float(bk), c) for g, bk, c, _ in rows], "g string, bucket double, cnt long"
-    )
+    schema = "g string, bucket double, cnt long"
+    b = spark.createDataFrame([(g, bucket(bk), c) for g, bk, c, _, _ in rows], schema)
     c = spark.createDataFrame(
-        [(g, float(bk), cc) for g, bk, _, cc in rows if cc > 0],
-        "g string, bucket double, cnt long",
+        [(g, bucket(bk), cc) for g, bk, _, cc, _ in rows if cc > 0], schema
     )
-    got_psi = {r.g: r.psi for r in drift_by_group(b, c, "g").collect()}
-    got_jsd = {r.g: r.jsd for r in jsd_by_group(b, c, "g").collect()}
+    c_rows = spark.createDataFrame(
+        [
+            (g, bucket(bk), n)
+            for g, bk, _, cc, k in rows
+            for n in split(cc, k)
+            if n > 0
+        ],
+        schema,
+    )
 
     # reference computation in plain python
     from collections import defaultdict
 
     bt, ct = defaultdict(int), defaultdict(int)
-    for g, bk, cb, cc in rows:
+    for g, bk, cb, cc, _ in rows:
         bt[g] += cb
         ct[g] += cc
     eps = 1e-6
     want_psi, want_jsd = defaultdict(float), defaultdict(float)
-    for g, bk, cb, cc in rows:
+    for g, bk, cb, cc, _ in rows:
         p = max(cb / max(bt[g], 1), eps)
         q = max(cc / max(ct[g], 1), eps)
         want_psi[g] += (q - p) * math.log(q / p)
@@ -297,9 +314,13 @@ def test_psi_jsd_match_sql_on_random_histograms(rows):
             want_jsd[g] += pe * math.log(pe / m) / 2
         if cc > 0:
             want_jsd[g] += qe * math.log(qe / m) / 2
-    for g in got_psi:
-        assert abs(got_psi[g] - round(want_psi[g], 6)) < 2e-6, (g, got_psi[g], want_psi[g])
-        assert abs(got_jsd[g] - round(want_jsd[g], 6)) < 2e-6, (g, got_jsd[g], want_jsd[g])
+    for cur in (c, c_rows):
+        got_psi = {r.g: r.psi for r in drift_by_group(b, cur, "g").collect()}
+        got_jsd = {r.g: r.jsd for r in jsd_by_group(b, cur, "g").collect()}
+        assert set(got_psi) == set(got_jsd) == set(bt)
+        for g in got_psi:
+            assert abs(got_psi[g] - round(want_psi[g], 6)) < 2e-6, (g, got_psi[g], want_psi[g])
+            assert abs(got_jsd[g] - round(want_jsd[g], 6)) < 2e-6, (g, got_jsd[g], want_jsd[g])
 
 
 @given(

@@ -261,6 +261,39 @@ def test_pipeline_token_frequency_drift(spark):
     )
 
 
+def test_drift_sink_one_row_per_partition_and_check(spark, tmp_path):
+    """With both drift baselines, drift_metrics (and ValidationResult.drift)
+    hold exactly one row per (partition, check), labelled by check_name,
+    and each drift verdict is that row's PSI against the threshold."""
+    base = gen_sequences(spark, N)
+    base_hist = histogram(base, "n_tok", 16.0, group_by=["source"])
+    base_freq = (
+        base.select("source", F.explode("tokens").alias("bucket"))
+        .groupBy("source", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    cfg = ValidationConfig(output_dir=str(tmp_path / "out"))
+    res = run_validation(
+        spark, base, gen_sources_ref(spark), baseline_hist=base_hist,
+        baseline_token_freq=base_freq, cfg=cfg,
+    )
+    checks = ("n_tok_drift_psi", "token_freq_drift_psi")
+    parts = {r.source for r in base.select("source").distinct().collect()}
+    sink = spark.read.parquet(str(tmp_path / "out" / "drift_metrics")).collect()
+    assert sorted((r.source, r.check_name) for r in sink) == sorted(
+        (p, c) for p in parts for c in checks
+    )
+    assert sorted(map(tuple, res.drift.collect())) == sorted(map(tuple, sink))
+    verdicts = {
+        (r.partition_value, r.check_name): r.passed
+        for r in res.verdicts.collect()
+        if r.check_name in checks
+    }
+    assert verdicts == {
+        (r.source, r.check_name): r.psi <= cfg.psi_threshold for r in sink
+    }
+
+
 def test_curate_corpus_end_to_end(spark, tmp_path):
     """The materializing curation run: quality gate, exact-dedup survivor,
     PII redaction in the OUTPUT, split assignment, and a funnel that

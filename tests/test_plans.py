@@ -468,6 +468,32 @@ def test_ks_wasserstein_single_shuffle_grouped_window(spark):
         assert "FullOuter" not in p and "SortMergeJoin" not in p, p
 
 
+def test_drift_by_group_one_aggregate_no_join(spark, tmp_path_factory):
+    """drift_by_group merges its two inputs with a tagged union and ONE
+    aggregate: no join node of any kind (the null-safe full-outer merge
+    sorted the stored baseline against the current histogram, and its
+    eqNullSafe keys re-shuffled the already-aggregated side), and each
+    input is scanned exactly once (the per-group totals are window sums
+    over the merged rows, not a second read of each input)."""
+    from dataprofiler_spark.operators.drift import drift_by_group
+
+    # a short directory: a scan's Location is cut at 100 characters
+    d = tmp_path_factory.mktemp("drift")
+    rows = [("a", 0.0, 5), ("a", 16.0, 3), (None, None, 2), ("b", 0.0, 4)]
+    for name in ("base", "cur"):
+        spark.createDataFrame(rows, "source string, bucket double, cnt long").write.parquet(
+            str(d / name)
+        )
+    base, cur = (spark.read.parquet(str(d / name)) for name in ("base", "cur"))
+    p = plan_of(drift_by_group(base, cur, "source"))
+    for join in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin"):
+        assert join not in p, p
+    scans = [line for line in p.split("\n") if "Scan parquet" in line]
+    assert len(scans) == 2, p
+    for name in ("base", "cur"):
+        assert sum(f"{d / name}]" in line for line in scans) == 1, p
+
+
 def test_packing_sweep_one_exchange_no_single_partition(spark):
     """packing_sweep: the size-independent cumsum window is the ONLY
     shuffle (the grid aggregate reuses its group partitioning), no
