@@ -3213,7 +3213,8 @@ def dedup_against_history_documents(spark: SparkSession, sf_dir: str) -> DataFra
     re-read. 20-char prefix digest manufactures cross-snapshot collisions
     at test scale (same convention as dedup_exact_prefix_groups).
     Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import content_hash, dedup_against_history
+    from dataprofiler_spark.operators.dedup import dedup_against_history
+    from dataprofiler_spark.plans.bloom import content_hash
 
     docs = load_table(spark, sf_dir, "documents")
     prefix = F.substring("text", 1, 20)
@@ -3472,10 +3473,8 @@ def dedup_history_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     10^12-digest ledger design point the bloom (one broadcast bitmap,
     probed map-side) replaces the daily ledger re-shuffle for the
     mostly-new bulk of each crawl batch. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import (
-        content_hash,
-        dedup_against_history_bloom,
-    )
+    from dataprofiler_spark.operators.dedup import dedup_against_history_bloom
+    from dataprofiler_spark.plans.bloom import content_hash
 
     docs = load_table(spark, sf_dir, "documents")
     prefix = F.substring("text", 1, 20)
@@ -3947,17 +3946,16 @@ def fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Driver-harvest ordering (CLAUDE.md gotchas 20/26; VERDICT r4 action 1).
+# Driver-harvest ordering (CLAUDE.md gotchas 20/26).
 #
-# The driver evaluates registry entries IN REGISTRATION ORDER under a run
-# budget (exactly HARVEST_BUDGET entries in rounds 2-4) — entries past the
-# window get NO external CORRECTNESS row no matter how good their local
-# parity is. The ROUND-5 window: (1) the 24 entries with no driver row —
-# the 19-entry round-4 data-selection backlog plus 5 of the 6 new round-5
-# entries — then (2) the 23 previously-green entries whose OPERATOR OR
-# ORACLE changed this round (whitespace-robust tokenization touched every
-# word-level query; the gotcha-43 explode_outer sweep changed three more
-# plans late in the round), then (3) three late-round-5 NEW entries (the unchanged core flagships keep their green r4 rows).
+# The graft driver evaluated registry entries IN REGISTRATION ORDER under a
+# run budget (exactly HARVEST_BUDGET entries) — entries past the window got
+# NO external CORRECTNESS row no matter how good their local parity was.
+# The window: (1) the entries that never got a driver row, then (2) the
+# entries whose operator changed after their last driver row (the drift
+# statistics now merge baseline and current with one tagged-union
+# aggregate instead of a full-outer join), then (3) the rest of the
+# registry in registration order, up to the budget.
 # Everything stays in the registry — the local parity suite
 # (tests/test_oracle_parity.py) still checks every registered entry; this
 # list only decides who gets the DRIVER's adjudication.
@@ -3968,82 +3966,69 @@ def fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HARVEST_BUDGET = 50
 
-# (1) entries with no driver CORRECTNESS row through round 4, in round-4
-# registration order — these MUST lead the round-5 window
+# (1) entries with no driver CORRECTNESS row, in registration order — these
+# MUST lead the window
 _NEVER_HARVESTED = [
-    "paragraph_near_dup_pairs_documents",
-    "remove_duplicated_spans_documents",
     "frequent_values_documents",
-    "vocab_rank_drift_split",
-    "url_dedup_documents",
-    "domain_cap_sample_documents",
-    "duplication_weights_documents",
-    "chunk_overlap_documents",
     "dedup_against_history_documents",
-    "near_dup_history_documents",
-    "hashed_classifier_score_documents",
-    "pca_embeddings_tolerance",
-    "packed_sequences_documents",
-    "pq_topk_tolerance",
     "dedup_history_bloom_documents",
-    "shuffle_corpus_documents",
-    "token_budget_selection_documents",
-    "dsir_selection_documents",
-    "threshold_sweep_documents",
-    # round-5 additions, driver-adjudicated for the first time
-    "packing_sweep_documents",
-    "bigram_logprob_documents",
     "source_diversity_documents",
-    "encoding_quality_documents",
-    "cross_source_overlap_documents",
-    # dup_group_size_histogram_documents stays local-tail (slot traded to
-    # keep embedding_near_dup_lsh's changed plan driver-adjudicated)
 ]
 
-# (2) green in r1-r4 but CHANGED this round: every word-level operator and
-# its oracle switched to whitespace-robust tokenization
-# (expressions.words / WORDS_SQL) — the old driver rows attest the old
-# tokenizer, so these re-enter the window
+# (2) green before, but their operator changed since their last driver row
 _CHANGED_THIS_ROUND = [
-    "token_counts_documents",
-    "text_quality_documents",
-    "lang_id_documents",
-    "repetition_quality_documents",
-    "contamination_documents",
-    "vocab_stats_by_source",
-    "unigram_logprob_documents",
-    "tfidf_keywords_documents",
-    "zipf_fit_documents",
-    "boilerplate_ngrams_documents",
-    "minhash_lsh_pairs_documents",
-    "dedup_clusters_documents",
-    "dedup_clusters_string_ids",
-    "simhash_near_dup_documents",
-    "ngram_jaccard_pairs_documents",
-    "edit_distance_near_pairs",
-    "packing_plan_documents",
-    "batch_padding_documents",
-    "curation_funnel_documents",
-    "corpus_curation_summary",
-    # late round-5: the gotcha-43 explode_outer sweep changed these
-    # operators' plans after their r4 driver rows were taken (every other
-    # swept operator is already in a window segment above)
-    "paragraph_dedup_documents",
-    "semantic_dedup_embeddings",
-    "embedding_near_dup_lsh",
+    "psi_chi2_nchars_split",
+    "ks_nchars_split",
+    "jsd_nchars_split",
+    "wasserstein_nchars_split",
 ]
 
-# (3) Final three slots: late-round-5 NEW entries with no driver row.
-# The former core-refill flagships (profile, uniqueness, RI) are
-# UNCHANGED since their green r4 driver rows — re-attesting them buys
-# nothing, while a brand-new entry unadjudicated by the driver is
-# exactly the gap the r4 verdict flagged. fertility_by_source and
-# dup_group_size_histogram_documents stay local-tail (least novel of
-# the five late additions).
+# (3) the remaining entries in registration order, filling the budget;
+# the last three of them (join_estimate_events_selfjoin,
+# cusum_shift_events, seasonal_anomalies_events) form the local-only tail
 _LATE_NEW = [
-    "cluster_survivors_quality",
-    "ngram_containment_pairs_documents",
-    "leakage_safe_split_documents",
+    "profile_documents",
+    "profile_orders",
+    "profile_lineitem_by_returnflag",
+    "uniqueness_duplicates_orders_custkey",
+    "ri_orphans_orders_customer",
+    "latest_event_per_user",
+    "rollup_events_by_type",
+    "histogram_n_chars",
+    "inventory_drift_langs",
+    "growth_slope_events",
+    "dedup_exact_prefix_groups",
+    "profile_compare_envs",
+    "profile_compare_summary",
+    "setop_event_types_except",
+    "grouping_rollup_orders",
+    "tpch_q1_pricing_summary",
+    "salted_profile_nchars_by_lang",
+    "approx_profile_documents_tolerance",
+    "salted_sketch_tolerance_nchars_by_lang",
+    "growth_alerts_events_by_type",
+    "schema_object_drift_events",
+    "expectations_documents",
+    "array_profile_embeddings",
+    "incremental_profile_merge_documents",
+    "topk_events_per_user",
+    "sessionization_events",
+    "revenue_by_nation",
+    "pivot_lang_by_source",
+    "profile_events",
+    "profile_customer",
+    "quantiles_lineitem_by_returnflag",
+    "event_value_deltas",
+    "entropy_source_by_lang",
+    "daily_anomalies_events",
+    "json_extract_events",
+    "corr_lineitem_by_returnflag",
+    "incremental_median_nchars",
+    "skew_report_documents_by_source",
+    "pii_summary_documents",
+    "robust_anomalies_events",
+    "snapshot_diff_documents",
+    "cdc_apply_documents",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW
