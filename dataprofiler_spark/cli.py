@@ -53,45 +53,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--output-dir also writes the redacted copy",
     )
     p.add_argument("--text-col", default="text")
-    p.add_argument("--key-col", default="doc_id",
-                   help="unique document key column (--curate)")
-    p.add_argument(
-        "--curate",
-        action="store_true",
-        help="end-to-end corpus curation: quality gate -> exact-dedup "
-        "survivors -> PII redaction -> split assignment; prints the "
-        "one-row funnel, and with --output-dir writes the curated corpus",
-    )
-    p.add_argument(
-        "--dedup-paragraphs",
-        action="store_true",
-        help="with --curate: corpus-global paragraph dedup (C4-style "
-        "first-occurrence line dedup) before the quality gate; the "
-        "funnel gains n_paragraphs_removed",
-    )
-    p.add_argument(
-        "--remove-spans",
-        action="store_true",
-        help="with --curate: drop corpus-frequent word spans "
-        "(C4-style duplicated-span removal) before the quality gate; "
-        "the funnel gains n_span_words_removed",
-    )
-    p.add_argument(
-        "--url-col",
-        default=None,
-        help="with --curate: URL-level dedup first — canonicalize this "
-        "column and keep one doc per canonical URL; the funnel gains "
-        "n_url_survivors",
-    )
-    p.add_argument(
-        "--min-model-score",
-        type=float,
-        default=None,
-        help="with --curate: model-based quality gate threshold "
-        "(fastText-style hashed-unigram classifier with demo weights; "
-        "supply trained weights via the API); the funnel gains "
-        "n_model_pass",
-    )
     p.add_argument(
         "--layout-report",
         action="store_true",
@@ -166,12 +127,11 @@ def validate_args(args) -> str | None:
         or args.write_baseline
         or args.pii_scan
         or args.layout_report
-        or args.curate
     ):
         return (
             "at least one stage flag required "
             "(--data-profile/--validate/--drift/--growth/--write-baseline/"
-            "--pii-scan/--layout-report/--curate)"
+            "--pii-scan/--layout-report)"
         )
     if not args.input and not args.synthetic_rows and not args.config:
         return "--input, --synthetic-rows, or --config required"
@@ -362,34 +322,6 @@ def main(argv: list[str] | None = None) -> int:
                 f"{args.output_dir}/redacted"
             )
             print(json.dumps({"redacted_written": f"{args.output_dir}/redacted"}))
-
-    if args.curate:
-        from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-        missing = [c for c in (args.text_col, args.key_col) if c not in df.columns]
-        if missing:
-            print(f"error: --curate: no column(s) {missing}", file=sys.stderr)
-            return 2
-        res = curate_corpus(
-            spark,
-            df,
-            CurationConfig(
-                text_col=args.text_col,
-                key_col=args.key_col,
-                dedup_paragraphs=args.dedup_paragraphs,
-                remove_spans=args.remove_spans,
-                url_col=args.url_col,
-                min_model_score=args.min_model_score,
-            ),
-            # two actions (funnel + write) share the staged frame
-            persist=bool(args.output_dir),
-        )
-        print(json.dumps(res.funnel.collect()[0].asDict()))
-        if args.output_dir:
-            res.curated.write.mode("overwrite").partitionBy("split").parquet(
-                f"{args.output_dir}/curated"
-            )
-            print(json.dumps({"curated_written": f"{args.output_dir}/curated"}))
 
     if args.layout_report:
         from dataprofiler_spark.plans.layout import file_layout_report

@@ -262,293 +262,3 @@ def run_validation(
         "run_at": time.time(),
     }
     return ValidationResult(profiles, verdict_rows, violations, drift, skipped, summary)
-
-
-@dataclass
-class CurationConfig:
-    """Corpus-curation pipeline knobs (optional URL dedup → optional
-    paragraph/span cleanup → heuristic + optional model quality gate →
-    exact dedup → PII redaction → split assignment)."""
-
-    min_words: int = 10
-    min_distinct_ratio: float = 0.3
-    redact_pii: bool = True
-    splits: dict | None = None  # name -> fraction; default 90/5/5
-    text_col: str = "text"
-    key_col: str = "doc_id"
-    # optional corpus-global paragraph dedup BEFORE the quality gate
-    # (C4/RefinedWeb order: strip duplicated lines first, then judge the
-    # cleaned text) — funnel gains n_paragraphs_removed when enabled
-    dedup_paragraphs: bool = False
-    paragraph_sep: str = "\n"
-    # optional duplicated-span removal (after paragraph dedup, before the
-    # quality gate) — funnel gains n_span_words_removed when enabled;
-    # NOTE: rebuilt text is whitespace-normalized (operator contract)
-    remove_spans: bool = False
-    span_k: int = 3
-    span_max_doc_freq: int = 2
-    # optional URL-level dedup (crawl order: FIRST, before content
-    # stages): canonicalize `url_col` and keep the min-key doc per
-    # canonical URL — refetches with tracking params / www / default
-    # ports collapse before any text is judged. Funnel gains
-    # n_url_survivors when enabled.
-    url_col: str | None = None
-    # optional model-based quality gate (fastText-style hashed-unigram
-    # linear classifier, textstats.hashed_linear_score) ANDed into the
-    # heuristic quality gate; scored on the post-cleanup text. Funnel
-    # gains n_model_pass when enabled. `model_weights` is the trained
-    # (bucket, weight) table; None = the SQL-replayable demo weights.
-    min_model_score: float | None = None
-    model_weights: DataFrame | None = None
-
-
-@dataclass
-class CurationResult:
-    curated: DataFrame  # survivors: key, redacted text, passthrough, split
-    funnel: DataFrame   # ONE row: counts at every stage
-
-
-RESERVED_CURATION_COLS = (
-    "n_chars_calc", "n_words", "mean_word_len", "distinct_word_ratio",
-    "stopword_ratio", "fingerprint", "split",
-    "__pd_text", "__pd_removed", "__rs_text", "__rs_removed",
-    "__url_keep", "__model_score", "__model_pass",
-)
-
-
-def curate_corpus(
-    spark: SparkSession,
-    docs: DataFrame,
-    cfg: CurationConfig | None = None,
-    persist: bool = False,
-) -> CurationResult:
-    """The materializing end-to-end curation run (the productized form of
-    the corpus_curation_summary analytics): gate on quality features,
-    keep the min-key survivor per content fingerprint AMONG quality
-    passes, redact PII, assign deterministic splits — and account for
-    every document in a one-row funnel.
-
-    Scale shape: quality features, fingerprint, PII regex, and split
-    assignment are all map-side expressions over ONE scan; exact-dedup
-    survivorship is ONE window shuffle on the fingerprint (ordered
-    quality-first then key, so a survivor is always a quality pass when
-    any exists). The funnel is one aggregate over the same flagged frame
-    — stages never re-scan the corpus."""
-    from dataprofiler_spark.operators.pii import redact
-    from dataprofiler_spark.operators.sampling import hash_split
-    from dataprofiler_spark.operators.textstats import fingerprint, quality_features
-    from pyspark.sql import Window
-
-    cfg = cfg or CurationConfig()
-    splits = cfg.splits or {"train": 0.9, "val": 0.05, "test": 0.05}
-    for c in (cfg.text_col, cfg.key_col):
-        if c not in docs.columns:
-            raise ValueError(f"curate_corpus: input has no column '{c}'")
-    clash = [c for c in RESERVED_CURATION_COLS if c in docs.columns]
-    if clash:
-        raise ValueError(
-            f"curate_corpus: input columns {clash} collide with curation "
-            "staging columns — rename them first (they would be clobbered)"
-        )
-    # fractions summing below 1 leave a 'rest' bucket (hash_split
-    # semantics) — the funnel must account for it too
-    split_names = list(splits)
-    if sum(splits.values()) < 1.0 - 1e-9:
-        split_names.append("rest")
-    passthrough = list(docs.columns)
-
-    url_enabled = cfg.url_col is not None
-    if url_enabled:
-        # URL-level dedup FIRST (crawl order): flag — don't filter — so
-        # the one-scan funnel still accounts for every input row. One
-        # narrow shuffle on the canonical URL; the flag join hashes on
-        # (norm_url, key) so a hot URL's refetches stay spread.
-        from dataprofiler_spark.operators.urls import with_normalized_url
-
-        if cfg.url_col not in docs.columns:
-            raise ValueError(f"curate_corpus: input has no column '{cfg.url_col}'")
-        if "norm_url" in docs.columns:
-            raise ValueError(
-                "curate_corpus: input column 'norm_url' collides with the "
-                "URL-dedup staging column — rename it first"
-            )
-        docs = with_normalized_url(docs, cfg.url_col, "norm_url")
-        usurv = (
-            docs.groupBy("norm_url")
-            .agg(F.min(cfg.key_col).alias("__usk"))
-            .select(F.col("norm_url").alias("__unu"), "__usk")
-        )
-        # eqNullSafe: NULL-url docs form their own group and keep exactly
-        # one survivor (matching url_dedup's groupBy semantics) instead of
-        # all failing a null-unsafe equality. Survivor choice is
-        # key-deterministic (min key), NOT quality-aware — quality isn't
-        # computed yet at this stage (that's the point: collapse refetches
-        # before paying any text cost); content-level quality-first
-        # survivorship is the fingerprint stage's job downstream.
-        docs = (
-            docs.join(
-                usurv,
-                F.col("norm_url").eqNullSafe(F.col("__unu"))
-                & (F.col(cfg.key_col) == F.col("__usk")),
-                "left",
-            )
-            .withColumn("__url_keep", F.col("__usk").isNotNull())
-            .drop("__unu", "__usk", "norm_url")
-        )
-
-    para_removed = None
-    if cfg.dedup_paragraphs:
-        from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-        pd_out = paragraph_dedup(
-            docs, cfg.key_col, cfg.text_col, cfg.paragraph_sep
-        ).select(
-            cfg.key_col,
-            F.col("text_out").alias("__pd_text"),
-            F.col("n_removed").alias("__pd_removed"),
-        )
-        docs = (
-            docs.join(pd_out, cfg.key_col)
-            .withColumn(cfg.text_col, F.col("__pd_text"))
-            .drop("__pd_text")
-        )
-        para_removed = "__pd_removed"
-
-    span_removed = None
-    if cfg.remove_spans:
-        from dataprofiler_spark.operators.dedup import remove_duplicated_spans
-
-        rs = remove_duplicated_spans(
-            docs, cfg.key_col, cfg.text_col, cfg.span_k, cfg.span_max_doc_freq
-        ).select(
-            cfg.key_col,
-            F.col("text_out").alias("__rs_text"),
-            F.col("n_removed_words").alias("__rs_removed"),
-        )
-        docs = (
-            docs.join(rs, cfg.key_col)
-            .withColumn(cfg.text_col, F.col("__rs_text"))
-            .drop("__rs_text")
-        )
-        span_removed = "__rs_removed"
-
-    if cfg.dedup_paragraphs or cfg.remove_spans:
-        # `docs` fans out below (the surv aggregate + join both re-derive
-        # `staged`, and the optional model gate scores `docs` again):
-        # without materialization the cleanup window+join subtree — the
-        # most expensive stage of the pipeline — would execute 2-3× per
-        # action. localCheckpoint(eager=False) dedups the upstream plan
-        # and lets the ContextCleaner free the blocks (gotcha 24); this
-        # frame is NARROW (one row per doc), so gotcha-36's
-        # materialization-direction rule is satisfied.
-        docs = docs.localCheckpoint(eager=False)
-
-    staged = quality_features(docs, cfg.text_col)
-    q_pass = (F.col("n_words") >= cfg.min_words) & (
-        F.col("distinct_word_ratio") >= cfg.min_distinct_ratio
-    )
-    model_enabled = cfg.min_model_score is not None
-    if model_enabled:
-        # model-based gate on the post-cleanup text: score per key
-        # (explode + map-side-combined agg), joined back on (key) — the
-        # one text-bearing shuffle this stage costs; at corpus scale,
-        # pre-score and store the column instead. NULL score (empty doc)
-        # fails the gate.
-        from dataprofiler_spark.operators.textstats import hashed_linear_score
-
-        scores = hashed_linear_score(
-            docs, cfg.key_col, cfg.text_col,
-            weights=cfg.model_weights, score_col="__model_score",
-        )
-        staged = staged.join(scores, cfg.key_col, "left")
-        staged = staged.withColumn(
-            "__model_pass",
-            F.coalesce(F.col("__model_score") >= cfg.min_model_score, F.lit(False)),
-        )
-        q_pass = q_pass & F.col("__model_pass")
-    if url_enabled:
-        q_pass = q_pass & F.col("__url_keep")
-    staged = fingerprint(staged, cfg.text_col).withColumn("__q", q_pass)
-    # Survivor per fingerprint (quality-first, then min key) via a
-    # map-side-combining AGGREGATE + a (fingerprint, key)-keyed left
-    # join — NOT a rank window: a viral boilerplate content is one window
-    # group, i.e. a single task sorting its entire duplicate set at
-    # corpus scale. The aggregate collapses duplicates map-side, and the
-    # join hashes on BOTH fingerprint and key, so a hot fingerprint's
-    # rows stay spread across reducers. Semantics identical to
-    # row_number() over (partition by fingerprint order by __q desc, key)
-    # = 1 (min key among quality passes when any exist, else min key).
-    surv = (
-        staged.groupBy("fingerprint")
-        .agg(
-            F.max("__q").alias("__hq"),
-            F.min(F.when(F.col("__q"), F.col(cfg.key_col))).alias("__kq"),
-            F.min(cfg.key_col).alias("__ka"),
-        )
-        .select(
-            F.col("fingerprint").alias("__sfp"),
-            F.when(F.col("__hq"), F.col("__kq")).otherwise(F.col("__ka")).alias("__sk"),
-        )
-    )
-    staged = (
-        staged.join(
-            surv,
-            (F.col("fingerprint") == F.col("__sfp"))
-            & (F.col(cfg.key_col) == F.col("__sk")),
-            "left",
-        )
-        .withColumn("__keep", F.col("__q") & F.col("__sk").isNotNull())
-        .drop("__sfp", "__sk")
-    )
-    # has_pii flag without a second scan — the SAME expression pii_scan
-    # uses (operators/pii.pii_total_count), never a reimplementation
-    from dataprofiler_spark.operators.pii import pii_total_count
-
-    staged = staged.withColumn("__has_pii", pii_total_count(cfg.text_col) > 0)
-    staged = hash_split(staged, cfg.key_col, splits)
-    if persist:
-        # two downstream actions (funnel + curated write) would otherwise
-        # re-run the scan + fingerprint window each (gotcha 16)
-        staged = staged.persist()
-
-    def _n(expr, alias):
-        # empty corpus: zeros, not NULL sums
-        return F.coalesce(F.sum(expr.cast("long")), F.lit(0)).alias(alias)
-
-    funnel_aggs = [
-        F.count(F.lit(1)).alias("n_input"),
-        _n(F.col("__q"), "n_quality"),
-        _n(F.col("__keep"), "n_kept"),
-        # honest name: PRESENCE of PII among kept docs — whether it was
-        # then redacted is cfg.redact_pii's job, not this counter's claim
-        _n(F.col("__keep") & F.col("__has_pii"), "n_kept_with_pii"),
-    ]
-    if model_enabled:
-        funnel_aggs.insert(1, _n(F.col("__model_pass"), "n_model_pass"))
-    if url_enabled:
-        funnel_aggs.insert(1, _n(F.col("__url_keep"), "n_url_survivors"))
-    if span_removed is not None:
-        funnel_aggs.insert(
-            1,
-            F.coalesce(F.sum(span_removed), F.lit(0)).alias("n_span_words_removed"),
-        )
-    if para_removed is not None:
-        funnel_aggs.insert(
-            1,
-            F.coalesce(F.sum(para_removed), F.lit(0)).alias("n_paragraphs_removed"),
-        )
-    for name in split_names:
-        funnel_aggs.append(_n(F.col("__keep") & (F.col("split") == name), f"n_{name}"))
-    funnel = staged.agg(*funnel_aggs)
-
-    # output contract: the ORIGINAL columns (text possibly redacted) +
-    # split — engineered staging columns never leak into the corpus
-    kept = staged.filter(F.col("__keep"))
-    if cfg.redact_pii:
-        kept = redact(kept, cfg.text_col, output_col="__red").withColumn(
-            cfg.text_col, F.col("__red")
-        )
-    # passthrough was snapshotted BEFORE the staging joins, so it never
-    # contains the __pd_/__rs_ columns — no filtering needed
-    kept = kept.select(*passthrough, "split")
-    return CurationResult(curated=kept, funnel=funnel)

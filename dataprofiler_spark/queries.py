@@ -2680,47 +2680,6 @@ def script_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "curation_funnel_documents",
-    """WITH s AS (
-  SELECT doc_id,
-    len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS nw,
-    ROUND(len(list_distinct(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''))) * 1.0
-          / len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')), 6) AS dr,
-    md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fp,
-    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bucket,
-    (length(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) > 0
-     OR length(regexp_extract_all(text, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) > 0
-     OR length(regexp_extract_all(text, '\\b\\d{3}[-.]\\d{3}[-.]\\d{4}\\b')) > 0
-     OR length(regexp_extract_all(text, '\\b\\d{3}-\\d{2}-\\d{4}\\b')) > 0
-     OR length(regexp_extract_all(text, '\\b\\d{4}[- ]\\d{4}[- ]\\d{4}[- ]\\d{4}\\b')) > 0
-    ) AS haspii
-  FROM documents
-), f AS (
-  SELECT *, (nw >= 10 AND dr >= 0.3) AS q FROM s
-), r AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY q DESC, doc_id) AS rn FROM f
-)
-SELECT COUNT(*) AS n_input,
-  CAST(SUM(CASE WHEN q THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-  CAST(SUM(CASE WHEN q AND rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-  CAST(SUM(CASE WHEN q AND rn = 1 AND haspii THEN 1 ELSE 0 END) AS BIGINT) AS n_kept_with_pii,
-  CAST(SUM(CASE WHEN q AND rn = 1 AND bucket < 9000 THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
-  CAST(SUM(CASE WHEN q AND rn = 1 AND bucket >= 9000 AND bucket < 9500 THEN 1 ELSE 0 END) AS BIGINT) AS n_val,
-  CAST(SUM(CASE WHEN q AND rn = 1 AND bucket >= 9500 THEN 1 ELSE 0 END) AS BIGINT) AS n_test
-FROM r""",
-)
-def curation_funnel_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materializing curation pipeline's funnel over the documents
-    corpus (quality gate -> fingerprint dedup survivor -> PII flag ->
-    90/5/5 hash split), replayed flag-for-flag in SQL — every document
-    accounted for in one row."""
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    return curate_corpus(spark, docs.select("doc_id", "text"), CurationConfig()).funnel
-
-
-@register(
     "paragraph_dedup_documents",
     """WITH synth AS (
   SELECT a.doc_id, a.text || chr(10) || b.text AS text

@@ -323,61 +323,6 @@ def test_psi_jsd_match_sql_on_random_histograms(rows):
             assert abs(got_jsd[g] - round(want_jsd[g], 6)) < 2e-6, (g, got_jsd[g], want_jsd[g])
 
 
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 9),  # text id -> duplicates by construction
-            st.booleans(),      # long (quality-passing) variant?
-            st.booleans(),      # null text?
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-@settings(max_examples=15, deadline=None)
-def test_curate_survivor_matches_reference(request, spec):
-    """The aggregate+join survivor selection (r4 rewrite of the
-    fingerprint rank window) must match a pure-Python reference on random
-    corpora with heavy duplication, mixed quality within a duplicate
-    group, and NULL texts: survivor = min key among quality passes of a
-    fingerprint when any exist; non-quality and non-survivor rows are not
-    kept; NULL-text rows are never kept."""
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    rows = []
-    for i, (tid, long_variant, is_null) in enumerate(spec):
-        if is_null:
-            text = None
-        elif long_variant:
-            text = " ".join(f"w{tid}x{j}" for j in range(12))  # 12 distinct words
-        else:
-            text = f"w{tid}"  # short -> fails min_words
-        rows.append((i, text))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    res = curate_corpus(spark, df, CurationConfig(min_words=10, min_distinct_ratio=0.0))
-    kept = {r.doc_id for r in res.curated.collect()}
-
-    # pure-python reference
-    import hashlib
-    by_fp: dict = {}
-    quality = {}
-    for i, text in rows:
-        if text is None:
-            continue
-        norm = " ".join(text.strip().split()).lower()
-        fp = hashlib.md5(norm.encode()).hexdigest()
-        q = len([w for w in text.split(" ") if w]) >= 10
-        quality[i] = q
-        by_fp.setdefault(fp, []).append(i)
-    want = set()
-    for fp, keys in by_fp.items():
-        q_keys = sorted(k for k in keys if quality[k])
-        if q_keys:
-            want.add(q_keys[0])
-    assert kept == want, (kept, want)
-
-
 _para_corpus = st.lists(
     st.lists(
         st.sampled_from(["alpha", "beta", "gamma", "delta", "", "x y z"]),

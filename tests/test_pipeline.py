@@ -294,70 +294,6 @@ def test_drift_sink_one_row_per_partition_and_check(spark, tmp_path):
     }
 
 
-def test_curate_corpus_end_to_end(spark, tmp_path):
-    """The materializing curation run: quality gate, exact-dedup survivor,
-    PII redaction in the OUTPUT, split assignment, and a funnel that
-    accounts for every document. One scan + one fingerprint window."""
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again today", "a"),
-        (2, "the quick brown fox jumps over the lazy dog again and again today", "a"),
-        (3, "short text", "a"),
-        (4, "call me at 555-123-4567 about the offer we discussed yesterday regarding payment", "b"),
-        (5, "a a a a a a a a a a a a", "b"),
-    ]
-    path = str(tmp_path / "docs")
-    spark.createDataFrame(rows, "doc_id long, text string, source string").write.parquet(path)
-    docs = spark.read.parquet(path)
-    res = curate_corpus(spark, docs, CurationConfig(min_words=10))
-    # capture BEFORE executing: a finalized AQE plan prints initial+final
-    # sections and doubles every node string
-    plan = res.funnel._jdf.queryExecution().executedPlan().toString()
-    f = res.funnel.collect()[0]
-    assert f.n_input == 5 and f.n_quality == 3 and f.n_kept == 2
-    assert f.n_kept_with_pii == 1
-    assert f.n_train + f.n_val + f.n_test == f.n_kept
-    curated = {r.doc_id: r for r in res.curated.collect()}
-    assert set(curated) == {1, 4}
-    assert "[PHONE]" in curated[4].text and "555" not in curated[4].text
-    assert curated[1].split in ("train", "val", "test")
-
-    # plan shape: exactly TWO corpus scans — the narrow survivor
-    # aggregate (map-side combine; skew-immune replacement for the
-    # fingerprint rank window, which sorted each content's entire
-    # duplicate set in one task) plus the flagged full-row frame. No
-    # rank window over fingerprint groups, no Python in the plan.
-    assert plan.count("Scan parquet") == 2
-    assert "Window" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_curate_guards_and_rest_split(spark):
-    """Reserved-column collision raises clearly; sub-1.0 split fractions
-    produce an accounted 'rest' bucket; missing key/text raise."""
-    import pytest as _pytest
-
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    base = [(i, f"unique words number {i} pad pad2 pad3 pad4 pad5 pad6 pad7", "s")
-            for i in range(40)]
-    docs = spark.createDataFrame(base, "doc_id long, text string, source string")
-
-    with _pytest.raises(ValueError, match="collide"):
-        curate_corpus(spark, docs.withColumn("split", F.lit("x")), CurationConfig())
-    with _pytest.raises(ValueError, match="no column"):
-        curate_corpus(spark, docs, CurationConfig(key_col="nope"))
-
-    res = curate_corpus(
-        spark, docs, CurationConfig(splits={"train": 0.5, "val": 0.2})
-    )
-    f = res.funnel.collect()[0]
-    assert f.n_train + f.n_val + f.n_rest == f.n_kept  # rest accounted
-    # output contract: original columns + split, nothing engineered
-    assert res.curated.columns == ["doc_id", "text", "source", "split"]
-
-
 def test_snapshot_resume_reinvalidates_only_appended_partition(spark, tmp_path):
     """Snapshot-id lineage model (SURVEY §7.4 / VERDICT r3 action 6):
     validate a hive-partitioned input against its Snapshot; append data to
@@ -427,130 +363,6 @@ def test_snapshot_resume_reinvalidates_only_appended_partition(spark, tmp_path):
     assert r3.summary["rows_validated"] == spark.read.parquet(inp).filter(
         ~F.col("source").isin(sorted(passed))
     ).count()
-
-
-def test_curate_with_paragraph_dedup(spark):
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    long_para = " ".join(f"w{j}" for j in range(12))
-    other = " ".join(f"x{j}" for j in range(12))
-    rows = [
-        (1, long_para + "\n" + other),     # keeps both paragraphs
-        (2, long_para + "\nunique tail"),  # loses the duplicated paragraph
-        (3, long_para),                    # fully duplicated -> empty text
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cfg = CurationConfig(min_words=10, min_distinct_ratio=0.0, dedup_paragraphs=True)
-    res = curate_corpus(spark, df, cfg)
-    f = res.funnel.collect()[0]
-    # doc1 survives (24 words), doc2 drops to 2 words (< 10), doc3 empties
-    assert f.n_input == 3 and f.n_paragraphs_removed == 2
-    assert f.n_quality == 1 and f.n_kept == 1
-    kept = res.curated.collect()
-    assert [r.doc_id for r in kept] == [1]
-    assert kept[0].text == long_para + "\n" + other
-    # staging columns never leak
-    assert set(res.curated.columns) == {"doc_id", "text", "split"}
-
-
-def test_curate_paragraph_dedup_off_is_unchanged(spark):
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    df = spark.createDataFrame(
-        [(1, " ".join(f"w{j}" for j in range(12)))], "doc_id long, text string"
-    )
-    base = curate_corpus(spark, df, CurationConfig(min_words=10, min_distinct_ratio=0.0))
-    assert "n_paragraphs_removed" not in base.funnel.columns
-    assert base.funnel.collect()[0].n_kept == 1
-
-
-def test_curate_with_span_removal(spark):
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    chrome = "nav home about contact"
-    bodies = [" ".join(f"b{i}x{j}" for j in range(12)) for i in range(3)]
-    rows = [(i, chrome + " " + bodies[i]) for i in range(3)]
-    rows.append((9, chrome))  # chrome-only doc: empties after removal
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cfg = CurationConfig(
-        min_words=10, min_distinct_ratio=0.0, remove_spans=True, span_max_doc_freq=2
-    )
-    res = curate_corpus(spark, df, cfg)
-    f = res.funnel.collect()[0]
-    # 4 chrome words removed from each of the 4 docs
-    assert f.n_input == 4 and f.n_span_words_removed == 16
-    assert f.n_quality == 3 and f.n_kept == 3  # chrome-only doc emptied out
-    kept = {r.doc_id: r.text for r in res.curated.collect()}
-    assert set(kept) == {0, 1, 2}
-    for i in range(3):
-        assert kept[i] == bodies[i]  # chrome stripped, body intact
-    assert set(res.curated.columns) == {"doc_id", "text", "split"}
-
-
-def test_curate_paragraph_then_span_stages_compose(spark):
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    chrome = "nav home about contact"
-    body = " ".join(f"w{j}" for j in range(12))
-    # duplicated paragraph + chrome spans in the surviving text
-    rows = [
-        (1, chrome + " " + body + "\n" + "shared para line"),
-        (2, chrome + " " + body + "x\n" + "shared para line"),
-        (3, chrome + " other unique twelve word body " + body),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cfg = CurationConfig(
-        min_words=5, min_distinct_ratio=0.0,
-        dedup_paragraphs=True, remove_spans=True, span_max_doc_freq=2,
-    )
-    f = curate_corpus(spark, df, cfg).funnel.collect()[0]
-    assert "n_paragraphs_removed" in f.asDict() and "n_span_words_removed" in f.asDict()
-    assert f.n_paragraphs_removed >= 1  # the shared para's second copy
-    assert f.n_span_words_removed >= 9  # chrome in all three docs
-
-
-def test_curate_with_url_dedup_and_model_gate(spark):
-    """URL stage: refetches of one canonical URL collapse to the min-key
-    doc before any text judgment; model gate: a trained weight table
-    drops low-scoring docs; the funnel accounts for both stages."""
-    import hashlib
-
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    good = "informative well written article with many distinct words here today"
-    spam = "buy buy buy cheap cheap pills pills now now now click here fast"
-    rows = [
-        (1, good, "https://Example.COM:443/a?utm_source=x"),
-        (2, good + " refetched", "https://www.example.com:443/a/"),  # same canon URL
-        (3, spam, "https://example.com/b"),
-        (4, good + " other page entirely with words", "https://example.com/c"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, url string")
-
-    bk = lambda w: int(hashlib.md5(w.encode()).hexdigest()[:7], 16) % (1 << 18)
-    weights = spark.createDataFrame(
-        [(bk(w), 5.0) for w in set(good.split())]
-        + [(bk(w), -5.0) for w in set(spam.split())],
-        "bucket long, weight double",
-    )
-    res = curate_corpus(
-        spark,
-        docs,
-        CurationConfig(
-            min_words=5,
-            min_distinct_ratio=0.0,
-            url_col="url",
-            min_model_score=0.5,
-            model_weights=weights,
-        ),
-    )
-    f = res.funnel.collect()[0]
-    # doc 2 is a URL refetch (not a survivor); doc 3 fails the model gate
-    assert f.n_input == 4 and f.n_url_survivors == 3
-    assert f.n_model_pass == 3  # 1, 2, 4 score high; 3 scores low
-    kept = {r.doc_id for r in res.curated.collect()}
-    assert kept == {1, 4}
-    assert "url" in res.curated.columns and "norm_url" not in res.curated.columns
 
 
 def test_snapshot_ops_replay_append_compact_overwrite(spark, tmp_path):

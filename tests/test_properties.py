@@ -183,47 +183,6 @@ def test_mix_sample_subset_property(raw_targets, total):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.sampled_from([
-                "one two three four five six seven eight nine ten eleven",
-                "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda",
-                "dup dup dup dup dup dup dup dup dup dup dup",
-                "tiny",
-                "",
-            ]),
-            st.sampled_from(["a", "b"]),
-        ),
-        min_size=0,
-        max_size=25,
-    )
-)
-@settings(max_examples=6, deadline=None)
-def test_curation_funnel_invariants_property(rows):
-    """On arbitrary corpora (dups, empties, low-quality): the funnel is
-    internally consistent and matches the materialized output exactly."""
-    from dataprofiler_spark import get_spark
-    from dataprofiler_spark.pipeline import CurationConfig, curate_corpus
-
-    spark = get_spark(master="local[2]", shuffle_partitions=2)
-    docs = spark.createDataFrame(
-        [(i, t, s) for i, (t, s) in enumerate(rows)],
-        "doc_id long, text string, source string",
-    )
-    res = curate_corpus(spark, docs, CurationConfig(min_words=5))
-    f = res.funnel.collect()[0]
-    kept_rows = res.curated.collect()
-    assert f.n_input == len(rows)
-    assert 0 <= f.n_kept <= f.n_quality <= f.n_input
-    assert f.n_train + f.n_val + f.n_test == f.n_kept == len(kept_rows)
-    # survivors have distinct normalized content
-    texts = [r.text for r in kept_rows]
-    norm = {" ".join(t.split()).lower() for t in texts}
-    assert len(norm) == len(texts)
-    assert all(r.split in ("train", "val", "test") for r in kept_rows)
-
-
-@given(
     st.lists(st.text(min_size=0, max_size=12), min_size=2, max_size=60),
     st.lists(st.text(min_size=0, max_size=12), max_size=10),
 )
