@@ -1545,67 +1545,6 @@ def pivot_lang_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle-verified against DuckDB's native ASOF JOIN / theta join
 # --------------------------------------------------------------------------
 
-@register(
-    "asof_join_event_last_order",
-    """WITH r AS (
-  SELECT o_custkey, o_orderdate, MAX(o_totalprice) AS last_order_price
-  FROM orders GROUP BY 1, 2)
-SELECT e.event_id, e.user_id,
-  ROUND(r.last_order_price, 2) AS last_order_price
-FROM events e ASOF JOIN r
-  ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate""",
-)
-def asof_join_event_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each event gets the price of the user's most recent
-    order at or before the event time. Right ties pre-aggregated for
-    determinism (DuckDB ASOF leaves same-ts ties unspecified)."""
-    from dataprofiler_spark.operators.asof import asof_join
-
-    events = load_table(spark, sf_dir, "events")
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(F.max("o_totalprice").alias("last_order_price"))
-    )
-    out = asof_join(
-        events.select("event_id", "user_id", "ts"),
-        orders,
-        left_ts="ts",
-        right_ts="o_orderdate",
-        left_by="user_id",
-        right_by="o_custkey",
-        right_values=["last_order_price"],
-    )
-    return out.select(
-        "event_id", "user_id", F.round("last_order_price", 2).alias("last_order_price")
-    )
-
-
-@register(
-    "range_join_event_value_bands",
-    """WITH ranges(band_name, lo, hi) AS (
-  VALUES ('micro', 0.0, 75.0), ('small', 75.0, 160.0),
-         ('mid', 160.0, 320.0), ('large', 320.0, 1000.0))
-SELECT r.band_name, COUNT(*) AS events, ROUND(AVG(e.value), 6) AS avg_value
-FROM events e JOIN ranges r ON e.value >= r.lo AND e.value < r.hi
-GROUP BY r.band_name""",
-)
-def range_join_event_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join via bucketed bands (a raw theta join would be a
-    cartesian product in Spark): events matched to value bands."""
-    from dataprofiler_spark.operators.asof import range_join_bucketed
-
-    events = load_table(spark, sf_dir, "events")
-    ranges = spark.createDataFrame(
-        [("micro", 0.0, 75.0), ("small", 75.0, 160.0), ("mid", 160.0, 320.0), ("large", 320.0, 1000.0)],
-        "band_name string, lo double, hi double",
-    )
-    return (
-        range_join_bucketed(events, "value", ranges)
-        .groupBy("band_name")
-        .agg(F.count(F.lit(1)).alias("events"), F.round(F.avg("value"), 6).alias("avg_value"))
-    )
-
 
 @register("profile_events", profile_sql("events"))
 def profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
