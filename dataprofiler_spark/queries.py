@@ -2034,23 +2034,6 @@ def robust_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "sequential_ids_documents",
-    """SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS BIGINT) AS seq_id
-FROM documents""",
-)
-def sequential_ids_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact global 0-based rank WITHOUT the global single-task window:
-    range-bucketed two-level rank (quantile cuts → per-bucket row_number +
-    driver offsets). The oracle IS the naive global ROW_NUMBER — the claim
-    is bit-identical ids from a plan with no SinglePartition exchange
-    (plan-gated in tests/test_plans.py)."""
-    from dataprofiler_spark.operators.ordering import assign_sequential_ids
-
-    docs = load_table(spark, sf_dir, "documents")
-    return assign_sequential_ids(docs.select("doc_id"), "doc_id")
-
-
-@register(
     "packing_plan_documents",
     """WITH d AS (
   SELECT source, doc_id, len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok FROM documents
@@ -3383,34 +3366,6 @@ def dedup_history_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame
         "doc_id", prefix.alias("prefix")
     )
     return dedup_against_history_bloom(new, hist, ["prefix"], "doc_id")
-
-
-@register(
-    "shuffle_corpus_documents",
-    """WITH h AS (SELECT doc_id,
-            md5(doc_id::VARCHAR || chr(31) || '7') AS hx FROM documents),
-hh AS (SELECT doc_id,
-              CAST('0x' || substr(hx, 1, 15) AS BIGINT) AS order_h,
-              CAST('0x' || substr(hx, 16, 15) AS BIGINT) % 16 AS shard
-       FROM h)
-SELECT doc_id, shard,
-       CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY order_h, doc_id) - 1
-            AS BIGINT) AS pos
-FROM hh""",
-)
-def shuffle_corpus_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic distributed corpus shuffle (training-order
-    randomization): (shard, pos) addresses forming a seeded pseudo-random
-    global permutation with NO single-task sort — shard is a map-side
-    hash, intra-shard rank is a window partitioned by shard. The DuckDB
-    oracle replays the md5-derived permutation bit-for-bit. LOCAL-ONLY
-    TAIL entry (harvest window full this round, gotcha 26)."""
-    from dataprofiler_spark.operators.ordering import shuffle_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    return shuffle_corpus(
-        docs.select("doc_id"), "doc_id", seed=7, num_shards=16
-    ).select("doc_id", "shard", "pos")
 
 
 @register(

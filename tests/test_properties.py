@@ -180,41 +180,3 @@ def test_mix_sample_subset_property(raw_targets, total):
     assert big.subtract(corpus).count() == 0
     small = mix_sample(corpus, "source", "doc_id", targets, total // 2)
     assert small.subtract(big).count() == 0  # budgets nest
-
-
-@given(
-    st.lists(st.text(min_size=0, max_size=12), min_size=2, max_size=60),
-    st.lists(st.text(min_size=0, max_size=12), max_size=10),
-)
-@settings(max_examples=300, deadline=None)
-def test_prefix_proxy_bucketing_monotone(sample, extra_keys):
-    """Correctness core of assign_sequential_ids' string path: bucket
-    assignment must be MONOTONE in UTF-8 byte order (Spark's string
-    order) for ANY sample-derived (lcp, cuts) and ANY key — including
-    keys outside the sampled prefix. Monotone buckets + in-bucket exact
-    rank == global rank; a violation here is wrong ids at scale."""
-    from dataprofiler_spark.operators.ordering import _common_prefix, _prefix_proxy
-
-    sample = sorted(sample)
-    lcp = _common_prefix(sample[0], sample[-1])
-    step = max(len(sample) // 8, 1)
-    cuts = sorted({_prefix_proxy(sample[i], lcp) for i in range(step, len(sample), step)})
-
-    def bucket(key: str) -> int:
-        kb, lb = key.encode("utf-8"), lcp.encode("utf-8")
-        if lcp:
-            if kb < lb and not kb.startswith(lb):
-                return 0
-            if not kb.startswith(lb):
-                return len(cuts) + 2
-        p = _prefix_proxy(key, lcp)
-        return 1 + sum(1 for c in cuts if p >= c)
-
-    keys = sorted(set(sample + extra_keys), key=lambda s: s.encode("utf-8"))
-    buckets = [bucket(k) for k in keys]
-    assert buckets == sorted(buckets), (lcp, cuts, list(zip(keys, buckets)))
-
-    # the proxy itself is monotone over lcp-prefixed keys
-    pref = [k for k in keys if k.startswith(lcp)]
-    proxies = [_prefix_proxy(k, lcp) for k in pref]
-    assert proxies == sorted(proxies)
