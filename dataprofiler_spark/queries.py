@@ -2898,143 +2898,6 @@ def boilerplate_ngrams_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Four variants exercise every normalizer stage: case/port/www/trailing-
 # slash/fragment/tracking-param handling; variants 0+2 and 1+3 canonicalize
 # to the same URL whenever (source, lang, doc_id%23, doc_id%5) coincide.
-_URL_NORM_SQL = """s1 AS (SELECT doc_id, regexp_replace(trim(url), '#.*', '') AS u FROM raw),
-s2 AS (SELECT doc_id, split_part(u, '?', 1) AS base,
-              CASE WHEN strpos(u, '?') > 0 THEN substr(u, strpos(u, '?') + 1) ELSE '' END AS q
-       FROM s1),
-s3 AS (SELECT *, coalesce(nullif(lower(regexp_extract(base, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)), ''), 'http') AS scheme,
-              CASE WHEN strpos(base, '://') > 0 THEN substr(base, strpos(base, '://') + 3) ELSE base END AS rest
-       FROM s2),
-s4 AS (SELECT *, lower(split_part(rest, '/', 1)) AS hostport FROM s3),
-s5 AS (SELECT *, regexp_replace(substr(rest, length(hostport) + 1), '/+$', '') AS path,
-              regexp_replace(CASE WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
-                                  WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                                  ELSE hostport END, '^www\\.', '') AS host
-       FROM s4),
-s6 AS (SELECT *, array_to_string(list_sort(list_filter(string_split(q, '&'),
-              p -> p <> '' AND NOT regexp_matches(lower(p),
-                '^(utm_[^=]*|fbclid|gclid|msclkid|mc_cid|mc_eid|igshid|ref|ref_src)(=.*)?$'))), '&') AS qn
-       FROM s5),
-n AS (SELECT doc_id, scheme || '://' || host || path ||
-             CASE WHEN qn <> '' THEN '?' || qn ELSE '' END AS norm_url FROM s6)"""
-
-_URL_RAW_SQL = """raw AS (SELECT doc_id,
-  CASE WHEN doc_id % 4 = 0 THEN 'https://' || upper(source) || '.Example.COM:443/articles/' || lang
-         || '/item-' || CAST(doc_id % 23 AS VARCHAR) || '/?id=' || CAST(doc_id % 5 AS VARCHAR)
-         || '&utm_source=rss&fbclid=x' || CAST(doc_id AS VARCHAR)
-       WHEN doc_id % 4 = 1 THEN 'http://www.' || source || '.example.com:80/articles/' || lang
-         || '/item-' || CAST(doc_id % 23 AS VARCHAR) || '?utm_campaign=c' || CAST(doc_id AS VARCHAR)
-         || '&id=' || CAST(doc_id % 5 AS VARCHAR)
-       WHEN doc_id % 4 = 2 THEN 'https://' || source || '.example.com/articles/' || lang
-         || '/item-' || CAST(doc_id % 23 AS VARCHAR) || '/?fbclid=q&id=' || CAST(doc_id % 5 AS VARCHAR)
-       ELSE source || '.example.com/articles/' || lang || '/item-' || CAST(doc_id % 23 AS VARCHAR)
-         || '?id=' || CAST(doc_id % 5 AS VARCHAR) || '&gclid=g' || CAST(doc_id AS VARCHAR) || '#frag'
-  END AS url FROM documents)"""
-
-
-def _synthetic_url() -> Column:
-    """Spark twin of _URL_RAW_SQL (kept adjacent so they change together)."""
-    did = F.col("doc_id").cast("string")
-    k23 = (F.col("doc_id") % 23).cast("string")
-    k5 = (F.col("doc_id") % 5).cast("string")
-    m = F.col("doc_id") % 4
-    return (
-        F.when(
-            m == 0,
-            F.concat(
-                F.lit("https://"), F.upper("source"), F.lit(".Example.COM:443/articles/"),
-                F.col("lang"), F.lit("/item-"), k23, F.lit("/?id="), k5,
-                F.lit("&utm_source=rss&fbclid=x"), did,
-            ),
-        )
-        .when(
-            m == 1,
-            F.concat(
-                F.lit("http://www."), F.col("source"), F.lit(".example.com:80/articles/"),
-                F.col("lang"), F.lit("/item-"), k23, F.lit("?utm_campaign=c"), did,
-                F.lit("&id="), k5,
-            ),
-        )
-        .when(
-            m == 2,
-            F.concat(
-                F.lit("https://"), F.col("source"), F.lit(".example.com/articles/"),
-                F.col("lang"), F.lit("/item-"), k23, F.lit("/?fbclid=q&id="), k5,
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.col("source"), F.lit(".example.com/articles/"), F.col("lang"),
-                F.lit("/item-"), k23, F.lit("?id="), k5, F.lit("&gclid=g"), did,
-                F.lit("#frag"),
-            )
-        )
-    )
-
-
-@register(
-    "url_dedup_documents",
-    f"""WITH {_URL_RAW_SQL},
-{_URL_NORM_SQL}
-SELECT norm_url, MIN(doc_id) AS survivor_doc_id, COUNT(*) AS dup_count
-FROM n GROUP BY norm_url""",
-)
-def url_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level exact dedup over the synthesized crawl-URL column: the
-    oracle replays the ENTIRE canonicalization pipeline (fragment/query
-    split, scheme default, host lowercase, default-port/www/trailing-slash
-    strip, tracking-param filter + sort) stage by stage in SQL, so any
-    normalizer drift breaks parity. One hash aggregate over narrow rows
-    (survivor key rides in the min buffer) — the 10^11-record crawl-dedup
-    shape. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.urls import url_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    return url_dedup(docs.withColumn("url", _synthetic_url()), "url", "doc_id")
-
-
-@register(
-    "domain_cap_sample_documents",
-    """WITH h AS (SELECT doc_id,
-        'www.' || source || CASE WHEN doc_id % 3 = 0 THEN '.co.uk' ELSE '.com' END AS host
-      FROM documents),
-lab AS (SELECT doc_id, host, string_split(host, '.') AS ls, len(string_split(host, '.')) AS n FROM h),
-dom AS (SELECT doc_id,
-        CASE WHEN n >= 3 AND list_contains(
-               ['co.uk','org.uk','ac.uk','gov.uk','com.au','net.au','org.au',
-                'co.jp','ne.jp','or.jp','co.in','co.nz','co.za','co.kr',
-                'com.br','com.mx','com.cn','com.tw','com.sg'],
-               array_to_string(ls[n - 1 : n], '.'))
-             THEN array_to_string(ls[n - 2 : n], '.')
-             WHEN n >= 2 THEN array_to_string(ls[n - 1 : n], '.')
-             ELSE host END AS domain
-        FROM lab),
-r AS (SELECT domain, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY domain
-                                ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rnk
-      FROM dom)
-SELECT domain, doc_id, rnk FROM r WHERE rnk <= 40""",
-)
-def domain_cap_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FineWeb-style per-registered-domain cap (40 docs/domain) over
-    synthesized hosts spanning both suffix classes (src.com vs
-    src.co.uk): eTLD+1 extraction is pure expressions against the
-    built-in suffix sample, selection is the deterministic md5-rank
-    (skew-safe two-stage window — a mega-domain never funnels through
-    one sort task), and the oracle replays both bit-exactly. LOCAL-ONLY
-    TAIL entry (harvest window full this round, gotcha 26)."""
-    from dataprofiler_spark.operators.urls import domain_cap_sample, registered_domain
-
-    docs = load_table(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("www."),
-        F.col("source"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
-    )
-    with_dom = docs.select("doc_id", registered_domain(host).alias("domain"))
-    return domain_cap_sample(
-        with_dom, "domain", "doc_id", cap=40, rank_col="rnk"
-    ).select("domain", "doc_id", "rnk")
 
 
 @register(
