@@ -46,18 +46,6 @@ def pii_counts(text_col: str | Column) -> list[Column]:
     ]
 
 
-def pii_total_count(text_col: str | Column) -> Column:
-    """Total PII hits across every detector as ONE expression — the
-    single definition pii_scan and the curation pipeline both use (a
-    reimplementation would silently diverge when patterns change)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    total = None
-    for _, (pat, _tok) in PII_PATTERNS.items():
-        e = F.coalesce(F.regexp_count(c, F.lit(pat)), F.lit(0))
-        total = e if total is None else (total + e)
-    return total
-
-
 def pii_scan(
     df: DataFrame,
     text_col: str = "text",
