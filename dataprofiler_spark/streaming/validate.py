@@ -5,10 +5,15 @@ snapshots into append-only tables (SURVEY.md §2.9). This module is the
 rebuild's optional continuous path: the SAME row-check predicates run over
 a file stream, two ways:
 
-1. `validate_stream` — foreachBatch: every micro-batch goes through the
-   exact batch check suite and appends verdicts (+ batch lineage) to the
-   sink. Checkpointed: a restarted query resumes at the next unprocessed
-   file, the streaming analog of the manifest's skip-validated-partitions.
+1. `validate_stream` — foreachBatch: every micro-batch runs the row checks
+   only (`row_check_frame`: per-row invariants such as n_tok consistency,
+   token range and doc_id null rate) and appends their verdicts and
+   violation rows (+ batch lineage) to the sink. It does NOT run the rest
+   of `run_validation`'s suite: no doc_id uniqueness, no referential
+   integrity or empty-partition check, no golden-copy token equality and
+   no drift, so a batch that passes here can still fail a batch run.
+   Checkpointed: a restarted query resumes at the next unprocessed file,
+   the streaming analog of the manifest's skip-validated-partitions.
 2. `streaming_violation_counts` — a pure streaming aggregation (update
    mode) maintaining running per-partition violation counters, for
    dashboard-style live counts.
@@ -58,10 +63,13 @@ def validate_stream(
     available_now: bool = True,
     violation_cap: int = 1000,
 ) -> StreamingQuery:
-    """File-stream validation: each micro-batch runs the batch check suite;
+    """File-stream validation: each micro-batch runs the row checks
+    (`checks`, by default `sequence_row_checks`) through `row_check_frame`;
     verdicts and violation rows append to parquet sinks with the batch id
-    as lineage. availableNow=True drains all pending files then stops
-    (deterministic for tests/backfills); False = continuous."""
+    as lineage. Only the row checks run: no uniqueness, referential
+    integrity, empty-partition, token-equality or drift check, unlike
+    `pipeline.run_validation`. availableNow=True drains all pending files
+    then stops (deterministic for tests/backfills); False = continuous."""
     checks = checks or sequence_row_checks()
     thresholds = {ck.name: ck.threshold_rate for ck in checks}
     stream = spark.readStream.schema(sequence_schema()).parquet(input_path)
