@@ -196,9 +196,9 @@ def streaming_dedup(
 ) -> DataFrame:
     """Streaming EXACT dedup: keep the first-seen row per key within the
     watermark horizon (dropDuplicatesWithinWatermark) — the ingestion-side
-    companion to the batch dedup operators: duplicate re-deliveries
-    (at-least-once sources, replays) are dropped before they ever reach
-    the corpus.
+    companion to the batch history dedup (operators/dedup.py): duplicate
+    re-deliveries (at-least-once sources, replays) are dropped before they
+    ever reach the corpus.
 
     State is bounded by the watermark: a key's dedup record is evicted once
     the watermark passes its event time + delay, so duplicates separated by
