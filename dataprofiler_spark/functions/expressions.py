@@ -53,10 +53,11 @@ def token_range_ok(tokens: Column | str, vocab_size: int = VOCAB_SIZE) -> Column
 
 # Word tokenization: split on RUNS of whitespace, not the literal single
 # space — real corpora are multi-line, and `F.split(text, " ")` treats
-# "end.\nStart" as ONE token, skewing every word-level statistic. Java `\s` = [ \t\n\x0B\f\r]; the
-# DuckDB oracle mirror (RE2 `\s` = [ \t\n\f\r]) differs only on \x0B
-# (vertical tab) — documented, not present in any fixture. Neither side
-# matches Unicode spaces (  etc.); normalize upstream if needed.
+# "end.\nStart" as ONE token, skewing every word-level statistic. Java
+# `\s` = [ \t\n\x0B\f\r]; the DuckDB oracle mirror (RE2 `\s` =
+# [ \t\n\f\r]) differs only on \x0B (vertical tab) — documented, not
+# present in any fixture.
+# Neither side matches Unicode spaces (  etc.); normalize upstream if needed.
 WORD_SPLIT_PATTERN = r"\s+"
 
 # the DuckDB-side mirror of words() — an oracle that tokenizes MUST use
