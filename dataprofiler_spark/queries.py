@@ -1681,16 +1681,16 @@ def source_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Driver-harvest ordering (CLAUDE.md gotchas 20/26).
+# Harvest ordering (gotchas 20/26).
 #
-# The graft driver evaluated registry entries IN REGISTRATION ORDER under a
-# run budget (exactly HARVEST_BUDGET entries) — entries past the window got
-# NO external CORRECTNESS row no matter how good their local parity was.
-# The window: (1) the entries that never got a driver row, then (2) the
-# entries whose operator changed after their last driver row (the drift
-# statistics now merge baseline and current with one tagged-union
-# aggregate instead of a full-outer join), then (3) the rest of the
-# registry in registration order, up to the budget.
+# The external correctness harvest evaluated registry entries IN
+# REGISTRATION ORDER under a run budget (exactly HARVEST_BUDGET entries) —
+# entries past the window got NO external CORRECTNESS row no matter how
+# good their local parity was. The window: (1) the entries that never got
+# an external row, then (2) the entries whose operator changed after their
+# last external row (the drift statistics merge baseline and current with
+# one tagged-union aggregate, not a full-outer join), then (3) the rest of
+# the registry in registration order, up to the budget.
 # Everything stays in the registry — the local parity suite
 # (tests/test_oracle_parity.py) still checks every registered entry; this
 # list only decides who gets the DRIVER's adjudication.
@@ -1701,8 +1701,8 @@ def source_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HARVEST_BUDGET = 50
 
-# (1) entries with no driver CORRECTNESS row, in registration order — these
-# MUST lead the window
+# (1) entries with no external CORRECTNESS row, in registration order —
+# these MUST lead the window
 _NEVER_HARVESTED = [
     "frequent_values_documents",
     "dedup_against_history_documents",
@@ -1710,7 +1710,7 @@ _NEVER_HARVESTED = [
     "source_diversity_documents",
 ]
 
-# (2) green before, but their operator changed since their last driver row
+# (2) green before, but their operator changed since their last external row
 _CHANGED_THIS_ROUND = [
     "psi_chi2_nchars_split",
     "ks_nchars_split",

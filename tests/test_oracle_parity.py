@@ -1,5 +1,5 @@
 """Every registered query must match its DuckDB oracle at sf0.01 —
-the local replica of the driver's CORRECTNESS gate."""
+the local replica of the external correctness gate."""
 
 import pytest
 
