@@ -35,6 +35,30 @@ def test_profile_single_row(spark):
     assert r["v"].median_value == 5.0
 
 
+def test_dedup_ops_on_empty_and_unicode(spark, empty_docs):
+    from dataprofiler_spark.operators.dedup import (
+        connected_components,
+        lsh_candidate_pairs,
+        ngram_jaccard_pairs,
+        simhash_near_dup_pairs,
+    )
+
+    assert lsh_candidate_pairs(empty_docs, "doc_id").count() == 0
+    assert simhash_near_dup_pairs(empty_docs, "doc_id").count() == 0
+    assert ngram_jaccard_pairs(empty_docs, "doc_id").count() == 0
+    assert connected_components(
+        spark.createDataFrame([], "key1 bigint, key2 bigint")
+    ).count() == 0
+
+    uni = spark.createDataFrame(
+        [(1, "héllo wörld schön günstig straße"), (2, "héllo wörld schön günstig straße"),
+         (3, ""), (4, "中文 文本 去重 测试 中文 文本")],
+        "doc_id bigint, text string",
+    )
+    pairs = {(r.key1, r.key2) for r in simhash_near_dup_pairs(uni, "doc_id").collect()}
+    assert (1, 2) in pairs  # identical unicode text → identical signature
+
+
 def test_drift_empty_vs_nonempty_histogram(spark):
     from dataprofiler_spark.operators.drift import histogram, psi
 

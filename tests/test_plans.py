@@ -119,6 +119,32 @@ def test_salted_profile_exchanges_on_salt(spark):
     assert "__salt" in p and "hll_union_agg" in p.lower() or "HllUnionAgg" in p
 
 
+def test_lsh_has_single_signature_computation(spark):
+    from dataprofiler_spark.operators.dedup import lsh_candidate_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    p = plan_of(lsh_candidate_pairs(docs, "doc_id"))
+    # groupBy-bucket design: exactly one scan of documents (a self-join
+    # would show two)
+    assert p.count("Scan parquet") == 1
+
+
+def test_simhash_pairs_codegen_agg_no_python(spark):
+    """SimHash signatures must be the explode → whole-stage-codegen hash
+    aggregation shape (the round-2 rewrite): one parquet scan, a partial
+    hash aggregate for the 60 conditional sums, and no Python evaluation
+    anywhere."""
+    from dataprofiler_spark.operators.dedup import simhash_near_dup_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    q = simhash_near_dup_pairs(docs, "doc_id")
+    p = plan_of(q)
+    assert p.count("Scan parquet") == 1
+    assert "HashAggregate" in p
+    assert "Generate explode" in p
+    assert "EvalPython" not in p  # no Python — expressions only
+
+
 def test_violation_cap_window_keyed_per_partition(spark):
     """The violation-cap window must partition on (check_name,
     partition_value) — a check_name-only key funnels every violating row
@@ -165,6 +191,20 @@ def test_suite_verdicts_scan_count(spark, tmp_path):
     assert "tokens" not in window_section
 
 
+def test_connected_components_shuffles_narrow_rows(spark):
+    """CC iterations join (id, id) edge rows with (id, id) label rows —
+    no payload columns may survive into the loop's exchanges."""
+    from dataprofiler_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "key1 bigint, key2 bigint"
+    )
+    out = connected_components(pairs)
+    rows = {r.node: r.component for r in out.collect()}
+    assert rows == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert [f.name for f in out.schema.fields] == ["node", "component"]
+
+
 def test_new_ops_plan_shapes(spark):
     """Round-3 operators keep their designed physical shapes: the anomaly
     stats side is BROADCAST (never a shuffle of the events against tiny
@@ -176,6 +216,20 @@ def test_new_ops_plan_shapes(spark):
     ).select(F.col("ts_s").cast("timestamp").alias("ts"), "event_type")
     p = plan_of(daily_count_anomalies(ev, "event_type"))
     assert "BroadcastHashJoin" in p
+
+
+def test_contamination_single_corpus_scan(spark):
+    """contamination_check must scan the corpus ONCE (shingle count rides
+    the exploded rows) — a separate sizes aggregate re-ran the whole
+    split+shingle+md5 pipeline."""
+    from dataprofiler_spark.operators.dedup import contamination_check
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    q = contamination_check(
+        docs.filter(F.col("doc_id") % 41 != 0), docs.filter(F.col("doc_id") % 41 == 0)
+    )
+    # exactly 2 scans total: one corpus side, one benchmark side
+    assert plan_of(q).count("Scan parquet") == 2
 
 
 def test_round3_addition_plan_shapes(spark):
@@ -271,6 +325,35 @@ def test_join_size_estimate(spark):
     assert r3.rows_a == 1 and r3.estimated_rows == 1
 
 
+def test_connected_components_execute_pair_plan_once(spark):
+    """Regression gate for the r4 CC fix: the candidate-pair plan (the
+    full LSH pipeline in production) must execute EXACTLY once per
+    clustering call — before the fix every propagation round re-executed
+    it. Counted via an accumulator-ticking UDF planted in the pair plan
+    (UDFs evaluate once per row per plan execution)."""
+    from pyspark.sql import functions as F
+
+    from dataprofiler_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
+    for fn in (connected_components, connected_components_star):
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def tick(x):
+            acc.add(1)
+            return x
+
+        base = spark.createDataFrame(edges, "key1 bigint, key2 bigint")
+        pairs = base.select(tick("key1").alias("key1"), "key2")
+        out = fn(pairs)
+        assert out.count() > 0
+        assert acc.value == len(edges), (fn.__name__, acc.value)
+
+
 def test_ks_wasserstein_single_shuffle_grouped_window(spark):
     """VERDICT r4 #6: the exact-KS / W1 tagged-union merge must stay ONE
     shuffle (union -> single hash aggregate over (group, value)) and the
@@ -329,6 +412,32 @@ def test_round5_composition_ops_plan_shapes(spark):
     assert "EvalPython" not in p
 
 
+def test_cross_source_overlap_one_scan_broadcast_counts(spark):
+    """cross_source_overlap must execute its corpus scan exactly ONCE
+    (the distinct (source, digest) frame is localCheckpointed and feeds
+    both the per-source counts and the per-shingle sets — accumulator
+    gate, the CC-test technique) and join the S-bounded per-source count
+    frames back BROADCAST."""
+    from dataprofiler_spark.operators.dedup import cross_source_overlap
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def tick(s):
+        acc.add(1)
+        return s
+
+    rows = [(1, "A", "a b c d"), (2, "B", "a b c x"), (3, "C", "z z z q")]
+    base = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    df = base.select("doc_id", "source", tick("text").alias("text"))
+    out = cross_source_overlap(df)
+    assert out.count() == 1
+    assert acc.value == len(rows), acc.value
+    p = plan_of(out)
+    assert p.count("BroadcastHashJoin") == 2  # n_a and n_b count joins
+    assert "SortMergeJoin" not in p
+
+
 def test_profile_split_median_wide_pass_stays_hash_aggregate(spark):
     """ONE var-width field in an aggregation buffer pushes the whole
     shared metric pass from HashAggregate to SortAggregate (gotcha-28
@@ -348,3 +457,42 @@ def test_profile_split_median_wide_pass_stays_hash_aggregate(spark):
     out = profile(df, "t", group_by=["g"], cfg=ProfileConfig(exact=True))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan, plan
+
+
+def test_shingle_hash_rows_window_partitions_by_key(spark):
+    """The lead-window shingle stage must hash-partition by the doc key
+    — a global window would funnel the whole corpus through ONE sorted
+    partition at scale (the W-lesson). Pins Exchange hashpartitioning on
+    key and no SinglePartition in the shingle subplan."""
+    from dataprofiler_spark.operators.dedup import shingle_hash_rows
+
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    plan = (
+        shingle_hash_rows(df, "doc_id", "text", 3)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "SinglePartition" not in plan, plan
+    assert "hashpartitioning(key" in plan, plan
+    assert "windowspecdefinition(key" in plan, plan
+
+
+def test_pair_family_sizes_aggregate_materialized_once(spark):
+    """The per-doc size frame feeds BOTH the na and nb join sides; it is
+    checkpointed at construction so the final plan carries exactly one
+    aggregate (the partial+final pair count) — the r6.0 plan re-ran the
+    identical 6M-row sizes subplan once per join side
+    (plans/r06/ngram_jaccard_pairs_after.txt ops 28-30/41-43)."""
+    from dataprofiler_spark.operators.dedup import ngram_jaccard_pairs
+
+    rows = [(i, f"w{i} x{i} y{i} z{i} common tail here") for i in range(6)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = ngram_jaccard_pairs(df, "doc_id", threshold=0.1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # partial + final of the pair-count aggregate and nothing else:
+    # sizes and the hot-shingle set are pre-materialized RDD scans. Whole
+    # node names only: a substring count would also match
+    # ObjectHashAggregate and miss a fall to SortAggregate
+    nodes = re.findall(r"\b(\w*Aggregate)\(", plan)
+    assert nodes == ["HashAggregate", "HashAggregate"], plan

@@ -78,3 +78,26 @@ def test_alert_status_monotone_in_usage(usage):
     a = alert_status(None, usage)
     b = alert_status(None, min(usage + 10, 100.0))
     assert order[b] >= order[a]
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=1, max_size=40
+    ).filter(lambda es: any(a != b for a, b in es))
+)
+@settings(max_examples=10, deadline=None)
+def test_star_cc_equals_label_cc_property(edges):
+    """Alternating-star CC and min-label CC must produce identical
+    components on arbitrary random graphs (few examples: Spark-backed)."""
+    from dataprofiler_spark import get_spark
+    from dataprofiler_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    spark = get_spark(master="local[2]", shuffle_partitions=2)
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "key1 bigint, key2 bigint")
+    label = {r.node: r.component for r in connected_components(df, max_iterations=60).collect()}
+    star = {r.node: r.component for r in connected_components_star(df).collect()}
+    assert star == label
