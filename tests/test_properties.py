@@ -101,3 +101,20 @@ def test_star_cc_equals_label_cc_property(edges):
     label = {r.node: r.component for r in connected_components(df, max_iterations=60).collect()}
     star = {r.node: r.component for r in connected_components_star(df).collect()}
     assert star == label
+
+
+@given(
+    st.lists(st.text(alphabet="ab ", min_size=0, max_size=40), min_size=1, max_size=8)
+)
+@settings(max_examples=8, deadline=None)
+def test_repetition_fractions_bounded_property(texts):
+    """dup_word_frac / dup_bigram_frac always land in [0, 1] — any input,
+    including empty strings and all-space strings."""
+    from dataprofiler_spark import get_spark
+    from dataprofiler_spark.operators.textstats import repetition_stats
+
+    spark = get_spark(master="local[2]", shuffle_partitions=2)
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    for r in repetition_stats(df).collect():
+        assert 0.0 <= r.dup_word_frac <= 1.0
+        assert 0.0 <= r.dup_bigram_frac <= 1.0
