@@ -191,6 +191,20 @@ def test_suite_verdicts_scan_count(spark, tmp_path):
     assert "tokens" not in window_section
 
 
+def test_embedding_near_dup_single_scan(spark):
+    """embedding_near_dup_pairs must be the groupBy(bucket) + pair-expansion
+    shape: ONE scan of the embeddings frame. The round-2 bucket self-join
+    referenced the LSH-projected frame twice — recomputing the hyperplane
+    pipeline and shuffling the table twice."""
+    from dataprofiler_spark.operators.similarity import embedding_near_dup_pairs
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    q = embedding_near_dup_pairs(emb, dim=64, threshold=0.5)
+    p = plan_of(q)
+    assert p.count("Scan parquet") == 1
+    assert "EvalPython" not in p
+
+
 def test_connected_components_shuffles_narrow_rows(spark):
     """CC iterations join (id, id) edge rows with (id, id) label rows —
     no payload columns may survive into the loop's exchanges."""
