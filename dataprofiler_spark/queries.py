@@ -1245,6 +1245,33 @@ def batch_knn_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pure function of the key hash — bit-exact reproducible in SQL
 # --------------------------------------------------------------------------
 
+_SPLIT_SQL = """WITH b AS (
+  SELECT doc_id, lang,
+    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bucket
+  FROM documents),
+s AS (SELECT doc_id, lang,
+  CASE WHEN bucket < 8000 THEN 'train'
+       WHEN bucket < 9000 THEN 'val'
+       WHEN bucket < 10000 THEN 'test' END AS split
+  FROM b)
+SELECT split, lang, COUNT(*) AS docs, CAST(MIN(doc_id) AS BIGINT) AS min_doc_id
+FROM s GROUP BY split, lang"""
+
+
+@register("hash_split_documents", _SPLIT_SQL)
+def hash_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """80/10/10 train/val/test by doc_id content hash, rolled up per
+    (split, lang). The oracle regenerates the identical bucket assignment
+    in SQL — proving split membership is engine-independent (auditable,
+    rerun-stable)."""
+    from dataprofiler_spark.operators.sampling import hash_split
+
+    docs = load_table(spark, sf_dir, "documents")
+    out = hash_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
+    return out.groupBy("split", "lang").agg(
+        F.count(F.lit(1)).alias("docs"), F.min("doc_id").alias("min_doc_id")
+    )
+
 
 # --------------------------------------------------------------------------
 # Incremental profiling: stored merge-safe partials combined across three
@@ -1724,6 +1751,24 @@ def corr_lineitem_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "stratified_sample_documents",
+    """SELECT lang, doc_id FROM (
+  SELECT lang, doc_id,
+    ROW_NUMBER() OVER (PARTITION BY lang
+      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+  FROM documents) WHERE rk <= 20""",
+)
+def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic balanced subset: 20 docs per lang by md5-hash rank —
+    rerun-stable, engine-portable (the oracle replays the identical
+    ROW_NUMBER-over-md5 selection)."""
+    from dataprofiler_spark.operators.sampling import stratified_sample
+
+    docs = load_table(spark, sf_dir, "documents")
+    return stratified_sample(docs, "lang", "doc_id", 20).select("lang", "doc_id")
+
+
+@register(
     "vocab_stats_by_source",
     """WITH w0 AS (SELECT source, unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents),
 w AS (SELECT * FROM w0 WHERE w <> '')
@@ -1986,6 +2031,44 @@ def robust_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date(F.col("ts").cast("timestamp")).cast("string").alias("day"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
     return metric_history_anomalies_robust(daily, ["event_type"], "cnt")
+
+
+@register(
+    "mix_sample_documents",
+    """WITH counts AS (
+  SELECT source, COUNT(*) AS n FROM documents GROUP BY source
+), plan AS (
+  SELECT source, n,
+    CASE source WHEN 'src0' THEN 0.3 WHEN 'src1' THEN 0.3 WHEN 'src2' THEN 0.4
+      ELSE 0.0 END AS t
+  FROM counts
+), thresholds AS (
+  SELECT source, ROUND(LEAST(1.0, t * 40.0 / GREATEST(n, 1)) * 10000, 0) AS thr
+  FROM plan
+), kept AS (
+  SELECT d.source, d.doc_id FROM documents d JOIN thresholds USING (source)
+  WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 < thr
+)
+SELECT source, COUNT(*) AS sampled_docs,
+  CAST(MIN(doc_id) AS BIGINT) AS min_doc_id, CAST(MAX(doc_id) AS BIGINT) AS max_doc_id
+FROM kept GROUP BY source""",
+)
+def mix_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic resampling to a target training mixture (30/30/40
+    over three sources, 40-row budget): per-source sampled counts with
+    min/max ids — the oracle replays the exact hash-threshold membership,
+    so the selected SET (not just its size) is engine-portable."""
+    from dataprofiler_spark.operators.sampling import mix_sample
+
+    docs = load_table(spark, sf_dir, "documents")
+    samp = mix_sample(
+        docs, "source", "doc_id", {"src0": 0.3, "src1": 0.3, "src2": 0.4}, 40
+    )
+    return samp.groupBy("source").agg(
+        F.count(F.lit(1)).alias("sampled_docs"),
+        F.min("doc_id").alias("min_doc_id"),
+        F.max("doc_id").alias("max_doc_id"),
+    )
 
 
 # Deterministic snapshot perturbation replayed in BOTH engines (gotcha-19
@@ -2269,6 +2352,25 @@ def tfidf_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return tfidf_keywords(docs, top_k=3)
+
+
+@register(
+    "temperature_mix_documents",
+    """WITH c AS (
+  SELECT source, COUNT(*) AS n_rows FROM documents GROUP BY source
+)
+SELECT source, n_rows,
+  ROUND(POW(n_rows, 0.3) / SUM(POW(n_rows, 0.3)) OVER (), 6) AS target_frac
+FROM c""",
+)
+def temperature_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled (T=0.3) mixture targets per source — the
+    multilingual rebalancing rule p ∝ n^T; one group-sized aggregate +
+    an unpartitioned window over it."""
+    from dataprofiler_spark.operators.sampling import temperature_targets
+
+    docs = load_table(spark, sf_dir, "documents")
+    return temperature_targets(docs, "source", 0.3)
 
 
 @register(
@@ -2987,6 +3089,93 @@ def dedup_history_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     return dedup_against_history_bloom(new, hist, ["prefix"], "doc_id")
 
 
+@register(
+    "token_budget_selection_documents",
+    """WITH t AS (SELECT doc_id,
+        (doc_id * 37 % 101) / 101.0 AS score,
+        len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok
+      FROM documents),
+c AS (SELECT doc_id,
+        SUM(n_tok) OVER (ORDER BY score DESC, doc_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      FROM t)
+SELECT doc_id, cum <= 100000 AS selected FROM c""",
+)
+def token_budget_selection_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact token-budget corpus selection ('train on the best B tokens'):
+    flag the maximal (score DESC, key) prefix whose cumulative token count
+    stays ≤ B — computed with score-range bucketing + driver offsets + a
+    per-bucket cumsum window, never the ORDER-BY-score SinglePartition
+    plan the oracle's global window uses. The synthetic score (doc_id·37
+    mod 101)/101 is deliberately heavy-tied (101 distinct values) to
+    exercise the deterministic key tie-break. Window membership: see _HARVEST_FIRST (gotcha 26)."""
+    from dataprofiler_spark.operators.sampling import select_token_budget
+
+    docs = load_table(spark, sf_dir, "documents")
+    staged = docs.select(
+        "doc_id",
+        ((F.col("doc_id") * 37 % 101) / F.lit(101.0)).alias("score"),
+        F.size(words("text")).alias("n_tok"),
+    )
+    return select_token_budget(staged, "score", "n_tok", 100000).select(
+        "doc_id", "selected"
+    )
+
+
+def _dsir_sql(n_buckets: int = 1 << 12, alpha: float = 1.0, k: int = 100) -> str:
+    two52 = float(1 << 52)
+    return f"""WITH w AS (SELECT doc_id,
+        unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS word
+      FROM documents),
+b AS (SELECT doc_id,
+        CAST('0x' || substr(md5(word), 1, 7) AS BIGINT) % {n_buckets} AS bucket
+      FROM w),
+tc AS (SELECT bucket, COUNT(*) AS cnt_t FROM b WHERE doc_id % 7 = 0 GROUP BY bucket),
+rc AS (SELECT bucket, COUNT(*) AS cnt_r FROM b WHERE doc_id % 7 <> 0 GROUP BY bucket),
+tt AS (SELECT COALESCE(SUM(cnt_t), 0) + {alpha} * {n_buckets} AS den FROM tc),
+rt AS (SELECT COALESCE(SUM(cnt_r), 0) + {alpha} * {n_buckets} AS den FROM rc),
+ratios AS (SELECT COALESCE(tc.bucket, rc.bucket) AS bucket,
+        ln((COALESCE(cnt_t, 0) + {alpha}) / tt.den)
+      - ln((COALESCE(cnt_r, 0) + {alpha}) / rt.den) AS lr
+      FROM tc FULL OUTER JOIN rc ON tc.bucket = rc.bucket
+      CROSS JOIN tt CROSS JOIN rt),
+docw AS (SELECT d.doc_id, ROUND(COALESCE(SUM(ratios.lr), 0), 6) AS log_weight
+      FROM documents d
+      LEFT JOIN b ON b.doc_id = d.doc_id
+      LEFT JOIN ratios ON ratios.bucket = b.bucket
+      WHERE d.doc_id % 7 <> 0
+      GROUP BY d.doc_id),
+g AS (SELECT doc_id, log_weight,
+        ROUND(log_weight + -ln(-ln(
+          (CAST('0x' || substr(md5('dsir' || CAST(doc_id AS VARCHAR)), 1, 13)
+             AS BIGINT) + 0.5) / {two52})), 6) AS gs
+      FROM docw)
+SELECT doc_id, log_weight FROM g ORDER BY gs DESC, doc_id LIMIT {k}"""
+
+
+@register("dsir_selection_documents", _dsir_sql())
+def dsir_selection_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR importance resampling (Xie et al. 2023): fit hashed
+    bag-of-words models on a target slice (doc_id%7=0) vs the raw rest,
+    score each raw doc with the summed per-bucket log-likelihood ratio,
+    and Gumbel-top-k select 100 docs — sampling-without-replacement from
+    softmax(log weight), noise derived from md5('dsir'||doc_id) so both
+    engines replay it bit-for-bit. Selection compares the 6dp-ROUNDED
+    Gumbel score with a doc_id tie-break (cross-engine float-sum-order
+    safety). Window membership: see _HARVEST_FIRST (gotcha 26)."""
+    from dataprofiler_spark.operators.sampling import (
+        dsir_log_ratios,
+        dsir_resample,
+        dsir_score,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    target = docs.filter(F.col("doc_id") % 7 == 0)
+    raw = docs.filter(F.col("doc_id") % 7 != 0)
+    model = dsir_log_ratios(target, raw, n_buckets=1 << 12)
+    return dsir_resample(dsir_score(raw, model), 100, salt="dsir")
+
+
 def _threshold_sweep_sql(n_buckets: int = 1 << 18, seed: int = 42) -> str:
     from dataprofiler_spark.operators.dedup import _MERSENNE, _minhash_params
 
@@ -3192,6 +3381,41 @@ def dup_group_size_histogram_documents(spark: SparkSession, sf_dir: str) -> Data
 
     return duplicate_group_size_histogram(
         load_table(spark, sf_dir, "documents"), ["text"]
+    )
+
+
+@register(
+    "leakage_safe_split_documents",
+    """WITH k AS (SELECT doc_id, md5(COALESCE(text, '')) AS dg FROM documents),
+b AS (SELECT doc_id, dg,
+             CAST('0x' || substr(md5(dg), 1, 15) AS BIGINT) % 10000 AS bucket
+      FROM k),
+s AS (SELECT doc_id, dg,
+  CASE WHEN bucket < 8000 THEN 'train'
+       WHEN bucket < 9000 THEN 'val'
+       WHEN bucket < 10000 THEN 'test' END AS split
+  FROM b)
+SELECT split, CAST(COUNT(*) AS BIGINT) AS docs,
+       CAST(COUNT(DISTINCT dg) AS BIGINT) AS n_digests
+FROM s GROUP BY split""",
+)
+def leakage_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Content-keyed 80/10/10 split: membership hashes the md5 CONTENT
+    digest, not the row id, so byte-identical duplicates cannot straddle
+    train/test (the classic eval-inflation leak). Rollup per split with
+    distinct-digest counts; the oracle replays the digest+bucket math
+    bit-exactly. Local-only tail by choice (gotcha 26)."""
+    from dataprofiler_spark.operators.sampling import leakage_safe_split
+
+    docs = load_table(spark, sf_dir, "documents")
+    out = leakage_safe_split(
+        docs, {"train": 0.8, "val": 0.1, "test": 0.1}, content_cols=("text",)
+    )
+    return out.groupBy("split").agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.count_distinct(
+            F.md5(F.coalesce(F.col("text"), F.lit("")))
+        ).alias("n_digests"),
     )
 
 

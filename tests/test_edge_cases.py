@@ -3,6 +3,7 @@ rows, unicode text, empty strings through the core operators — the inputs
 a 100 TB pipeline WILL contain somewhere. No crashes, sane outputs."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 
@@ -127,12 +128,23 @@ def test_checks_on_empty_input(spark):
 
 
 def test_round3_ops_on_empty_and_degenerate_inputs(spark):
-    """New round-3 operators must not crash or mis-report on empty frames
-    or single-category entropy."""
+    """New round-3 operators must not crash or mis-report on empty frames,
+    empty strata, single-category entropy, or an empty benchmark set."""
+    from dataprofiler_spark.operators.dedup import (
+        connected_components_star,
+        contamination_check,
+    )
     from dataprofiler_spark.operators.drift import categorical_entropy
     from dataprofiler_spark.operators.growth import daily_count_anomalies
+    from dataprofiler_spark.operators.sampling import stratified_sample
+    from dataprofiler_spark.operators.textstats import repetition_stats, vocabulary_stats
 
     empty_docs = spark.createDataFrame([], "doc_id bigint, text string, g string")
+
+    # empty corpus / empty benchmark → empty report, no crash
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id bigint, text string")
+    assert contamination_check(empty_docs.drop("g"), docs).count() == 0
+    assert contamination_check(docs, empty_docs.drop("g")).count() == 0
 
     # entropy of a constant column is exactly 0 (one class)
     const = spark.createDataFrame([("x",)] * 5, "v string")
@@ -147,6 +159,21 @@ def test_round3_ops_on_empty_and_degenerate_inputs(spark):
     # anomalies on an empty frame / a single-day group: no flags, no crash
     ev = spark.createDataFrame([], "ts timestamp, event_type string")
     assert daily_count_anomalies(ev, "event_type").count() == 0
+
+    # stratified sample of an empty frame / n=0
+    assert stratified_sample(empty_docs, "g", "doc_id", 5).count() == 0
+    assert stratified_sample(docs.withColumn("g", F.lit("a")), "g", "doc_id", 0).count() == 0
+
+    # repetition/vocab on empty frames
+    assert repetition_stats(empty_docs).count() == 0
+    assert vocabulary_stats(empty_docs, group_by=["g"]).count() == 0
+
+    # star CC on an empty pair list and on self-pairs only
+    no_pairs = spark.createDataFrame([], "key1 bigint, key2 bigint")
+    assert connected_components_star(no_pairs).count() == 0
+    self_only = spark.createDataFrame([(5, 5)], "key1 bigint, key2 bigint")
+    rows = {r.node: r.component for r in connected_components_star(self_only).collect()}
+    assert rows == {5: 5}
 
 
 def test_round3_ops_edge_cases(spark):

@@ -382,6 +382,52 @@ def test_connected_components_execute_pair_plan_once(spark):
         assert acc.value == len(edges), (fn.__name__, acc.value)
 
 
+def test_dsir_and_threshold_sweep_plan_shapes(spark):
+    """DSIR: ratio table joins BROADCAST into the scoring pass (never a
+    shuffled join on bucket), the resample is TakeOrderedAndProject (no
+    global sort), and nothing routes through a Python UDF. Threshold
+    sweep: the whole grid is ONE hash-aggregate pass over ONE scan —
+    no per-threshold scan, no Expand, no sort-based fallback."""
+    from dataprofiler_spark.operators.sampling import (
+        dsir_log_ratios,
+        dsir_resample,
+        dsir_score,
+    )
+    from dataprofiler_spark.operators.textstats import threshold_sweep
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    model = dsir_log_ratios(
+        docs.filter(F.col("doc_id") % 7 == 0),
+        docs.filter(F.col("doc_id") % 7 != 0),
+        n_buckets=1 << 10,
+    )
+    scored = dsir_score(docs.filter(F.col("doc_id") % 7 != 0), model)
+    p = plan_of(scored)
+    assert "BroadcastHashJoin" in p
+    # the only non-broadcast join allowed is the FULL OUTER merge of the
+    # two bucket-bounded count frames inside the ratio table (≤ n_buckets
+    # rows per side; full outer cannot broadcast) — the corpus-sized
+    # words frame itself must never shuffle-join
+    assert p.count("SortMergeJoin") + p.count("ShuffledHashJoin") <= 1
+    assert "EvalPython" not in p
+    sel = plan_of(dsir_resample(scored, 50, salt="s"))
+    assert "TakeOrderedAndProject" in sel
+    assert "Exchange SinglePartition" not in sel
+
+    sweep = threshold_sweep(
+        docs.select(
+            ((F.col("doc_id") % 100) / 100.0).alias("score"),
+            (F.col("doc_id") % 3 == 0).alias("y"),
+        ),
+        "score",
+        "y",
+    )
+    sp = plan_of(sweep)
+    assert sp.count("Scan parquet") == 1
+    assert "SortAggregate" not in sp and "Expand" not in sp
+    assert "EvalPython" not in sp
+
+
 def test_ks_wasserstein_single_shuffle_grouped_window(spark):
     """VERDICT r4 #6: the exact-KS / W1 tagged-union merge must stay ONE
     shuffle (union -> single hash aggregate over (group, value)) and the

@@ -118,3 +118,29 @@ def test_repetition_fractions_bounded_property(texts):
     for r in repetition_stats(df).collect():
         assert 0.0 <= r.dup_word_frac <= 1.0
         assert 0.0 <= r.dup_bigram_frac <= 1.0
+
+
+@given(
+    st.lists(st.floats(0.0, 1.0), min_size=1, max_size=4),
+    st.integers(0, 5000),
+)
+@settings(max_examples=6, deadline=None)
+def test_mix_sample_subset_property(raw_targets, total):
+    """For any target mix and budget: the sample is a subset of the
+    corpus, per-group counts never exceed the group size, and a smaller
+    budget yields a nested subset."""
+    from dataprofiler_spark import get_spark
+    from dataprofiler_spark.operators.sampling import mix_sample
+
+    spark = get_spark(master="local[2]", shuffle_partitions=2)
+    names = ["a", "b", "c", "d"][: len(raw_targets)]
+    ssum = sum(raw_targets) or 1.0
+    targets = {n: t / ssum for n, t in zip(names, raw_targets)}
+    corpus = spark.createDataFrame(
+        [(i, names[i % len(names)]) for i in range(400)],
+        "doc_id long, source string",
+    )
+    big = mix_sample(corpus, "source", "doc_id", targets, total)
+    assert big.subtract(corpus).count() == 0
+    small = mix_sample(corpus, "source", "doc_id", targets, total // 2)
+    assert small.subtract(big).count() == 0  # budgets nest
