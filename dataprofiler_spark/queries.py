@@ -2034,6 +2034,43 @@ def robust_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "packing_plan_documents",
+    """WITH d AS (
+  SELECT source, doc_id, len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok FROM documents
+), c AS (
+  SELECT source, n_tok,
+    SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+                     ROWS UNBOUNDED PRECEDING) AS cum
+  FROM d
+), p AS (
+  SELECT source, n_tok,
+    CASE WHEN n_tok > 0
+         THEN FLOOR((cum - 1) / 1024) - FLOOR((cum - n_tok) / 1024) + 1
+         ELSE 0 END AS spanned
+  FROM c
+)
+SELECT source, COUNT(*) AS n_docs,
+  CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
+  CAST(CEIL(SUM(n_tok) / 1024.0) AS BIGINT) AS n_chunks,
+  CAST(SUM(CASE WHEN spanned > 1 THEN 1 ELSE 0 END) AS BIGINT) AS docs_split,
+  ROUND(SUM(n_tok) * 1.0 / (CEIL(SUM(n_tok) / 1024.0) * 1024), 6) AS mean_fill,
+  CAST(CEIL(SUM(n_tok) / 1024.0) * 1024 - SUM(n_tok) AS BIGINT) AS tail_waste_tokens
+FROM p GROUP BY source""",
+)
+def packing_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concat-then-chunk packing plan per source at a 1024-token context:
+    chunk counts, boundary-split docs, fill factor, tail waste — the
+    numbers a pretraining loader is sized from. One cumsum window per
+    source + a bounded aggregate."""
+    from dataprofiler_spark.operators.packing import packing_stats
+    from dataprofiler_spark.operators.textstats import token_count
+
+    docs = load_table(spark, sf_dir, "documents")
+    staged = docs.select("source", "doc_id", token_count("text").alias("n_tok"))
+    return packing_stats(staged, "n_tok", 1024, "doc_id", "source")
+
+
+@register(
     "mix_sample_documents",
     """WITH counts AS (
   SELECT source, COUNT(*) AS n FROM documents GROUP BY source
@@ -2352,6 +2389,41 @@ def tfidf_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return tfidf_keywords(docs, top_k=3)
+
+
+@register(
+    "batch_padding_documents",
+    """WITH d AS (
+  SELECT source, doc_id, len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok FROM documents
+), bkt AS (
+  SELECT source, doc_id, n_tok, FLOOR(n_tok / 50) AS bucket FROM d
+), batched AS (
+  SELECT source, n_tok, bucket,
+    CAST(FLOOR((ROW_NUMBER() OVER (PARTITION BY source, bucket ORDER BY doc_id) - 1) / 8.0) AS BIGINT) AS batch
+  FROM bkt
+), padded AS (
+  SELECT source, n_tok,
+    MAX(n_tok) OVER (PARTITION BY source, bucket, batch) - n_tok AS pad
+  FROM batched
+)
+SELECT source, COUNT(*) AS n_docs,
+  CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
+  CAST(SUM(pad) AS BIGINT) AS padded_tokens,
+  ROUND(SUM(pad) * 1.0 / GREATEST(SUM(n_tok) + SUM(pad), 1), 6) AS padding_frac
+FROM padded GROUP BY source""",
+)
+def batch_padding_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Padding efficiency of length-bucketed batching (width 50, batch 8)
+    per source — the loader-config question 'how many tokens does this
+    batching waste'. Deterministic batch assignment replayed in SQL."""
+    from dataprofiler_spark.operators.packing import batch_padding_stats
+    from dataprofiler_spark.operators.textstats import token_count
+
+    docs = load_table(spark, sf_dir, "documents")
+    staged = docs.select("source", "doc_id", token_count("text").alias("n_tok"))
+    return batch_padding_stats(
+        staged, "n_tok", 8, "doc_id", "source", bucket_width=50
+    )
 
 
 @register(
@@ -2848,6 +2920,26 @@ def duplication_weights_documents(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
+    "chunk_overlap_documents",
+    """WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws
+           FROM documents),
+nz AS (SELECT doc_id, ws, len(ws) AS n FROM w WHERE len(ws) > 0),
+st AS (SELECT doc_id, ws, n, unnest(generate_series(0, n - 1, 8)) AS chunk_start FROM nz)
+SELECT doc_id, chunk_start, least(12, n - chunk_start) AS n_tokens,
+       array_to_string(ws[chunk_start + 1 : chunk_start + 12], ' ') AS chunk_text
+FROM st WHERE chunk_start = 0 OR chunk_start + 12 - 8 < n""",
+)
+def chunk_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAG-style overlapping chunking (12-word windows, hop 8): pure
+    map-side sequence+slice explode, no shuffle — a 100-TB chunking run
+    is exactly one scan. Window membership: see _HARVEST_FIRST (gotcha 26)."""
+    from dataprofiler_spark.operators.packing import chunk_windows
+
+    docs = load_table(spark, sf_dir, "documents")
+    return chunk_windows(docs, window=12, stride=8)
+
+
+@register(
     "dedup_against_history_documents",
     """WITH hist AS (SELECT DISTINCT md5(substr(text, 1, 20)) AS digest
                  FROM documents WHERE doc_id % 3 = 0),
@@ -3014,6 +3106,56 @@ def pca_embeddings_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         vand.alias("proj_var_matches"),
         oand.alias("offdiag_ok"),
     )
+
+
+@register(
+    "packed_sequences_documents",
+    """WITH tk AS (SELECT doc_id, source,
+         list_transform(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),
+                        w -> CAST('0x' || substr(md5(w), 1, 7) AS BIGINT) % 50257) AS toks
+       FROM documents),
+c AS (SELECT doc_id, source, toks,
+        SUM(len(toks)) OVER (PARTITION BY source ORDER BY doc_id
+                             ROWS UNBOUNDED PRECEDING) - len(toks) AS off
+      FROM tk),
+e AS (SELECT source, off + i - 1 AS pos, tok FROM (
+        SELECT source, off, unnest(toks) AS tok,
+               unnest(generate_series(1, len(toks))) AS i
+        FROM c)),
+g AS (SELECT source, CAST(pos // 64 AS BIGINT) AS chunk_id,
+             COUNT(*) AS n_tokens,
+             array_to_string(list(tok ORDER BY pos), ',') AS tokens_csv
+      FROM e GROUP BY source, pos // 64)
+SELECT source, chunk_id, n_tokens, tokens_csv FROM g""",
+)
+def packed_sequences_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The END PRODUCT of the pipeline: the materialized packed training
+    table — per-source concat-then-chunk streams of 64-token chunks over
+    word-id token arrays (md5 word ids so the oracle replays the whole
+    thing: tokenize → cumsum offsets → token-level explode → chunk
+    regroup → in-chunk order). Token payloads compare as CSV strings
+    (engine-portable array stringification). Window membership: see _HARVEST_FIRST (gotcha 26)."""
+    from dataprofiler_spark.operators.packing import materialize_packed_sequences
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = F.transform(
+        words("text"),
+        lambda w: F.conv(F.substring(F.md5(w), 1, 7), 16, 10).cast("long") % 50257,
+    )
+    staged = docs.select("doc_id", "source", toks.alias("tokens"))
+    out = materialize_packed_sequences(
+        staged, chunk_tokens=64, group_col="source"
+    )
+    return out.select(
+        "source",
+        "chunk_id",
+        "n_tokens",
+        F.array_join(F.transform("tokens", _tok_str), ",").alias("tokens_csv"),
+    )
+
+
+def _tok_str(t: Column) -> Column:
+    return t.cast("string")
 
 
 @register(
@@ -3228,6 +3370,52 @@ def threshold_sweep_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y", F.col("doc_id") % 3 == 0
     )
     return threshold_sweep(scored, "quality_score", "y")
+
+
+_PACKING_SWEEP_SQL = """WITH t AS (
+  SELECT source, doc_id,
+    len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS tok
+  FROM documents),
+c AS (SELECT source, tok,
+    SUM(tok) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
+  FROM t),
+g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+    CAST(COALESCE(SUM(tok), 0) AS BIGINT) AS total_tokens,
+    CAST(SUM(CASE WHEN tok > 0 AND (cum - tok) // 64 <> (cum - 1) // 64 THEN 1 ELSE 0 END) AS BIGINT) AS s64,
+    CAST(SUM(CASE WHEN tok > 0 AND (cum - tok) // 256 <> (cum - 1) // 256 THEN 1 ELSE 0 END) AS BIGINT) AS s256,
+    CAST(SUM(CASE WHEN tok > 0 AND (cum - tok) // 1024 <> (cum - 1) // 1024 THEN 1 ELSE 0 END) AS BIGINT) AS s1024
+  FROM c GROUP BY source),
+u AS (
+  SELECT source, n_docs, total_tokens, CAST(64 AS BIGINT) AS chunk_tokens, s64 AS docs_split FROM g
+  UNION ALL
+  SELECT source, n_docs, total_tokens, CAST(256 AS BIGINT), s256 FROM g
+  UNION ALL
+  SELECT source, n_docs, total_tokens, CAST(1024 AS BIGINT), s1024 FROM g)
+SELECT source, chunk_tokens, n_docs, total_tokens,
+  CAST(CEIL(total_tokens * 1.0 / chunk_tokens) AS BIGINT) AS n_chunks,
+  docs_split,
+  ROUND(CASE WHEN total_tokens > 0
+        THEN total_tokens * 1.0 / (CAST(CEIL(total_tokens * 1.0 / chunk_tokens) AS BIGINT) * chunk_tokens) END, 6) AS mean_fill,
+  CAST(CAST(CEIL(total_tokens * 1.0 / chunk_tokens) AS BIGINT) * chunk_tokens - total_tokens AS BIGINT) AS tail_waste_tokens
+FROM u"""
+
+
+@register("packing_sweep_documents", _PACKING_SWEEP_SQL)
+def packing_sweep_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Context-length calibration sweep: packing_stats at 64/256/1024
+    tokens per chunk in ONE corpus pass — the size-independent stream
+    cumsum is computed once per source, every (size, docs_split) cell is
+    a conditional sum in a single hash aggregate, and the per-size chunk
+    math is pure projection after a stack unpivot (the threshold_sweep
+    pattern applied to packing). Window membership: see _HARVEST_FIRST
+    (gotcha 26)."""
+    from dataprofiler_spark.operators.packing import packing_sweep
+
+    docs = load_table(spark, sf_dir, "documents")
+    staged = docs.select(
+        "source", "doc_id", F.size(words("text")).alias("n_tok")
+    )
+    return packing_sweep(staged, "n_tok", [64, 256, 1024], "doc_id", "source")
 
 
 _BIGRAM_LP_SQL = """WITH w AS (

@@ -476,6 +476,22 @@ def test_drift_by_group_one_aggregate_no_join(spark, tmp_path_factory):
         assert sum(f"{d / name}]" in line for line in scans) == 1, p
 
 
+def test_packing_sweep_one_exchange_no_single_partition(spark):
+    """packing_sweep: the size-independent cumsum window is the ONLY
+    shuffle (the grid aggregate reuses its group partitioning), no
+    SinglePartition stage with a group column, and the grid unpivots via
+    stack (never a grid x rows explode)."""
+    from dataprofiler_spark.functions.expressions import words
+    from dataprofiler_spark.operators.packing import packing_sweep
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    staged = docs.select("source", "doc_id", F.size(words("text")).alias("n_tok"))
+    p = plan_of(packing_sweep(staged, "n_tok", [64, 256, 1024], "doc_id", "source"))
+    assert "SinglePartition" not in p, p
+    assert p.count("Exchange hashpartitioning") == 1, p
+    assert "stack" in p, p
+
+
 def test_bigram_logprob_join_strategy(spark):
     """bigram_logprob: the corpus-sized bigram table joins SHUFFLE-side
     (never broadcast — it is not vocabulary-bounded), the unigram context

@@ -121,6 +121,42 @@ def test_repetition_fractions_bounded_property(texts):
 
 
 @given(
+    st.lists(st.integers(0, 3000), min_size=1, max_size=30),
+    st.integers(16, 2048),
+)
+@settings(max_examples=6, deadline=None)
+def test_packing_invariants_property(toks, budget):
+    """Concat-then-chunk invariants for arbitrary doc lengths and chunk
+    sizes: offsets are the exclusive prefix sums; spans cover exactly
+    ceil-range of each doc; stats reconcile with per-doc rows."""
+    from dataprofiler_spark import get_spark
+    from dataprofiler_spark.operators.packing import pack_chunks, packing_stats
+
+    spark = get_spark(master="local[2]", shuffle_partitions=2)
+    df = spark.createDataFrame(
+        [(i, "s", t) for i, t in enumerate(toks)],
+        "doc_id long, source string, n_tok long",
+    )
+    rows = sorted(
+        pack_chunks(df, "n_tok", budget, group_col="source").collect(),
+        key=lambda r: r.doc_id,
+    )
+    cum = 0
+    for r, t in zip(rows, toks):
+        assert r.stream_offset == cum
+        assert r.chunk_id == cum // budget
+        if t > 0:
+            assert r.n_chunks_spanned == (cum + t - 1) // budget - cum // budget + 1
+        else:
+            assert r.n_chunks_spanned == 0
+        cum += t
+    s = packing_stats(df, "n_tok", budget, group_col="source").collect()[0]
+    assert s.total_tokens == sum(toks)
+    assert s.n_chunks == -(-sum(toks) // budget)  # ceil
+    assert s.docs_split == sum(1 for r in rows if r.is_boundary_split)
+
+
+@given(
     st.lists(st.floats(0.0, 1.0), min_size=1, max_size=4),
     st.integers(0, 5000),
 )
