@@ -178,13 +178,29 @@ def test_round3_ops_on_empty_and_degenerate_inputs(spark):
 
 def test_round3_ops_edge_cases(spark):
     """Empty / single-row / degenerate inputs for the round-3 additions:
-    KS, JSD, PII."""
+    packing, mix sampling, KS, JSD, PII."""
     from dataprofiler_spark.operators.drift import (
         histogram,
         jsd_by_group,
         ks_statistic,
     )
+    from dataprofiler_spark.operators.packing import pack_chunks, packing_stats
     from dataprofiler_spark.operators.pii import pii_scan, pii_summary
+    from dataprofiler_spark.operators.sampling import mix_plan, mix_sample
+
+    empty = spark.createDataFrame([], "doc_id long, source string, n_tok long")
+    assert pack_chunks(empty, "n_tok", 1024, group_col="source").count() == 0
+    assert packing_stats(empty, "n_tok", 1024, group_col="source").count() == 0
+    one = spark.createDataFrame([(1, "s", 7)], "doc_id long, source string, n_tok long")
+    r = pack_chunks(one, "n_tok", 1024, group_col="source").collect()[0]
+    assert r.chunk_id == 0 and r.n_chunks_spanned == 1
+
+    # mix: empty corpus -> empty plan and sample; zero-budget -> empty
+    e2 = spark.createDataFrame([], "doc_id long, source string")
+    assert mix_plan(e2, "source", {"web": 1.0}, 10).count() == 0
+    assert mix_sample(e2, "source", "doc_id", {"web": 1.0}, 10).count() == 0
+    c = spark.createDataFrame([(1, "web"), (2, "web")], "doc_id long, source string")
+    assert mix_sample(c, "source", "doc_id", {"web": 1.0}, 0).count() == 0
 
     # KS/JSD: empty sides and single-value distributions
     ev = spark.createDataFrame([], "x double, g string")

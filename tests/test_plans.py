@@ -292,6 +292,20 @@ def test_round3_addition_plan_shapes(spark):
     assert "BroadcastHashJoin" in q  # MAD joins back broadcast, not shuffled
 
 
+def test_packing_mix_ids_plan_shapes(spark):
+    """Packing = one scan + window + agg, no UDF; mix_sample joins its
+    broadcast-sized plan without an extra shuffle."""
+    from dataprofiler_spark.queries import queries
+
+    p = plan_of(queries()["packing_plan_documents"](spark, SF))
+    assert p.count("Scan parquet") == 1
+    assert "EvalPython" not in p
+
+    m = plan_of(queries()["mix_sample_documents"](spark, SF))
+    assert "BroadcastHashJoin" in m
+    assert "EvalPython" not in m
+
+
 def test_file_layout_report(spark, tmp_path):
     """Small-file diagnosis from a metadata-only FS listing: a table
     written as many tiny files trips needs_compaction with a sane
