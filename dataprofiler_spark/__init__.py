@@ -5,8 +5,8 @@ Built from scratch with the computed semantics of nontster/DataProfiler
 environment drift) re-expressed as idiomatic Spark DataFrame plans, and
 extended with the validation surface a 10^12-row tokenized-sequence
 pipeline needs: per-partition pass/fail verdicts, violation-row
-materialization, distribution-drift (PSI / chi-squared), and
-checkpoint-resume manifests.
+materialization, distribution-drift (PSI / chi-squared), dedup /
+similarity / text-quality operators, and checkpoint-resume manifests.
 
 Reference semantics citations use file:line paths into /root/reference.
 """

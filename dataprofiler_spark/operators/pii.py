@@ -3,7 +3,7 @@
 A training-data pipeline must find and scrub personally identifiable
 information before a corpus ships. The reference has no analog (it
 validates schemas/metrics, not content — SURVEY.md §1.3); this is a
-designed LLM-pipeline extension like the history dedup.
+designed LLM-pipeline extension like dedup/textstats.
 
 Scale shape: every operator here is pure column expressions
 (regexp_count / regexp_replace) — map-side only, no shuffle, no UDF, fully
