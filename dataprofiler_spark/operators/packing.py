@@ -20,7 +20,7 @@ running counter (no sort-spill risk beyond the shuffle), and chunk stats
 are a bounded groupBy. Pack per source/shard (the natural unit a loader
 reads) rather than one global group: a single global cumsum serializes on
 one task in ANY engine — if a global stream order is required, use
-assign_sequential_ids-style range bucketing first.
+range bucketing first (as sampling.select_token_budget does).
 """
 
 from __future__ import annotations

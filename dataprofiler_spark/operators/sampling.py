@@ -226,9 +226,9 @@ def select_token_budget(
 
     The naive plan — ORDER BY score DESC + a global cumulative-sum
     window — is an Exchange SinglePartition: one task sorts and scans
-    the entire corpus (the exact scale killer ordering.assign_sequential_ids
-    exists to avoid, with the 40M-row 3.4× A/B in BENCH/BASELINE.md).
-    Same cure, weighted: score-range bucketing makes the cumsum exact
+    the entire corpus (a naive global rank measured 3.4× slower than a
+    range-bucketed one at 40M rows, BENCH/BASELINE.md). The cure,
+    weighted: score-range bucketing makes the cumsum exact
     with every sort bounded to ~n/num_buckets rows:
 
     1. approxQuantile cuts on score — any sketch error skews bucket
@@ -241,7 +241,7 @@ def select_token_budget(
 
     Deterministic iff `key_col` is unique (the usual tie rule). NULL
     score or tokens raise — a doc with no score has no place in a
-    quality order (mirror assign_sequential_ids' NULL contract)."""
+    quality order."""
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
     score, toks = F.col(score_col), F.col(tokens_col)
@@ -256,8 +256,7 @@ def select_token_budget(
     for c in cuts:
         bucket = bucket + (score < F.lit(c)).cast("int")
     # NULL score/tokens route to a NULL bucket so the (already required)
-    # mass aggregate detects them without a separate validation scan —
-    # the assign_sequential_ids NULL contract at zero extra passes
+    # mass aggregate detects them without a separate validation scan
     staged = df.withColumn(
         "__b", F.when(score.isNotNull() & toks.isNotNull(), bucket)
     )
