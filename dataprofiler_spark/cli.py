@@ -27,6 +27,7 @@ from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.pipeline import ValidationConfig, run_validation
 from dataprofiler_spark.plans.manifest import Snapshot, snapshot_from_path
 from dataprofiler_spark.report import FORMATTERS, write_report
+from dataprofiler_spark.sinks import append_rows
 from dataprofiler_spark.sources.synthetic import gen_sequences, gen_sources_ref
 
 
@@ -247,7 +248,9 @@ def main(argv: list[str] | None = None) -> int:
             args.append,
         )
         if args.output_dir:
-            prof.write.mode("append").parquet(f"{args.output_dir}/data_profiles")
+            # the collected rows, not `prof`: writing the frame would run
+            # the whole profile plan over the input a second time
+            append_rows(rows, prof.schema, f"{args.output_dir}/data_profiles")
         if args.suggest_expectations:
             from dataclasses import asdict
 

@@ -15,11 +15,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from dataprofiler_spark.operators.checks import run_sequence_suite
 from dataprofiler_spark.operators.drift import drift_by_group, histogram
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.plans.manifest import Manifest, PartitionRecord, Snapshot
+from dataprofiler_spark.sinks import append_rows, sink_filesystem
 
 
 @dataclass
@@ -85,8 +87,16 @@ def run_validation(
     pushed into the source read, so it costs nothing (partition pruning
     on a partitioned table). Any other skipped partition (the table
     changed elsewhere since it validated) is still scanned, re-validated
-    and recorded; it is only reported as skipped."""
+    and recorded; it is only reported as skipped.
+
+    With `output_dir` set, the run appends to four sinks under it.
+    `violations` is a distributed Spark write. `data_profiles`,
+    `validation_verdicts` and `drift_metrics` are written from the rows
+    the run has already collected, one parquet file each per run, with no
+    Spark job (`sinks.append_rows`). `output_dir` is resolved first, so a
+    location pyarrow cannot write to fails before any Spark job runs."""
     cfg = cfg or ValidationConfig()
+    out = sink_filesystem(cfg.output_dir) if cfg.output_dir else None
     manifest = Manifest(cfg.manifest_dir) if cfg.manifest_dir else None
     # without a snapshot the manifest still records every partition (under
     # an empty token), but nothing is looked up or skipped
@@ -101,12 +111,12 @@ def run_validation(
             df = df.filter(~F.col(cfg.part_col).isin(pruned))
             sources_ref = sources_ref.filter(~F.col(cfg.part_col).isin(pruned))
 
-    # With output_dir set the run needs MULTIPLE actions over the same
-    # input (profile, verdict collect, drift) — fresh plans do NOT reuse
-    # shuffle outputs, so each would re-read the source. Persist the input
-    # across them; MEMORY_AND_DISK in local/bench scale — on a cluster
-    # where the table doesn't fit, swap for DISK_ONLY or accept the extra
-    # passes.
+    # With output_dir set the run issues SEVERAL actions over the same
+    # input (the profile collect, the drift collects, the verdict collect
+    # and the violations write) — fresh plans do NOT reuse shuffle
+    # outputs, so each would re-read the source. Persist the input across
+    # them; MEMORY_AND_DISK in local/bench scale — on a cluster where the
+    # table doesn't fit, swap for DISK_ONLY or accept the extra passes.
     persisted = False
     if cfg.output_dir:
         df = df.persist()
@@ -123,7 +133,8 @@ def run_validation(
     # collect ONCE and rebuild a local frame — otherwise the profile scan
     # re-executes per consumer.
     if expectations or cfg.output_dir:
-        profiles = spark.createDataFrame(profiles.collect(), profiles.schema)
+        profile_rows = profiles.collect()
+        profiles = spark.createDataFrame(profile_rows, profiles.schema)
 
     suite = run_sequence_suite(
         df,
@@ -149,21 +160,12 @@ def run_validation(
             evaluate_expectations(profiles, expectations, part_col=cfg.part_col)
         )
 
-    def _small(frame: DataFrame, check_name: str) -> DataFrame:
-        # drift frames are group-sized (one row per partition). They feed
-        # BOTH the verdict union and the drift sink — collect once so the
-        # histogram scans don't re-execute per consumer. The check label
-        # goes on the local frame: the frame collected must be the one
-        # drift_by_group returned (perfbench/tracing.py attributes that
-        # collect to the drift layer by frame identity).
-        local = spark.createDataFrame(frame.collect(), frame.schema)
-        return local.withColumn("check_name", F.lit(check_name))
-
+    # (drift_by_group frame, check_name) per drift check
     drifts = []
     if baseline_hist is not None:
         cur_hist = histogram(df, "n_tok", cfg.drift_bucket_width, group_by=[cfg.part_col])
         drifts.append(
-            _small(drift_by_group(baseline_hist, cur_hist, cfg.part_col), "n_tok_drift_psi")
+            (drift_by_group(baseline_hist, cur_hist, cfg.part_col), "n_tok_drift_psi")
         )
 
     if baseline_token_freq is not None:
@@ -176,16 +178,31 @@ def run_validation(
             cfg.part_col, F.explode("tokens").alias("bucket"), F.lit(1).alias("cnt")
         )
         drifts.append(
-            _small(
+            (
                 drift_by_group(baseline_token_freq, cur_tokens, cfg.part_col, eps=1e-9),
                 "token_freq_drift_psi",
             )
         )
 
     drift = None
-    for d in drifts:
-        drift = d if drift is None else drift.unionByName(d)
-    if drift is not None:
+    if drifts:
+        # drift frames are group-sized (one row per partition). They feed
+        # BOTH the verdict union and the drift sink — collect each once, so
+        # the histogram scans don't re-execute per consumer, and label its
+        # rows with the check. The frame collected must be the one
+        # drift_by_group returned (perfbench/tracing.py attributes that
+        # collect to the drift layer by frame identity).
+        drift_rows = [(*r, name) for frame, name in drifts for r in frame.collect()]
+        # the schema unionByName would give: a field is nullable if it is
+        # in any check's frame
+        fields = zip(*(frame.schema for frame, _ in drifts))
+        drift = spark.createDataFrame(
+            drift_rows,
+            StructType(
+                [StructField(f[0].name, f[0].dataType, any(g.nullable for g in f)) for f in fields]
+                + [StructField("check_name", StringType(), False)]
+            ),
+        )
         verdicts = verdicts.unionByName(
             drift.select(
                 F.lit(cfg.table_name).alias("table_name"),
@@ -203,15 +220,16 @@ def run_validation(
     collected = verdicts.collect()
     verdict_rows = spark.createDataFrame(collected, verdicts.schema)
 
-    if cfg.output_dir:
-        # profiles/verdicts/drift are local (collect-funneled) frames here —
-        # their writes execute no input scans; violations is the one
-        # distributed write and reads the persisted check frame.
-        profiles.write.mode("append").parquet(f"{cfg.output_dir}/data_profiles")
-        verdict_rows.write.mode("append").parquet(f"{cfg.output_dir}/validation_verdicts")
+    if out is not None:
+        # profiles, verdicts and drift are rows on the driver already:
+        # append them from here, with no Spark job. violations is the one
+        # distributed write; it reads the persisted check frame.
+        fs, root = out
+        append_rows(profile_rows, profiles.schema, f"{root}/data_profiles", fs)
+        append_rows(collected, verdicts.schema, f"{root}/validation_verdicts", fs)
         violations.write.mode("append").parquet(f"{cfg.output_dir}/violations")
         if drift is not None:
-            drift.write.mode("append").parquet(f"{cfg.output_dir}/drift_metrics")
+            append_rows(drift_rows, drift.schema, f"{root}/drift_metrics", fs)
     if persisted:
         suite.frame.unpersist()
         df.unpersist()

@@ -1,5 +1,6 @@
 """Append-only metrics store — the reference's sink-table layer re-expressed
-as month-partitioned parquet (Iceberg-shaped) tables.
+as month-partitioned parquet (Iceberg-shaped) tables — and `append_rows`,
+which appends driver-local rows to a parquet sink without Spark.
 
 Parity map (citations into /root/reference/src/db/clickhouse.py):
   data_profiles        :52-85   per-column profile rows + tenancy dims
@@ -15,16 +16,28 @@ app.py:251-257) — see latest_snapshot (W2).
 
 DDL-on-init parity (S13): init() creates all table dirs once, mirroring the
 reference's CREATE TABLE IF NOT EXISTS prologue (main.py:167-209).
+
+`MetricsStore` writes through Spark. `run_validation` and the CLI write the
+sinks they already hold as collected rows (profiles, verdicts, drift) with
+`append_rows` instead: one pyarrow parquet file per call and no Spark job.
+Spark and DuckDB read a sink directory that mixes those files with
+Spark-written ones as one table.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from dataprofiler_spark.functions.expressions import partition_month
 
@@ -52,6 +65,47 @@ _SCHEMA_OBJECT_DDL = (
     "event string, timing string, is_materialized boolean, "
     "columns string, definition_hash string"
 )
+
+
+def sink_filesystem(uri: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem of a sink location and the path on it.
+
+    A path without a scheme is made absolute against the working
+    directory, as Spark resolves it on a local filesystem. A URI is
+    resolved by `pyarrow.fs.FileSystem.from_uri` (file, s3, gs, hdfs);
+    any other scheme raises here, before anything is written."""
+    if "://" not in uri:
+        uri = os.path.abspath(uri)
+    return pafs.FileSystem.from_uri(uri)
+
+
+def append_rows(
+    rows: list, schema: StructType, path: str, fs: pafs.FileSystem | None = None
+) -> str:
+    """Append driver-local `rows` (tuples or Rows in `schema`'s column
+    order) to the parquet sink directory `path` as ONE new file, and
+    return that file's path. No Spark job runs.
+
+    The file's arrow schema is `schema` mapped by PySpark's own
+    `to_arrow_schema`, so types and nullability are Spark's. It is
+    written under a hidden name that neither Spark nor a
+    `**/*.parquet` glob reads, then moved to a unique
+    `part-<uuid>.parquet`: the sink stays append-only and a reader never
+    sees a partial file. An empty `rows` still writes a 0-row file that
+    carries the schema, as Spark does. `fs` is the filesystem `path` is
+    on (from `sink_filesystem`); without it `path` is resolved here."""
+    if fs is None:
+        fs, path = sink_filesystem(path)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = f"{path}/.{name}.tmp"
+    fs.create_dir(path, recursive=True)
+    pq.write_table(table, tmp, filesystem=fs)
+    fs.move(tmp, f"{path}/{name}")
+    return f"{path}/{name}"
 
 
 @dataclass

@@ -47,9 +47,9 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
     """With output_dir set, the suite's input scans must not re-execute per
     sink write (the round-2 ~3× regression): the input and the check frame
     are persisted across the verdict collect + violations write, and the
-    aggregate-sized frames (profiles, drift) are collect-funneled into
-    LOCAL frames whose writes execute no input scans. The equality UDF sees
-    each joined row exactly once across both actions."""
+    aggregate-sized results (profiles, verdicts, drift) are collected once
+    and returned as LOCAL frames, which execute no input scan. The
+    equality UDF sees each joined row exactly once across both actions."""
     import pandas as pd
 
     from dataprofiler_spark.operators import checks
@@ -99,8 +99,8 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
     # the input and the suite's check frame are persisted once each for
     # the multi-action phase, then both released
     assert calls["persist"] == 2 and calls["unpersist"] == 2
-    # profiles + drift are local (collect-funneled) frames: executing or
-    # writing them cannot re-run any input scan
+    # profiles, drift and verdicts are local frames over collected rows:
+    # executing them cannot re-run any input scan
     for frame in (res.profiles, res.drift, res.verdicts):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "Scan parquet" not in plan and "Exchange" not in plan, plan
@@ -108,6 +108,61 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out" / "violations")).count() > 0
     assert spark.read.parquet(str(tmp_path / "out" / "data_profiles")).count() > 0
     assert spark.read.parquet(str(tmp_path / "out" / "drift_metrics")).count() > 0
+
+
+def test_collected_sinks_written_from_driver(spark, tmp_path, monkeypatch):
+    """Only `violations` goes through DataFrameWriter. profiles, verdicts
+    and drift are appended from the rows the run collected, one parquet
+    file per sink per run, and Spark reads each sink back as the matching
+    ValidationResult frame: same columns and types (Spark's file reader
+    marks every column nullable), every run's rows."""
+    from pyspark.sql import DataFrameWriter
+
+    written = []
+    spark_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *a, **k):
+        written.append(str(path))
+        return spark_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    bad = gen_sequences(spark, 2_000, violations=True)
+    ref = gen_sequences(spark, 2_000)
+    base_hist = histogram(ref, "n_tok", 16.0, group_by=["source"])
+    base_freq = (
+        ref.select("source", F.explode("tokens").alias("bucket"))
+        .groupBy("source", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    out = tmp_path / "out"
+    sinks = {
+        "data_profiles": "profiles",
+        "validation_verdicts": "verdicts",
+        "drift_metrics": "drift",
+    }
+    results, files = [], []
+    for _ in range(2):
+        results.append(
+            run_validation(
+                spark, bad, gen_sources_ref(spark), reference=ref,
+                baseline_hist=base_hist, baseline_token_freq=base_freq,
+                cfg=ValidationConfig(output_dir=str(out)),
+            )
+        )
+        files.append({s: sorted((out / s).glob("*.parquet")) for s in sinks})
+
+    assert written == [f"{out}/violations"] * 2
+    for sink, field in sinks.items():
+        first, second = files[0][sink], files[1][sink]
+        assert len(first) == 1 and len(second) == 2 and first[0] in second, sink
+        back = spark.read.parquet(str(out / sink))
+        want = getattr(results[0], field).schema
+        assert [(f.name, f.dataType) for f in back.schema] == [
+            (f.name, f.dataType) for f in want
+        ], sink
+        assert sorted(map(tuple, back.collect())) == sorted(
+            tuple(r) for res in results for r in getattr(res, field).collect()
+        ), sink
 
 
 def test_repeated_run_reuses_generated_code(spark, tmp_path):

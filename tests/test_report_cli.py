@@ -295,3 +295,30 @@ def test_cli_resume_skips_validated_partitions(spark, tmp_path):
     assert second["partitions_skipped"] == len(passed)
     assert second["partitions_validated"] == 1
     assert second["rows_validated"] == 0
+
+
+def test_cli_profile_sink_written_from_collected_rows(spark, tmp_path, monkeypatch):
+    """--data-profile --output-dir writes the rows it already collected:
+    no DataFrameWriter call (which would run the profile plan again), and
+    a relative --output-dir resolves against the working directory."""
+    from pyspark.sql import DataFrameWriter
+
+    from dataprofiler_spark.cli import main
+    from dataprofiler_spark.operators.profile import ProfileConfig
+    from dataprofiler_spark.sources import gen_sequences
+
+    calls = []
+    monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, path, *a, **k: calls.append(path))
+    monkeypatch.chdir(tmp_path)
+    assert main(["--synthetic-rows", "2000", "--data-profile", "--output-dir", "out"]) == 0
+    assert calls == []
+
+    sink = spark.read.parquet(str(tmp_path / "out" / "data_profiles"))
+    want = profile(
+        gen_sequences(spark, 2000), "sequences", group_by=["source"],
+        cfg=ProfileConfig(exact=True),
+    )
+    assert sink.columns == want.columns
+    assert sorted(map(tuple, sink.collect()), key=str) == sorted(
+        map(tuple, want.collect()), key=str
+    )

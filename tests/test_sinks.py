@@ -1,5 +1,6 @@
 """Metrics store: append-only month-partitioned sinks, tenancy + time-range
-reads (S6), latest-snapshot-per-key (W2), inventory drift (J3/J4)."""
+reads (S6), latest-snapshot-per-key (W2), inventory drift (J3/J4); and
+`append_rows`, the driver-side writer of the collected sinks."""
 
 import time
 
@@ -7,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.profile import profile
-from dataprofiler_spark.sinks import MetricsStore
+from dataprofiler_spark.sinks import MetricsStore, append_rows
 from dataprofiler_spark.sources import gen_sequences
 
 
@@ -160,3 +161,70 @@ def test_expire_snapshots_drops_old_months_only(spark, tmp_path):
     kept = {str(r.scan_month) for r in store.read("data_profiles").collect()}
     assert kept == {"202403", "202406"}  # partition values read back as ints
     assert expire_snapshots(store, keep_months=4, now=now) == {}  # idempotent
+
+
+# non-nullable and nullable columns of each type the collected sinks hold
+_ROWS_DDL = "name string not null, n bigint not null, x double, ok boolean, note string"
+
+
+def _spark_types(schema):
+    # Spark's file reader marks every column nullable
+    return [(f.name, f.dataType) for f in schema]
+
+
+def test_append_rows_mixes_with_spark_written_files(spark, tmp_path):
+    """A sink directory holding Spark's append layout (_SUCCESS, .crc) and
+    append_rows files reads back in Spark and in DuckDB (the glob the
+    perfbench oracle uses) as one table: the declared types and the union
+    of the rows."""
+    import duckdb
+
+    sink = tmp_path / "drift_metrics"
+    old = [("web", 1, 0.5, True, None), ("code", 2, None, False, "x")]
+    new = [("web", 3, 1.25, None, "y"), ("legal", 4, 0.0, True, None)]
+    frame = spark.createDataFrame(old, _ROWS_DDL)
+    frame.write.mode("append").parquet(str(sink))
+    assert (sink / "_SUCCESS").exists() and list(sink.glob(".*.crc"))
+    written = append_rows(new, frame.schema, str(sink))
+    assert written.startswith(f"{sink}/part-") and written.endswith(".parquet")
+
+    back = spark.read.parquet(str(sink))
+    assert _spark_types(back.schema) == _spark_types(frame.schema)
+    assert sorted(map(tuple, back.collect()), key=str) == sorted(old + new, key=str)
+
+    got = duckdb.sql(
+        f"SELECT name, n, x, ok, note FROM read_parquet('{sink}/**/*.parquet', "
+        "hive_partitioning = true)"
+    ).fetchall()
+    assert sorted(got, key=str) == sorted(old + new, key=str)
+
+
+def test_append_rows_empty_writes_schema_only_file(spark, tmp_path):
+    """No rows still appends one readable 0-row file carrying the schema."""
+    sink = tmp_path / "validation_verdicts"
+    schema = spark.createDataFrame([], _ROWS_DDL).schema
+    append_rows([], schema, str(sink))
+    assert len(list(sink.glob("part-*.parquet"))) == 1
+    back = spark.read.parquet(str(sink))
+    assert _spark_types(back.schema) == _spark_types(schema)
+    assert back.count() == 0
+
+
+def test_unsupported_output_scheme_fails_before_any_job(spark):
+    """An output_dir no pyarrow filesystem resolves is rejected before
+    run_validation starts a Spark job."""
+    import pyarrow as pa
+
+    from dataprofiler_spark.pipeline import ValidationConfig, run_validation
+    from dataprofiler_spark.sources import gen_sources_ref
+
+    df = gen_sequences(spark, 500)
+    sources = gen_sources_ref(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("unsupported-output-scheme", "run_validation into nosuch://")
+    try:
+        with pytest.raises(pa.ArrowInvalid, match="nosuch"):
+            run_validation(spark, df, sources, cfg=ValidationConfig(output_dir="nosuch://x"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("unsupported-output-scheme")) == []
