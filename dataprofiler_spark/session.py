@@ -60,8 +60,9 @@ def get_spark(
     you would set on a 1000-executor cluster too: AQE on (runtime
     shuffle coalescing + skew-join splitting), Arrow on (all pandas-UDF
     traffic is Arrow batches), UTC session TZ (oracle comparability),
-    and a codegen cache that holds a whole validation run's generated
-    classes, so repeated runs and micro-batches reuse them.
+    a codegen cache that holds a whole validation run's generated
+    classes, so repeated runs and micro-batches reuse them, and no
+    per-call Python call-site capture while plans are built.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
@@ -88,6 +89,12 @@ def get_spark(
         # static conf: must be set before the session (and its executors)
         # start
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # PySpark's DataFrame debugging records the Python call site of
+        # every DataFrame/Column call in the JVM: about five Py4J round
+        # trips and a stack walk per call, ~60 % of the Py4J traffic of
+        # building a run_validation plan. Off, an analysis error still
+        # names the column and expression, not the Python line
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

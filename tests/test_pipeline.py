@@ -197,6 +197,24 @@ def test_repeated_run_reuses_generated_code(spark, tmp_path):
     assert first > 0 and second <= first // 4, per_run
 
 
+def test_plan_building_skips_call_site_capture(spark, monkeypatch):
+    """Building run_validation's plans records no Python call site: with
+    PySpark's DataFrame debugging on (its default), every DataFrame and
+    Column call walks the stack and makes about five extra Py4J round
+    trips, over half the driver time of building the plans."""
+    import pyspark.errors.utils as pyspark_errors
+
+    sites = []
+    monkeypatch.setattr(
+        pyspark_errors, "_capture_call_site", lambda depth: sites.append(depth) or ""
+    )
+    run_validation(
+        spark, gen_sequences(spark, 200), gen_sources_ref(spark),
+        reference=gen_sequences(spark, 200), cfg=ValidationConfig(exact=False),
+    )
+    assert sites == []
+
+
 def test_pipeline_resume_skips_validated(spark, tmp_path):
     clean = gen_sequences(spark, N)
     cfg = ValidationConfig(
