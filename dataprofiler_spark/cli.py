@@ -72,15 +72,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--format", choices=list(FORMATTERS), default="table")
     p.add_argument("--output-file")
     p.add_argument("--append", action="store_true")
-    p.add_argument("--approx", action="store_true", help="HLL/approx quantiles instead of exact")
     p.add_argument(
-        "--equality-udf-mode",
-        choices=["auto", "full", "prefilter"],
-        default="auto",
-        help="token-equality check: full = Arrow UDF over every joined row "
-        "(bit-exact); prefilter = join on (xxhash64, size) digests, no UDF "
-        "(scale path; equal digests read as equal); auto = full when exact, "
-        "prefilter with --approx",
+        "--approx",
+        action="store_true",
+        help="HLL/approx quantiles instead of exact, and token equality by "
+        "(xxhash64, size) digest join with no UDF (scale path; equal digests "
+        "read as equal) instead of an Arrow UDF over every joined row",
     )
     p.add_argument(
         "--violation-cap",
@@ -162,7 +159,6 @@ def run_config(spark, args) -> int:
                 part_col=part_col,
                 violation_cap=args.violation_cap,
                 exact=not args.approx,
-                equality_udf_mode=args.equality_udf_mode,
                 output_dir=args.output_dir,
                 manifest_dir=(
                     f"{args.manifest_dir}/{name}" if args.manifest_dir else None
@@ -287,7 +283,6 @@ def main(argv: list[str] | None = None) -> int:
             part_col=args.partition_col,
             violation_cap=args.violation_cap,
             exact=not args.approx,
-            equality_udf_mode=args.equality_udf_mode,
             output_dir=args.output_dir,
             manifest_dir=args.manifest_dir,
             snapshot=snapshot,

@@ -54,11 +54,11 @@ def token_range_ok(tokens: Column | str, vocab_size: int = VOCAB_SIZE) -> Column
 # Word tokenization: split on RUNS of whitespace, not the literal single
 # space — real corpora are multi-line, and `F.split(text, " ")` treats
 # "end.\nStart" as ONE token, skewing every word-level statistic
-# (repetition fractions, shingles, DSIR buckets, classifier features,
-# token counts). Java `\s` = [ \t\n\x0B\f\r]; the
-# DuckDB oracle mirror (RE2 `\s` = [ \t\n\f\r]) differs only on \x0B
-# (vertical tab) — documented, not present in any fixture. Neither side
-# matches Unicode spaces (  etc.); normalize upstream if needed.
+# (repetition fractions, shingles, classifier features, token counts).
+# Java `\s` = [ \t\n\x0B\f\r]; the DuckDB oracle mirror (RE2 `\s` =
+# [ \t\n\f\r]) differs only on \x0B (vertical tab) — documented, not
+# present in any fixture. Neither side matches Unicode spaces (  etc.);
+# normalize upstream if needed.
 WORD_SPLIT_PATTERN = r"\s+"
 
 # the DuckDB-side mirror of words() — every oracle that tokenizes MUST
@@ -77,7 +77,7 @@ def words(text: Column | str) -> Column:
     empty string produce [] — callers dividing by size() must nullif-guard
     under ANSI; the DuckDB mirror WORDS_SQL returns NULL on /0, matching).
     The ONE tokenizer for every word-level operator (textstats, dedup
-    shingles, DSIR, packing, classifier) and its oracles."""
+    shingles, classifier) and its oracles."""
     col = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(col, WORD_SPLIT_PATTERN), _nonempty_word)
 

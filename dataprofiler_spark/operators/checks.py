@@ -259,9 +259,11 @@ def _lists_equal_batch(a: pd.Series, b: pd.Series) -> pd.Series:
 
     Hot path is pure numpy on the Arrow buffers: compare per-row lengths
     (value_lengths), then compare the flattened value buffers and reduce
-    per-segment with np.logical_and.reduceat — no per-row Python when all
+    per-segment with a cumulative sum — no per-row Python when all
     lengths match (the overwhelmingly common case). Rows with differing
     lengths are False by definition and excluded before the flat compare.
+    NULL elements compare as SQL's IS NOT DISTINCT FROM does: [1, NULL]
+    equals [1, NULL] and differs from [NULL, 1], as in the prefilter mode.
     """
     aa = pa.array(a, from_pandas=True)
     bb = pa.array(b, from_pandas=True)
@@ -285,9 +287,9 @@ def _lists_equal_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     out[both_null] = True
     if same_len.any():
         idx = np.flatnonzero(same_len)
-        fa = aa.take(pa.array(idx)).flatten().to_numpy(zero_copy_only=False)
-        fb = bb.take(pa.array(idx)).flatten().to_numpy(zero_copy_only=False)
-        eq = fa == fb
+        fa, na = _flat_values(aa.take(pa.array(idx)))
+        fb, nb = _flat_values(bb.take(pa.array(idx)))
+        eq = (na == nb) & (fa == fb)
         lens = la[idx]
         # segment all-true via cumsum: exact for empty segments (0 == 0)
         offsets = np.zeros(len(idx), dtype=np.int64)
@@ -298,11 +300,41 @@ def _lists_equal_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _flat_values(lists: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """The flattened elements of `lists` with NULL elements filled by 0,
+    and the NULL mask. Unfilled, to_numpy turns a NULL into NaN, and
+    NaN != NaN."""
+    flat = lists.flatten()
+    nulls = np.asarray(pa.compute.is_null(flat))
+    values = flat.to_numpy(zero_copy_only=False)
+    if nulls.any():
+        values = np.where(nulls, 0, values)
+    return values, nulls
+
+
 def arrays_equal(a: Column, b: Column) -> Column:
     """Apply the vectorized equality kernel as an Arrow pandas UDF.
     Created lazily — pandas_udf type parsing needs an active session."""
     udf = F.pandas_udf(_lists_equal_batch, "boolean")
     return udf(a, b)
+
+
+def _digest(array_col: str) -> Column:
+    """xxhash64 of the array, and also of its NULL mask where the array may
+    hold a NULL element: xxhash64 skips NULL elements, so [1, NULL] and
+    [NULL, 1] would hash alike. The mask is a `transform`, which Spark
+    evaluates interpreted, element by element (about twice the cost of the
+    plain hash); `array_contains` runs in generated code and is NULL
+    exactly when an array without the probe value holds a NULL, so arrays
+    with no NULL element and no -1 (every valid token array) skip the
+    mask. The choice depends on the array alone, so equal arrays still get
+    equal digests. A NULL array and [] hash alike; their sizes tell them
+    apart."""
+    arr = F.col(array_col)
+    maybe_null = F.coalesce(F.array_contains(arr, F.lit(-1)), F.lit(True))
+    return F.when(
+        maybe_null, F.xxhash64(arr, F.transform(arr, lambda t: t.isNull()))
+    ).otherwise(F.xxhash64(arr))
 
 
 def equality_frame(
@@ -326,19 +358,19 @@ def equality_frame(
                     digests, so the join never moves an array, and no UDF
                     runs: a digest mismatch proves the arrays differ, and
                     the `len=… ref_len=…` detail comes from the sizes.
+                    xxhash64 skips NULL elements, so the digest also hashes
+                    the array's NULL mask: [1, NULL] and [NULL, 1] differ.
                     Unequal arrays with equal digests read as equal: a hash
-                    collision (2^-64 per row), or arrays that differ only
-                    in where their NULL elements sit (xxhash64 skips NULL
-                    elements; token ids are never NULL)."""
+                    collision (2^-64 per row)."""
     name = f"{array_col}_match_reference"
     left = df.filter(F.col(key_col).isNotNull())
     if udf_mode == "prefilter":
         left = left.select(
             key_col, part_col,
-            F.xxhash64(array_col).alias("__h"), F.size(array_col).alias("__len"),
+            _digest(array_col).alias("__h"), F.size(array_col).alias("__len"),
         )
         right = reference.select(
-            key_col, F.xxhash64(array_col).alias("__ref_h"), F.size(array_col).alias("__ref_len")
+            key_col, _digest(array_col).alias("__ref_h"), F.size(array_col).alias("__ref_len")
         )
         # SHUFFLE_HASH: fixed-width digest rows make the build side tiny
         # per partition; a sort-merge join would sort both sides for nothing

@@ -533,8 +533,8 @@ def vocab_rank_drift(
 def hashed_word_bucket(w: Column, n_buckets: int) -> Column:
     """Hashed-feature bucket for a word: first 7 hex chars of md5 → long,
     mod n_buckets. The ONE Python copy of the expression — the hashed
-    classifier, the DSIR model (sampling.py), and both of their DuckDB
-    oracles replay it verbatim, so any change must land here and in the
+    classifier and its DuckDB oracles replay it verbatim, so any change
+    must land here and in the
     `CAST('0x' || substr(md5(word), 1, 7) AS BIGINT) % n` SQL together."""
     return F.conv(F.substring(F.md5(w), 1, 7), 16, 10).cast("long") % n_buckets
 

@@ -34,11 +34,9 @@ class ValidationConfig:
     # violations matter). Sinks should size for cap × partitions × checks.
     violation_cap: int = 1000
     null_rate_threshold: float = 0.0
-    exact: bool = True  # exact metrics in tests; sketches at scale
-    # "auto" resolves to "prefilter" (digest join, no UDF — the scale path)
-    # when exact=False: a 10^12-row config must never silently run the
-    # anti-scaling full-UDF mode. "full"/"prefilter" force a mode.
-    equality_udf_mode: str = "auto"
+    # exact metrics and the full-UDF token equality in tests; sketches and
+    # the digest-join prefilter (no UDF — the scale path) otherwise
+    exact: bool = True
     drift_bucket_width: float = 16.0  # n_tok histogram bucket
     psi_threshold: float = 0.25  # standard major-shift cut
     output_dir: str | None = None
@@ -48,10 +46,6 @@ class ValidationConfig:
     # partition; a snapshot with no per-partition entries is one global
     # token for the whole input
     snapshot: "Snapshot | None" = None
-
-    def __post_init__(self):
-        if self.equality_udf_mode == "auto":
-            self.equality_udf_mode = "full" if self.exact else "prefilter"
 
 
 @dataclass
@@ -144,7 +138,7 @@ def run_validation(
         part_col=cfg.part_col,
         violation_cap=cfg.violation_cap,
         null_rate_threshold=cfg.null_rate_threshold,
-        equality_udf_mode=cfg.equality_udf_mode,
+        equality_udf_mode="full" if cfg.exact else "prefilter",
     )
     verdicts, violations = suite.verdicts, suite.violations
     if persisted:

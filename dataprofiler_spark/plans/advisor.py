@@ -16,7 +16,7 @@ explodes is before running it.
   heuristic.
 
 Deterministic arithmetic (top-k ordered by count desc then key — no
-sampling), so the whole estimator replays bit-exact in SQL for the
+random row sample), so the whole estimator replays bit-exact in SQL for the
 oracle. Cost: one hash aggregate per side (distinct-key-sized) + top-k
 (TakeOrderedAndProject) + broadcast joins of the ≤2k hot keys.
 """

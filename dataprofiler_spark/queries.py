@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.oracle import profile_sql
-from dataprofiler_spark.functions.expressions import words
 from dataprofiler_spark.sources.tables import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -1241,39 +1240,6 @@ def batch_knn_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Deterministic dataset splitting (training-pipeline op): membership is a
-# pure function of the key hash — bit-exact reproducible in SQL
-# --------------------------------------------------------------------------
-
-_SPLIT_SQL = """WITH b AS (
-  SELECT doc_id, lang,
-    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bucket
-  FROM documents),
-s AS (SELECT doc_id, lang,
-  CASE WHEN bucket < 8000 THEN 'train'
-       WHEN bucket < 9000 THEN 'val'
-       WHEN bucket < 10000 THEN 'test' END AS split
-  FROM b)
-SELECT split, lang, COUNT(*) AS docs, CAST(MIN(doc_id) AS BIGINT) AS min_doc_id
-FROM s GROUP BY split, lang"""
-
-
-@register("hash_split_documents", _SPLIT_SQL)
-def hash_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """80/10/10 train/val/test by doc_id content hash, rolled up per
-    (split, lang). The oracle regenerates the identical bucket assignment
-    in SQL — proving split membership is engine-independent (auditable,
-    rerun-stable)."""
-    from dataprofiler_spark.operators.sampling import hash_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = hash_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    return out.groupBy("split", "lang").agg(
-        F.count(F.lit(1)).alias("docs"), F.min("doc_id").alias("min_doc_id")
-    )
-
-
-# --------------------------------------------------------------------------
 # Incremental profiling: stored merge-safe partials combined across three
 # disjoint snapshots must finalize to the direct whole-table profile —
 # appended partitions never force a full rescan (operators/incremental.py)
@@ -1745,24 +1711,6 @@ def corr_lineitem_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "stratified_sample_documents",
-    """SELECT lang, doc_id FROM (
-  SELECT lang, doc_id,
-    ROW_NUMBER() OVER (PARTITION BY lang
-      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-  FROM documents) WHERE rk <= 20""",
-)
-def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic balanced subset: 20 docs per lang by md5-hash rank —
-    rerun-stable, engine-portable (the oracle replays the identical
-    ROW_NUMBER-over-md5 selection)."""
-    from dataprofiler_spark.operators.sampling import stratified_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return stratified_sample(docs, "lang", "doc_id", 20).select("lang", "doc_id")
-
-
-@register(
     "vocab_stats_by_source",
     """WITH w0 AS (SELECT source, unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents),
 w AS (SELECT * FROM w0 WHERE w <> '')
@@ -2025,81 +1973,6 @@ def robust_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date(F.col("ts").cast("timestamp")).cast("string").alias("day"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
     return metric_history_anomalies_robust(daily, ["event_type"], "cnt")
-
-
-@register(
-    "packing_plan_documents",
-    """WITH d AS (
-  SELECT source, doc_id, len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok FROM documents
-), c AS (
-  SELECT source, n_tok,
-    SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-                     ROWS UNBOUNDED PRECEDING) AS cum
-  FROM d
-), p AS (
-  SELECT source, n_tok,
-    CASE WHEN n_tok > 0
-         THEN FLOOR((cum - 1) / 1024) - FLOOR((cum - n_tok) / 1024) + 1
-         ELSE 0 END AS spanned
-  FROM c
-)
-SELECT source, COUNT(*) AS n_docs,
-  CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-  CAST(CEIL(SUM(n_tok) / 1024.0) AS BIGINT) AS n_chunks,
-  CAST(SUM(CASE WHEN spanned > 1 THEN 1 ELSE 0 END) AS BIGINT) AS docs_split,
-  ROUND(SUM(n_tok) * 1.0 / (CEIL(SUM(n_tok) / 1024.0) * 1024), 6) AS mean_fill,
-  CAST(CEIL(SUM(n_tok) / 1024.0) * 1024 - SUM(n_tok) AS BIGINT) AS tail_waste_tokens
-FROM p GROUP BY source""",
-)
-def packing_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-then-chunk packing plan per source at a 1024-token context:
-    chunk counts, boundary-split docs, fill factor, tail waste — the
-    numbers a pretraining loader is sized from. One cumsum window per
-    source + a bounded aggregate."""
-    from dataprofiler_spark.operators.packing import packing_stats
-    from dataprofiler_spark.operators.textstats import token_count
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select("source", "doc_id", token_count("text").alias("n_tok"))
-    return packing_stats(staged, "n_tok", 1024, "doc_id", "source")
-
-
-@register(
-    "mix_sample_documents",
-    """WITH counts AS (
-  SELECT source, COUNT(*) AS n FROM documents GROUP BY source
-), plan AS (
-  SELECT source, n,
-    CASE source WHEN 'src0' THEN 0.3 WHEN 'src1' THEN 0.3 WHEN 'src2' THEN 0.4
-      ELSE 0.0 END AS t
-  FROM counts
-), thresholds AS (
-  SELECT source, ROUND(LEAST(1.0, t * 40.0 / GREATEST(n, 1)) * 10000, 0) AS thr
-  FROM plan
-), kept AS (
-  SELECT d.source, d.doc_id FROM documents d JOIN thresholds USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 < thr
-)
-SELECT source, COUNT(*) AS sampled_docs,
-  CAST(MIN(doc_id) AS BIGINT) AS min_doc_id, CAST(MAX(doc_id) AS BIGINT) AS max_doc_id
-FROM kept GROUP BY source""",
-)
-def mix_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic resampling to a target training mixture (30/30/40
-    over three sources, 40-row budget): per-source sampled counts with
-    min/max ids — the oracle replays the exact hash-threshold membership,
-    so the selected SET (not just its size) is engine-portable."""
-    from dataprofiler_spark.operators.sampling import mix_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    samp = mix_sample(
-        docs, "source", "doc_id", {"src0": 0.3, "src1": 0.3, "src2": 0.4}, 40
-    )
-    return samp.groupBy("source").agg(
-        F.count(F.lit(1)).alias("sampled_docs"),
-        F.min("doc_id").alias("min_doc_id"),
-        F.max("doc_id").alias("max_doc_id"),
-    )
 
 
 # Deterministic snapshot perturbation replayed in BOTH engines (gotcha-19
@@ -2383,60 +2256,6 @@ def tfidf_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return tfidf_keywords(docs, top_k=3)
-
-
-@register(
-    "batch_padding_documents",
-    """WITH d AS (
-  SELECT source, doc_id, len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok FROM documents
-), bkt AS (
-  SELECT source, doc_id, n_tok, FLOOR(n_tok / 50) AS bucket FROM d
-), batched AS (
-  SELECT source, n_tok, bucket,
-    CAST(FLOOR((ROW_NUMBER() OVER (PARTITION BY source, bucket ORDER BY doc_id) - 1) / 8.0) AS BIGINT) AS batch
-  FROM bkt
-), padded AS (
-  SELECT source, n_tok,
-    MAX(n_tok) OVER (PARTITION BY source, bucket, batch) - n_tok AS pad
-  FROM batched
-)
-SELECT source, COUNT(*) AS n_docs,
-  CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-  CAST(SUM(pad) AS BIGINT) AS padded_tokens,
-  ROUND(SUM(pad) * 1.0 / GREATEST(SUM(n_tok) + SUM(pad), 1), 6) AS padding_frac
-FROM padded GROUP BY source""",
-)
-def batch_padding_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Padding efficiency of length-bucketed batching (width 50, batch 8)
-    per source — the loader-config question 'how many tokens does this
-    batching waste'. Deterministic batch assignment replayed in SQL."""
-    from dataprofiler_spark.operators.packing import batch_padding_stats
-    from dataprofiler_spark.operators.textstats import token_count
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select("source", "doc_id", token_count("text").alias("n_tok"))
-    return batch_padding_stats(
-        staged, "n_tok", 8, "doc_id", "source", bucket_width=50
-    )
-
-
-@register(
-    "temperature_mix_documents",
-    """WITH c AS (
-  SELECT source, COUNT(*) AS n_rows FROM documents GROUP BY source
-)
-SELECT source, n_rows,
-  ROUND(POW(n_rows, 0.3) / SUM(POW(n_rows, 0.3)) OVER (), 6) AS target_frac
-FROM c""",
-)
-def temperature_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled (T=0.3) mixture targets per source — the
-    multilingual rebalancing rule p ∝ n^T; one group-sized aggregate +
-    an unpartitioned window over it."""
-    from dataprofiler_spark.operators.sampling import temperature_targets
-
-    docs = load_table(spark, sf_dir, "documents")
-    return temperature_targets(docs, "source", 0.3)
 
 
 @register(
@@ -2907,26 +2726,6 @@ def duplication_weights_documents(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "chunk_overlap_documents",
-    """WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws
-           FROM documents),
-nz AS (SELECT doc_id, ws, len(ws) AS n FROM w WHERE len(ws) > 0),
-st AS (SELECT doc_id, ws, n, unnest(generate_series(0, n - 1, 8)) AS chunk_start FROM nz)
-SELECT doc_id, chunk_start, least(12, n - chunk_start) AS n_tokens,
-       array_to_string(ws[chunk_start + 1 : chunk_start + 12], ' ') AS chunk_text
-FROM st WHERE chunk_start = 0 OR chunk_start + 12 - 8 < n""",
-)
-def chunk_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG-style overlapping chunking (12-word windows, hop 8): pure
-    map-side sequence+slice explode, no shuffle — a 100-TB chunking run
-    is exactly one scan. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.packing import chunk_windows
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_windows(docs, window=12, stride=8)
-
-
-@register(
     "dedup_against_history_documents",
     """WITH hist AS (SELECT DISTINCT md5(substr(text, 1, 20)) AS digest
                  FROM documents WHERE doc_id % 3 = 0),
@@ -3096,56 +2895,6 @@ def pca_embeddings_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "packed_sequences_documents",
-    """WITH tk AS (SELECT doc_id, source,
-         list_transform(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),
-                        w -> CAST('0x' || substr(md5(w), 1, 7) AS BIGINT) % 50257) AS toks
-       FROM documents),
-c AS (SELECT doc_id, source, toks,
-        SUM(len(toks)) OVER (PARTITION BY source ORDER BY doc_id
-                             ROWS UNBOUNDED PRECEDING) - len(toks) AS off
-      FROM tk),
-e AS (SELECT source, off + i - 1 AS pos, tok FROM (
-        SELECT source, off, unnest(toks) AS tok,
-               unnest(generate_series(1, len(toks))) AS i
-        FROM c)),
-g AS (SELECT source, CAST(pos // 64 AS BIGINT) AS chunk_id,
-             COUNT(*) AS n_tokens,
-             array_to_string(list(tok ORDER BY pos), ',') AS tokens_csv
-      FROM e GROUP BY source, pos // 64)
-SELECT source, chunk_id, n_tokens, tokens_csv FROM g""",
-)
-def packed_sequences_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The END PRODUCT of the pipeline: the materialized packed training
-    table — per-source concat-then-chunk streams of 64-token chunks over
-    word-id token arrays (md5 word ids so the oracle replays the whole
-    thing: tokenize → cumsum offsets → token-level explode → chunk
-    regroup → in-chunk order). Token payloads compare as CSV strings
-    (engine-portable array stringification). Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.packing import materialize_packed_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.transform(
-        words("text"),
-        lambda w: F.conv(F.substring(F.md5(w), 1, 7), 16, 10).cast("long") % 50257,
-    )
-    staged = docs.select("doc_id", "source", toks.alias("tokens"))
-    out = materialize_packed_sequences(
-        staged, chunk_tokens=64, group_col="source"
-    )
-    return out.select(
-        "source",
-        "chunk_id",
-        "n_tokens",
-        F.array_join(F.transform("tokens", _tok_str), ",").alias("tokens_csv"),
-    )
-
-
-def _tok_str(t: Column) -> Column:
-    return t.cast("string")
-
-
-@register(
     "pq_topk_tolerance",
     """SELECT COUNT(*) AS n_vecs, TRUE AS self_first, TRUE AS codes_in_range,
        TRUE AS recall_ok
@@ -3218,93 +2967,6 @@ def dedup_history_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     return dedup_against_history_bloom(new, hist, ["prefix"], "doc_id")
 
 
-@register(
-    "token_budget_selection_documents",
-    """WITH t AS (SELECT doc_id,
-        (doc_id * 37 % 101) / 101.0 AS score,
-        len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tok
-      FROM documents),
-c AS (SELECT doc_id,
-        SUM(n_tok) OVER (ORDER BY score DESC, doc_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      FROM t)
-SELECT doc_id, cum <= 100000 AS selected FROM c""",
-)
-def token_budget_selection_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-budget corpus selection ('train on the best B tokens'):
-    flag the maximal (score DESC, key) prefix whose cumulative token count
-    stays ≤ B — computed with score-range bucketing + driver offsets + a
-    per-bucket cumsum window, never the ORDER-BY-score SinglePartition
-    plan the oracle's global window uses. The synthetic score (doc_id·37
-    mod 101)/101 is deliberately heavy-tied (101 distinct values) to
-    exercise the deterministic key tie-break. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.sampling import select_token_budget
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id",
-        ((F.col("doc_id") * 37 % 101) / F.lit(101.0)).alias("score"),
-        F.size(words("text")).alias("n_tok"),
-    )
-    return select_token_budget(staged, "score", "n_tok", 100000).select(
-        "doc_id", "selected"
-    )
-
-
-def _dsir_sql(n_buckets: int = 1 << 12, alpha: float = 1.0, k: int = 100) -> str:
-    two52 = float(1 << 52)
-    return f"""WITH w AS (SELECT doc_id,
-        unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS word
-      FROM documents),
-b AS (SELECT doc_id,
-        CAST('0x' || substr(md5(word), 1, 7) AS BIGINT) % {n_buckets} AS bucket
-      FROM w),
-tc AS (SELECT bucket, COUNT(*) AS cnt_t FROM b WHERE doc_id % 7 = 0 GROUP BY bucket),
-rc AS (SELECT bucket, COUNT(*) AS cnt_r FROM b WHERE doc_id % 7 <> 0 GROUP BY bucket),
-tt AS (SELECT COALESCE(SUM(cnt_t), 0) + {alpha} * {n_buckets} AS den FROM tc),
-rt AS (SELECT COALESCE(SUM(cnt_r), 0) + {alpha} * {n_buckets} AS den FROM rc),
-ratios AS (SELECT COALESCE(tc.bucket, rc.bucket) AS bucket,
-        ln((COALESCE(cnt_t, 0) + {alpha}) / tt.den)
-      - ln((COALESCE(cnt_r, 0) + {alpha}) / rt.den) AS lr
-      FROM tc FULL OUTER JOIN rc ON tc.bucket = rc.bucket
-      CROSS JOIN tt CROSS JOIN rt),
-docw AS (SELECT d.doc_id, ROUND(COALESCE(SUM(ratios.lr), 0), 6) AS log_weight
-      FROM documents d
-      LEFT JOIN b ON b.doc_id = d.doc_id
-      LEFT JOIN ratios ON ratios.bucket = b.bucket
-      WHERE d.doc_id % 7 <> 0
-      GROUP BY d.doc_id),
-g AS (SELECT doc_id, log_weight,
-        ROUND(log_weight + -ln(-ln(
-          (CAST('0x' || substr(md5('dsir' || CAST(doc_id AS VARCHAR)), 1, 13)
-             AS BIGINT) + 0.5) / {two52})), 6) AS gs
-      FROM docw)
-SELECT doc_id, log_weight FROM g ORDER BY gs DESC, doc_id LIMIT {k}"""
-
-
-@register("dsir_selection_documents", _dsir_sql())
-def dsir_selection_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance resampling (Xie et al. 2023): fit hashed
-    bag-of-words models on a target slice (doc_id%7=0) vs the raw rest,
-    score each raw doc with the summed per-bucket log-likelihood ratio,
-    and Gumbel-top-k select 100 docs — sampling-without-replacement from
-    softmax(log weight), noise derived from md5('dsir'||doc_id) so both
-    engines replay it bit-for-bit. Selection compares the 6dp-ROUNDED
-    Gumbel score with a doc_id tie-break (cross-engine float-sum-order
-    safety). Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.sampling import (
-        dsir_log_ratios,
-        dsir_resample,
-        dsir_score,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    target = docs.filter(F.col("doc_id") % 7 == 0)
-    raw = docs.filter(F.col("doc_id") % 7 != 0)
-    model = dsir_log_ratios(target, raw, n_buckets=1 << 12)
-    return dsir_resample(dsir_score(raw, model), 100, salt="dsir")
-
-
 def _threshold_sweep_sql(n_buckets: int = 1 << 18, seed: int = 42) -> str:
     from dataprofiler_spark.operators.dedup import _MERSENNE, _minhash_params
 
@@ -3357,52 +3019,6 @@ def threshold_sweep_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y", F.col("doc_id") % 3 == 0
     )
     return threshold_sweep(scored, "quality_score", "y")
-
-
-_PACKING_SWEEP_SQL = """WITH t AS (
-  SELECT source, doc_id,
-    len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS tok
-  FROM documents),
-c AS (SELECT source, tok,
-    SUM(tok) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-  FROM t),
-g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-    CAST(COALESCE(SUM(tok), 0) AS BIGINT) AS total_tokens,
-    CAST(SUM(CASE WHEN tok > 0 AND (cum - tok) // 64 <> (cum - 1) // 64 THEN 1 ELSE 0 END) AS BIGINT) AS s64,
-    CAST(SUM(CASE WHEN tok > 0 AND (cum - tok) // 256 <> (cum - 1) // 256 THEN 1 ELSE 0 END) AS BIGINT) AS s256,
-    CAST(SUM(CASE WHEN tok > 0 AND (cum - tok) // 1024 <> (cum - 1) // 1024 THEN 1 ELSE 0 END) AS BIGINT) AS s1024
-  FROM c GROUP BY source),
-u AS (
-  SELECT source, n_docs, total_tokens, CAST(64 AS BIGINT) AS chunk_tokens, s64 AS docs_split FROM g
-  UNION ALL
-  SELECT source, n_docs, total_tokens, CAST(256 AS BIGINT), s256 FROM g
-  UNION ALL
-  SELECT source, n_docs, total_tokens, CAST(1024 AS BIGINT), s1024 FROM g)
-SELECT source, chunk_tokens, n_docs, total_tokens,
-  CAST(CEIL(total_tokens * 1.0 / chunk_tokens) AS BIGINT) AS n_chunks,
-  docs_split,
-  ROUND(CASE WHEN total_tokens > 0
-        THEN total_tokens * 1.0 / (CAST(CEIL(total_tokens * 1.0 / chunk_tokens) AS BIGINT) * chunk_tokens) END, 6) AS mean_fill,
-  CAST(CAST(CEIL(total_tokens * 1.0 / chunk_tokens) AS BIGINT) * chunk_tokens - total_tokens AS BIGINT) AS tail_waste_tokens
-FROM u"""
-
-
-@register("packing_sweep_documents", _PACKING_SWEEP_SQL)
-def packing_sweep_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-length calibration sweep: packing_stats at 64/256/1024
-    tokens per chunk in ONE corpus pass — the size-independent stream
-    cumsum is computed once per source, every (size, docs_split) cell is
-    a conditional sum in a single hash aggregate, and the per-size chunk
-    math is pure projection after a stack unpivot (the threshold_sweep
-    pattern applied to packing). Window membership: see _HARVEST_FIRST
-    (gotcha 26)."""
-    from dataprofiler_spark.operators.packing import packing_sweep
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "source", "doc_id", F.size(words("text")).alias("n_tok")
-    )
-    return packing_sweep(staged, "n_tok", [64, 256, 1024], "doc_id", "source")
 
 
 _BIGRAM_LP_SQL = """WITH w AS (
@@ -3560,41 +3176,6 @@ def dup_group_size_histogram_documents(spark: SparkSession, sf_dir: str) -> Data
 
 
 @register(
-    "leakage_safe_split_documents",
-    """WITH k AS (SELECT doc_id, md5(COALESCE(text, '')) AS dg FROM documents),
-b AS (SELECT doc_id, dg,
-             CAST('0x' || substr(md5(dg), 1, 15) AS BIGINT) % 10000 AS bucket
-      FROM k),
-s AS (SELECT doc_id, dg,
-  CASE WHEN bucket < 8000 THEN 'train'
-       WHEN bucket < 9000 THEN 'val'
-       WHEN bucket < 10000 THEN 'test' END AS split
-  FROM b)
-SELECT split, CAST(COUNT(*) AS BIGINT) AS docs,
-       CAST(COUNT(DISTINCT dg) AS BIGINT) AS n_digests
-FROM s GROUP BY split""",
-)
-def leakage_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-keyed 80/10/10 split: membership hashes the md5 CONTENT
-    digest, not the row id, so byte-identical duplicates cannot straddle
-    train/test (the classic eval-inflation leak). Rollup per split with
-    distinct-digest counts; the oracle replays the digest+bucket math
-    bit-exactly. Local-only tail by choice (gotcha 26)."""
-    from dataprofiler_spark.operators.sampling import leakage_safe_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = leakage_safe_split(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1}, content_cols=("text",)
-    )
-    return out.groupBy("split").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.count_distinct(
-            F.md5(F.coalesce(F.col("text"), F.lit("")))
-        ).alias("n_digests"),
-    )
-
-
-@register(
     "unicode_normalize_documents",
     """SELECT doc_id,
        nfc_normalize(text) <> text AS changed,
@@ -3660,7 +3241,8 @@ def fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace-robust tokenizer and the explode_outer sweep touched the
 # word-level and dedup plans; the drift statistics merge baseline and
 # current with one tagged-union aggregate, not a full-outer join), then
-# (3) three late entries with no external row.
+# (3) two late entries with no external row, followed by the head of the
+# tail in registration order.
 # Everything stays in the registry — the local parity suite
 # (tests/test_oracle_parity.py) still checks every registered entry; this
 # list only decides who gets the external harvest.
@@ -3679,18 +3261,13 @@ _NEVER_HARVESTED = [
     "frequent_values_documents",
     "vocab_rank_drift_split",
     "duplication_weights_documents",
-    "chunk_overlap_documents",
     "dedup_against_history_documents",
     "near_dup_history_documents",
     "hashed_classifier_score_documents",
     "pca_embeddings_tolerance",
-    "packed_sequences_documents",
     "pq_topk_tolerance",
     "dedup_history_bloom_documents",
-    "token_budget_selection_documents",
-    "dsir_selection_documents",
     "threshold_sweep_documents",
-    "packing_sweep_documents",
     "bigram_logprob_documents",
     "source_diversity_documents",
     "encoding_quality_documents",
@@ -3716,8 +3293,6 @@ _CHANGED_THIS_ROUND = [
     "simhash_near_dup_documents",
     "ngram_jaccard_pairs_documents",
     "edit_distance_near_pairs",
-    "packing_plan_documents",
-    "batch_padding_documents",
     "corpus_curation_summary",
     "paragraph_dedup_documents",
     "semantic_dedup_embeddings",
@@ -3728,12 +3303,22 @@ _CHANGED_THIS_ROUND = [
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row; fertility_by_source and
-# dup_group_size_histogram_documents stay in the local-only tail
+# (3) late entries with no external row, then the first eight tail entries
+# in registration order: deleting the packing and sampling entries freed
+# eight slots, and the registration-order rule fills them from the head of
+# the tail. fertility_by_source and dup_group_size_histogram_documents stay
+# in the local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
     "ngram_containment_pairs_documents",
-    "leakage_safe_split_documents",
+    "profile_documents",
+    "profile_orders",
+    "profile_lineitem_by_returnflag",
+    "uniqueness_duplicates_orders_custkey",
+    "ri_orphans_orders_customer",
+    "latest_event_per_user",
+    "rollup_events_by_type",
+    "histogram_n_chars",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

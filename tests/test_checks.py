@@ -129,21 +129,23 @@ def test_lists_equal_both_null_passes():
 
 
 def test_null_tokens_same_verdict_both_modes(spark):
-    """A null-vs-null token row must get the SAME verdict from both
-    udf_modes (it passes): previously full mode counted it a violation."""
+    """NULL tokens and NULL token elements must get the SAME verdict from
+    both udf_modes, the one SQL's IS DISTINCT FROM gives: a null-vs-null
+    row passes, and [1, NULL] equals [1, NULL] but not [NULL, 1]."""
     df = spark.createDataFrame(
-        [(1, None, "a"), (2, [1, 2], "a"), (3, None, "a")],
+        [(1, None, "a"), (2, [1, 2], "a"), (3, None, "a"),
+         (4, [1, None], "a"), (5, [None, 1], "a")],
         "doc_id bigint, tokens array<int>, source string",
     )
     ref = spark.createDataFrame(
-        [(1, None), (2, [1, 2]), (3, [9])],
+        [(1, None), (2, [1, 2]), (3, [9]), (4, [1, None]), (5, [1, None])],
         "doc_id bigint, tokens array<int>",
     )
     for mode in ("full", "prefilter"):
         v, _ = verdicts_and_violations(equality_frame(df, ref, udf_mode=mode), "t")
         row = v.collect()[0]
-        assert row.violation_count == 1, mode  # only doc 3 (null vs value)
-        assert row.row_count == 3, mode
+        assert row.violation_count == 2, mode  # doc 3 (null vs value) and doc 5
+        assert row.row_count == 5, mode
 
 
 def test_violation_cap_is_per_check_per_partition(spark):

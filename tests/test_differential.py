@@ -126,7 +126,9 @@ def test_differential_seeded_regression(spark, tmp_path):
 
 # small key / token ranges so duplicates (within and across partitions),
 # NULLs, empty arrays and mismatches against the reference all occur
-ck_tokens = st.one_of(st.none(), st.lists(st.integers(-2, 3), max_size=3))
+ck_tokens = st.one_of(
+    st.none(), st.lists(st.one_of(st.none(), st.integers(-2, 3)), max_size=3)
+)
 ck_rows = st.lists(
     st.tuples(
         st.one_of(st.none(), st.integers(0, 6)),  # doc_id
@@ -192,6 +194,16 @@ def _suite_sql(con, vocab: int, null_rate: float) -> dict:
     ref_rows=[(1, [0, 1]), (1, None), (2, [-2, 0]), (3, []), (5, None), (6, None)],
     null_rate=0.25,
 )
+@example(
+    # NULL token elements: equal where they sit alike, unequal where not,
+    # also beside -1, the prefilter digest's array_contains probe value
+    rows=[
+        (1, "p1", [1, None], 2), (2, "p1", [None, 1], 2), (3, "p1", [1, 2], 2),
+        (4, "p2", [-1, None], 2),
+    ],
+    ref_rows=[(1, [1, None]), (2, [1, None]), (3, [1, 2]), (4, [None, -1])],
+    null_rate=0.0,
+)
 @settings(max_examples=6, deadline=None)
 def test_uniqueness_and_ri_verdicts_match_sql(tmp_path_factory, rows, ref_rows, null_rate):
     """The whole suite (row checks, uniqueness, RI, row_count_gt_0, token
@@ -200,7 +212,8 @@ def test_uniqueness_and_ri_verdicts_match_sql(tmp_path_factory, rows, ref_rows, 
     partition) violation rows == min(violation_count, cap). Uniqueness is
     GLOBAL per key with each duplicated row counted against its own
     partition; NULL keys are never duplicates, NULL foreign keys never
-    orphans, both-NULL token arrays equal."""
+    orphans, both-NULL token arrays equal, NULL token elements compared
+    position by position."""
     from dataprofiler_spark import get_spark
     from dataprofiler_spark.operators.checks import run_sequence_suite
     from dataprofiler_spark.sources.synthetic import VOCAB_SIZE

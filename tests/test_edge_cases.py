@@ -3,7 +3,6 @@ rows, unicode text, empty strings through the core operators — the inputs
 a 100 TB pipeline WILL contain somewhere. No crashes, sane outputs."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
 
@@ -129,14 +128,13 @@ def test_checks_on_empty_input(spark):
 
 def test_round3_ops_on_empty_and_degenerate_inputs(spark):
     """New round-3 operators must not crash or mis-report on empty frames,
-    empty strata, single-category entropy, or an empty benchmark set."""
+    single-category entropy, or an empty benchmark set."""
     from dataprofiler_spark.operators.dedup import (
         connected_components_star,
         contamination_check,
     )
     from dataprofiler_spark.operators.drift import categorical_entropy
     from dataprofiler_spark.operators.growth import daily_count_anomalies
-    from dataprofiler_spark.operators.sampling import stratified_sample
     from dataprofiler_spark.operators.textstats import repetition_stats, vocabulary_stats
 
     empty_docs = spark.createDataFrame([], "doc_id bigint, text string, g string")
@@ -160,10 +158,6 @@ def test_round3_ops_on_empty_and_degenerate_inputs(spark):
     ev = spark.createDataFrame([], "ts timestamp, event_type string")
     assert daily_count_anomalies(ev, "event_type").count() == 0
 
-    # stratified sample of an empty frame / n=0
-    assert stratified_sample(empty_docs, "g", "doc_id", 5).count() == 0
-    assert stratified_sample(docs.withColumn("g", F.lit("a")), "g", "doc_id", 0).count() == 0
-
     # repetition/vocab on empty frames
     assert repetition_stats(empty_docs).count() == 0
     assert vocabulary_stats(empty_docs, group_by=["g"]).count() == 0
@@ -178,29 +172,13 @@ def test_round3_ops_on_empty_and_degenerate_inputs(spark):
 
 def test_round3_ops_edge_cases(spark):
     """Empty / single-row / degenerate inputs for the round-3 additions:
-    packing, mix sampling, KS, JSD, PII."""
+    KS, JSD, PII."""
     from dataprofiler_spark.operators.drift import (
         histogram,
         jsd_by_group,
         ks_statistic,
     )
-    from dataprofiler_spark.operators.packing import pack_chunks, packing_stats
     from dataprofiler_spark.operators.pii import pii_scan, pii_summary
-    from dataprofiler_spark.operators.sampling import mix_plan, mix_sample
-
-    empty = spark.createDataFrame([], "doc_id long, source string, n_tok long")
-    assert pack_chunks(empty, "n_tok", 1024, group_col="source").count() == 0
-    assert packing_stats(empty, "n_tok", 1024, group_col="source").count() == 0
-    one = spark.createDataFrame([(1, "s", 7)], "doc_id long, source string, n_tok long")
-    r = pack_chunks(one, "n_tok", 1024, group_col="source").collect()[0]
-    assert r.chunk_id == 0 and r.n_chunks_spanned == 1
-
-    # mix: empty corpus -> empty plan and sample; zero-budget -> empty
-    e2 = spark.createDataFrame([], "doc_id long, source string")
-    assert mix_plan(e2, "source", {"web": 1.0}, 10).count() == 0
-    assert mix_sample(e2, "source", "doc_id", {"web": 1.0}, 10).count() == 0
-    c = spark.createDataFrame([(1, "web"), (2, "web")], "doc_id long, source string")
-    assert mix_sample(c, "source", "doc_id", {"web": 1.0}, 0).count() == 0
 
     # KS/JSD: empty sides and single-value distributions
     ev = spark.createDataFrame([], "x double, g string")

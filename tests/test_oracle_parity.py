@@ -12,14 +12,13 @@ from dataprofiler_spark.queries import oracle_sql, queries
 from tests.oracle_utils import TESTDATA, compare
 
 # measured-slowest parity cases (multi-stage oracles: recursive CTEs,
-# pairwise replays, full packing replays) — the fast lane skips these
+# pairwise replays) — the fast lane skips these
 HEAVY = {
     "semantic_dedup_embeddings",
     "pq_topk_tolerance",
     "pca_embeddings_tolerance",
     "paragraph_near_dup_pairs_documents",
     "remove_duplicated_spans_documents",
-    "packed_sequences_documents",
     "dedup_clusters_documents",
     "dedup_clusters_string_ids",
     "cluster_survivors_quality",

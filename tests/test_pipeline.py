@@ -266,12 +266,34 @@ def test_pipeline_failed_partitions_not_skipped_on_resume(spark, tmp_path):
     assert not (failed_parts & r2.skipped_partitions)
 
 
-def test_config_approx_implies_prefilter():
-    """ValidationConfig(exact=False) must resolve the 'auto' equality mode
-    to the prefilter scale path (the full-UDF mode anti-scales)."""
-    assert ValidationConfig(exact=False).equality_udf_mode == "prefilter"
-    assert ValidationConfig(exact=True).equality_udf_mode == "full"
-    assert ValidationConfig(exact=False, equality_udf_mode="full").equality_udf_mode == "full"
+def test_config_approx_implies_prefilter(spark):
+    """exact=False must run token equality on the prefilter scale path (the
+    full-UDF mode anti-scales): the Arrow kernel never runs. The default
+    exact=True runs it on the joined rows."""
+    import pandas as pd
+
+    from dataprofiler_spark.operators import checks
+
+    udf_rows = spark.sparkContext.accumulator(0)
+    kernel = checks._lists_equal_batch
+
+    def counting_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
+        out = kernel(a, b)
+        udf_rows.add(len(out))
+        return out
+
+    seqs = gen_sequences(spark, 1_000)
+    checks._lists_equal_batch = counting_kernel
+    try:
+        run_validation(
+            spark, seqs, gen_sources_ref(spark), reference=seqs,
+            cfg=ValidationConfig(exact=False),
+        )
+        assert udf_rows.value == 0
+        run_validation(spark, seqs, gen_sources_ref(spark), reference=seqs)
+        assert udf_rows.value > 0
+    finally:
+        checks._lists_equal_batch = kernel
 
 
 def test_pipeline_drift_gate(spark, tmp_path):

@@ -292,20 +292,6 @@ def test_round3_addition_plan_shapes(spark):
     assert "BroadcastHashJoin" in q  # MAD joins back broadcast, not shuffled
 
 
-def test_packing_mix_ids_plan_shapes(spark):
-    """Packing = one scan + window + agg, no UDF; mix_sample joins its
-    broadcast-sized plan without an extra shuffle."""
-    from dataprofiler_spark.queries import queries
-
-    p = plan_of(queries()["packing_plan_documents"](spark, SF))
-    assert p.count("Scan parquet") == 1
-    assert "EvalPython" not in p
-
-    m = plan_of(queries()["mix_sample_documents"](spark, SF))
-    assert "BroadcastHashJoin" in m
-    assert "EvalPython" not in m
-
-
 def test_file_layout_report(spark, tmp_path):
     """Small-file diagnosis from a metadata-only FS listing: a table
     written as many tiny files trips needs_compaction with a sane
@@ -397,37 +383,12 @@ def test_connected_components_execute_pair_plan_once(spark):
 
 
 def test_dsir_and_threshold_sweep_plan_shapes(spark):
-    """DSIR: ratio table joins BROADCAST into the scoring pass (never a
-    shuffled join on bucket), the resample is TakeOrderedAndProject (no
-    global sort), and nothing routes through a Python UDF. Threshold
-    sweep: the whole grid is ONE hash-aggregate pass over ONE scan —
-    no per-threshold scan, no Expand, no sort-based fallback."""
-    from dataprofiler_spark.operators.sampling import (
-        dsir_log_ratios,
-        dsir_resample,
-        dsir_score,
-    )
+    """Threshold sweep: the whole grid is ONE hash-aggregate pass over ONE
+    scan — no per-threshold scan, no Expand, no sort-based fallback. (The
+    DSIR half of this test went with the sampling module.)"""
     from dataprofiler_spark.operators.textstats import threshold_sweep
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    model = dsir_log_ratios(
-        docs.filter(F.col("doc_id") % 7 == 0),
-        docs.filter(F.col("doc_id") % 7 != 0),
-        n_buckets=1 << 10,
-    )
-    scored = dsir_score(docs.filter(F.col("doc_id") % 7 != 0), model)
-    p = plan_of(scored)
-    assert "BroadcastHashJoin" in p
-    # the only non-broadcast join allowed is the FULL OUTER merge of the
-    # two bucket-bounded count frames inside the ratio table (≤ n_buckets
-    # rows per side; full outer cannot broadcast) — the corpus-sized
-    # words frame itself must never shuffle-join
-    assert p.count("SortMergeJoin") + p.count("ShuffledHashJoin") <= 1
-    assert "EvalPython" not in p
-    sel = plan_of(dsir_resample(scored, 50, salt="s"))
-    assert "TakeOrderedAndProject" in sel
-    assert "Exchange SinglePartition" not in sel
-
     sweep = threshold_sweep(
         docs.select(
             ((F.col("doc_id") % 100) / 100.0).alias("score"),
@@ -488,22 +449,6 @@ def test_drift_by_group_one_aggregate_no_join(spark, tmp_path_factory):
     assert len(scans) == 2, p
     for name in ("base", "cur"):
         assert sum(f"{d / name}]" in line for line in scans) == 1, p
-
-
-def test_packing_sweep_one_exchange_no_single_partition(spark):
-    """packing_sweep: the size-independent cumsum window is the ONLY
-    shuffle (the grid aggregate reuses its group partitioning), no
-    SinglePartition stage with a group column, and the grid unpivots via
-    stack (never a grid x rows explode)."""
-    from dataprofiler_spark.functions.expressions import words
-    from dataprofiler_spark.operators.packing import packing_sweep
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    staged = docs.select("source", "doc_id", F.size(words("text")).alias("n_tok"))
-    p = plan_of(packing_sweep(staged, "n_tok", [64, 256, 1024], "doc_id", "source"))
-    assert "SinglePartition" not in p, p
-    assert p.count("Exchange hashpartitioning") == 1, p
-    assert "stack" in p, p
 
 
 def test_bigram_logprob_join_strategy(spark):
