@@ -1,346 +1,33 @@
-"""Deterministic splitting/sampling: rerun-stable, partition-independent,
-nesting supersets, fraction accuracy."""
+"""Deterministic per-stratum sampling with the skew-safe two-stage rank
+(plans/windows.top_rows_per_group) under a salted md5 order with a key
+tie-break: the balanced-subset pattern the validation path's capped
+samples (violations, duplicate keys) are built on."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from dataprofiler_spark.operators.sampling import (
-    deterministic_sample,
-    hash_bucket,
-    hash_split,
-)
+from dataprofiler_spark.plans.windows import top_rows_per_group
 
 
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-
-
-def test_split_fractions_and_stability(spark, docs):
-    out = hash_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    counts = {r.split: r.cnt for r in out.groupBy("split").agg(F.count("*").alias("cnt")).collect()}
-    n = sum(counts.values())
-    assert set(counts) == {"train", "val", "test"}
-    assert counts["train"] / n == pytest.approx(0.8, abs=0.03)
-    # stability across repartitioning: identical membership
-    a = {(r.doc_id, r.split) for r in out.select("doc_id", "split").collect()}
-    b = {
-        (r.doc_id, r.split)
-        for r in hash_split(docs.repartition(17), "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-        .select("doc_id", "split").collect()
-    }
-    assert a == b
-
-
-def test_sample_supersets_nest(spark, docs):
-    s1 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.01).select("doc_id").collect()}
-    s10 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.10).select("doc_id").collect()}
-    assert s1 <= s10  # smaller fraction is a subset of the larger
-    assert len(s10) == pytest.approx(0.10 * docs.count(), rel=0.25)
-
-
-def test_salt_decorrelates(spark, docs):
-    """Two independent 10% samples (different salts) overlap ~1%, not 10%."""
-    a = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.1, salt="a").select("doc_id").collect()}
-    b = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.1, salt="b").select("doc_id").collect()}
-    n = docs.count()
-    assert len(a & b) / n < 0.03  # ≈ 0.1 * 0.1 = 1% expected
-
-
-def test_split_overflow_rejected(spark, docs):
-    with pytest.raises(ValueError, match="> 1"):
-        hash_split(docs, "doc_id", {"a": 0.9, "b": 0.2})
-    # remainder becomes 'rest'
-    out = hash_split(docs, "doc_id", {"train": 0.5})
-    assert {r.split for r in out.select("split").distinct().collect()} == {"train", "rest"}
-    assert hash_bucket("doc_id") is not None
+def _stratified(df, n, salt=""):
+    h = F.md5(F.concat(F.lit(salt), F.col("k").cast("string")))
+    return {(r.g, r.k) for r in top_rows_per_group(df, ["g"], [h, F.col("k")], n).collect()}
 
 
 def test_stratified_sample_balanced_and_nested(spark):
     """Exactly n per stratum (or the whole stratum when smaller),
-    deterministic across calls, and n=5 ⊆ n=10 with the same salt."""
-    from dataprofiler_spark.operators.sampling import stratified_sample
-
+    deterministic across calls and partitionings, n=5 ⊆ n=10 with the
+    same salt, and a different salt draws a different subset."""
     rows = [(i, "big" if i < 80 else "small") for i in range(84)]
     df = spark.createDataFrame(rows, "k bigint, g string")
-    s10 = stratified_sample(df, "g", "k", 10)
-    got = {r.g: set() for r in s10.collect()}
-    for r in s10.collect():
-        got[r.g].add(r.k)
-    assert len(got["big"]) == 10 and len(got["small"]) == 4  # capped at |stratum|
-    # deterministic + nested supersets
-    s10b = {(r.g, r.k) for r in stratified_sample(df, "g", "k", 10).collect()}
-    assert {(r.g, r.k) for r in s10.collect()} == s10b
-    s5 = {(r.g, r.k) for r in stratified_sample(df, "g", "k", 5).collect()}
-    assert s5 <= s10b
+    s10 = _stratified(df, 10)
+    per = {}
+    for g, k in s10:
+        per.setdefault(g, set()).add(k)
+    assert len(per["big"]) == 10 and len(per["small"]) == 4  # capped at |stratum|
+    # deterministic, also when the map-local pre-trim sees other splits
+    assert _stratified(df, 10) == s10
+    assert _stratified(df.repartition(7), 10) == s10
+    # nested supersets
+    assert _stratified(df, 5) <= s10
     # a different salt draws a different subset
-    salted = {(r.g, r.k) for r in stratified_sample(df, "g", "k", 10, salt="x").collect()}
-    assert salted != s10b
-
-
-def test_mix_plan_rates_and_deficit(spark):
-    from dataprofiler_spark.operators.sampling import mix_plan
-
-    corpus = spark.createDataFrame(
-        [(i, "web" if i % 10 < 8 else "books") for i in range(10000)],
-        "doc_id long, source string",
-    )
-    # books has 2000 rows; asking for 3000 -> rate capped at 1.0, deficit
-    plan = {r.source: r for r in
-            mix_plan(corpus, "source", {"web": 0.5, "books": 0.5}, 6000).collect()}
-    assert plan["web"].rate == 3000 / 8000
-    assert plan["books"].rate == 1.0 and plan["books"].deficit is True
-    assert plan["web"].deficit is False
-
-
-def test_mix_sample_deterministic_and_proportioned(spark):
-    from dataprofiler_spark.operators.sampling import mix_sample
-
-    corpus = spark.createDataFrame(
-        [(i, "web" if i % 10 < 8 else "books") for i in range(20000)],
-        "doc_id long, source string",
-    )
-    t = {"web": 0.5, "books": 0.5}
-    a = mix_sample(corpus, "source", "doc_id", t, 4000)
-    got = {r.source: r.cnt for r in
-           a.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
-    # hash-uniformity: within ~10% of the 2000/2000 target
-    assert abs(got["web"] - 2000) < 200 and abs(got["books"] - 2000) < 200
-    # pure function of key: identical set on rerun
-    b = mix_sample(corpus, "source", "doc_id", t, 4000)
-    assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
-    # nesting: a smaller budget selects a subset of the larger one
-    small = mix_sample(corpus, "source", "doc_id", t, 1000)
-    assert small.subtract(a).count() == 0
-
-
-def test_mix_sample_untargeted_group_dropped(spark):
-    from dataprofiler_spark.operators.sampling import mix_sample
-
-    corpus = spark.createDataFrame(
-        [(1, "web"), (2, "spam")], "doc_id long, source string"
-    )
-    out = mix_sample(corpus, "source", "doc_id", {"web": 1.0}, 10)
-    assert [r.source for r in out.collect()] == ["web"]
-
-
-def test_temperature_targets(spark):
-    """T=1 reproduces natural proportions; T->0 flattens toward uniform;
-    low-resource groups are upweighted at T<1."""
-    import pytest as _pytest
-
-    from dataprofiler_spark.operators.sampling import temperature_targets
-
-    corpus = spark.createDataFrame(
-        [(i, "big" if i < 9000 else "small") for i in range(10000)],
-        "doc_id long, source string",
-    )
-    nat = {r.source: r.target_frac for r in
-           temperature_targets(corpus, "source", 1.0).collect()}
-    assert nat == {"big": 0.9, "small": 0.1}
-    t3 = {r.source: r.target_frac for r in
-          temperature_targets(corpus, "source", 0.3).collect()}
-    assert t3["small"] > 0.1 and t3["big"] < 0.9  # rebalanced
-    assert abs(sum(t3.values()) - 1.0) < 1e-5
-    flat = {r.source: r.target_frac for r in
-            temperature_targets(corpus, "source", 0.01).collect()}
-    assert abs(flat["small"] - 0.5) < 0.02  # near-uniform
-    with _pytest.raises(ValueError):
-        temperature_targets(corpus, "source", 0.0)
-
-
-def test_select_token_budget_exact_vs_reference(spark):
-    """Selection must equal the Python-reference ordered prefix for
-    several budgets, including heavy score ties broken by key, with no
-    single-task global sort in the plan."""
-    import random
-
-    from dataprofiler_spark.operators.sampling import select_token_budget
-
-    random.seed(11)
-    rows = [(i, round(random.random(), 4), random.randint(10, 99)) for i in range(800)]
-    # quantized scores -> many exact ties
-    df = spark.createDataFrame(rows, "doc_id bigint, score double, n_tok bigint")
-    for budget in (0, 5000, 10**7):
-        out = select_token_budget(df, "score", "n_tok", budget, num_buckets=8)
-        got = {r.doc_id: r.selected for r in out.collect()}
-        cum, want = 0, {}
-        for i, s, t in sorted(rows, key=lambda r: (-r[1], r[0])):
-            cum += t
-            want[i] = cum <= budget
-        assert got == want, budget
-    plan = (
-        select_token_budget(df, "score", "n_tok", 5000, num_buckets=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SinglePartition" not in plan
-
-
-def test_select_token_budget_null_and_validation(spark):
-    import pytest as _pytest
-
-    from dataprofiler_spark.operators.sampling import select_token_budget
-
-    df = spark.createDataFrame(
-        [(1, 0.5, 10), (2, None, 10)], "doc_id bigint, score double, n_tok bigint"
-    )
-    with _pytest.raises(ValueError, match="NULL"):
-        select_token_budget(df, "score", "n_tok", 100).collect()
-    with _pytest.raises(ValueError, match="budget"):
-        select_token_budget(df.filter("score is not null"), "score", "n_tok", -1)
-
-
-# ---------------------------------------------------------------------------
-# DSIR importance resampling
-# ---------------------------------------------------------------------------
-
-
-def _naive_dsir(target_texts, raw_texts, n_buckets, alpha=1.0):
-    """Reference DSIR model + scorer in plain Python (hashlib md5)."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    def bucket(w):
-        return int(hashlib.md5(w.encode()).hexdigest()[:7], 16) % n_buckets
-
-    def words(t):
-        return [w for w in t.split(" ") if w != ""]
-
-    tc = Counter(bucket(w) for t in target_texts for w in words(t))
-    rc = Counter(bucket(w) for t in raw_texts for w in words(t))
-    t_den = sum(tc.values()) + alpha * n_buckets
-    r_den = sum(rc.values()) + alpha * n_buckets
-    ratios = {
-        b: math.log((tc.get(b, 0) + alpha) / t_den)
-        - math.log((rc.get(b, 0) + alpha) / r_den)
-        for b in set(tc) | set(rc)
-    }
-    oov = math.log(alpha / t_den) - math.log(alpha / r_den)
-
-    def score(t):
-        return round(sum(ratios.get(bucket(w), oov) for w in words(t)), 6)
-
-    return ratios, oov, score
-
-
-def test_dsir_lockstep_vs_naive(spark):
-    from dataprofiler_spark.operators.sampling import dsir_log_ratios, dsir_score
-
-    target_texts = ["spark shuffle engine", "engine spark  codegen", "shuffle plan"]
-    raw_texts = ["cat dog", "dog  bird spark", "", "fish cat cat", "plan bird"]
-    nb = 64
-    target = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(target_texts)], "doc_id long, text string"
-    )
-    raw = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(raw_texts)], "doc_id long, text string"
-    )
-    model = dsir_log_ratios(target, raw, n_buckets=nb)
-    ratios, oov, score = _naive_dsir(target_texts, raw_texts, nb)
-    assert model.oov_log_ratio == pytest.approx(oov)
-    got = {r.bucket: r.log_ratio for r in model.ratios.collect()}
-    assert set(got) == set(ratios)
-    for b, lr in ratios.items():
-        assert got[b] == pytest.approx(lr)
-    scored = {r.doc_id: r.log_weight for r in dsir_score(raw, model).collect()}
-    assert scored == {i: score(t) for i, t in enumerate(raw_texts)}
-    # the empty doc is present and mixture-neutral
-    assert scored[2] == 0.0
-
-
-def test_dsir_upweights_target_like_docs(spark):
-    from dataprofiler_spark.operators.sampling import (
-        dsir_log_ratios,
-        dsir_resample,
-        dsir_score,
-    )
-
-    rows = [
-        (i, ("spark data engine pipeline " if i % 3 == 0 else "cat dog bird fish ") * 3 + f"tok{i}")
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    target = df.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < 30))
-    raw = df.filter((F.col("doc_id") % 3 != 0) | (F.col("doc_id") >= 30))
-    model = dsir_log_ratios(target, raw, n_buckets=1 << 10)
-    scored = dsir_score(raw, model)
-    sel = dsir_resample(scored, 10, salt="s")
-    picked = sorted(r.doc_id for r in sel.collect())
-    # every selected doc is target-like: the importance gap (≈ +4 vs −53
-    # log-weight) dwarfs Gumbel noise
-    assert picked == [i for i in range(30, 60) if i % 3 == 0]
-    # deterministic across partitionings
-    again = sorted(
-        r.doc_id for r in dsir_resample(scored.repartition(13), 10, salt="s").collect()
-    )
-    assert picked == again
-    # k ≥ rows keeps everything; k=0 keeps nothing
-    assert dsir_resample(scored, 10_000).count() == raw.count()
-    assert dsir_resample(scored, 0).count() == 0
-    with pytest.raises(ValueError):
-        dsir_resample(scored, -1)
-
-
-def test_dsir_empty_target_and_validation(spark):
-    from dataprofiler_spark.operators.sampling import dsir_log_ratios, dsir_score
-
-    raw = spark.createDataFrame(
-        [(1, "cat dog"), (2, "")], "doc_id long, text string"
-    )
-    empty = raw.filter("doc_id < 0")
-    # empty target corpus: every bucket ratio is the uniform-smoothing
-    # log(alpha/(alpha*B)) vs raw — finite, no division by zero
-    model = dsir_log_ratios(empty, raw, n_buckets=16)
-    assert model.target_tokens == 0
-    scores = {r.doc_id: r.log_weight for r in dsir_score(raw, model).collect()}
-    assert scores[2] == 0.0 and scores[1] is not None
-    with pytest.raises(ValueError):
-        dsir_log_ratios(empty, raw, alpha=0.0)
-    with pytest.raises(ValueError):
-        dsir_log_ratios(empty, raw, n_buckets=1)
-
-
-def test_leakage_safe_split_exact_dups_stay_together(spark):
-    """Byte-identical copies (different ids) always land in one split; an
-    id-keyed split provably scatters them on this fixture."""
-    from dataprofiler_spark.operators.sampling import hash_split, leakage_safe_split
-
-    texts = [f"document body number {i % 40}" for i in range(400)]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    out = leakage_safe_split(df, {"train": 0.5, "test": 0.5})
-    per_text = (
-        out.groupBy("text")
-        .agg(F.count_distinct("split").alias("k"))
-        .agg(F.max("k"))
-        .collect()[0][0]
-    )
-    assert per_text == 1  # no text spans two splits
-    naive = hash_split(df, "doc_id", {"train": 0.5, "test": 0.5})
-    leaky = (
-        naive.groupBy("text")
-        .agg(F.count_distinct("split").alias("k"))
-        .filter(F.col("k") > 1)
-        .count()
-    )
-    assert leaky > 0  # the failure mode the operator exists to prevent
-
-
-def test_leakage_safe_split_cluster_mode(spark):
-    """With a near-dup clusters frame, clustered docs key on the cluster
-    label (near-dups stay together even when their text differs);
-    unclustered docs fall back to their own digest."""
-    from dataprofiler_spark.operators.sampling import leakage_safe_split
-
-    df = spark.createDataFrame(
-        [(1, "alpha v1"), (2, "alpha v2"), (3, "beta")],
-        "doc_id long, text string",
-    )
-    clusters = spark.createDataFrame([(1, 1), (2, 1)], "node long, component long")
-    out = {r.doc_id: r.split for r in leakage_safe_split(
-        df, {"train": 0.5, "test": 0.5}, clusters=clusters
-    ).collect()}
-    assert out[1] == out[2]  # same cluster -> same split, text differs
-    assert set(out) == {1, 2, 3}
+    assert _stratified(df, 10, salt="x") != s10
