@@ -305,11 +305,10 @@ def _flat_values(lists: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     and the NULL mask. Unfilled, to_numpy turns a NULL into NaN, and
     NaN != NaN."""
     flat = lists.flatten()
-    nulls = np.asarray(pa.compute.is_null(flat))
-    values = flat.to_numpy(zero_copy_only=False)
-    if nulls.any():
-        values = np.where(nulls, 0, values)
-    return values, nulls
+    return (
+        pa.compute.fill_null(flat, 0).to_numpy(zero_copy_only=False),
+        np.asarray(pa.compute.is_null(flat)),
+    )
 
 
 def arrays_equal(a: Column, b: Column) -> Column:
@@ -320,21 +319,11 @@ def arrays_equal(a: Column, b: Column) -> Column:
 
 
 def _digest(array_col: str) -> Column:
-    """xxhash64 of the array, and also of its NULL mask where the array may
-    hold a NULL element: xxhash64 skips NULL elements, so [1, NULL] and
-    [NULL, 1] would hash alike. The mask is a `transform`, which Spark
-    evaluates interpreted, element by element (about twice the cost of the
-    plain hash); `array_contains` runs in generated code and is NULL
-    exactly when an array without the probe value holds a NULL, so arrays
-    with no NULL element and no -1 (every valid token array) skip the
-    mask. The choice depends on the array alone, so equal arrays still get
-    equal digests. A NULL array and [] hash alike; their sizes tell them
-    apart."""
+    """xxhash64 of the array and of its NULL mask: xxhash64 skips NULL
+    elements, so without the mask [1, NULL] and [NULL, 1] would hash
+    alike. A NULL array and [] hash alike; their sizes tell them apart."""
     arr = F.col(array_col)
-    maybe_null = F.coalesce(F.array_contains(arr, F.lit(-1)), F.lit(True))
-    return F.when(
-        maybe_null, F.xxhash64(arr, F.transform(arr, lambda t: t.isNull()))
-    ).otherwise(F.xxhash64(arr))
+    return F.xxhash64(arr, F.transform(arr, lambda t: t.isNull()))
 
 
 def equality_frame(
