@@ -20,7 +20,12 @@ from pyspark.sql.types import StringType, StructField, StructType
 from dataprofiler_spark.operators.checks import run_sequence_suite
 from dataprofiler_spark.operators.drift import drift_by_group, histogram
 from dataprofiler_spark.operators.profile import ProfileConfig, profile
-from dataprofiler_spark.plans.manifest import Manifest, PartitionRecord, Snapshot
+from dataprofiler_spark.plans.manifest import (
+    NULL_PARTITION,
+    Manifest,
+    PartitionRecord,
+    Snapshot,
+)
 from dataprofiler_spark.sinks import append_rows, sink_filesystem
 
 
@@ -81,7 +86,9 @@ def run_validation(
     pushed into the source read, so it costs nothing (partition pruning
     on a partitioned table). Any other skipped partition (the table
     changed elsewhere since it validated) is still scanned, re-validated
-    and recorded; it is only reported as skipped.
+    and recorded; it is only reported as skipped. Rows whose partition
+    value is NULL are never filtered out; their partition is recorded
+    under `NULL_PARTITION` (`__HIVE_DEFAULT_PARTITION__`).
 
     With `output_dir` set, the run appends to four sinks under it.
     `violations` is a distributed Spark write. `data_profiles`,
@@ -102,8 +109,10 @@ def run_validation(
         skipped = set(records)
         pruned = sorted(p for p, rec in records.items() if rec.snapshot_id == snap.snapshot_id)
         if pruned:
-            df = df.filter(~F.col(cfg.part_col).isin(pruned))
-            sources_ref = sources_ref.filter(~F.col(cfg.part_col).isin(pruned))
+            # `~isin` is NULL on a NULL partition value: keep those rows
+            keep = F.col(cfg.part_col).isNull() | ~F.col(cfg.part_col).isin(pruned)
+            df = df.filter(keep)
+            sources_ref = sources_ref.filter(keep)
 
     # With output_dir set the run issues SEVERAL actions over the same
     # input (the profile collect, the drift collects, the verdict collect
@@ -229,9 +238,8 @@ def run_validation(
         df.unpersist()
     by_part: dict[str, dict] = {}
     for r in collected:
-        d = by_part.setdefault(
-            r.partition_value, {"row_count": 0, "checks": {}, "metrics": {}}
-        )
+        part = NULL_PARTITION if r.partition_value is None else r.partition_value
+        d = by_part.setdefault(part, {"row_count": 0, "checks": {}, "metrics": {}})
         d["checks"][r.check_name] = bool(r.passed)
         if r.row_count is not None:
             d["row_count"] = max(d["row_count"], r.row_count)

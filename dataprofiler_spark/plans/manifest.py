@@ -26,10 +26,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import tempfile
 import time
 from dataclasses import asdict, dataclass, field
+from urllib.parse import quote
+
+# the record key of the NULL partition: the directory name Spark gives a
+# NULL partition value in a hive layout, so `snapshot_from_path` keys that
+# partition's lineage under the same name
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -44,17 +49,21 @@ class PartitionRecord:
     snapshot_id: str = ""  # table snapshot the validation ran against
 
 
-def _safe(name: str) -> str:
-    return re.sub(r"[^A-Za-z0-9_.-]", "_", name)
-
-
 class Manifest:
     def __init__(self, manifest_dir: str):
         self.dir = manifest_dir
         os.makedirs(manifest_dir, exist_ok=True)
 
     def _path(self, partition_value: str) -> str:
-        return os.path.join(self.dir, f"partition={_safe(partition_value)}.json")
+        # percent-encoding is injective, so two partition values never
+        # share a file; a name made only of [A-Za-z0-9_.-] is unchanged.
+        # A name past the 255-byte file-name limit becomes a digest, which
+        # cannot meet an encoded name: quote() writes "%" only before two
+        # hex digits
+        name = quote(partition_value, safe="")
+        if len(f"partition={name}.json") > 255:
+            name = "%~" + hashlib.md5(partition_value.encode()).hexdigest()
+        return os.path.join(self.dir, f"partition={name}.json")
 
     def record(self, rec: PartitionRecord) -> None:
         """Atomic write: temp file in the same dir + rename (POSIX rename
@@ -70,12 +79,17 @@ class Manifest:
                 os.unlink(tmp)
 
     def load(self) -> dict[str, PartitionRecord]:
-        out = {}
+        """One record per partition value. When two files hold the same
+        value (a file left under an older, non-injective name), the
+        latest `recorded_at` wins."""
+        out: dict[str, PartitionRecord] = {}
         for fn in os.listdir(self.dir):
             if fn.startswith("partition=") and fn.endswith(".json"):
                 with open(os.path.join(self.dir, fn)) as f:
-                    d = json.load(f)
-                out[d["partition_value"]] = PartitionRecord(**d)
+                    rec = PartitionRecord(**json.load(f))
+                old = out.get(rec.partition_value)
+                if old is None or rec.recorded_at > old.recorded_at:
+                    out[rec.partition_value] = rec
         return out
 
     def validated_partitions_for(self, snapshot: "Snapshot") -> dict[str, PartitionRecord]:

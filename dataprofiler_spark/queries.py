@@ -218,7 +218,7 @@ def growth_slope_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Dedup / similarity / text-analysis queries (training-data pipeline ops)
+# Dedup / text-analysis queries (training-data pipeline ops)
 # --------------------------------------------------------------------------
 
 _P31 = (1 << 31) - 1
@@ -498,56 +498,6 @@ def dedup_exact_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("text_hash")
         .agg(F.count(F.lit(1)).alias("copies"), F.min("doc_id").alias("min_key"))
         .filter(F.col("copies") > 1)
-    )
-
-
-@register(
-    "knn_cosine_top10",
-    """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-s AS (SELECT e.vec_id,
-  ROUND(list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
-    (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
-     sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))), 6) AS cos_sim
-  FROM embeddings e, q)
-SELECT vec_id, cos_sim FROM s ORDER BY cos_sim DESC, vec_id LIMIT 10""",
-)
-def knn_cosine_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (ANN baseline): all-JVM zip_with/aggregate
-    expression math; global top-k is TakeOrderedAndProject (per-partition
-    heaps — no full sort, no collect)."""
-    from dataprofiler_spark.operators.similarity import brute_force_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    return brute_force_topk(emb.withColumn("embedding", F.col("embedding").cast("array<double>")), qvec, k=10)
-
-
-@register(
-    "embedding_sim_pairs_brute",
-    """SELECT a.vec_id AS key1, b.vec_id AS key2,
-  ROUND(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
-    (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
-     sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))), 6) AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
-    (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
-     sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))) >= 0.5""",
-)
-def embedding_sim_pairs_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs cosine >= 0.5 (exact; the LSH-bucketed variant
-    embedding_near_dup_pairs is the scale path, verified in tests)."""
-    from dataprofiler_spark.operators.similarity import cosine
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    a = emb.select(F.col("vec_id").alias("key1"), F.col("embedding").alias("v1"))
-    b = emb.select(F.col("vec_id").alias("key2"), F.col("embedding").alias("v2"))
-    return (
-        a.join(b, F.col("key1") < F.col("key2"))
-        .withColumn("cos_sim", F.round(cosine(F.col("v1"), F.col("v2")), 6))
-        .filter(F.col("cos_sim") >= 0.5)
-        .select("key1", "key2", "cos_sim")
     )
 
 
@@ -873,73 +823,6 @@ def salted_profile_nchars_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # --------------------------------------------------------------------------
-# ANN scale paths, oracle-backed:
-#  * IVF at nprobe = num_centroids scans every partition ⇒ provably equal to
-#    brute force, so the brute-force SQL is an exact oracle for the whole
-#    build+search machinery (partial-probe recall is pytest-verified).
-#  * embedding-LSH hyperplanes are a deterministic LCG ⇒ reproduced as SQL
-#    literals, so the bucketed candidate join has a bit-exact oracle too.
-# --------------------------------------------------------------------------
-
-@register(
-    "ivf_topk_full_probe",
-    """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-s AS (SELECT e.vec_id,
-  ROUND(list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
-    (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
-     sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))), 6) AS cos_sim
-  FROM embeddings e, q)
-SELECT vec_id, cos_sim FROM s ORDER BY cos_sim DESC, vec_id LIMIT 10""",
-)
-def ivf_topk_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF search probing ALL centroids: exercises the full index build +
-    probe path while being provably identical to brute-force top-k — the
-    oracle that makes the IVF machinery driver-verifiable."""
-    from dataprofiler_spark.operators.similarity import ivf_build, ivf_search
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    assigned, cents = ivf_build(emb, num_centroids=8)
-    return ivf_search(assigned, cents, qvec, k=10, nprobe=8)
-
-
-def _embedding_lsh_sql(dim: int = 64, num_planes: int = 8, threshold: float = 0.5) -> str:
-    """DuckDB oracle for the random-hyperplane LSH near-dup pairs: the
-    hyperplanes come from a seeded LCG (similarity._hyperplane), so they are
-    emitted here as SQL array literals — the bucket bit-strings, candidate
-    join, and exact-cosine verification are then reproduced exactly."""
-    from dataprofiler_spark.operators.similarity import _hyperplane
-
-    bit_exprs = " || ".join(
-        "CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(x) for x in _hyperplane(dim, p))
-        + "]) > 0 THEN '1' ELSE '0' END"
-        for p in range(num_planes)
-    )
-    return f"""WITH b AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v, {bit_exprs} AS bucket FROM embeddings)
-SELECT DISTINCT a.vec_id AS key1, b2.vec_id AS key2,
-  ROUND(list_dot_product(a.v, b2.v) /
-    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b2.v, b2.v))), 6) AS cos_sim
-FROM b a JOIN b b2 USING (bucket)
-WHERE a.vec_id < b2.vec_id
-  AND ROUND(list_dot_product(a.v, b2.v) /
-    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b2.v, b2.v))), 6) >= {threshold}"""
-
-
-@register("embedding_near_dup_lsh", _embedding_lsh_sql())
-def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataprofiler_spark.operators.similarity import embedding_near_dup_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    return embedding_near_dup_pairs(emb, dim=64, threshold=0.5)
-
-
-# --------------------------------------------------------------------------
 # Approximate paths with oracle-with-tolerance entries: the Spark side
 # computes BOTH the sketch answer and the exact answer and emits the
 # tolerance verdict as a boolean column; the oracle states the exact values
@@ -1207,39 +1090,6 @@ def array_profile_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Batch multi-query KNN: broadcast query panel, ONE corpus pass, top-k per
-# query via rank window — per-query loops become one job
-# --------------------------------------------------------------------------
-
-_BATCH_KNN_SQL = """WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id % 97 = 0),
-s AS (
-  SELECT q.query_id, e.vec_id,
-    ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv) /
-      (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
-       sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos_sim
-  FROM embeddings e CROSS JOIN q),
-r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank FROM s)
-SELECT query_id, vec_id, cos_sim, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5"""
-
-
-@register("batch_knn_top5", _BATCH_KNN_SQL)
-def batch_knn_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 neighbors for every query in the vec_id%97 panel, one corpus
-    pass (similarity.batch_topk)."""
-    from dataprofiler_spark.operators.similarity import batch_topk
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qs = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = batch_topk(emb, qs, k=5)
-    return out.select("query_id", "vec_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
-
-
-# --------------------------------------------------------------------------
 # Incremental profiling: stored merge-safe partials combined across three
 # disjoint snapshots must finalize to the direct whole-table profile —
 # appended partitions never force a full rescan (operators/incremental.py)
@@ -1288,46 +1138,6 @@ def incremental_profile_merge_documents(spark: SparkSession, sf_dir: str) -> Dat
         "column_name", "row_count", "not_null_count", "min_value", "max_value",
         "avg_value", "stddev_pop",
         (F.abs(F.col("distinct_est") - exact_dc) <= exact_dc * 0.1 + 1).alias("distinct_ok"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Embedding quantization (training-pipeline storage path): int8 symmetric,
-# checksummed exactly in SQL (q_sum / q_l1 over the quantized ints) plus a
-# dequantized-cosine tolerance bool
-# --------------------------------------------------------------------------
-
-@register(
-    "embedding_quantize_int8",
-    """SELECT vec_id,
-  ROUND(GREATEST(list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) / 127.0, 1e-12), 9) AS scale_r,
-  CAST(list_sum(list_transform(embedding::DOUBLE[], x ->
-    CAST(round(x / GREATEST(list_max(list_transform(embedding::DOUBLE[], y -> abs(y))) / 127.0, 1e-12)) AS BIGINT))) AS BIGINT) AS q_sum,
-  CAST(list_sum(list_transform(embedding::DOUBLE[], x ->
-    abs(CAST(round(x / GREATEST(list_max(list_transform(embedding::DOUBLE[], y -> abs(y))) / 127.0, 1e-12)) AS BIGINT)))) AS BIGINT) AS q_l1,
-  TRUE AS cos_ok
-FROM embeddings""",
-)
-def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8 quantization verified two ways: the quantized ints are pinned
-    EXACTLY by sum and L1 checksums reproduced in SQL; the dequantized
-    vector's cosine against the original must stay within 1e-3 of 1."""
-    from dataprofiler_spark.operators.similarity import (
-        cosine,
-        dequantize_int8,
-        quantize_int8,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = dequantize_int8(quantize_int8(emb))
-    return q.select(
-        "vec_id",
-        F.round("scale", 9).alias("scale_r"),
-        F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),
-        F.aggregate("q", F.lit(0).cast("long"), lambda a, x: a + F.abs(x)).alias("q_l1"),
-        (F.abs(cosine(F.col("deq"), F.col("embedding")) - 1.0) <= 1e-3).alias("cos_ok"),
     )
 
 
@@ -2461,69 +2271,6 @@ def paragraph_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paragraph_dedup(synth, "doc_id")
 
 
-def _semantic_dedup_sql(
-    dim: int = 64, num_clusters: int = 8, threshold: float = 0.9
-) -> str:
-    """DuckDB oracle for SemDeDup: the seeded-LCG centroids are emitted as
-    SQL literals (gotcha 19), assignment is the same argmax with
-    first-min-centroid ties (ROW_NUMBER ORDER BY s DESC, cid), and the
-    within-cluster pairwise drop rule is replayed as a plain self-join —
-    blocking is physical, so the oracle never needs to see it."""
-    from dataprofiler_spark.operators.similarity import _hyperplane
-
-    vals = ", ".join(
-        "(" + str(c) + ", [" + ", ".join(repr(x) for x in _hyperplane(dim, 1000 + c)) + "]::DOUBLE[])"
-        for c in range(num_clusters)
-    )
-    return f"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-e AS (SELECT vec_id, v FROM e0
-      UNION ALL
-      SELECT vec_id + 100000, list_transform(v, x -> x * 2.0) FROM e0 WHERE vec_id % 5 = 0),
-c(cid, cv) AS (VALUES {vals}),
-sims AS (SELECT e.vec_id, c.cid,
-  list_dot_product(e.v, c.cv) /
-    (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) AS s
-  FROM e, c),
-rnk AS (SELECT vec_id, cid,
-        ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn FROM sims),
-assign AS (SELECT r.vec_id, r.cid AS centroid_id, e.v
-           FROM rnk r JOIN e USING (vec_id) WHERE rn = 1),
-pairs AS (SELECT a.vec_id AS k1, b.vec_id AS k2,
-  ROUND(list_dot_product(a.v, b.v) /
-    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cs
-  FROM assign a JOIN assign b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id),
-dropped AS (SELECT DISTINCT k2 AS vec_id FROM pairs WHERE cs >= {threshold})
-SELECT a.vec_id, a.centroid_id, d.vec_id IS NULL AS is_survivor
-FROM assign a LEFT JOIN dropped d USING (vec_id)"""
-
-
-@register("semantic_dedup_embeddings", _semantic_dedup_sql())
-def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the embeddings corpus with planted duplicates: every
-    vec_id % 5 == 0 vector gets a 2x-scaled copy (same direction, cos = 1)
-    at id+100000 — the min-id rule must keep each original and drop its
-    copy, while the natural corpus (max pair cos 0.51) survives intact.
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.similarity import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = emb.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + F.lit(100000)).alias("vec_id"),
-        F.transform("embedding", _times_two).alias("embedding"),
-    )
-    return semantic_dedup(
-        emb.unionByName(planted), dim=64, num_clusters=8, threshold=0.9
-    )
-
-
-def _times_two(x):
-    """Module-level HOF lambda (default-arg capture breaks arity
-    inference — gotcha 4)."""
-    return x * F.lit(2.0)
-
-
 @register(
     "zipf_fit_documents",
     """WITH words AS (
@@ -2824,114 +2571,6 @@ def hashed_classifier_score_documents(spark: SparkSession, sf_dir: str) -> DataF
 
     docs = load_table(spark, sf_dir, "documents")
     return hashed_linear_score(docs)
-
-
-@register(
-    "pca_embeddings_tolerance",
-    """SELECT COUNT(*) AS n_vecs, TRUE AS var_monotone,
-       TRUE AS proj_var_matches, TRUE AS offdiag_ok
-FROM embeddings""",
-)
-def pca_embeddings_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA over the embedding corpus (one distributed moment pass + driver
-    eigh + map-side literal projection), verified tolerance-style
-    (gotcha 19): the projected corpus must have per-component variance
-    equal to the model's eigenvalues (1e-6 rel), descending order, and
-    ~zero cross-component covariance — properties that fail loudly if the
-    moment merge, the eigendecomposition, or the projection drifts.
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.similarity import pca_fit, pca_project
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    k = 8
-    m = pca_fit(emb, k=k)
-    proj = pca_project(emb, m)
-    comp = [F.element_at("pca", i + 1).alias(f"c{i}") for i in range(k)]
-    staged = proj.select(*comp)
-    var_ok = [
-        (
-            F.abs(F.var_pop(f"c{i}") - F.lit(m.explained_variance[i]))
-            <= F.lit(max(m.explained_variance[i] * 1e-6, 1e-9))
-        )
-        for i in range(k)
-    ]
-    off_pairs = [(0, 1), (0, k - 1), (k // 2, k // 2 + 1)]
-    off_ok = [
-        (
-            F.abs(F.covar_pop(f"c{i}", f"c{j}"))
-            <= F.lit(
-                max(
-                    1e-6
-                    * (m.explained_variance[i] * m.explained_variance[j]) ** 0.5,
-                    1e-9,
-                )
-            )
-        )
-        for i, j in off_pairs
-    ]
-    monotone = all(
-        m.explained_variance[i] >= m.explained_variance[i + 1] - 1e-12
-        for i in range(k - 1)
-    )
-    agg = staged.agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        *[v.alias(f"__v{i}") for i, v in enumerate(var_ok)],
-        *[o.alias(f"__o{i}") for i, o in enumerate(off_ok)],
-    )
-    vand = F.lit(True)
-    for i in range(len(var_ok)):
-        vand = vand & F.col(f"__v{i}")
-    oand = F.lit(True)
-    for i in range(len(off_ok)):
-        oand = oand & F.col(f"__o{i}")
-    return agg.select(
-        "n_vecs",
-        F.lit(monotone).alias("var_monotone"),
-        vand.alias("proj_var_matches"),
-        oand.alias("offdiag_ok"),
-    )
-
-
-@register(
-    "pq_topk_tolerance",
-    """SELECT COUNT(*) AS n_vecs, TRUE AS self_first, TRUE AS codes_in_range,
-       TRUE AS recall_ok
-FROM embeddings""",
-)
-def pq_topk_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product quantization (m=8 × 16 codes over dim 64), verified
-    tolerance-style (gotcha 19): querying with corpus vector 0 must rank
-    it first under ADC (its own reconstruction is the minimal table sum,
-    ties broken by id), all codes lie in [0, 16), and ADC recall@10 vs
-    exact cosine ≥ 0.15 (measured 0.30 at sf0.01 — the band holds across
-    sf with margin). Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.similarity import (
-        brute_force_topk,
-        pq_encode,
-        pq_search,
-        pq_train,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    model = pq_train(emb, m=8, num_codes=16, refine_sweeps=1)
-    enc = pq_encode(emb, model)
-    q = [float(x) for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-    pq_top = [r["vec_id"] for r in pq_search(enc, model, q, k=10).collect()]
-    bf_top = [r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()]
-    recall = len(set(pq_top) & set(bf_top)) / 10.0
-    rng = enc.select(F.explode("pq_codes").alias("c")).agg(
-        F.min("c").alias("lo"), F.max("c").alias("hi")
-    )
-    return enc.agg(F.count(F.lit(1)).alias("n_vecs")).crossJoin(rng).select(
-        "n_vecs",
-        F.lit(pq_top[0] == 0).alias("self_first"),
-        ((F.col("lo") >= 0) & (F.col("hi") < 16)).alias("codes_in_range"),
-        F.lit(recall >= 0.15).alias("recall_ok"),
-    )
 
 
 @register(
@@ -3264,8 +2903,6 @@ _NEVER_HARVESTED = [
     "dedup_against_history_documents",
     "near_dup_history_documents",
     "hashed_classifier_score_documents",
-    "pca_embeddings_tolerance",
-    "pq_topk_tolerance",
     "dedup_history_bloom_documents",
     "threshold_sweep_documents",
     "bigram_logprob_documents",
@@ -3295,19 +2932,18 @@ _CHANGED_THIS_ROUND = [
     "edit_distance_near_pairs",
     "corpus_curation_summary",
     "paragraph_dedup_documents",
-    "semantic_dedup_embeddings",
-    "embedding_near_dup_lsh",
     "psi_chi2_nchars_split",
     "ks_nchars_split",
     "jsd_nchars_split",
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row, then the first eight tail entries
-# in registration order: deleting the packing and sampling entries freed
-# eight slots, and the registration-order rule fills them from the head of
-# the tail. fertility_by_source and dup_group_size_histogram_documents stay
-# in the local-only tail
+# (3) late entries with no external row, then the first twelve tail
+# entries in registration order: deleting the packing and sampling entries
+# freed eight slots and deleting the similarity entries four more, and the
+# registration-order rule fills them from the head of the tail.
+# fertility_by_source and dup_group_size_histogram_documents stay in the
+# local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
     "ngram_containment_pairs_documents",
@@ -3319,6 +2955,10 @@ _LATE_NEW = [
     "latest_event_per_user",
     "rollup_events_by_type",
     "histogram_n_chars",
+    "inventory_drift_langs",
+    "growth_slope_events",
+    "dedup_exact_prefix_groups",
+    "fingerprint_documents",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

@@ -30,8 +30,8 @@ def _ensure_driver_jit_flags() -> None:
     product, the 84-conditional-sum threshold sweep, wide profile
     aggregates) can emit a single method past HotSpot's huge-method
     threshold (~8000 bytecodes); the JVM then refuses to JIT it and the
-    hot loop runs in the BYTECODE INTERPRETER — measured 16× on the
-    25 M-pair SemDeDup scoring stage (32.2 s → 2.0 s, see
+    hot loop runs in the BYTECODE INTERPRETER — measured 16× on a
+    25 M-pair, 64-dim cosine scoring stage (32.2 s → 2.0 s, see
     OPTIMIZATION_r06.md). The flag rides JAVA_TOOL_OPTIONS, set only
     when no JVM exists yet, rather than `spark.driver.extraJavaOptions`:
     a builder-set value of that key does reach the driver JVM, but a

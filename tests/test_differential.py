@@ -372,57 +372,6 @@ def test_paragraph_dedup_matches_reference(request, corpus):
         assert got[k] == want, (k, got[k], want)
 
 
-_vec = st.lists(st.integers(-5, 5), min_size=4, max_size=4).filter(
-    lambda v: any(x != 0 for x in v)
-)
-
-
-@given(st.lists(_vec, min_size=2, max_size=10), st.integers(1, 3))
-@settings(max_examples=6, deadline=None)
-def test_semantic_dedup_matches_reference(request, vecs, blocks):
-    """semantic_dedup (argmax assignment + blocked within-cluster pairwise
-    + min-id survivor) vs a pure-Python sweep on random small-int vectors,
-    at several blocks_per_cluster settings."""
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.operators.similarity import (
-        _lcg_centroids,
-        _hyperplane,
-        semantic_dedup,
-    )
-
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = semantic_dedup(
-        df, dim=4, num_clusters=3, threshold=0.9, blocks_per_cluster=blocks
-    )
-    got = {r.vec_id: (r.centroid_id, r.is_survivor) for r in out.collect()}
-
-    cents = [_hyperplane(4, 1000 + c, 42) for c in range(3)]
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def nrm(a):
-        return dot(a, a) ** 0.5
-
-    assign = {}
-    for i, v in rows:
-        sims = [dot(v, c) / (nrm(v) * nrm(c)) for c in cents]
-        assign[i] = sims.index(max(sims))
-    dropped = set()
-    for i, vi in rows:
-        for j, vj in rows:
-            if i < j and assign[i] == assign[j]:
-                cs = round(dot(vi, vj) / (nrm(vi) * nrm(vj)), 6)
-                if cs >= 0.9:
-                    dropped.add(j)
-    for i, _ in rows:
-        assert got[i] == (assign[i], i not in dropped), (i, got[i])
-
-
 @given(
     st.lists(
         st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=0, max_size=6),
@@ -461,48 +410,6 @@ def test_boilerplate_ngrams_match_reference(request, corpus, thr):
         ss = shingles(text)
         want = (len(ss), sum(1 for s in ss if dfreq[s] > thr))
         assert got[k] == want, (k, got[k], want)
-
-
-@given(st.lists(_vec, min_size=2, max_size=12), st.integers(1, 3))
-@settings(max_examples=5, deadline=None)
-def test_semantic_dedup_arrow_matches_expr_random(request, vecs, blocks):
-    """The GEMM pair backend must agree with the expression fold on random
-    small-int vectors (FP: integer-valued doubles dot-product exactly, so
-    rounding-mode differences cannot appear)."""
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.operators.similarity import semantic_dedup
-
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(dim=4, num_clusters=3, threshold=0.9, blocks_per_cluster=blocks)
-    expr = sorted(map(tuple, semantic_dedup(df, **kw).collect()))
-    arrow = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                df, pair_backend="arrow", assign_backend="arrow", **kw
-            ).collect(),
-        )
-    )
-    assert expr == arrow
-
-
-@given(st.lists(_vec, min_size=3, max_size=12), st.integers(1, 4))
-@settings(max_examples=5, deadline=None)
-def test_batch_topk_arrow_matches_expr_random(request, vecs, k):
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.operators.similarity import batch_topk
-
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
-        [(i, v) for i, v in rows[::3]], "query_id long, query_vec array<double>"
-    )
-    expr = sorted(map(tuple, batch_topk(corpus, queries, k=k).collect()))
-    arrow = sorted(
-        map(tuple, batch_topk(corpus, queries, k=k, backend="arrow").collect())
-    )
-    assert expr == arrow
 
 
 @given(

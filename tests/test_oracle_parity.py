@@ -14,9 +14,6 @@ from tests.oracle_utils import TESTDATA, compare
 # measured-slowest parity cases (multi-stage oracles: recursive CTEs,
 # pairwise replays) — the fast lane skips these
 HEAVY = {
-    "semantic_dedup_embeddings",
-    "pq_topk_tolerance",
-    "pca_embeddings_tolerance",
     "paragraph_near_dup_pairs_documents",
     "remove_duplicated_spans_documents",
     "dedup_clusters_documents",
@@ -38,3 +35,9 @@ def test_query_matches_oracle(spark, name):
     df = queries()[name](spark, TESTDATA)
     ok, msg = compare(df, oracle_sql()[name])
     assert ok, f"{name}: {msg}"
+
+
+def test_heavy_names_are_registered_with_an_oracle():
+    """A stale HEAVY name marks nothing, and a renamed heavy entry would
+    silently move into the fast lane: every name must be a parity case."""
+    assert HEAVY <= set(CASES), sorted(HEAVY - set(CASES))

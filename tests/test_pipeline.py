@@ -1,12 +1,20 @@
 """End-to-end pipeline: verdict matrix, sinks, drift gate, and
 checkpoint/resume semantics (SURVEY.md §5 rebuild test plan item 4)."""
 
+import json
+from dataclasses import asdict
+
 import pytest
 from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.drift import histogram
 from dataprofiler_spark.pipeline import ValidationConfig, run_validation
-from dataprofiler_spark.plans.manifest import Manifest, Snapshot
+from dataprofiler_spark.plans.manifest import (
+    NULL_PARTITION,
+    Manifest,
+    PartitionRecord,
+    Snapshot,
+)
 from dataprofiler_spark.sources import gen_sequences, gen_sources_ref
 
 N = 5_000
@@ -264,6 +272,48 @@ def test_pipeline_failed_partitions_not_skipped_on_resume(spark, tmp_path):
     r2 = run_validation(spark, bad, gen_sources_ref(spark), cfg=cfg)
     assert r2.summary["checks_failed"] > 0  # still reported, not skipped
     assert not (failed_parts & r2.skipped_partitions)
+
+
+def test_every_partition_value_has_its_own_manifest_record(spark, tmp_path):
+    """A NULL partition is recorded under NULL_PARTITION and its rows are
+    never pruned; "a b" and "a_b" keep separate record files. When two
+    files hold one partition value, the latest `recorded_at` wins."""
+    parts = ["web", None, "a b", "a_b"]
+    rows = [(f"doc-{i}", [1, 2, 3], 3, parts[i % 4]) for i in range(12)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    ref = spark.createDataFrame(
+        [(p, 1, 10) for p in parts if p is not None],
+        "source string, expected_min_tok int, expected_max_tok int",
+    )
+    cfg = ValidationConfig(
+        manifest_dir=str(tmp_path / "manifest"), snapshot=one_token("snap-N")
+    )
+    run_validation(spark, df, ref, cfg=cfg)
+    m = Manifest(cfg.manifest_dir)
+    recs = m.load()
+    assert set(recs) == {"web", NULL_PARTITION, "a b", "a_b"}
+    assert recs["a_b"].status == "validated"
+    assert recs[NULL_PARTITION].lineage == "snap-N"
+
+    r2 = run_validation(spark, df, ref, cfg=cfg)
+    assert "a_b" in r2.skipped_partitions
+    assert r2.summary["rows_validated"] == 3  # the NULL partition's rows
+
+    # "a b" once wrote "partition=a_b.json": a record left there loses to
+    # a newer one and wins over an older one, whatever the listing order
+    stale = tmp_path / "manifest" / "partition=a_b.json"
+    current = m.load()["a b"].recorded_at
+    for t in (current - 1.0, current + 1.0):
+        rec = PartitionRecord("a b", "failed", "old", 3, recorded_at=t)
+        stale.write_text(json.dumps(asdict(rec)))
+        assert m.load()["a b"].recorded_at == max(t, current)
+
+    # 30 three-byte characters encode to a name past the file-name limit
+    long_value = "日本語" * 10
+    m.record(PartitionRecord(long_value, "validated", "snap-N", 3))
+    assert m.load()[long_value].status == "validated"
 
 
 def test_config_approx_implies_prefilter(spark):
