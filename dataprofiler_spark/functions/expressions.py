@@ -77,7 +77,7 @@ def words(text: Column | str) -> Column:
     empty string produce [] — callers dividing by size() must nullif-guard
     under ANSI; the DuckDB mirror WORDS_SQL returns NULL on /0, matching).
     The ONE tokenizer for every word-level operator (textstats, dedup
-    shingles, classifier) and its oracles."""
+    shingles) and its oracles."""
     col = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(col, WORD_SPLIT_PATTERN), _nonempty_word)
 

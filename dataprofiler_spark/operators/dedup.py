@@ -565,8 +565,7 @@ def _token_long_hash(w: Column) -> Column:
 
 #: Edge-count bound for the driver union-find shortcut in the
 #: connected-components operators. 500k edges collect to ~10-30 MB —
-#: aggregate-bounded by the same standard as the vocab/centroid collects
-#: (CLAUDE.md anti-pattern list); above it the distributed loop runs.
+#: a bounded driver collect; above it the distributed loop runs.
 CC_DRIVER_EDGE_THRESHOLD = 500_000
 
 
@@ -1183,8 +1182,7 @@ def remove_duplicated_spans(
     shingle_k: int = 3,
     max_span_doc_freq: int = 2,
 ) -> DataFrame:
-    """C4-style duplicated-span REMOVAL (the acting counterpart of
-    textstats.boilerplate_ngram_stats): every k-word span occurring in
+    """C4-style duplicated-span REMOVAL: every k-word span occurring in
     more than `max_span_doc_freq` documents is boilerplate; all word
     positions covered by ANY boilerplate span are dropped (overlapping
     spans merge naturally through position coverage) and the document is
@@ -1616,8 +1614,8 @@ def cluster_survivors(
     dedup_clusters' arbitrary min-key member. This is how production
     curation actually dedups — keep the longest / highest-classifier-
     score / most-recent copy, drop the mirrors — the score being
-    whatever quality_score / hashed_linear_score / bigram fluency the
-    pipeline already computed.
+    whatever quality_score (or other ranking column) the pipeline
+    already computed.
 
     `assignments` is a (node, component) frame (dedup_clusters /
     connected-components output); `scores` maps key_col → priority_col

@@ -29,7 +29,7 @@ import os
 import tempfile
 import time
 from dataclasses import asdict, dataclass, field
-from urllib.parse import quote
+from urllib.parse import quote, unquote
 
 # the record key of the NULL partition: the directory name Spark gives a
 # NULL partition value in a hive layout, so `snapshot_from_path` keys that
@@ -132,9 +132,13 @@ class Snapshot:
 def snapshot_from_path(path: str, part_prefix: str | None = None) -> Snapshot:
     """Build a Snapshot from a hive-layout directory: each
     `<col>=<value>` subdirectory is a partition whose lineage token
-    fingerprints ITS files only. `part_prefix` (e.g. "source") restricts
-    to that partition column's dirs; files outside any partition dir (or
-    a single-file path) fingerprint under the "" partition.
+    fingerprints ITS files only. The token is keyed by the DECODED value:
+    Spark percent-escapes special characters in the directory name
+    (`a:b` is written as `source=a%3Ab`), and `unquote` inverts that, so
+    the key is the value `run_validation` looks up. `part_prefix` (e.g.
+    "source") restricts to that partition column's dirs; files outside
+    any partition dir (or a single-file path) fingerprint under the ""
+    partition.
 
     LAYOUT-SENSITIVE by design: the token is a file fingerprint, so a
     compaction (same rows rewritten into fewer files) flips it and forces
@@ -151,7 +155,7 @@ def snapshot_from_path(path: str, part_prefix: str | None = None) -> Snapshot:
             if os.path.isdir(full) and "=" in name:
                 col, _, val = name.partition("=")
                 if part_prefix is None or col == part_prefix:
-                    part_lineage[val] = input_fingerprint(full)
+                    part_lineage[unquote(val)] = input_fingerprint(full)
                     continue
             loose.append(name)
     elif os.path.exists(path):

@@ -474,7 +474,7 @@ def ngram_containment_pairs_documents(spark: SparkSession, sf_dir: str) -> DataF
     """Asymmetric (Broder containment) near-dup pairs — supersets and
     partial mirrors that Jaccard under-scores. Shares the capped
     pair-count skeleton with the Jaccard entry; only the projection and
-    threshold differ. Local-only tail by choice (gotcha 26)."""
+    threshold differ. Window membership: see _HARVEST_FIRST (gotcha 26)."""
     from dataprofiler_spark.operators.dedup import ngram_containment_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1372,37 +1372,11 @@ def event_value_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # --------------------------------------------------------------------------
-# Round-3 additions: repetition quality, contamination, entropy, volume
+# Round-3 additions: contamination, entropy, volume
 # anomalies, JSON extraction, correlation matrix — all cheap queries
 # (registered at the end; the heavy oracles sit early in the registry).
 # --------------------------------------------------------------------------
-
-
-@register(
-    "repetition_quality_documents",
-    """WITH w AS (SELECT doc_id,
-        list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '') AS ws FROM documents),
-b AS (SELECT doc_id, ws,
-        CASE WHEN len(ws) >= 2 THEN list_transform(
-          generate_series(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i + 1])
-        ELSE [] END AS bg FROM w)
-SELECT doc_id,
-  ROUND(CASE WHEN len(ws) > 0
-    THEN 1.0 - len(list_distinct(ws)) * 1.0 / len(ws) ELSE 0.0 END, 6) AS dup_word_frac,
-  ROUND(CASE WHEN len(bg) > 0
-    THEN 1.0 - len(list_distinct(bg)) * 1.0 / len(bg) ELSE 0.0 END, 6) AS dup_bigram_frac
-FROM b""",
-)
-def repetition_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-document repetition fractions (Gopher-style quality rule):
-    duplicate-word and duplicate-bigram fractions, expression-only."""
-    from dataprofiler_spark.operators.textstats import repetition_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    return repetition_stats(docs).select("doc_id", "dup_word_frac", "dup_bigram_frac")
 
 
 def _contamination_sql(shingle_k: int = 5, mod: int = 41) -> str:
@@ -1518,23 +1492,6 @@ def corr_lineitem_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return numeric_correlations(
         li, ["l_quantity", "l_extendedprice", "l_discount"], group_by=["l_returnflag"]
     )
-
-
-@register(
-    "vocab_stats_by_source",
-    """WITH w0 AS (SELECT source, unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents),
-w AS (SELECT * FROM w0 WHERE w <> '')
-SELECT source, COUNT(*) AS total_words, COUNT(DISTINCT w) AS vocab_size,
-  ROUND(COUNT(DISTINCT w) * 1.0 / COUNT(*), 6) AS type_token_ratio
-FROM w GROUP BY source""",
-)
-def vocab_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source vocabulary size + type-token ratio — the corpus-diversity
-    metric a training mix is balanced on."""
-    from dataprofiler_spark.operators.textstats import vocabulary_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    return vocabulary_stats(docs, group_by=["source"])
 
 
 @register(
@@ -1965,38 +1922,6 @@ def cdc_apply_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "unigram_logprob_documents",
-    """WITH vocab AS (
-  SELECT w, COUNT(*) AS cnt FROM (
-    SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents)
-  WHERE w <> '' GROUP BY w
-), t AS (
-  SELECT SUM(cnt) AS n, COUNT(*) AS v FROM vocab
-), words AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents)
-  WHERE w <> ''
-), s AS (
-  SELECT doc_id,
-    LN((COALESCE(cnt, 0) + 0.5) / (n + 0.5 * (v + 1))) AS lp
-  FROM words LEFT JOIN vocab USING (w) CROSS JOIN t
-)
-SELECT doc_id, ROUND(AVG(lp), 6) AS mean_logprob,
-  ROUND(EXP(-AVG(lp)), 4) AS perplexity,
-  COUNT(*) AS n_words
-FROM s GROUP BY doc_id""",
-)
-def unigram_logprob_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style fluency score: per-doc mean unigram log-probability +
-    perplexity against the corpus's own unigram LM (α=0.5 smoothing,
-    OOV-safe). Broadcast vocab join, one explode pass."""
-    from dataprofiler_spark.operators.textstats import unigram_logprob
-
-    docs = load_table(spark, sf_dir, "documents")
-    return unigram_logprob(docs)
-
-
-@register(
     "join_estimate_events_selfjoin",
     """WITH ca AS (
   SELECT user_id AS k, COUNT(*) AS ca FROM events
@@ -2036,36 +1961,6 @@ def join_estimate_events_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame
 
     events = load_table(spark, sf_dir, "events")
     return join_size_estimate(events, events, "user_id", top_k=100)
-
-
-@register(
-    "tfidf_keywords_documents",
-    """WITH words AS (
-  SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents
-), wf AS (
-  SELECT doc_id, w, COUNT(*) AS tf FROM words WHERE w <> '' GROUP BY doc_id, w
-), dfq AS (
-  SELECT w, COUNT(*) AS df FROM wf GROUP BY w
-), n AS (
-  SELECT COUNT(*) AS n FROM documents
-), s AS (
-  SELECT doc_id, w, ROUND(tf * (LN((n + 1.0) / (df + 1)) + 1), 6) AS tfidf
-  FROM wf JOIN dfq USING (w) CROSS JOIN n
-), r AS (
-  SELECT doc_id, w, tfidf,
-    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, w) AS rank
-  FROM s
-)
-SELECT doc_id, CAST(rank AS INT) AS rank, w AS keyword, tfidf
-FROM r WHERE rank <= 3""",
-)
-def tfidf_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-3 TF-IDF keywords (smoothed idf, rounded-then-ranked
-    with word tie-break so both engines rank identically)."""
-    from dataprofiler_spark.operators.textstats import tfidf_keywords
-
-    docs = load_table(spark, sf_dir, "documents")
-    return tfidf_keywords(docs, top_k=3)
 
 
 @register(
@@ -2139,91 +2034,6 @@ def seasonal_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCRIPT_PLANT_SQL = """COALESCE(text, '') || CASE
-  WHEN doc_id % 5 = 0 THEN ' 日本語テキスト'
-  WHEN doc_id % 5 = 1 THEN ' привет мир'
-  WHEN doc_id % 5 = 2 THEN ' مرحبا بالعالم'
-  WHEN doc_id % 5 = 3 THEN ' ひらがなのぶん'
-  ELSE '' END"""
-
-
-@register(
-    "script_profile_documents",
-    """WITH planted AS (
-  SELECT doc_id, {plant} AS t FROM documents
-), scanned AS (
-  SELECT doc_id,
-    length(regexp_extract_all(t, '\\p{{Latin}}')) AS latin,
-    length(regexp_extract_all(t, '\\p{{Han}}')) AS han,
-    length(regexp_extract_all(t, '\\p{{Hiragana}}')) AS hiragana,
-    length(regexp_extract_all(t, '\\p{{Katakana}}')) AS katakana,
-    length(regexp_extract_all(t, '\\p{{Cyrillic}}')) AS cyrillic,
-    length(regexp_extract_all(t, '\\p{{Arabic}}')) AS arabic
-  FROM planted
-), dom AS (
-  SELECT doc_id, latin, han, hiragana, katakana, cyrillic, arabic,
-    latin + han + hiragana + katakana + cyrillic + arabic AS tot,
-    list_max([
-      struct_pack(c := latin, s := 'latin'),
-      struct_pack(c := han, s := 'han'),
-      struct_pack(c := hiragana, s := 'hiragana'),
-      struct_pack(c := katakana, s := 'katakana'),
-      struct_pack(c := cyrillic, s := 'cyrillic'),
-      struct_pack(c := arabic, s := 'arabic')]).s AS d
-  FROM scanned
-)
-SELECT CASE WHEN tot > 0 THEN d END AS dominant_script,
-  COUNT(*) AS n_docs,
-  CAST(SUM(han) AS BIGINT) AS total_han,
-  CAST(SUM(cyrillic) AS BIGINT) AS total_cyrillic,
-  CAST(SUM(arabic) AS BIGINT) AS total_arabic,
-  CAST(SUM(hiragana) AS BIGINT) AS total_hiragana,
-  ROUND(AVG((tot - latin) * 1.0 / CASE WHEN tot > 0 THEN tot END), 6)
-    AS avg_nonlatin_frac
-FROM dom GROUP BY 1""".format(plant=_SCRIPT_PLANT_SQL),
-)
-def script_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode-script composition over deterministically planted
-    multilingual suffixes (the corpus is ASCII word-salad; both engines
-    replay the same doc_id→script plant): per-dominant-script doc counts
-    + script char totals + mean non-latin fraction. Java \\p{IsX} and
-    RE2 \\p{X} implement the same Unicode Script property — the
-    portability that makes this oracle possible."""
-    from dataprofiler_spark.operators.textstats import script_profile
-
-    docs = load_table(spark, sf_dir, "documents")
-    suffix = (
-        F.when(F.col("doc_id") % 5 == 0, F.lit(" 日本語テキスト"))
-        .when(F.col("doc_id") % 5 == 1, F.lit(" привет мир"))
-        .when(F.col("doc_id") % 5 == 2, F.lit(" مرحبا بالعالم"))
-        .when(F.col("doc_id") % 5 == 3, F.lit(" ひらがなのぶん"))
-        .otherwise(F.lit(""))
-    )
-    planted = docs.select(
-        "doc_id", F.concat(F.coalesce(F.col("text"), F.lit("")), suffix).alias("text")
-    )
-    from dataprofiler_spark.operators.textstats import SCRIPTS
-
-    prof = script_profile(planted, "text", key_cols=["doc_id"])
-    # average the EXACT per-doc fraction recomputed from char counts —
-    # averaging the operator's 6dp-rounded nonlatin_frac double-rounds
-    # and can disagree with the oracle's round(avg(exact)) in the 6th
-    # decimal near a rounding boundary
-    tot = None
-    for name, _, _ in SCRIPTS:
-        col = F.col(f"{name}_chars")
-        tot = col if tot is None else (tot + col)
-    exact = F.when(tot > 0, (tot - F.col("latin_chars")) / tot)
-    return prof.withColumn("__frac", exact).groupBy("dominant_script").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("han_chars").alias("total_han"),
-        F.sum("cyrillic_chars").alias("total_cyrillic"),
-        F.sum("arabic_chars").alias("total_arabic"),
-        F.sum("hiragana_chars").alias("total_hiragana"),
-        F.round(F.avg("__frac"), 6).alias("avg_nonlatin_frac"),
-    )
-
-
 @register(
     "paragraph_dedup_documents",
     """WITH synth AS (
@@ -2269,31 +2079,6 @@ def paragraph_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.concat_ws("\n", "text", "text2").alias("text"))
     )
     return paragraph_dedup(synth, "doc_id")
-
-
-@register(
-    "zipf_fit_documents",
-    """WITH words AS (
-  SELECT w FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents)
-  WHERE w <> ''),
-counts AS (SELECT w, COUNT(*) AS cnt FROM words GROUP BY w),
-top AS (SELECT w, cnt FROM counts ORDER BY cnt DESC, w LIMIT 1000),
-xy AS (SELECT ln(ROW_NUMBER() OVER (ORDER BY cnt DESC, w)) AS x,
-              ln(cnt) AS y FROM top),
-a AS (SELECT COUNT(*) AS n_ranks, covar_pop(x, y) AS cov, var_pop(x) AS vx,
-             var_pop(y) AS vy, avg(x) AS mx, avg(y) AS my FROM xy)
-SELECT n_ranks, ROUND(cov / NULLIF(vx, 0), 6) AS slope,
-       ROUND(my - (cov / NULLIF(vx, 0)) * mx, 6) AS intercept,
-       ROUND(cov * cov / NULLIF(vx * vy, 0), 6) AS r2
-FROM a""",
-)
-def zipf_fit_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law fit over the documents corpus word-frequency head — the
-    corpus-quality diagnostic (slope ≈ -1 on natural text). Window membership: see
-    _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import zipf_fit
-
-    return zipf_fit(load_table(spark, sf_dir, "documents"))
 
 
 _PARA_LSH_PREFIX = """synth AS (
@@ -2392,68 +2177,6 @@ def frequent_values_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "vocab_rank_drift_split",
-    """WITH wa AS (SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents WHERE doc_id % 2 = 0),
-ca AS (SELECT w, COUNT(*) AS cnt FROM wa WHERE w <> '' GROUP BY w),
-ta AS (SELECT w, ROW_NUMBER() OVER (ORDER BY cnt DESC, w) AS rank_a
-       FROM (SELECT w, cnt FROM ca ORDER BY cnt DESC, w LIMIT 1000)),
-wb AS (SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents WHERE doc_id % 2 = 1),
-cb AS (SELECT w, COUNT(*) AS cnt FROM wb WHERE w <> '' GROUP BY w),
-tb AS (SELECT w, ROW_NUMBER() OVER (ORDER BY cnt DESC, w) AS rank_b
-       FROM (SELECT w, cnt FROM cb ORDER BY cnt DESC, w LIMIT 1000)),
-j AS (SELECT rank_a, rank_b FROM ta FULL JOIN tb USING (w)),
-a AS (SELECT COUNT(rank_a) AS n_a, COUNT(rank_b) AS n_b,
-             COUNT(CASE WHEN rank_a IS NOT NULL AND rank_b IS NOT NULL THEN 1 END) AS n_shared,
-             corr(rank_a, rank_b) AS rho
-      FROM j)
-SELECT n_a, n_b, n_shared,
-       ROUND(n_shared * 1.0 / NULLIF(n_a + n_b - n_shared, 0), 6) AS overlap_jaccard,
-       ROUND(rho, 6) AS rank_corr
-FROM a""",
-)
-def vocab_rank_drift_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary rank drift between the even/odd doc_id halves of the
-    corpus: top-1000 vocab overlap + Pearson of shared words' own ranks
-    (order-based token-frequency drift next to the mass-based PSI).
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import vocab_rank_drift
-
-    docs = load_table(spark, sf_dir, "documents")
-    return vocab_rank_drift(
-        docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)
-    )
-
-
-@register(
-    "boilerplate_ngrams_documents",
-    """WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws
-           FROM documents),
-sh AS (SELECT doc_id, CASE WHEN len(ws) >= 3 THEN list_distinct(list_transform(
-         generate_series(1, len(ws) - 2), i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]))
-       ELSE [array_to_string(ws, ' ')] END AS ss FROM w),
-ex AS (SELECT doc_id, unnest(ss) AS s FROM sh),
-dfreq AS (SELECT s, COUNT(*) AS df_ FROM ex GROUP BY s),
-per_doc AS (SELECT doc_id, COUNT(*) AS n_shingles,
-                   SUM(CASE WHEN df_ > 2 THEN 1 ELSE 0 END) AS n_boilerplate
-            FROM ex JOIN dfreq USING (s) GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(COALESCE(p.n_shingles, 0) AS BIGINT) AS n_shingles,
-       CAST(COALESCE(p.n_boilerplate, 0) AS BIGINT) AS n_boilerplate,
-       ROUND(p.n_boilerplate * 1.0 / NULLIF(p.n_shingles, 0), 6) AS boilerplate_frac
-FROM documents d LEFT JOIN per_doc p USING (doc_id)""",
-)
-def boilerplate_ngrams_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document corpus-level boilerplate exposure (fraction of the
-    doc's distinct 3-gram shingles seen in > 2 documents). The engine
-    decides on xxhash64 shingle digests; the oracle replays on shingle
-    TEXT — same answer, digests never shuffle as text at scale. Window membership: see
-    _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
-
-    return boilerplate_ngram_stats(load_table(spark, sf_dir, "documents"))
-
-
-@register(
     "duplication_weights_documents",
     """SELECT doc_id,
        ROUND(1.0 / COUNT(*) OVER (PARTITION BY md5(substr(text, 1, 20))), 6) AS weight
@@ -2542,37 +2265,6 @@ def near_dup_history_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hashed_linear_score_sql(n_buckets: int = 1 << 18, seed: int = 42) -> str:
-    from dataprofiler_spark.operators.dedup import _MERSENNE, _minhash_params
-
-    a, b = _minhash_params(1, seed)[0]
-    return f"""WITH w AS (SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS word
-       FROM documents),
-wt AS (SELECT doc_id,
-         ((CAST('0x' || substr(md5(word), 1, 7) AS BIGINT) % {n_buckets}) * {a} + {b})
-           % {_MERSENNE} / ({_MERSENNE} / 2.0) - 1.0 AS wt
-       FROM w),
-m AS (SELECT doc_id, AVG(wt) AS m FROM wt GROUP BY doc_id)
-SELECT d.doc_id,
-       CASE WHEN m.m IS NULL THEN NULL
-            ELSE ROUND(1.0 / (1.0 + exp(-m.m)), 6) END AS quality_score
-FROM documents d LEFT JOIN m USING (doc_id)"""
-
-
-@register("hashed_classifier_score_documents", _hashed_linear_score_sql())
-def hashed_classifier_score_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filtering (fastText architecture): linear
-    classifier over hashed unigram features with seeded-LCG demo weights —
-    the oracle replays tokenize → md5 bucket → LCG weight → mean → sigmoid
-    end to end, verifying the exact feature plumbing a trained weight
-    table would ride on. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import hashed_linear_score
-
-    docs = load_table(spark, sf_dir, "documents")
-    return hashed_linear_score(docs)
-
-
 @register(
     "dedup_history_bloom_documents",
     """WITH hist AS (SELECT DISTINCT md5(substr(text, 1, 20)) AS digest
@@ -2606,99 +2298,6 @@ def dedup_history_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     return dedup_against_history_bloom(new, hist, ["prefix"], "doc_id")
 
 
-def _threshold_sweep_sql(n_buckets: int = 1 << 18, seed: int = 42) -> str:
-    from dataprofiler_spark.operators.dedup import _MERSENNE, _minhash_params
-
-    a, b = _minhash_params(1, seed)[0]
-    grid = ", ".join(str(round(i / 20, 2)) for i in range(21))
-    return f"""WITH w AS (SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS word
-       FROM documents),
-wt AS (SELECT doc_id,
-         ((CAST('0x' || substr(md5(word), 1, 7) AS BIGINT) % {n_buckets}) * {a} + {b})
-           % {_MERSENNE} / ({_MERSENNE} / 2.0) - 1.0 AS wt
-       FROM w),
-m AS (SELECT doc_id, AVG(wt) AS m FROM wt GROUP BY doc_id),
-s AS (SELECT d.doc_id,
-        CASE WHEN m.m IS NULL THEN NULL
-             ELSE ROUND(1.0 / (1.0 + exp(-m.m)), 6) END AS score,
-        (d.doc_id % 3 = 0) AS y
-      FROM documents d LEFT JOIN m USING (doc_id)),
-f AS (SELECT * FROM s WHERE score IS NOT NULL),
-g AS (SELECT unnest([{grid}]) AS threshold),
-c AS (SELECT g.threshold,
-        CAST(COALESCE(SUM(CASE WHEN f.score >= g.threshold AND f.y THEN 1 ELSE 0 END), 0) AS BIGINT) AS tp,
-        CAST(COALESCE(SUM(CASE WHEN f.score >= g.threshold AND NOT f.y THEN 1 ELSE 0 END), 0) AS BIGINT) AS fp,
-        CAST(COALESCE(SUM(CASE WHEN f.score < g.threshold AND f.y THEN 1 ELSE 0 END), 0) AS BIGINT) AS fn,
-        CAST(COALESCE(SUM(CASE WHEN f.score < g.threshold AND NOT f.y THEN 1 ELSE 0 END), 0) AS BIGINT) AS tn
-      FROM g LEFT JOIN f ON TRUE GROUP BY g.threshold)
-SELECT threshold, tp, fp, fn, tn,
-       ROUND(tp / NULLIF(tp + fp, 0), 6) AS precision,
-       ROUND(tp / NULLIF(tp + fn, 0), 6) AS recall,
-       ROUND(2.0 * (tp / NULLIF(tp + fp, 0)) * (tp / NULLIF(tp + fn, 0))
-             / NULLIF((tp / NULLIF(tp + fp, 0)) + (tp / NULLIF(tp + fn, 0)), 0), 6) AS f1
-FROM c"""
-
-
-@register("threshold_sweep_documents", _threshold_sweep_sql())
-def threshold_sweep_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-filter calibration sweep: confusion counts +
-    precision/recall/F1 at 21 candidate thresholds over the hashed-
-    classifier score (label = doc_id%3=0 fixture) — ONE hash-aggregate
-    pass for the whole grid (84 conditional sums), unpivoted with stack;
-    never a per-threshold scan. NULL-score (empty) docs are excluded on
-    both sides. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import (
-        hashed_linear_score,
-        threshold_sweep,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    scored = hashed_linear_score(docs).withColumn(
-        "y", F.col("doc_id") % 3 == 0
-    )
-    return threshold_sweep(scored, "quality_score", "y")
-
-
-_BIGRAM_LP_SQL = """WITH w AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws
-  FROM documents),
-uni AS (SELECT wu AS w, COUNT(*) AS cnt
-  FROM (SELECT unnest(ws) AS wu FROM w) GROUP BY 1),
-v AS (SELECT COUNT(*) AS v FROM uni),
-pairs AS (SELECT doc_id,
-    unnest(ws[1:len(ws) - 1]) AS w1,
-    unnest(ws[2:len(ws)]) AS w2
-  FROM w WHERE len(ws) >= 2),
-bi AS (SELECT w1, w2, COUNT(*) AS c12 FROM pairs GROUP BY 1, 2),
-scored AS (SELECT p.doc_id,
-    ln((COALESCE(b.c12, 0) + 0.5) / (COALESCE(u.cnt, 0) + 0.5 * (v.v + 1))) AS lp
-  FROM pairs p
-  LEFT JOIN bi b ON b.w1 = p.w1 AND b.w2 = p.w2
-  LEFT JOIN uni u ON u.w = p.w1
-  CROSS JOIN v)
-SELECT doc_id, ROUND(AVG(lp), 6) AS mean_logprob,
-  ROUND(exp(-AVG(lp)), 4) AS perplexity,
-  CAST(COUNT(*) AS BIGINT) AS n_bigrams
-FROM scored GROUP BY doc_id"""
-
-
-@register("bigram_logprob_documents", _BIGRAM_LP_SQL)
-def bigram_logprob_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style bigram fluency: mean log P(w2|w1) + perplexity per
-    document under the corpus's own Laplace-smoothed bigram model —
-    sequence-level badness (shuffled text, keyword stuffing) that
-    unigram_logprob cannot see. The bigram table is joined SHUFFLE-side
-    (it is not vocabulary-bounded; only the unigram context table and
-    the V scalar broadcast). Oracle replays the pair extraction with the
-    lockstep-unnest trick (gotcha 37: ws[1:n-1] zips with ws[2:n]).
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import bigram_logprob
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bigram_logprob(docs)
-
-
 @register(
     "source_diversity_documents",
     """WITH c AS (SELECT source, COUNT(*) AS cnt FROM documents GROUP BY source),
@@ -2720,43 +2319,10 @@ def source_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shannon entropy (raw + normalized), HHI concentration, top share —
     one scan, entropy folded into a single aggregate via
     H = log2(T) - Σ c·log2(c)/T (no per-row share column, no second
-    scan). Local-only tail by choice (gotcha 26)."""
+    scan). Window membership: see _HARVEST_FIRST (gotcha 26)."""
     from dataprofiler_spark.operators.profile import category_diversity
 
     return category_diversity(load_table(spark, sf_dir, "documents"), "source")
-
-
-@register(
-    "encoding_quality_documents",
-    """WITH f AS (SELECT source,
-    length(text) - length(regexp_replace(text, '�', '', 'g')) AS n_repl,
-    length(text) - length(regexp_replace(text,
-      '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g')) AS n_ctrl,
-    len(regexp_extract_all(text,
-      'Ã[\\x{0080}-\\x{00BF}]|â€|Â\\x{00A0}')) AS n_moji,
-    ROUND(length(regexp_replace(text, '[\\x00-\\x7F]', '', 'g')) * 1.0
-      / NULLIF(length(text), 0), 4) AS nar
-  FROM documents)
-SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-  CAST(SUM(CASE WHEN n_repl > 0 THEN 1 ELSE 0 END) AS BIGINT) AS repl_docs,
-  CAST(SUM(CASE WHEN n_ctrl > 0 THEN 1 ELSE 0 END) AS BIGINT) AS control_docs,
-  CAST(SUM(CASE WHEN n_moji > 0 THEN 1 ELSE 0 END) AS BIGINT) AS mojibake_docs,
-  ROUND(AVG(nar), 4) AS avg_non_ascii_ratio,
-  ROUND(MAX(nar), 4) AS max_non_ascii_ratio
-FROM f GROUP BY source""",
-)
-def encoding_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source encoding-health rollup (replacement chars, control
-    chars, mojibake artifacts, non-ASCII ratio) — the decoder-damage
-    monitor that localizes a corrupt upstream to its source. Pure
-    regexp projection + one hash aggregate; Java regex and DuckDB RE2
-    read every pattern identically (both support \\x{hhhh}). The ASCII
-    fixture legitimately reads all-zero damage counts; the messy-text
-    behavior is pinned by unit tests (test_textstats). Local-only tail
-    by choice (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import encoding_summary
-
-    return encoding_summary(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -2783,9 +2349,10 @@ def cross_source_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFram
     """Pairwise distinct-shingle overlap between sources (Jaccard +
     overlap coefficient): localizes WHICH sources leak into which.
     Engine decides on xxhash64 digests, oracle replays on shingle text
-    (boilerplate-oracle convention); the oracle self-join is fine at
-    sf0.01 while the engine uses the S-bounded collect_set expansion.
-    Local-only tail by choice (gotcha 26)."""
+    (the convention of the other shingle oracles); the oracle self-join
+    is fine at sf0.01 while the engine uses the S-bounded collect_set
+    expansion.
+    Window membership: see _HARVEST_FIRST (gotcha 26)."""
     from dataprofiler_spark.operators.dedup import cross_source_overlap
 
     return cross_source_overlap(load_table(spark, sf_dir, "documents"))
@@ -2812,60 +2379,6 @@ def dup_group_size_histogram_documents(spark: SparkSession, sf_dir: str) -> Data
     return duplicate_group_size_histogram(
         load_table(spark, sf_dir, "documents"), ["text"]
     )
-
-
-@register(
-    "unicode_normalize_documents",
-    """SELECT doc_id,
-       nfc_normalize(text) <> text AS changed,
-       md5(nfc_normalize(text)) AS norm_md5
-FROM documents""",
-)
-def unicode_normalize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NFC unicode normalization (the budgeted-UDF routing shape: ASCII
-    rows bypass Python entirely via filter-split, gotcha 6) checked
-    value-for-value against DuckDB's nfc_normalize. The ASCII fixture is
-    a fixed point of NFC — the md5s still verify the full path; composed/
-    decomposed behavior is pinned by unit tests. Local-only tail by
-    choice (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import normalize_text
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = normalize_text(docs, form="NFC", out_col="__norm")
-    return out.select(
-        "doc_id",
-        (F.col("__norm") != F.col("text")).alias("changed"),
-        F.md5("__norm").alias("norm_md5"),
-    )
-
-
-@register(
-    "fertility_by_source",
-    """WITH w AS (SELECT source, length(text) AS nc,
-                  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws
-           FROM documents),
-f AS (SELECT source, nc, len(ws) AS nw,
-             list_sum(list_transform(ws,
-               x -> CAST(ceil(length(x) / 4.0) AS BIGINT))) AS toks
-      FROM w)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(nc) AS BIGINT) AS total_chars,
-       CAST(SUM(nw) AS BIGINT) AS total_words,
-       CAST(SUM(toks) AS BIGINT) AS est_bpe_tokens,
-       ROUND(SUM(nc) * 1.0 / NULLIF(SUM(nw), 0), 4) AS chars_per_word,
-       ROUND(SUM(nc) * 1.0 / NULLIF(SUM(toks), 0), 4) AS chars_per_token,
-       ROUND(SUM(nw) * 1.0 / COUNT(*), 4) AS words_per_doc
-FROM f GROUP BY source""",
-)
-def fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-fertility panel by source (docs/words/chars/BPE-estimate
-    + the budgeting ratios) — one scan, one aggregate; doc totals ride
-    the word explode via posexplode_outer first-row tagging. Local-only
-    tail by choice (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import tokenizer_fertility
-
-    return tokenizer_fertility(load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -2898,16 +2411,11 @@ _NEVER_HARVESTED = [
     "paragraph_near_dup_pairs_documents",
     "remove_duplicated_spans_documents",
     "frequent_values_documents",
-    "vocab_rank_drift_split",
     "duplication_weights_documents",
     "dedup_against_history_documents",
     "near_dup_history_documents",
-    "hashed_classifier_score_documents",
     "dedup_history_bloom_documents",
-    "threshold_sweep_documents",
-    "bigram_logprob_documents",
     "source_diversity_documents",
-    "encoding_quality_documents",
     "cross_source_overlap_documents",
 ]
 
@@ -2917,13 +2425,7 @@ _CHANGED_THIS_ROUND = [
     "token_counts_documents",
     "text_quality_documents",
     "lang_id_documents",
-    "repetition_quality_documents",
     "contamination_documents",
-    "vocab_stats_by_source",
-    "unigram_logprob_documents",
-    "tfidf_keywords_documents",
-    "zipf_fit_documents",
-    "boilerplate_ngrams_documents",
     "minhash_lsh_pairs_documents",
     "dedup_clusters_documents",
     "dedup_clusters_string_ids",
@@ -2938,12 +2440,12 @@ _CHANGED_THIS_ROUND = [
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row, then the first twelve tail
+# (3) late entries with no external row, then the first twenty-three tail
 # entries in registration order: deleting the packing and sampling entries
-# freed eight slots and deleting the similarity entries four more, and the
-# registration-order rule fills them from the head of the tail.
-# fertility_by_source and dup_group_size_histogram_documents stay in the
-# local-only tail
+# freed eight slots, the similarity entries four and the textstats
+# corpus-statistics entries eleven, and the registration-order rule fills
+# them from the head of the tail. array_profile_embeddings and everything
+# registered after it stay in the local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
     "ngram_containment_pairs_documents",
@@ -2959,6 +2461,17 @@ _LATE_NEW = [
     "growth_slope_events",
     "dedup_exact_prefix_groups",
     "fingerprint_documents",
+    "profile_compare_envs",
+    "profile_compare_summary",
+    "setop_event_types_except",
+    "grouping_rollup_orders",
+    "tpch_q1_pricing_summary",
+    "salted_profile_nchars_by_lang",
+    "approx_profile_documents_tolerance",
+    "salted_sketch_tolerance_nchars_by_lang",
+    "growth_alerts_events_by_type",
+    "schema_object_drift_events",
+    "expectations_documents",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

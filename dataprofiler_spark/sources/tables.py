@@ -63,8 +63,9 @@ def _spread_scan(df: DataFrame, path: str | None = None) -> DataFrame:
     groups: every narrow chain over them (tokenize+explode, pair
     scoring, regex scans, exact-percentile partials) executes on 1-6
     tasks of a local[32] session — measured as THE dominant cost of a
-    dozen bench entries (fertility_by_source ran its explode + aggregate
-    on one task: 7.3 s at sf1.0, 0.5 s with the spread alone). A no-op
+    dozen bench entries (a since-removed per-source tokenizer-fertility
+    entry ran its explode + aggregate on one task: 7.3 s at sf1.0, 0.5 s
+    with the spread alone). A no-op
     at real scale: a 100 TB table has orders of magnitude more row
     groups than cores, so the guard never fires and no Exchange is
     added. Column pruning and filter pushdown pass through Repartition,
@@ -87,9 +88,9 @@ def _spread_scan(df: DataFrame, path: str | None = None) -> DataFrame:
     spread vs 16.3 s with it (6-way scan-local aggregation beats
     6 -> 32 repartition when per-row work is light and rows are wide).
     Few-SPLIT inputs keep the r6.0 rule unchanged — every one of its
-    measured wins (fertility_by_source 7.3 -> 0.5 s etc.) came from
-    that case — so this probe is purely additive. When no path is known
-    the split count remains the only signal (unchanged behavior).
+    measured wins (the tokenizer-fertility entry's 7.3 -> 0.5 s etc.)
+    came from that case — so this probe is purely additive. When no path
+    is known the split count remains the only signal (unchanged behavior).
 
     The df.rdd partition probe is safe here because the input is a bare
     scan (no Exchange upstream — same rule as dedup._spread_small_input)."""

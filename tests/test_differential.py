@@ -374,46 +374,6 @@ def test_paragraph_dedup_matches_reference(request, corpus):
 
 @given(
     st.lists(
-        st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=0, max_size=6),
-        min_size=1,
-        max_size=8,
-    ),
-    st.integers(1, 3),
-)
-@settings(max_examples=6, deadline=None)
-def test_boilerplate_ngrams_match_reference(request, corpus, thr):
-    """boilerplate_ngram_stats vs a pure-Python doc-frequency sweep with
-    the same short-doc fallback (whole text as the single shingle)."""
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
-
-    rows = [(k, " ".join(ws)) for k, ws in enumerate(corpus)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n_shingles, r.n_boilerplate)
-        for r in boilerplate_ngram_stats(df, df_threshold=thr).collect()
-    }
-
-    def shingles(text):
-        ws = text.split(" ")
-        if len(ws) >= 3:
-            return sorted({" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)})
-        return [" ".join(ws)]
-
-    from collections import Counter
-
-    dfreq = Counter()
-    for _, text in rows:
-        for s in set(shingles(text)):
-            dfreq[s] += 1
-    for k, text in rows:
-        ss = shingles(text)
-        want = (len(ss), sum(1 for s in ss if dfreq[s] > thr))
-        assert got[k] == want, (k, got[k], want)
-
-
-@given(
-    st.lists(
         st.lists(st.sampled_from(["a", "b", "c", "d", "e"]), min_size=0, max_size=8),
         min_size=1,
         max_size=7,
@@ -510,7 +470,7 @@ def test_words_matches_duckdb_on_messy_whitespace(request):
 
 
 def test_word_level_operators_whitespace_robust(request):
-    """token_count / shingles / DSIR buckets see through formatting: the
+    """token_count / shingles / quality features see through formatting: the
     same words joined by '\\n' or runs of spaces produce the same values
     as single-space text."""
     spark = request.getfixturevalue("spark")

@@ -57,3 +57,49 @@ def test_internal_imports_resolve():
         if (why := _resolves(mod, name)) is not None
     ]
     assert not broken, "\n".join(broken)
+
+
+def _private_module_names(tree):
+    """Names of the private module-level functions, classes and
+    assignments (`_name`, not dunders) one module defines."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            targets = [node.name]
+        elif isinstance(node, ast.Assign):
+            targets = [
+                n.id
+                for t in node.targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+            ]
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            targets = [node.target.id]
+        else:
+            continue
+        for name in targets:
+            if name.startswith("_") and not name.startswith("__"):
+                yield node.lineno, name
+
+
+def test_private_module_names_are_used():
+    """A private module-level helper that no package code loads is dead:
+    deleting its last caller left it behind. A use is a `Name` load, an
+    `Attribute` or a from-import anywhere in the package; mentions in
+    comments or docstrings do not count, and neither do tests."""
+    defined, used = [], set()
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        defined += [
+            (f"{path.relative_to(ROOT)}:{line}", name)
+            for line, name in _private_module_names(tree)
+        ]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                used.update(alias.name for alias in node.names)
+    assert defined, "found no private module-level names"
+    dead = [f"{where}: {name}" for where, name in defined if name not in used]
+    assert not dead, "\n".join(dead)

@@ -556,6 +556,43 @@ def test_snapshot_ops_replay_append_compact_overwrite(spark, tmp_path):
     assert snapshot_compact(snap3).snapshot_id == snap3.snapshot_id
 
 
+def test_snapshot_keys_hive_partitions_by_decoded_value(spark, tmp_path):
+    """Spark writes the partition values `a:b` and `p%q` as the escaped
+    directories `source=a%3Ab` and `source=p%25q`. snapshot_from_path
+    keys their lineage by the decoded value, so an append to `web` leaves
+    their tokens alone and the resumed run skips them."""
+    from dataprofiler_spark.plans.manifest import snapshot_from_path
+
+    parts = ["web", "a:b", "p%q"]
+    rows = [(f"doc-{i}", [1, 2, 3], 3, parts[i % 3]) for i in range(9)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    ref = spark.createDataFrame(
+        [(p, 1, 10) for p in parts],
+        "source string, expected_min_tok int, expected_max_tok int",
+    )
+    inp = str(tmp_path / "table")
+    df.write.partitionBy("source").parquet(inp)
+    snap1 = snapshot_from_path(inp, part_prefix="source")
+    # the _SUCCESS marker is the "" partition
+    assert set(snap1.partition_lineage) == {"", *parts}
+
+    cfg = ValidationConfig(manifest_dir=str(tmp_path / "manifest"), snapshot=snap1)
+    run_validation(spark, spark.read.parquet(inp), ref, cfg=cfg)
+    recs = Manifest(cfg.manifest_dir).load()
+    assert {p: recs[p].status for p in parts} == dict.fromkeys(parts, "validated")
+
+    df.filter(F.col("source") == "web").write.mode("append").partitionBy(
+        "source"
+    ).parquet(inp)
+    snap2 = snapshot_from_path(inp, part_prefix="source")
+    assert snap2.partition_lineage["web"] != snap1.partition_lineage["web"]
+    cfg2 = ValidationConfig(manifest_dir=cfg.manifest_dir, snapshot=snap2)
+    r2 = run_validation(spark, spark.read.parquet(inp), ref, cfg=cfg2)
+    assert r2.skipped_partitions == {"a:b", "p%q"}
+
+
 def test_snapshot_from_single_file_tracks_the_file(tmp_path):
     """A single-file input fingerprints under the "" partition, so the
     snapshot id (every partition's token) changes with the file."""

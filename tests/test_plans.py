@@ -208,11 +208,9 @@ def test_connected_components_shuffles_narrow_rows(spark):
 def test_new_ops_plan_shapes(spark):
     """Round-3 operators keep their designed physical shapes: the
     contamination benchmark side and the anomaly stats side are BROADCAST
-    (never a shuffle of the corpus against tiny metadata); repetition
-    stats are expression-only (no exchange, no Python)."""
+    (never a shuffle of the corpus against tiny metadata)."""
     from dataprofiler_spark.operators.dedup import contamination_check
     from dataprofiler_spark.operators.growth import daily_count_anomalies
-    from dataprofiler_spark.operators.textstats import repetition_stats
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 41 == 0)
@@ -226,10 +224,6 @@ def test_new_ops_plan_shapes(spark):
     ).select(F.col("ts_s").cast("timestamp").alias("ts"), "event_type")
     p = plan_of(daily_count_anomalies(ev, "event_type"))
     assert "BroadcastHashJoin" in p
-
-    p = plan_of(repetition_stats(docs).select("doc_id", "dup_word_frac", "dup_bigram_frac"))
-    assert "Exchange" not in p  # map-side only
-    assert "EvalPython" not in p
 
 
 def test_contamination_single_corpus_scan(spark):
@@ -368,27 +362,6 @@ def test_connected_components_execute_pair_plan_once(spark):
         assert acc.value == len(edges), (fn.__name__, acc.value)
 
 
-def test_dsir_and_threshold_sweep_plan_shapes(spark):
-    """Threshold sweep: the whole grid is ONE hash-aggregate pass over ONE
-    scan — no per-threshold scan, no Expand, no sort-based fallback. (The
-    DSIR half of this test went with the sampling module.)"""
-    from dataprofiler_spark.operators.textstats import threshold_sweep
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sweep = threshold_sweep(
-        docs.select(
-            ((F.col("doc_id") % 100) / 100.0).alias("score"),
-            (F.col("doc_id") % 3 == 0).alias("y"),
-        ),
-        "score",
-        "y",
-    )
-    sp = plan_of(sweep)
-    assert sp.count("Scan parquet") == 1
-    assert "SortAggregate" not in sp and "Expand" not in sp
-    assert "EvalPython" not in sp
-
-
 def test_ks_wasserstein_single_shuffle_grouped_window(spark):
     """VERDICT r4 #6: the exact-KS / W1 tagged-union merge must stay ONE
     shuffle (union -> single hash aggregate over (group, value)) and the
@@ -437,34 +410,17 @@ def test_drift_by_group_one_aggregate_no_join(spark, tmp_path_factory):
         assert sum(f"{d / name}]" in line for line in scans) == 1, p
 
 
-def test_bigram_logprob_join_strategy(spark):
-    """bigram_logprob: the corpus-sized bigram table joins SHUFFLE-side
-    (never broadcast — it is not vocabulary-bounded), the unigram context
-    table broadcasts, the V scalar is a 1-row nested-loop, and nothing
-    falls back to a sort-merge join or a Python UDF."""
-    from dataprofiler_spark.operators.textstats import bigram_logprob
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(bigram_logprob(docs))
-    assert p.count("ShuffledHashJoin") == 1, p
-    assert p.count("BroadcastHashJoin") == 1, p
-    assert "SortMergeJoin" not in p, p
-    assert "Python" not in p, p
-
-
 def test_round5_composition_ops_plan_shapes(spark):
-    """encoding_summary and category_diversity are single-scan UDF-free
-    aggregates; the dup-size histogram broadcasts its corpus-total (no
-    shuffled join for a one-row denominator)."""
+    """category_diversity is a single-scan UDF-free aggregate; the
+    dup-size histogram broadcasts its corpus-total (no shuffled join for a
+    one-row denominator)."""
     from dataprofiler_spark.operators.dedup import duplicate_group_size_histogram
     from dataprofiler_spark.operators.profile import category_diversity
-    from dataprofiler_spark.operators.textstats import encoding_summary
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for q in (encoding_summary(docs), category_diversity(docs, "source")):
-        p = plan_of(q)
-        assert p.count("Scan parquet") == 1
-        assert "EvalPython" not in p
+    p = plan_of(category_diversity(docs, "source"))
+    assert p.count("Scan parquet") == 1
+    assert "EvalPython" not in p
 
     h = plan_of(duplicate_group_size_histogram(docs, ["text"]))
     assert "BroadcastNestedLoopJoin" in h  # total rides a broadcast cross join
@@ -498,17 +454,11 @@ def test_cross_source_overlap_one_scan_broadcast_counts(spark):
 
 
 def test_fertility_and_survivors_plan_shapes(spark):
-    """tokenizer_fertility is ONE scan + one aggregate (doc totals ride
-    the word explode, no join-back); cluster_survivors ranks via the
-    skew-safe two-stage window — no SinglePartition stage, no Python."""
+    """cluster_survivors ranks via the skew-safe two-stage window — no
+    SinglePartition stage, no Python."""
     from dataprofiler_spark.operators.dedup import cluster_survivors
-    from dataprofiler_spark.operators.textstats import tokenizer_fertility
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(tokenizer_fertility(docs))
-    assert p.count("Scan parquet") == 1
-    assert "EvalPython" not in p and "SinglePartition" not in p
-
     assignments = spark.createDataFrame(
         [(1, 1), (2, 1)], "node long, component long"
     )
@@ -523,31 +473,24 @@ def test_fertility_and_survivors_plan_shapes(spark):
 
 
 def test_pair_family_single_corpus_scan(spark):
-    """After the gotcha-36 redesign, boilerplate_ngram_stats and
-    ngram_jaccard_pairs must execute their corpus scan exactly ONCE per
-    call (array-frame checkpoint; every consumer re-derives the explode
-    from the cache) — accumulator gate, the CC-test technique."""
+    """After the gotcha-36 redesign, ngram_jaccard_pairs must execute its
+    corpus scan exactly ONCE per call (array-frame checkpoint; every
+    consumer re-derives the explode from the cache) — accumulator gate,
+    the CC-test technique."""
     from dataprofiler_spark.operators.dedup import ngram_jaccard_pairs
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
 
     rows = [(i, f"w{i} x{i} y{i} z{i} common tail here") for i in range(6)]
+    acc = spark.sparkContext.accumulator(0)
 
-    for op in ("boilerplate", "jaccard"):
-        acc = spark.sparkContext.accumulator(0)
+    @F.udf("string")
+    def tick(s):
+        acc.add(1)
+        return s
 
-        @F.udf("string")
-        def tick(s):
-            acc.add(1)
-            return s
-
-        base = spark.createDataFrame(rows, "doc_id long, text string")
-        df = base.select("doc_id", tick("text").alias("text"))
-        if op == "boilerplate":
-            out = boilerplate_ngram_stats(df, df_threshold=2)
-        else:
-            out = ngram_jaccard_pairs(df, "doc_id", threshold=0.1)
-        out.count()
-        assert acc.value == len(rows), (op, acc.value)
+    base = spark.createDataFrame(rows, "doc_id long, text string")
+    df = base.select("doc_id", tick("text").alias("text"))
+    ngram_jaccard_pairs(df, "doc_id", threshold=0.1).count()
+    assert acc.value == len(rows), acc.value
 
 
 def test_profile_split_median_wide_pass_stays_hash_aggregate(spark):
@@ -628,8 +571,6 @@ def test_spread_probe_never_executes_shuffled_lineage(spark):
         acc.add(1)
         return s
 
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
-
     base = spark.createDataFrame(
         [(i, f"w{i} x{i} y{i}", i % 3) for i in range(30)],
         "doc_id long, text string, g long",
@@ -643,12 +584,10 @@ def test_spread_probe_never_executes_shuffled_lineage(spark):
     # shuffle stages) runs upstream at construction — the invariant is
     # EXACTLY ONCE per operator, not zero: the unguarded df.rdd probe
     # added a second full pass (60 ticks per operator, caught here).
-    boilerplate_ngram_stats(shuffled, key_col="doc_id")
-    assert acc.value == 30, acc.value
     op = ngram_jaccard_pairs(shuffled, "doc_id", threshold=0.1)
-    assert acc.value == 60, acc.value
+    assert acc.value == 30, acc.value
     assert op.count() >= 0
-    assert acc.value == 60, "a consumer re-executed the shuffled lineage"
+    assert acc.value == 30, "a consumer re-executed the shuffled lineage"
     # raw small scan still spreads to defaultParallelism
     spread = _spread_small_input(base)
     assert (

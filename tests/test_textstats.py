@@ -1,7 +1,6 @@
 """Text analysis: token counts, quality features, lang-id heuristic, fingerprint."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.textstats import (
     bpe_token_estimate,
@@ -52,25 +51,6 @@ def test_fingerprint_normalization(spark):
     assert raw[0] != raw[1]
 
 
-def test_repetition_stats_known_values(spark):
-    from dataprofiler_spark.operators.textstats import repetition_stats
-
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d"),            # all distinct: 0 dup words, 0 dup bigrams
-            (2, "a a a a"),            # 4 words 1 distinct; 3 bigrams 1 distinct
-            (3, "x"),                  # single word: no bigrams, 0/0 guarded
-            (4, "a b a b a"),          # 5 words 2 distinct; 4 bigrams 2 distinct
-        ],
-        "doc_id int, text string",
-    )
-    rows = {r.doc_id: r for r in repetition_stats(df).collect()}
-    assert rows[1].dup_word_frac == 0.0 and rows[1].dup_bigram_frac == 0.0
-    assert rows[2].dup_word_frac == 0.75 and rows[2].dup_bigram_frac == pytest.approx(2 / 3, abs=1e-6)
-    assert rows[3].dup_word_frac == 0.0 and rows[3].dup_bigram_frac == 0.0
-    assert rows[4].dup_word_frac == 0.6 and rows[4].dup_bigram_frac == 0.5
-
-
 def test_contamination_check_planted_leak(spark):
     """A corpus doc embedding a benchmark 5-gram is flagged with the right
     shingle counts; clean docs are absent from the report."""
@@ -95,484 +75,25 @@ def test_contamination_check_planted_leak(spark):
     assert rows[1].overlap_frac == pytest.approx(2 / 9, abs=1e-6)
 
 
-def test_vocabulary_stats_known_values(spark):
-    from dataprofiler_spark.operators.textstats import vocabulary_stats
-
-    df = spark.createDataFrame(
-        [("a", "x y x"), ("a", "y z"), ("b", "q q q q")],
-        "g string, text string",
-    )
-    rows = {r.g: r for r in vocabulary_stats(df, group_by=["g"]).collect()}
-    assert rows["a"].total_words == 5 and rows["a"].vocab_size == 3
-    assert rows["a"].type_token_ratio == 0.6
-    assert rows["b"].total_words == 4 and rows["b"].vocab_size == 1
-
-
-def test_unigram_logprob_manual(spark):
-    """Score equals the hand computation; a gibberish (all-OOV vs the
-    external vocab) doc scores strictly lower; perplexity = exp(-mean)."""
-    import math
-
-    from dataprofiler_spark.operators.textstats import unigram_logprob, unigram_vocab
-
-    corpus = spark.createDataFrame(
-        [(1, "a a b"), (2, "a b c")], "doc_id long, text string"
-    )
-    out = {r.doc_id: r for r in unigram_logprob(corpus).collect()}
-    # vocab: a=3, b=2, c=1, N=6, V=3; alpha=.5 -> denom = 6 + .5*4 = 8
-    lp = lambda c: math.log((c + 0.5) / 8.0)
-    exp1 = (2 * lp(3) + lp(2)) / 3
-    assert abs(out[1].mean_logprob - round(exp1, 6)) < 1e-6
-    assert abs(out[1].perplexity - round(math.exp(-out[1].mean_logprob), 4)) < 1e-3
-    assert out[2].n_words == 3
-
-    vocab = unigram_vocab(corpus)
-    probe = spark.createDataFrame(
-        [(10, "a b"), (11, "zz qq")], "doc_id long, text string"
-    )
-    scored = {r.doc_id: r.mean_logprob for r in
-              unigram_logprob(probe, vocab=vocab).collect()}
-    assert scored[11] < scored[10]  # OOV gibberish scores lower
-    # OOV logprob is finite (smoothed), never -inf/NULL
-    assert scored[11] is not None and math.isfinite(scored[11])
-
-
-def test_tfidf_keywords(spark):
-    """A term unique to one doc outranks ubiquitous terms; ranks are
-    dense 1..k with deterministic word tie-break; min_doc_freq prunes."""
-    from dataprofiler_spark.operators.textstats import tfidf_keywords
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "common common rare rare rare"),
-            (2, "common common common unique"),
-            (3, "common other other"),
-        ],
-        "doc_id long, text string",
-    )
-    out = tfidf_keywords(corpus, top_k=2)
-    rows = {(r.doc_id, r.rank): r for r in out.collect()}
-    assert rows[(1, 1)].keyword == "rare"     # 3x doc-unique term wins
-    assert rows[(2, 1)].keyword == "common"   # tf=3 beats 1x unique here?
-    # verify against manual idf: common df=3, unique df=1, N=3
-    import math
-    idf_u = math.log(4 / 2) + 1
-    idf_c = math.log(4 / 4) + 1
-    assert abs(rows[(2, 2)].tfidf - round(1 * idf_u, 6)) < 1e-9 or \
-           abs(rows[(2, 1)].tfidf - round(3 * idf_c, 6)) < 1e-9
-    # every doc gets exactly min(top_k, vocab) rows, ranks dense
-    per_doc = {}
-    for (d, r), _ in rows.items():
-        per_doc.setdefault(d, []).append(r)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_doc.values())
-
-    pruned = tfidf_keywords(corpus, top_k=5, min_doc_freq=2)
-    kws = {r.keyword for r in pruned.collect()}
-    assert kws == {"common"}  # every df=1 term (rare/unique/other) pruned
-
-
-def test_script_profile(spark):
-    """Unicode-script composition: counts per script, dominant pick with
-    deterministic tie-break, nonlatin fraction; pure-ascii and empty
-    inputs behave."""
-    from dataprofiler_spark.operators.textstats import script_profile
-
-    rows = [
-        (1, "hello world"),
-        (2, "日本語のテキスト"),            # han + hiragana + katakana
-        (3, "привет мир"),
-        (4, "مرحبا"),
-        (5, "mixed 日本 text"),
-        (6, "12345 !!!"),                  # no script chars at all
-        (7, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in script_profile(df).collect()}
-    assert out[1].dominant_script == "latin" and out[1].nonlatin_frac == 0.0
-    assert out[2].han_chars == 3 and out[2].hiragana_chars == 1
-    assert out[2].katakana_chars == 4 and out[2].nonlatin_frac == 1.0
-    assert out[3].dominant_script == "cyrillic"
-    assert out[4].dominant_script == "arabic"
-    assert out[5].dominant_script == "latin" and 0 < out[5].nonlatin_frac < 1
-    assert out[6].dominant_script is None and out[6].nonlatin_frac is None
-    assert out[7].dominant_script is None  # NULL text -> zero counts
-    assert out[7].latin_chars == 0
-
-
 def test_word_ops_ignore_empty_pseudo_tokens(spark):
     """Gotcha 25: consecutive/leading/trailing spaces must not create ''
-    'words' — repetition fractions and vocabulary stats are invariant to
-    whitespace formatting."""
-    from dataprofiler_spark.operators.textstats import (
-        repetition_stats,
-        vocabulary_stats,
-    )
+    'words' — token counts, the BPE estimate and the word-level quality
+    features are invariant to whitespace formatting."""
+    from dataprofiler_spark.operators.textstats import quality_features
 
     df = spark.createDataFrame(
-        [(1, "a b a"), (2, "  a  b   a ")], "doc_id long, text string"
+        [(1, "a b a"), (2, "  a  b   a "), (3, "x y"), (4, "  x   y  ")],
+        "doc_id long, text string",
     )
-    reps = {r.doc_id: (r.dup_word_frac, r.dup_bigram_frac)
-            for r in repetition_stats(df).collect()}
-    assert reps[1] == reps[2]
-
-    df2 = spark.createDataFrame(
-        [("g", "x y"), ("g", "  x   y  ")], "g string, text string"
-    )
-    row = vocabulary_stats(df2, group_by=["g"]).collect()[0]
-    assert (row.total_words, row.vocab_size) == (4, 2)
-
-
-def test_zipf_fit_exact_powerlaw(spark):
-    from dataprofiler_spark.operators.textstats import zipf_fit
-
-    # corpus where word w_r appears floor(64 / r) times: ln(cnt) is close
-    # to -1 * ln(rank) + ln(64); the fit must recover a slope near -1
-    words = []
-    for r in range(1, 9):
-        words += [f"w{r:02d}"] * (64 // r)
-    df = spark.createDataFrame([(0, " ".join(words))], "doc_id int, text string")
-    row = zipf_fit(df, top_n=8).collect()[0]
-    assert row.n_ranks == 8
-    assert -1.1 < row.slope < -0.85
-    assert row.r2 > 0.97
-
-
-def test_zipf_fit_degenerate_uniform(spark):
-    from dataprofiler_spark.operators.textstats import zipf_fit
-
-    # uniform counts: var_y = 0 -> slope 0 (cov/varx = 0), r2 NULL-guarded
-    df = spark.createDataFrame([(0, "a b c d")], "doc_id int, text string")
-    row = zipf_fit(df).collect()[0]
-    assert row.n_ranks == 4 and row.slope == 0.0
-    assert row.r2 is None
-
-
-def test_zipf_fit_no_full_sort_shuffle(spark):
-    from dataprofiler_spark.operators.textstats import zipf_fit
-
-    df = spark.createDataFrame([(0, "a a b")], "doc_id int, text string")
-    plan = zipf_fit(df)._jdf.queryExecution().executedPlan().toString()
-    # top-n must be TakeOrderedAndProject, not a global Sort + Limit
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_boilerplate_ngram_stats(spark):
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
-
-    rows = [
-        (1, "a b c d"),   # shingles: "a b c", "b c d"
-        (2, "a b c x"),
-        (3, "a b c y"),
-        (4, "zz"),        # short doc -> whole text is its one shingle
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    out = {r.doc_id: r for r in boilerplate_ngram_stats(df, df_threshold=2).collect()}
-    # "a b c" appears in 3 docs (> 2) -> boilerplate; the others don't
-    for d in (1, 2, 3):
-        assert (out[d].n_shingles, out[d].n_boilerplate) == (2, 1)
-        assert out[d].boilerplate_frac == 0.5
-    assert (out[4].n_shingles, out[4].n_boilerplate) == (1, 0)
-
-
-def test_boilerplate_ngram_stats_within_doc_repeat_not_flagged(spark):
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
-
-    # a shingle repeated inside ONE doc is distinct-counted once -> its
-    # doc frequency stays 1; within-doc repetition belongs to
-    # repetition_stats, not this corpus-level signal
-    df = spark.createDataFrame(
-        [(1, "p q r p q r p q r"), (2, "u v w")], "doc_id int, text string"
-    )
-    out = {r.doc_id: r for r in boilerplate_ngram_stats(df, df_threshold=1).collect()}
-    assert out[1].n_boilerplate == 0 and out[2].n_boilerplate == 0
-
-
-def test_vocab_rank_drift_identical_and_disjoint(spark):
-    from dataprofiler_spark.operators.textstats import vocab_rank_drift
-
-    a = spark.createDataFrame(
-        [(0, "x x x y y z")], "doc_id int, text string"
-    )
-    same = vocab_rank_drift(a, a).collect()[0]
-    assert (same.n_a, same.n_b, same.n_shared) == (3, 3, 3)
-    assert same.overlap_jaccard == 1.0 and same.rank_corr == 1.0
-    b = spark.createDataFrame([(0, "p p q")], "doc_id int, text string")
-    disj = vocab_rank_drift(a, b).collect()[0]
-    assert disj.n_shared == 0 and disj.overlap_jaccard == 0.0
-    assert disj.rank_corr is None
-
-
-def test_vocab_rank_drift_reversed_ranks(spark):
-    from dataprofiler_spark.operators.textstats import vocab_rank_drift
-
-    # same vocab, exactly inverted frequency order -> rho = -1
-    a = spark.createDataFrame([(0, "u u u v v w")], "doc_id int, text string")
-    b = spark.createDataFrame([(0, "w w w v v u")], "doc_id int, text string")
-    row = vocab_rank_drift(a, b).collect()[0]
-    assert row.n_shared == 3 and row.rank_corr == -1.0
-
-
-def test_boilerplate_ngrams_whitespace_invariant(spark):
-    from dataprofiler_spark.operators.textstats import boilerplate_ngram_stats
-
-    a = spark.createDataFrame(
-        [(1, "x y z w"), (2, "x y z q"), (3, "x y z r")], "doc_id int, text string"
-    )
-    b = spark.createDataFrame(
-        [(1, "x  y z w"), (2, "x y  z q"), (3, " x y z r")], "doc_id int, text string"
-    )
-    ra = sorted(map(tuple, boilerplate_ngram_stats(a, df_threshold=2).collect()))
-    rb = sorted(map(tuple, boilerplate_ngram_stats(b, df_threshold=2).collect()))
-    assert ra == rb  # gotcha 25: formatting must not shift the spans
-
-
-def test_hashed_linear_score_matches_python_reference(spark):
-    """Engine score must equal the hand-computed fastText-style formula:
-    sigmoid(mean over words of the bucket's LCG weight); empty docs NULL."""
-    import hashlib
-    import math
-
-    from dataprofiler_spark.operators.dedup import _MERSENNE, _minhash_params
-    from dataprofiler_spark.operators.textstats import hashed_linear_score
-
-    text = "the quick brown  fox"
-    df = spark.createDataFrame([(1, text), (2, "   ")], "doc_id bigint, text string")
-    a, b = _minhash_params(1, 42)[0]
-
-    def wt(word):
-        bucket = int(hashlib.md5(word.encode()).hexdigest()[:7], 16) % (1 << 18)
-        return ((bucket * a + b) % _MERSENNE) / (_MERSENNE / 2.0) - 1.0
-
-    ws = [w for w in text.split(" ") if w]
-    m = sum(wt(w) for w in ws) / len(ws)
-    expected = round(1.0 / (1.0 + math.exp(-m)), 6)
-    rows = {r.doc_id: r.quality_score for r in hashed_linear_score(df).collect()}
-    assert rows == {1: expected, 2: None}
-
-
-def test_hashed_linear_score_trained_weight_table(spark):
-    """The production path: a broadcast (bucket, weight) table overrides the
-    demo weights; out-of-vocabulary buckets contribute 0."""
-    import hashlib
-    import math
-
-    from dataprofiler_spark.operators.textstats import hashed_linear_score
-
-    df = spark.createDataFrame([(1, "good good bad"), (2, "unseen")],
-                               "doc_id bigint, text string")
-    bk = lambda w: int(hashlib.md5(w.encode()).hexdigest()[:7], 16) % (1 << 18)
-    weights = spark.createDataFrame(
-        [(bk("good"), 2.0), (bk("bad"), -1.0)], "bucket long, weight double"
-    )
-    out = {r.doc_id: r.quality_score
-           for r in hashed_linear_score(df, weights=weights).collect()}
-    assert out[1] == round(1 / (1 + math.exp(-(2.0 + 2.0 - 1.0) / 3)), 6)
-    assert out[2] == 0.5  # OOV-only doc: mean weight 0 -> sigmoid(0)
-
-
-def test_threshold_sweep_lockstep_and_nulls(spark):
-    from dataprofiler_spark.operators.textstats import threshold_sweep
-
-    rows = [(i / 10.0, i % 2 == 0) for i in range(10)] + [
-        (None, True),
-        (0.5, None),
-    ]
-    df = spark.createDataFrame(rows, "score double, y boolean")
-    out = {
-        r.threshold: r
-        for r in threshold_sweep(df, "score", "y", [0.0, 0.35, 0.8]).collect()
+    rows = {
+        r.doc_id: (r.n_tok, r.n_bpe, r.n_words, r.distinct_word_ratio, r.mean_word_len)
+        for r in quality_features(df)
+        .withColumn("n_tok", token_count("text"))
+        .withColumn("n_bpe", bpe_token_estimate("text"))
+        .collect()
     }
-    data = [(s, y) for s, y in rows if s is not None and y is not None]
-    for t in (0.0, 0.35, 0.8):
-        tp = sum(1 for s, y in data if s >= t and y)
-        fp = sum(1 for s, y in data if s >= t and not y)
-        fn = sum(1 for s, y in data if s < t and y)
-        tn = sum(1 for s, y in data if s < t and not y)
-        r = out[t]
-        assert (r.tp, r.fp, r.fn, r.tn) == (tp, fp, fn, tn)
-        assert r.precision == pytest.approx(tp / (tp + fp)) if tp + fp else r.precision is None
-        assert r.recall == pytest.approx(tp / (tp + fn)) if tp + fn else r.recall is None
-    # perfect-classifier sanity: f1 = 1 where the cut separates the labels
-    sep = spark.createDataFrame(
-        [(0.9, True), (0.8, True), (0.1, False)], "score double, y boolean"
-    )
-    r = threshold_sweep(sep, "score", "y", [0.5]).collect()[0]
-    assert (r.precision, r.recall, r.f1) == (1.0, 1.0, 1.0)
-
-
-def test_threshold_sweep_empty_and_validation(spark):
-    from dataprofiler_spark.operators.textstats import threshold_sweep
-
-    df = spark.createDataFrame([], "score double, y boolean")
-    rows = threshold_sweep(df, "score", "y", [0.2, 0.7]).collect()
-    assert {r.threshold for r in rows} == {0.2, 0.7}
-    assert all((r.tp, r.fp, r.fn, r.tn) == (0, 0, 0, 0) for r in rows)
-    assert all(r.precision is None and r.recall is None and r.f1 is None for r in rows)
-    with pytest.raises(ValueError):
-        threshold_sweep(df, "score", "y", [])
-    # non-finite thresholds would interpolate invalid SQL literals into
-    # stack(); duplicates would emit duplicate grid rows — both rejected
-    with pytest.raises(ValueError, match="finite"):
-        threshold_sweep(df, "score", "y", [0.2, float("nan")])
-    with pytest.raises(ValueError, match="finite"):
-        threshold_sweep(df, "score", "y", [float("inf")])
-    with pytest.raises(ValueError, match="duplicate"):
-        threshold_sweep(df, "score", "y", [0.2, 0.2])
-
-
-def test_bigram_logprob_known_values(spark):
-    """Hand-computed Laplace-smoothed bigram scores on a 3-doc corpus."""
-    import math
-
-    from dataprofiler_spark.operators.textstats import bigram_logprob
-
-    df = spark.createDataFrame(
-        [(1, "a b a b"), (2, "a b"), (3, "c"), (4, "")],
-        "doc_id bigint, text string",
-    )
-    # unigrams: a:3 b:3 c:1 -> V=3; bigrams: (a,b):3 (b,a):1
-    out = {r.doc_id: r for r in bigram_logprob(df, alpha=0.5).collect()}
-    V = 3
-    lp_ab = math.log((3 + 0.5) / (3 + 0.5 * (V + 1)))
-    lp_ba = math.log((1 + 0.5) / (3 + 0.5 * (V + 1)))
-    exp1 = (2 * lp_ab + lp_ba) / 3
-    assert out[1].n_bigrams == 3
-    assert abs(out[1].mean_logprob - round(exp1, 6)) < 1e-6
-    assert out[2].n_bigrams == 1
-    assert abs(out[2].mean_logprob - round(lp_ab, 6)) < 1e-6
-    # < 2 words -> no bigrams -> absent
-    assert 3 not in out and 4 not in out
-    # perplexity = exp(-mean)
-    assert abs(out[2].perplexity - round(math.exp(-out[2].mean_logprob), 4)) < 1e-3
-
-
-def test_bigram_logprob_ranks_shuffled_text_lower(spark):
-    """The fluency property: a word-order-scrambled doc scores lower than
-    the natural-order docs the model was fit on, even though its unigram
-    distribution is identical."""
-    from dataprofiler_spark.operators.textstats import bigram_logprob
-
-    natural = [(i, "the quick brown fox jumps over the lazy dog") for i in range(20)]
-    scrambled = [(100, "dog the over quick lazy fox brown jumps the")]
-    df = spark.createDataFrame(natural + scrambled, "doc_id bigint, text string")
-    out = {r.doc_id: r.mean_logprob for r in bigram_logprob(df).collect()}
-    assert out[100] < out[0]
-
-
-def test_encoding_quality_messy(spark):
-    """Damage counters on deliberately corrupted docs: U+FFFD, raw control
-    chars (but NOT \t \n \r), the Latin-1-double-decode mojibake family,
-    and the non-ASCII ratio with its empty-doc NULL guard."""
-    from dataprofiler_spark.operators.textstats import (
-        encoding_quality,
-        encoding_summary,
-    )
-
-    rows = [
-        (1, "s1", "clean ascii text"),
-        (2, "s1", "bad � marker � twice"),
-        (3, "s1", "ctrl\x01here\x02"),
-        (4, "s1", "tab\tand\nnewline fine\r"),
-        (5, "s2", "mojibake Ã© and â€™ wreck"),
-        (6, "s2", "naïve café"),
-        (7, "s2", ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = {r.doc_id: r for r in encoding_quality(df).collect()}
-    assert out[1].n_replacement == 0 and out[1].n_control == 0
-    assert out[1].n_mojibake == 0 and out[1].n_non_ascii == 0
-    assert out[2].n_replacement == 2
-    assert out[3].n_control == 2
-    assert out[4].n_control == 0  # \t \n \r are legitimate whitespace
-    assert out[5].n_mojibake == 2  # 'Ã©' + 'â€' prefix of 'â€™'
-    assert out[6].n_non_ascii == 2 and out[6].n_mojibake == 0
-    assert out[7].non_ascii_ratio is None  # empty doc: NULL, not /0 error
-    summ = {r.source: r for r in encoding_summary(df).collect()}
-    assert summ["s1"].repl_docs == 1 and summ["s1"].control_docs == 1
-    assert summ["s2"].mojibake_docs == 1 and summ["s2"].n_docs == 3
-
-
-def test_encoding_quality_clean_corpus_all_zero(spark):
-    """The ASCII fixture must read zero damage everywhere — the parity
-    entry's all-zero result is the CORRECT answer, not a vacuous one."""
-    from dataprofiler_spark.operators.textstats import encoding_summary
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for r in encoding_summary(docs).collect():
-        assert r.repl_docs == 0 and r.control_docs == 0 and r.mojibake_docs == 0
-        assert r.avg_non_ascii_ratio == 0.0
-
-
-def test_tokenizer_fertility_hand_computed(spark):
-    """Doc/word/char/token totals on a hand-checkable corpus, including
-    an empty doc (counted as a doc, zero words, NULL-safe ratios)."""
-    from dataprofiler_spark.operators.textstats import tokenizer_fertility
-
-    rows = [
-        (1, "a", "hello world"),        # 11 chars, 2 words, 2+2=... ceil(5/4)*2 = 2+2
-        (2, "a", ""),                    # empty doc
-        (3, "b", "abcdefgh"),            # 8 chars, 1 word, ceil(8/4)=2 tokens
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = {r.source: r for r in tokenizer_fertility(df).collect()}
-    a, b = out["a"], out["b"]
-    assert (a.n_docs, a.total_chars, a.total_words) == (2, 11, 2)
-    assert a.est_bpe_tokens == 4  # ceil(5/4) = 2 per word
-    assert a.words_per_doc == 1.0
-    assert (b.n_docs, b.total_chars, b.total_words, b.est_bpe_tokens) == (1, 8, 1, 2)
-    assert b.chars_per_token == 4.0
-
-    empty_only = spark.createDataFrame(
-        [(1, "x", " ")], "doc_id long, source string, text string"
-    )
-    r = tokenizer_fertility(empty_only).collect()[0]
-    assert r.n_docs == 1 and r.total_words == 0
-    assert r.chars_per_word is None  # nullif, not a /0 ANSI error
-
-
-def test_normalize_text_forms_and_routing(spark):
-    """Composed and decomposed 'é' converge under NFC; NFKC folds the
-    ﬁ ligature; strip_accents removes combining marks; NULL and ASCII
-    pass through — and the plan routes ASCII rows around Python (exactly
-    one ArrowEvalPython, under the non-ASCII filter branch; gotcha 6
-    split-union routing)."""
-    from dataprofiler_spark.operators.textstats import normalize_text
-
-    rows = [
-        (1, "plain ascii"),
-        (2, "café"),
-        (3, "café"),
-        (4, None),
-        (5, "ﬁle"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    nfc = {
-        r.doc_id: r.norm
-        for r in normalize_text(df, form="NFC", out_col="norm").collect()
-    }
-    assert nfc[2] == nfc[3] == "café"
-    assert nfc[1] == "plain ascii" and nfc[4] is None
-    assert nfc[5] == "ﬁle"  # NFC keeps compatibility chars
-    nfkc = {
-        r.doc_id: r.norm
-        for r in normalize_text(df, form="NFKC", out_col="norm").collect()
-    }
-    assert nfkc[5] == "file"
-    stripped = {
-        r.doc_id: r.norm
-        for r in normalize_text(
-            df, form="NFC", strip_accents=True, out_col="norm"
-        ).collect()
-    }
-    assert stripped[2] == stripped[3] == "cafe"
-
-    plan = (
-        normalize_text(df, form="NFC", out_col="norm")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("ArrowEvalPython") == 1
+    assert rows[1] == rows[2] == (3, 3, 3, pytest.approx(2 / 3, abs=1e-6), 1.0)
+    assert rows[3] == rows[4] == (2, 2, 2, 1.0, 1.0)
 
 
 def test_bpe_estimate_empty_doc_matches_oracle_convention(spark):
