@@ -1,16 +1,18 @@
 """Per-document text features for training-data pipelines: whitespace and
 BPE-estimate token counts, quality features and score, a marker-token
-language-ID heuristic, and a content fingerprint.
+language-ID heuristic and a content fingerprint, plus one corpus
+statistic: the Zipf-law fit of the word-frequency head.
 
-Every operator is a column expression or a projection over one document
-(no shuffle, no UDF); the array folds (aggregate/filter) are higher-order
-functions and run interpreted. Each has a DuckDB-expressible formulation
-so the driver's oracle can verify it value-for-value.
+The per-document operators are column expressions or projections over one
+document (no shuffle, no UDF); the array folds (aggregate/filter) are
+higher-order functions and run interpreted. Each operator has a
+DuckDB-expressible formulation so the driver's oracle can verify it
+value-for-value.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataprofiler_spark.functions.expressions import words
@@ -119,3 +121,53 @@ def fingerprint(df: DataFrame, text_col: str = "text", normalize: bool = True) -
         c = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
     return df.withColumn("fingerprint", F.md5(c))
 
+
+
+def zipf_fit(df: DataFrame, text_col: str = "text", top_n: int = 1000) -> DataFrame:
+    """OLS fit of ln(count) against ln(rank) over the corpus's `top_n`
+    most frequent words. Zipf's law predicts slope ≈ -1 on natural text;
+    the deviation is a cheap corpus-quality signal (boilerplate floods
+    flatten the head, templated spam steepens it) tracked per snapshot
+    next to the drift metrics.
+
+    Returns ONE row: (n_ranks, slope, intercept, r2) — slope/intercept
+    from the covar_pop/var_pop closed form (same as growth.regression_slope),
+    r2 = cov²/(var_x·var_y) with a NULL guard for degenerate corpora.
+
+    Scale shape: word counts are one explode + hash aggregate (map-side
+    combine over the vocabulary); the top-n selection is an
+    orderBy+limit — TakeOrderedAndProject, per-partition top-k merged at
+    the driver, never a full sort shuffle. The ONLY window runs over the
+    ≤ top_n surviving rows (bounded by a literal, not by data), then one
+    scalar aggregate closes the fit."""
+    counts = (
+        df.select(F.explode_outer(words(F.col(text_col))).alias("w"))  # gotcha 43
+        .filter(F.col("w").isNotNull())
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    top = counts.orderBy(F.desc("cnt"), F.asc("w")).limit(top_n)
+    w = Window.orderBy(F.desc("cnt"), F.asc("w"))
+    xy = top.withColumn("rank", F.row_number().over(w)).select(
+        F.log(F.col("rank").cast("double")).alias("x"),
+        F.log(F.col("cnt").cast("double")).alias("y"),
+    )
+    agg = xy.agg(
+        F.count(F.lit(1)).alias("n_ranks"),
+        F.covar_pop("x", "y").alias("__cov"),
+        F.var_pop("x").alias("__vx"),
+        F.var_pop("y").alias("__vy"),
+        F.avg("x").alias("__mx"),
+        F.avg("y").alias("__my"),
+    )
+    slope = F.col("__cov") / F.nullif(F.col("__vx"), F.lit(0.0))
+    return agg.select(
+        "n_ranks",
+        F.round(slope, 6).alias("slope"),
+        F.round(F.col("__my") - slope * F.col("__mx"), 6).alias("intercept"),
+        F.round(
+            (F.col("__cov") * F.col("__cov"))
+            / F.nullif(F.col("__vx") * F.col("__vy"), F.lit(0.0)),
+            6,
+        ).alias("r2"),
+    )

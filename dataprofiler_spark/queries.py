@@ -2081,6 +2081,31 @@ def paragraph_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paragraph_dedup(synth, "doc_id")
 
 
+@register(
+    "zipf_fit_documents",
+    """WITH words AS (
+  SELECT w FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents)
+  WHERE w <> ''),
+counts AS (SELECT w, COUNT(*) AS cnt FROM words GROUP BY w),
+top AS (SELECT w, cnt FROM counts ORDER BY cnt DESC, w LIMIT 1000),
+xy AS (SELECT ln(ROW_NUMBER() OVER (ORDER BY cnt DESC, w)) AS x,
+              ln(cnt) AS y FROM top),
+a AS (SELECT COUNT(*) AS n_ranks, covar_pop(x, y) AS cov, var_pop(x) AS vx,
+             var_pop(y) AS vy, avg(x) AS mx, avg(y) AS my FROM xy)
+SELECT n_ranks, ROUND(cov / NULLIF(vx, 0), 6) AS slope,
+       ROUND(my - (cov / NULLIF(vx, 0)) * mx, 6) AS intercept,
+       ROUND(cov * cov / NULLIF(vx * vy, 0), 6) AS r2
+FROM a""",
+)
+def zipf_fit_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf-law fit over the documents corpus word-frequency head — the
+    corpus-quality diagnostic (slope ≈ -1 on natural text). Window membership: see
+    _HARVEST_FIRST (gotcha 26)."""
+    from dataprofiler_spark.operators.textstats import zipf_fit
+
+    return zipf_fit(load_table(spark, sf_dir, "documents"))
+
+
 _PARA_LSH_PREFIX = """synth AS (
   SELECT a.doc_id, a.text || chr(10) || b.text AS text
   FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
@@ -2426,6 +2451,7 @@ _CHANGED_THIS_ROUND = [
     "text_quality_documents",
     "lang_id_documents",
     "contamination_documents",
+    "zipf_fit_documents",
     "minhash_lsh_pairs_documents",
     "dedup_clusters_documents",
     "dedup_clusters_string_ids",
@@ -2440,11 +2466,11 @@ _CHANGED_THIS_ROUND = [
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row, then the first twenty-three tail
+# (3) late entries with no external row, then the first twenty-two tail
 # entries in registration order: deleting the packing and sampling entries
 # freed eight slots, the similarity entries four and the textstats
-# corpus-statistics entries eleven, and the registration-order rule fills
-# them from the head of the tail. array_profile_embeddings and everything
+# corpus-statistics entries ten, and the registration-order rule fills
+# them from the head of the tail. expectations_documents and everything
 # registered after it stay in the local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
@@ -2471,7 +2497,6 @@ _LATE_NEW = [
     "salted_sketch_tolerance_nchars_by_lang",
     "growth_alerts_events_by_type",
     "schema_object_drift_events",
-    "expectations_documents",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

@@ -1,4 +1,5 @@
-"""Text analysis: token counts, quality features, lang-id heuristic, fingerprint."""
+"""Text analysis: token counts, quality features, lang-id heuristic,
+fingerprint, Zipf fit."""
 
 import pytest
 
@@ -94,6 +95,40 @@ def test_word_ops_ignore_empty_pseudo_tokens(spark):
     }
     assert rows[1] == rows[2] == (3, 3, 3, pytest.approx(2 / 3, abs=1e-6), 1.0)
     assert rows[3] == rows[4] == (2, 2, 2, 1.0, 1.0)
+
+
+def test_zipf_fit_exact_powerlaw(spark):
+    from dataprofiler_spark.operators.textstats import zipf_fit
+
+    # corpus where word w_r appears floor(64 / r) times: ln(cnt) is close
+    # to -1 * ln(rank) + ln(64); the fit must recover a slope near -1
+    words = []
+    for r in range(1, 9):
+        words += [f"w{r:02d}"] * (64 // r)
+    df = spark.createDataFrame([(0, " ".join(words))], "doc_id int, text string")
+    row = zipf_fit(df, top_n=8).collect()[0]
+    assert row.n_ranks == 8
+    assert -1.1 < row.slope < -0.85
+    assert row.r2 > 0.97
+
+
+def test_zipf_fit_degenerate_uniform(spark):
+    from dataprofiler_spark.operators.textstats import zipf_fit
+
+    # uniform counts: var_y = 0 -> slope 0 (cov/varx = 0), r2 NULL-guarded
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id int, text string")
+    row = zipf_fit(df).collect()[0]
+    assert row.n_ranks == 4 and row.slope == 0.0
+    assert row.r2 is None
+
+
+def test_zipf_fit_no_full_sort_shuffle(spark):
+    from dataprofiler_spark.operators.textstats import zipf_fit
+
+    df = spark.createDataFrame([(0, "a a b")], "doc_id int, text string")
+    plan = zipf_fit(df)._jdf.queryExecution().executedPlan().toString()
+    # top-n must be TakeOrderedAndProject, not a global Sort + Limit
+    assert "TakeOrderedAndProject" in plan
 
 
 def test_bpe_estimate_empty_doc_matches_oracle_convention(spark):
