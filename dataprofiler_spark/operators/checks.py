@@ -30,8 +30,8 @@ Plans (10^12-row design point):
     a broadcast join with the registered partitions and ONE aggregate.
   * Uniqueness: a two-level aggregate — (key, partition) pair counts
     combined map-side, the global per-key count a window over the pairs.
-  * Token equality with the golden copy: ONE join on doc_id. ``full`` mode
-    runs the Arrow UDF once per joined row; ``prefilter`` joins
+  * Token equality with the golden copy: ONE join on doc_id. ``exact``
+    runs the Arrow UDF once per joined row; otherwise the join carries
     (xxhash64, size) digests and runs no UDF.
 """
 
@@ -263,14 +263,14 @@ def _lists_equal_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     lengths match (the overwhelmingly common case). Rows with differing
     lengths are False by definition and excluded before the flat compare.
     NULL elements compare as SQL's IS NOT DISTINCT FROM does: [1, NULL]
-    equals [1, NULL] and differs from [NULL, 1], as in the prefilter mode.
+    equals [1, NULL] and differs from [NULL, 1], as in the digest join.
     """
     aa = pa.array(a, from_pandas=True)
     bb = pa.array(b, from_pandas=True)
     n = len(aa)
     null_a = np.asarray(pa.compute.is_null(aa))
     null_b = np.asarray(pa.compute.is_null(bb))
-    # NULL semantics (consistent with the prefilter mode, where
+    # NULL semantics (consistent with the digest join, where
     # xxhash64(NULL) == xxhash64(NULL) compares equal): both-null passes,
     # null-vs-non-null is a violation.
     both_null = null_a & null_b
@@ -332,7 +332,7 @@ def equality_frame(
     key_col: str = "doc_id",
     array_col: str = "tokens",
     part_col: str = "source",
-    udf_mode: str = "full",
+    exact: bool = True,
 ) -> DataFrame:
     """Check frame of <array_col>_match_reference: the array must equal the
     golden copy's exactly (both NULL counts as equal). ONE inner join on
@@ -340,20 +340,20 @@ def equality_frame(
     joined rows get a verdict. Rows missing from the reference are not
     compared (uniqueness and RI own those).
 
-    udf_mode:
-      "full"      — the Arrow UDF compares every joined pair once: bit-exact,
-                    but both arrays cross the shuffle and Arrow.
-      "prefilter" — both sides reduce map-side to (key, xxhash64, size)
-                    digests, so the join never moves an array, and no UDF
-                    runs: a digest mismatch proves the arrays differ, and
-                    the `len=… ref_len=…` detail comes from the sizes.
-                    xxhash64 skips NULL elements, so the digest also hashes
-                    the array's NULL mask: [1, NULL] and [NULL, 1] differ.
-                    Unequal arrays with equal digests read as equal: a hash
-                    collision (2^-64 per row)."""
+    exact:
+      True  — the Arrow UDF compares every joined pair once: bit-exact,
+              but both arrays cross the shuffle and Arrow.
+      False — both sides reduce map-side to (key, xxhash64, size)
+              digests, so the join never moves an array, and no UDF
+              runs: a digest mismatch proves the arrays differ, and the
+              `len=… ref_len=…` detail comes from the sizes. xxhash64
+              skips NULL elements, so the digest also hashes the array's
+              NULL mask: [1, NULL] and [NULL, 1] differ. Unequal arrays
+              with equal digests read as equal: a hash collision (2^-64
+              per row)."""
     name = f"{array_col}_match_reference"
     left = df.filter(F.col(key_col).isNotNull())
-    if udf_mode == "prefilter":
+    if not exact:
         left = left.select(
             key_col, part_col,
             _digest(array_col).alias("__h"), F.size(array_col).alias("__len"),
@@ -452,20 +452,21 @@ def run_sequence_suite(
     part_col: str = "source",
     violation_cap: int = 1000,
     null_rate_threshold: float = 0.0,
-    equality_udf_mode: str = "full",
+    exact: bool = True,
 ) -> SuiteResult:
     """The full constraint suite: row invariants, uniqueness, RI against
     the registered partitions of `sources_ref`, row_count_gt_0, and token
     equality when the golden copy `reference` is supplied. Everything is
     lazy. The verdict plan reads `df` twice (row checks, uniqueness), plus
-    `df` and `reference` once each for equality."""
+    `df` and `reference` once each for equality, whose kernel `exact`
+    picks (see equality_frame)."""
     checks = sequence_row_checks(null_rate_threshold=null_rate_threshold)
     frame = row_check_frame(df, checks, part_col=part_col, registered=sources_ref).unionByName(
         uniqueness_frame(df, part_col=part_col)
     )
     if reference is not None:
         frame = frame.unionByName(
-            equality_frame(df, reference, part_col=part_col, udf_mode=equality_udf_mode)
+            equality_frame(df, reference, part_col=part_col, exact=exact)
         )
     verdicts, violations = verdicts_and_violations(
         frame, table_name, violation_cap, {ck.name: ck.threshold_rate for ck in checks}

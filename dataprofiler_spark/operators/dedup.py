@@ -1614,8 +1614,8 @@ def cluster_survivors(
     dedup_clusters' arbitrary min-key member. This is how production
     curation actually dedups — keep the longest / highest-classifier-
     score / most-recent copy, drop the mirrors — the score being
-    whatever quality_score (or other ranking column) the pipeline
-    already computed.
+    whatever quality or other ranking column the pipeline already
+    computed.
 
     `assignments` is a (node, component) frame (dedup_clusters /
     connected-components output); `scores` maps key_col → priority_col

@@ -147,7 +147,7 @@ def run_validation(
         part_col=cfg.part_col,
         violation_cap=cfg.violation_cap,
         null_rate_threshold=cfg.null_rate_threshold,
-        equality_udf_mode="full" if cfg.exact else "prefilter",
+        exact=cfg.exact,
     )
     verdicts, violations = suite.verdicts, suite.violations
     if persisted:

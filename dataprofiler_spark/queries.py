@@ -501,86 +501,6 @@ def dedup_exact_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "token_counts_documents",
-    """SELECT doc_id, len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_tokens,
-  -- COALESCE: list_aggregate([], 'sum') is NULL in DuckDB while the
-  -- engine's F.aggregate fold starts at 0 — empty/whitespace-only docs
-  -- (reachable since the whitespace-robust tokenizer, gotcha 41) must
-  -- read 0 on both sides
-  CAST(COALESCE(list_aggregate(list_transform(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),
-       w -> CAST(ceil(len(w) / 4.0) AS BIGINT)), 'sum'), 0) AS BIGINT) AS n_tokens_bpe
-FROM documents""",
-)
-def token_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataprofiler_spark.operators.textstats import bpe_token_estimate, token_count
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count("text").alias("n_tokens"),
-        bpe_token_estimate("text").alias("n_tokens_bpe"),
-    )
-
-
-@register(
-    "fingerprint_documents",
-    """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint
-FROM documents""",
-)
-def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataprofiler_spark.operators.textstats import fingerprint
-
-    docs = load_table(spark, sf_dir, "documents")
-    return fingerprint(docs).select("doc_id", "fingerprint")
-
-
-def _lang_id_sql() -> str:
-    from dataprofiler_spark.operators.textstats import LANG_MARKERS
-
-    hit_selects = "\nUNION ALL\n".join(
-        f"""SELECT doc_id, '{code}' AS lang, len(list_filter(ws, x -> list_contains({list(markers)!r}, x))) AS h FROM w"""
-        for code, markers in sorted(LANG_MARKERS.items())
-    )
-    return f"""WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM documents),
-hits AS ({hit_selects}),
-ranked AS (SELECT doc_id, lang, h,
-           ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY h DESC, lang ASC) AS rn FROM hits)
-SELECT CASE WHEN h > 0 THEN lang ELSE 'und' END AS lang_pred, COUNT(*) AS cnt
-FROM ranked WHERE rn = 1 GROUP BY 1"""
-
-
-@register("lang_id_documents", _lang_id_sql())
-def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-token language-ID heuristic, rolled up to counts per
-    predicted language."""
-    from dataprofiler_spark.operators.textstats import lang_id
-
-    docs = load_table(spark, sf_dir, "documents")
-    return lang_id(docs).groupBy("lang_pred").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-@register(
-    "text_quality_documents",
-    """WITH w AS (SELECT doc_id,
-  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM documents)
-SELECT doc_id,
-  CAST(len(ws) AS BIGINT) AS n_words,
-  ROUND(len(list_distinct(ws)) * 1.0 / len(ws), 6) AS distinct_word_ratio,
-  ROUND(len(list_filter(ws,
-        x -> list_contains(['the','and','of','to','value','table','row'], x))) * 1.0
-        / len(ws), 6) AS stopword_ratio
-FROM w""",
-)
-def text_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataprofiler_spark.operators.textstats import quality_features
-
-    docs = load_table(spark, sf_dir, "documents")
-    return quality_features(docs).select(
-        "doc_id", "n_words", "distinct_word_ratio", "stopword_ratio"
-    )
-
-
 def _simhash_pairs_sql(bits: int = 60, max_hamming: int = 3) -> str:
     """DuckDB oracle reproducing simhash() bit-for-bit: same md5-prefix
     60-bit token hash, same ±1 bit counters, same sign rule. The oracle
@@ -1138,77 +1058,6 @@ def incremental_profile_merge_documents(spark: SparkSession, sf_dir: str) -> Dat
         "column_name", "row_count", "not_null_count", "min_value", "max_value",
         "avg_value", "stddev_pop",
         (F.abs(F.col("distinct_est") - exact_dc) <= exact_dc * 0.1 + 1).alias("distinct_ok"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Corpus curation composite: quality gate → exact-dedup survivors → per-lang
-# budget rollup — the operators composing into the end-to-end curation job
-# a training-data pipeline actually runs
-# --------------------------------------------------------------------------
-
-_CURATION_SQL = """WITH q AS (
-  SELECT doc_id, lang, text,
-    len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS n_words,
-    ROUND(len(list_distinct(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''))) * 1.0 / len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')), 6) AS dwr
-  FROM documents),
-quality AS (SELECT * FROM q WHERE n_words >= 10 AND dwr >= 0.3),
-fp AS (SELECT *, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint FROM quality),
-kept AS (SELECT * FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn FROM fp) WHERE rn = 1),
-counts AS (
-  SELECT i.lang,
-    COUNT(*) AS n_input,
-    CAST(SUM(CASE WHEN qd.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-    CAST(SUM(CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-  FROM documents i
-  LEFT JOIN quality qd ON qd.doc_id = i.doc_id
-  LEFT JOIN kept k ON k.doc_id = i.doc_id
-  GROUP BY i.lang),
-toks AS (
-  SELECT lang, CAST(SUM(CAST(list_aggregate(list_transform(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),
-       w -> CAST(ceil(len(w) / 4.0) AS BIGINT)), 'sum') AS BIGINT)) AS BIGINT) AS kept_tokens_bpe
-  FROM kept GROUP BY lang)
-SELECT c.lang, c.n_input, c.n_quality, c.n_kept, COALESCE(t.kept_tokens_bpe, 0) AS kept_tokens_bpe
-FROM counts c LEFT JOIN toks t ON t.lang = c.lang"""
-
-
-@register("corpus_curation_summary", _CURATION_SQL)
-def corpus_curation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed curation pipeline through the real operators:
-    quality_features gate (n_words ≥ 10, distinct-word ratio ≥ 0.3) →
-    fingerprint-keyed exact-dedup survivors (min doc_id) → per-lang input /
-    post-quality / post-dedup counts + kept BPE-token budget."""
-    from dataprofiler_spark.operators.dedup import dedup_exact
-    from dataprofiler_spark.operators.textstats import (
-        bpe_token_estimate,
-        fingerprint,
-        quality_features,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    q = quality_features(docs)
-    quality = q.filter((F.col("n_words") >= 10) & (F.col("distinct_word_ratio") >= 0.3))
-    kept = dedup_exact(
-        fingerprint(quality.select("doc_id", "lang", "text")), ["fingerprint"], "doc_id"
-    )
-    counts = (
-        docs.alias("i")
-        .join(quality.select(F.col("doc_id").alias("qid")), F.col("i.doc_id") == F.col("qid"), "left")
-        .join(kept.select(F.col("doc_id").alias("kid")), F.col("i.doc_id") == F.col("kid"), "left")
-        .groupBy("i.lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_input"),
-            F.sum(F.col("qid").isNotNull().cast("int")).cast("long").alias("n_quality"),
-            F.sum(F.col("kid").isNotNull().cast("int")).cast("long").alias("n_kept"),
-        )
-    )
-    toks = kept.groupBy("lang").agg(
-        F.sum(bpe_token_estimate("text")).cast("long").alias("kept_tokens_bpe")
-    )
-    return counts.join(toks, "lang", "left").select(
-        "lang", "n_input", "n_quality", "n_kept",
-        F.coalesce("kept_tokens_bpe", F.lit(0)).alias("kept_tokens_bpe"),
     )
 
 
@@ -2081,31 +1930,6 @@ def paragraph_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paragraph_dedup(synth, "doc_id")
 
 
-@register(
-    "zipf_fit_documents",
-    """WITH words AS (
-  SELECT w FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS w FROM documents)
-  WHERE w <> ''),
-counts AS (SELECT w, COUNT(*) AS cnt FROM words GROUP BY w),
-top AS (SELECT w, cnt FROM counts ORDER BY cnt DESC, w LIMIT 1000),
-xy AS (SELECT ln(ROW_NUMBER() OVER (ORDER BY cnt DESC, w)) AS x,
-              ln(cnt) AS y FROM top),
-a AS (SELECT COUNT(*) AS n_ranks, covar_pop(x, y) AS cov, var_pop(x) AS vx,
-             var_pop(y) AS vy, avg(x) AS mx, avg(y) AS my FROM xy)
-SELECT n_ranks, ROUND(cov / NULLIF(vx, 0), 6) AS slope,
-       ROUND(my - (cov / NULLIF(vx, 0)) * mx, 6) AS intercept,
-       ROUND(cov * cov / NULLIF(vx * vy, 0), 6) AS r2
-FROM a""",
-)
-def zipf_fit_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law fit over the documents corpus word-frequency head — the
-    corpus-quality diagnostic (slope ≈ -1 on natural text). Window membership: see
-    _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.textstats import zipf_fit
-
-    return zipf_fit(load_table(spark, sf_dir, "documents"))
-
-
 _PARA_LSH_PREFIX = """synth AS (
   SELECT a.doc_id, a.text || chr(10) || b.text AS text
   FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
@@ -2416,7 +2240,7 @@ def dup_group_size_histogram_documents(spark: SparkSession, sf_dir: str) -> Data
 # external row when the window was last rotated, then (2) the entries
 # whose operator or oracle changed after their last external row (the
 # whitespace-robust tokenizer and the explode_outer sweep touched the
-# word-level and dedup plans; the drift statistics merge baseline and
+# dedup plans; the drift statistics merge baseline and
 # current with one tagged-union aggregate, not a full-outer join), then
 # (3) two late entries with no external row, followed by the head of the
 # tail in registration order.
@@ -2447,18 +2271,13 @@ _NEVER_HARVESTED = [
 # (2) green before, but their operator or oracle changed since their last
 # external row
 _CHANGED_THIS_ROUND = [
-    "token_counts_documents",
-    "text_quality_documents",
-    "lang_id_documents",
     "contamination_documents",
-    "zipf_fit_documents",
     "minhash_lsh_pairs_documents",
     "dedup_clusters_documents",
     "dedup_clusters_string_ids",
     "simhash_near_dup_documents",
     "ngram_jaccard_pairs_documents",
     "edit_distance_near_pairs",
-    "corpus_curation_summary",
     "paragraph_dedup_documents",
     "psi_chi2_nchars_split",
     "ks_nchars_split",
@@ -2466,11 +2285,10 @@ _CHANGED_THIS_ROUND = [
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row, then the first twenty-two tail
-# entries in registration order: deleting the packing and sampling entries
-# freed eight slots, the similarity entries four and the textstats
-# corpus-statistics entries ten, and the registration-order rule fills
-# them from the head of the tail. expectations_documents and everything
+# (3) late entries with no external row, then the first twenty-seven tail
+# entries in registration order: every slot freed by deleting registry
+# entries (packing, sampling, similarity, textstats) goes to the head of
+# the tail, in registration order. pivot_lang_by_source and everything
 # registered after it stay in the local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
@@ -2486,7 +2304,6 @@ _LATE_NEW = [
     "inventory_drift_langs",
     "growth_slope_events",
     "dedup_exact_prefix_groups",
-    "fingerprint_documents",
     "profile_compare_envs",
     "profile_compare_summary",
     "setop_event_types_except",
@@ -2497,6 +2314,12 @@ _LATE_NEW = [
     "salted_sketch_tolerance_nchars_by_lang",
     "growth_alerts_events_by_type",
     "schema_object_drift_events",
+    "expectations_documents",
+    "array_profile_embeddings",
+    "incremental_profile_merge_documents",
+    "topk_events_per_user",
+    "sessionization_events",
+    "revenue_by_nation",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

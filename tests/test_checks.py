@@ -105,10 +105,10 @@ def test_prefilter_equality_same_counts(spark):
     bad = gen_sequences(spark, N, violations=True)
     ref = gen_sequences(spark, N, violations=False)
     v_full, x_full = verdicts_and_violations(
-        equality_frame(bad, ref, udf_mode="full"), "t", violation_cap=10_000
+        equality_frame(bad, ref, exact=True), "t", violation_cap=10_000
     )
     v_pre, x_pre = verdicts_and_violations(
-        equality_frame(bad, ref, udf_mode="prefilter"), "t", violation_cap=10_000
+        equality_frame(bad, ref, exact=False), "t", violation_cap=10_000
     )
     full = {(r.partition_value): r.violation_count for r in v_full.collect()}
     pre = {(r.partition_value): r.violation_count for r in v_pre.collect()}
@@ -130,7 +130,7 @@ def test_lists_equal_both_null_passes():
 
 def test_null_tokens_same_verdict_both_modes(spark):
     """NULL tokens and NULL token elements must get the SAME verdict from
-    both udf_modes, the one SQL's IS DISTINCT FROM gives: a null-vs-null
+    both equality modes, the one SQL's IS DISTINCT FROM gives: a null-vs-null
     row passes, and [1, NULL] equals [1, NULL] but not [NULL, 1]."""
     df = spark.createDataFrame(
         [(1, None, "a"), (2, [1, 2], "a"), (3, None, "a"),
@@ -141,11 +141,11 @@ def test_null_tokens_same_verdict_both_modes(spark):
         [(1, None), (2, [1, 2]), (3, [9]), (4, [1, None]), (5, [1, None])],
         "doc_id bigint, tokens array<int>",
     )
-    for mode in ("full", "prefilter"):
-        v, _ = verdicts_and_violations(equality_frame(df, ref, udf_mode=mode), "t")
+    for exact in (True, False):
+        v, _ = verdicts_and_violations(equality_frame(df, ref, exact=exact), "t")
         row = v.collect()[0]
-        assert row.violation_count == 2, mode  # doc 3 (null vs value) and doc 5
-        assert row.row_count == 5, mode
+        assert row.violation_count == 2, exact  # doc 3 (null vs value) and doc 5
+        assert row.row_count == 5, exact
 
 
 def test_violation_cap_is_per_check_per_partition(spark):

@@ -679,3 +679,27 @@ def test_shingle_hash_rows_matches_hof_form(spark):
         new = shingle_hash_rows(df, "doc_id", "text", k)
         assert old.exceptAll(new).count() == 0, k
         assert new.exceptAll(old).count() == 0, k
+
+
+def test_contamination_check_planted_leak(spark):
+    """A corpus doc embedding a benchmark 5-gram is flagged with the right
+    shingle counts; clean docs are absent from the report."""
+    from dataprofiler_spark.operators.dedup import contamination_check
+
+    bench = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog")],
+        "doc_id bigint, text string",
+    )
+    corpus = spark.createDataFrame(
+        [
+            (1, "intro text then the quick brown fox jumps over and more words here"),
+            (2, "completely unrelated words with no overlap at all in this document"),
+        ],
+        "doc_id bigint, text string",
+    )
+    rows = {r.doc_id: r for r in contamination_check(corpus, bench, shingle_k=5).collect()}
+    assert set(rows) == {1}
+    # 'the quick brown fox jumps' and 'quick brown fox jumps over' both leak
+    assert rows[1].n_shared_shingles == 2
+    assert rows[1].n_shingles == 9  # 13 words -> 9 distinct 5-grams
+    assert rows[1].overlap_frac == pytest.approx(2 / 9, abs=1e-6)

@@ -237,21 +237,21 @@ def test_uniqueness_and_ri_verdicts_match_sql(tmp_path_factory, rows, ref_rows, 
         k: min(vc, CK_CAP) for k, (_, vc, _) in want.items() if k[1] in CK_ROW_LEVEL and vc
     }
 
-    for mode in ("full", "prefilter"):
+    for exact in (True, False):
         res = run_sequence_suite(
             stored, registered, reference=ref, violation_cap=CK_CAP,
-            null_rate_threshold=null_rate, equality_udf_mode=mode,
+            null_rate_threshold=null_rate, exact=exact,
         )
         got = {
             (r.partition_value, r.check_name): (r.passed, r.violation_count, r.row_count)
             for r in res.verdicts.collect()
         }
-        assert got == want, (mode, got, want)
+        assert got == want, (exact, got, want)
         got_v = {
             (r.partition_value, r.check_name): r["count"]
             for r in res.violations.groupBy("partition_value", "check_name").count().collect()
         }
-        assert got_v == want_v, (mode, got_v, want_v)
+        assert got_v == want_v, (exact, got_v, want_v)
 
 
 @given(
@@ -470,17 +470,11 @@ def test_words_matches_duckdb_on_messy_whitespace(request):
 
 
 def test_word_level_operators_whitespace_robust(request):
-    """token_count / shingles / quality features see through formatting: the
-    same words joined by '\\n' or runs of spaces produce the same values
-    as single-space text."""
+    """word_shingles sees through formatting: the same words joined by
+    '\\n' or runs of spaces produce the same shingles as single-space
+    text."""
     spark = request.getfixturevalue("spark")
-    from pyspark.sql import functions as F
-
     from dataprofiler_spark.operators.dedup import word_shingles
-    from dataprofiler_spark.operators.textstats import (
-        quality_features,
-        token_count,
-    )
 
     pairs = spark.createDataFrame(
         [
@@ -489,15 +483,7 @@ def test_word_level_operators_whitespace_robust(request):
         "doc_id bigint, clean string, messy string",
     )
     row = pairs.select(
-        token_count("clean").alias("nc"),
-        token_count("messy").alias("nm"),
         word_shingles("clean").alias("sc"),
         word_shingles("messy").alias("sm"),
     ).collect()[0]
-    assert row.nc == row.nm == 5
     assert sorted(row.sc) == sorted(row.sm)
-    qc = quality_features(pairs.select("doc_id", F.col("clean").alias("text"))).collect()[0]
-    qm = quality_features(pairs.select("doc_id", F.col("messy").alias("text"))).collect()[0]
-    assert qc.n_words == qm.n_words == 5
-    assert qc.distinct_word_ratio == qm.distinct_word_ratio
-    assert qc.mean_word_len == qm.mean_word_len

@@ -63,14 +63,14 @@ def test_equality_prefilter_shuffles_digests_not_arrays(spark):
     from dataprofiler_spark.sources.synthetic import gen_sequences
 
     a, b = gen_sequences(spark, 1000), gen_sequences(spark, 1000)
-    v, _ = verdicts_and_violations(equality_frame(a, b, udf_mode="prefilter"), "t")
+    v, _ = verdicts_and_violations(equality_frame(a, b, exact=False), "t")
     p = plan_of(v)
     assert "ShuffledHashJoin" in p
     # the join must not ship token arrays through the exchange — the
     # digest projection (xxhash64) happens below the join
     assert "xxhash64" in p
     # no UDF anywhere in the prefilter suite: verdicts nor violations
-    suite = run_sequence_suite(a, gen_sources_ref(spark), reference=b, equality_udf_mode="prefilter")
+    suite = run_sequence_suite(a, gen_sources_ref(spark), reference=b, exact=False)
     for frame in (suite.verdicts, suite.violations):
         assert "ArrowEvalPython" not in plan_of(frame)
 
@@ -79,7 +79,7 @@ def test_equality_full_mode_uses_arrow_udf(spark):
     from dataprofiler_spark.sources.synthetic import gen_sequences
 
     a, b = gen_sequences(spark, 1000), gen_sequences(spark, 1000)
-    v, _ = verdicts_and_violations(equality_frame(a, b, udf_mode="full"), "t")
+    v, _ = verdicts_and_violations(equality_frame(a, b, exact=True), "t")
     # vectorized, never BatchEvalPython — and evaluated once per joined row
     assert plan_of(v).count("ArrowEvalPython") == 1
 
@@ -181,7 +181,7 @@ def test_suite_verdicts_scan_count(spark, tmp_path):
     no_ref = run_sequence_suite(bad, gen_sources_ref(spark))
     assert plan_of(no_ref.verdicts).count("Scan parquet") == 2
     with_ref = run_sequence_suite(
-        bad, gen_sources_ref(spark), reference=ref, equality_udf_mode="prefilter"
+        bad, gen_sources_ref(spark), reference=ref, exact=False
     )
     p = plan_of(with_ref.verdicts)
     assert p.count("Scan parquet") == 4
