@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataprofiler_spark.functions.expressions import words as _ws_words
-from dataprofiler_spark.plans.bloom import bloom_probe, build_digest_bloom, content_hash
+from dataprofiler_spark.plans.bloom import content_hash
 
 # 31-bit Mersenne prime for the minhash universal-hash family: with
 # x, a, b < 2^31 the product a·x stays under 2^62 — no int64 overflow
@@ -267,10 +267,10 @@ def minhash_band_frame(
 ) -> DataFrame:
     """The storable LSH band frame: (key, band_id, band_hash) — `bands`
     narrow fixed-width rows per document, entirely map-side expressions.
-    This is both the internal stage of `lsh_candidate_pairs` and the
-    APPEND-ONLY NEAR-DUP LEDGER for cross-snapshot dedup: persist it per
-    corpus snapshot and new batches probe it via
-    `near_dup_against_history` without ever re-reading history text.
+    This is the internal stage of `lsh_candidate_pairs`; persisted per
+    corpus snapshot, it is also an append-only near-dup ledger that a
+    new batch can join on (band_id, band_hash) without re-reading
+    history text.
 
     Physical shape (deliberate, measured): each pipeline stage (words →
     shingles → shingle hashes → signature) is materialized as a column so
@@ -432,10 +432,10 @@ def _shingle_pair_counts(
     exploded distinct (key, digest) rows ≡ explode(array_distinct(...))
     digested, so sizes, doc-freqs and intersections are unchanged
     (digest-equality in place of string-equality is the standing
-    gotcha-9 convention — cross_source_overlap and the minhash family
-    already count xxhash64 digests). Eager, because the hot set
-    re-enters as a BROADCAST and concurrent broadcast jobs race a lazy
-    checkpoint into double execution (gotcha 44 / cross_source_overlap).
+    gotcha-9 convention — the minhash family already counts xxhash64
+    digests). Eager, because the hot set re-enters as a BROADCAST and
+    concurrent broadcast jobs race a lazy checkpoint into double
+    execution (gotcha 44).
 
     Construction additionally materializes the per-doc size frame
     (it is consumed by both the na and nb join sides)."""
@@ -1088,516 +1088,6 @@ def simhash_near_dup_pairs(
         ).alias("c"),
     ).select("key", "h", "c.chunk_id", "c.chunk")
     return hamming_bucket_pairs(chunks, max_hamming, max_bucket_size)
-
-
-def paragraph_dedup(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
-    """Corpus-global exact paragraph dedup (the C4/RefinedWeb line-dedup
-    pass): split every document on `sep`, keep only the FIRST occurrence
-    of each distinct paragraph — ordered by (document key, paragraph
-    index) — and reassemble the surviving paragraphs per document.
-
-    Returns one row per input document:
-    (key_col, n_paras, n_kept, n_removed, text_out) where n_paras counts
-    the document's non-empty paragraphs (empty pseudo-paragraphs from
-    consecutive separators are dropped outright, same policy as the
-    word-level operators) and text_out is the kept paragraphs re-joined
-    with `sep` in original order ('' when nothing survives).
-
-    Scale shape (10^12-row contract):
-    * first-occurrence selection is ONE explode + ONE hash aggregate:
-      min(struct(key, idx, para)) per paragraph digest. The paragraph
-      TEXT rides inside the min struct, so the survivor row needs no
-      join back to the exploded frame — a digest group's rows collapse
-      map-side (a viral boilerplate paragraph combines before the
-      shuffle), and there is NO rank window over a paragraph's
-      duplicate set. (The first cut joined survivors (digest, key, idx)
-      back to a localCheckpointed paras frame: measured 4.9x slower at
-      32M paragraphs — the checkpoint materialization plus the extra
-      payload shuffle both disappear with the in-aggregate text.)
-    * per-doc totals are a map-side projection
-      (size(filter(split(text)))) on the base frame — the exploded frame
-      has exactly one consumer, so nothing re-executes and nothing needs
-      a checkpoint.
-    * reassembly groups by document key: the only collect_list is a
-      single document's own surviving paragraphs (bounded by document
-      size, the same contract as every per-doc operator here).
-    Measured: 6.6M paragraphs/sec at 32c on a 32M-paragraph synthetic
-    corpus; 2M -> 8M docs scales sub-linearly (fixed overheads dominate
-    the small point).
-    """
-    paras = df.select(
-        F.col(key_col),
-        # outer: split() never yields an empty array, and a plain
-        # posexplode's inferred filter re-runs the split (gotcha 43); the
-        # para != '' filter below drops any NULL row the same way
-        F.posexplode_outer(F.split(F.col(text_col), F.lit(sep))).alias("idx", "para"),
-    ).filter(F.col("para") != "")
-    firsts = paras.groupBy(F.xxhash64("para").alias("__d")).agg(
-        F.min(F.struct(F.col(key_col), F.col("idx"), F.col("para"))).alias("f")
-    )
-    kept = firsts.select(
-        F.col(f"f.{key_col}").alias(key_col),
-        F.col("f.idx").alias("idx"),
-        F.col("f.para").alias("para"),
-    )
-    reassembled = kept.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.concat_ws(
-            sep,
-            F.expr("transform(sort_array(collect_list(struct(idx, para))), x -> x.para)"),
-        ).alias("text_out"),
-    )
-    base = df.select(
-        F.col(key_col),
-        # coalesce: size() of a NULL array (NULL text) is NULL in Spark 4
-        F.coalesce(
-            F.size(F.filter(F.split(F.col(text_col), F.lit(sep)), _nonempty)),
-            F.lit(0),
-        ).alias("n_paras"),
-    )
-    return base.join(reassembled, key_col, "left").select(
-        key_col,
-        "n_paras",
-        F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        (F.col("n_paras") - F.coalesce("n_kept", F.lit(0))).alias("n_removed"),
-        F.coalesce("text_out", F.lit("")).alias("text_out"),
-    )
-
-
-def _nonempty(p: Column) -> Column:
-    """Module-level HOF lambda (default-arg capture breaks PySpark's
-    arity inference — CLAUDE.md gotcha 4)."""
-    return p != F.lit("")
-
-
-def remove_duplicated_spans(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    max_span_doc_freq: int = 2,
-) -> DataFrame:
-    """C4-style duplicated-span REMOVAL: every k-word span occurring in
-    more than `max_span_doc_freq` documents is boilerplate; all word
-    positions covered by ANY boilerplate span are dropped (overlapping
-    spans merge naturally through position coverage) and the document is
-    rebuilt from the surviving words.
-
-    Returns (key_col, n_words, n_removed_words, text_out). Output text
-    is whitespace-NORMALIZED (single spaces — empty pseudo-tokens are
-    gone; documented contract). Documents shorter than shingle_k words
-    emit no spans and pass through untouched.
-
-    Scale shape: ONLY the narrow (key, words) projection is
-    localCheckpointed (its two consumers — the span pipeline and the
-    word rows — would otherwise re-scan the corpus; gotcha 16). The
-    span frame is DERIVED, larger than its source, and deliberately NOT
-    materialized: the first cut checkpointed it too and OOMed the local
-    JVM at 32M spans — re-deriving an explode from the materialized
-    words is CPU-cheap, holding 80M deserialized rows in the block
-    manager is not. Span doc-frequency is a hash aggregate over 64-bit
-    digests (map-side combine; text never shuffles); hot spans come
-    back as a digest semi-join; coverage = explode(sequence(start,
-    start+k-1)) → distinct (key, pos). Totals, removal counts, AND the
-    rebuild fold into ONE per-document aggregate over coverage-flagged
-    word rows (no base re-scan, no left-join of two per-doc frames);
-    the only collect_list is a document's own words."""
-    words_arr = _ws_words(F.col(text_col))
-    # gotcha 45: the span-hash transform is an interpreted chain —
-    # parallelize it past a few-split scan
-    staged = _spread_small_input(df).select(
-        F.col(key_col), words_arr.alias("__ws")
-    ).localCheckpoint(eager=False)
-    n = F.size("__ws")
-    spans = (
-        staged.filter(n >= shingle_k)
-        .select(
-            key_col,
-            # outer: the n >= shingle_k gate makes the span array
-            # non-empty, and a plain explode's inferred filter re-runs
-            # the whole span-hash transform per row (gotcha 43)
-            F.explode_outer(
-                F.expr(
-                    f"transform(sequence(0, size(__ws) - {shingle_k}), "
-                    f"i -> struct(i AS start, "
-                    f"xxhash64(concat_ws(' ', slice(__ws, i + 1, {shingle_k}))) AS h))"
-                )
-            ).alias("sp"),
-        )
-        .select(key_col, "sp.start", "sp.h")
-    )
-    # doc frequency = docs containing the span (distinct per doc first)
-    span_df = (
-        spans.select(key_col, "h")
-        .distinct()
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df_"))
-    )
-    hot = span_df.filter(F.col("df_") > max_span_doc_freq).select("h")
-    covered = (
-        spans.join(hot, "h", "left_semi")
-        .select(
-            key_col,
-            # outer: an ascending k-term sequence is never empty (gotcha 43)
-            F.explode_outer(
-                F.sequence(F.col("start"), F.col("start") + F.lit(shingle_k - 1))
-            ).alias("pos"),
-        )
-        .distinct()
-        .withColumn("__cov", F.lit(True))
-    )
-    # outer explode: a zero-word document keeps one NULL row so it still
-    # reaches the aggregate (n_words = count(w) ignores it)
-    word_rows = staged.select(key_col, F.posexplode_outer("__ws").alias("pos", "w"))
-    flagged = word_rows.join(covered, [key_col, "pos"], "left").select(
-        key_col, "pos", "w", F.coalesce("__cov", F.lit(False)).alias("__cov")
-    )
-    return flagged.groupBy(key_col).agg(
-        F.count("w").cast("int").alias("n_words"),
-        F.sum(F.col("__cov").cast("int")).cast("int").alias("n_removed_words"),
-        F.concat_ws(
-            " ",
-            F.expr(
-                "transform(filter(sort_array(collect_list(struct(pos, w, __cov))), "
-                "x -> NOT x.__cov), x -> x.w)"
-            ),
-        ).alias("text_out"),
-    )
-
-
-def paragraph_near_dup_pairs(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    sep: str = "\n",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Fuzzy paragraph-level near-dup candidates (the RefinedWeb fuzzy
-    line-dedup granularity): explode documents into paragraphs keyed
-    "<doc_key>:<idx>" and run the SAME MinHash-LSH machinery as
-    document-level dedup over them. Pairs are paragraph keys; exact
-    paragraph copies share every band, near-copies most.
-
-    Scale shape: identical to lsh_candidate_pairs (one scan, map-side
-    signatures, (band, hash) bucket groupBy with hot caps) — the explode
-    only multiplies rows by paragraphs/doc before the same pipeline."""
-    paras = df.select(
-        F.col(key_col),
-        # outer: split() never yields an empty array, and a plain
-        # posexplode's inferred filter re-runs the split (gotcha 43); the
-        # para != '' filter below drops any NULL row the same way
-        F.posexplode_outer(F.split(F.col(text_col), F.lit(sep))).alias("idx", "para"),
-    ).filter(F.col("para") != "").select(
-        F.concat(
-            F.col(key_col).cast("string"), F.lit(":"), F.col("idx").cast("string")
-        ).alias("para_key"),
-        F.col("para"),
-    )
-    return lsh_candidate_pairs(
-        paras,
-        "para_key",
-        text_col="para",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        seed=seed,
-        max_bucket_size=max_bucket_size,
-    )
-
-
-def duplication_weights(
-    df: DataFrame,
-    cols: list[str],
-    weight_col: str = "weight",
-    digest_col: str | None = None,
-) -> DataFrame:
-    """Soft dedup: per-row training weight 1 / |exact-dup group| over a
-    content digest of `cols` — instead of DROPPING duplicates, downweight
-    them so each distinct content contributes unit mass to the loss (the
-    standard alternative when dedup would starve rare domains).
-
-    One count window over the 128-bit digest: a single shuffle on narrow
-    (digest) keys, no join-back. A dup group lands in one window task —
-    bounded in practice by the corpus's max copy count; if an adversarial
-    corpus has table-sized dup groups, dedup first (they carry ~no
-    information anyway). Weights are rounded to 6dp (driver-compare
-    convention). `digest_col` keeps the digest for auditing."""
-    d = content_hash(*cols)
-    staged = df.withColumn("__digest", d)
-    w = Window.partitionBy("__digest")
-    out = staged.withColumn(
-        weight_col, F.round(F.lit(1.0) / F.count(F.lit(1)).over(w), 6)
-    )
-    if digest_col:
-        out = out.withColumn(digest_col, F.col("__digest"))
-    return out.drop("__digest")
-
-
-def cluster_weights(
-    assignments: DataFrame,
-    cluster_col: str = "cluster_id",
-    weight_col: str = "weight",
-) -> DataFrame:
-    """Per-row weight 1 / |near-dup cluster| from a dedup_clusters /
-    connected-components assignment frame — soft NEAR-dedup (SemDeDup /
-    D4-style reweighting). Same one-window shape as duplication_weights;
-    near-dup clusters are LSH-bounded (hot-bucket caps upstream), so no
-    funnel."""
-    w = Window.partitionBy(cluster_col)
-    return assignments.withColumn(
-        weight_col, F.round(F.lit(1.0) / F.count(F.lit(1)).over(w), 6)
-    )
-
-
-def dedup_against_history(
-    new_df: DataFrame,
-    history_digests: DataFrame,
-    cols: list[str],
-    key_col: str,
-    digest_col: str = "digest",
-) -> DataFrame:
-    """Incremental EXACT dedup of a new ingestion batch against the
-    append-only digest ledger of everything already in the corpus — the
-    continuous-crawl shape: history text is NEVER re-read or re-shuffled,
-    only its narrow 128-bit digests participate.
-
-    Two stages, both scale-shaped:
-    1. within-batch collapse: one hash aggregate on the content digest;
-       the min-key survivor rides IN the min(struct) buffer (gotcha 36).
-    2. cross-history: left-anti join of the collapsed (digest, survivor)
-       frame against `history_digests[digest_col]` — shuffle of digests
-       only. At 10^11-row ledgers both sides hash-partition on digest;
-       store the ledger bucketed by digest and the exchange on its side
-       disappears entirely.
-
-    Returns one row per NEW distinct content: (digest, survivor_<key>,
-    batch_copies). Appending exactly these digests to the ledger commits
-    the batch — the same commit-after-validate ordering as the resume
-    manifest (plans/manifest.py), which records a partition only after
-    its verdicts are collected."""
-    staged = new_df.withColumn("__digest", content_hash(*cols))
-    collapsed = staged.groupBy(F.col("__digest").alias(digest_col)).agg(
-        F.min(F.col(key_col)).alias(f"survivor_{key_col}"),
-        F.count(F.lit(1)).alias("batch_copies"),
-    )
-    hist = history_digests.select(F.col(digest_col))
-    return collapsed.join(hist, on=digest_col, how="left_anti")
-
-
-def near_dup_against_history(
-    new_df: DataFrame,
-    history_bands: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Incremental NEAR dedup: flag new-batch documents that collide with
-    the historical corpus's MinHash-LSH band ledger (`minhash_band_frame`
-    persisted per snapshot). Returns (key, n_hit_bands, example_hist_key)
-    for flagged docs only — more hit bands ≈ higher Jaccard to something
-    already ingested.
-
-    Scale shape: the history side is pre-aggregated to ONE row per
-    (band_id, band_hash) bucket before the join, so a boilerplate bucket
-    shared by 10^7 historical docs cannot explode the join — the
-    hot-bucket hazard is capped at the bucket-count level, the exact
-    analog of lsh_candidate_pairs' max_bucket_size. Both joins shuffle
-    only fixed-width (band_id, 128-bit hash) keys; no text moves. Store
-    the ledger pre-aggregated (it is idempotent under re-aggregation:
-    min/merge per bucket) and the aggregate is metadata-only."""
-    new_bands = minhash_band_frame(
-        new_df, key_col, text_col,
-        num_hashes=num_hashes, bands=bands, shingle_k=shingle_k, seed=seed,
-    )
-    hist_buckets = history_bands.groupBy("band_id", "band_hash").agg(
-        F.min("key").alias("__hist_key")
-    )
-    hits = new_bands.join(hist_buckets, on=["band_id", "band_hash"], how="inner")
-    return hits.groupBy("key").agg(
-        F.count_distinct("band_id").alias("n_hit_bands"),
-        F.min("__hist_key").alias("example_hist_key"),
-    )
-
-
-def dedup_against_history_bloom(
-    new_df: DataFrame,
-    history_digests: DataFrame,
-    cols: list[str],
-    key_col: str,
-    digest_col: str = "digest",
-    m_bits: int = 1 << 20,
-    k: int = 7,
-) -> DataFrame:
-    """`dedup_against_history` with the Bloom fast path: result-identical
-    (the bloom has no false negatives), but only the maybe-seen sliver of
-    the batch reaches the exact anti-join against the full ledger.
-
-    Typical crawl batches are mostly-new content, so the expensive
-    digest-shuffle join runs over fpp·|new| + |actually-seen| rows
-    instead of |new| — at a 10^12-digest ledger that is the difference
-    between re-shuffling the ledger daily and a broadcast probe.
-
-    The within-batch collapse still sees EVERY row (batch-internal
-    duplicates are invisible to the history bloom), and the two branch
-    results are unioned digest-disjointly: a digest is either
-    definitely-new (skips the join) or maybe-seen (adjudicated exactly)."""
-    probed = bloom_probe(
-        new_df, build_digest_bloom(history_digests, digest_col, m_bits, k),
-        cols, m_bits, k, flag_col="__maybe",
-    )
-    staged = probed.withColumn("__digest", content_hash(*cols))
-    collapsed = staged.groupBy(F.col("__digest").alias(digest_col)).agg(
-        F.min(F.col(key_col)).alias(f"survivor_{key_col}"),
-        F.count(F.lit(1)).alias("batch_copies"),
-        # any copy flagged maybe-seen sends the digest to the exact branch
-        F.max("__maybe").alias("__maybe"),
-    )
-    fresh = collapsed.filter(~F.col("__maybe")).drop("__maybe")
-    suspect = collapsed.filter(F.col("__maybe")).drop("__maybe")
-    hist = history_digests.select(F.col(digest_col))
-    return fresh.unionByName(suspect.join(hist, on=digest_col, how="left_anti"))
-
-
-def cross_source_overlap(
-    df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Pairwise shingle-overlap matrix between corpus sources: for every
-    source pair (a < b), the number of distinct k-word shingles they
-    share, each side's distinct-shingle count, and the Jaccard / overlap
-    coefficients. The corpus-composition view of contamination_check —
-    instead of probing one benchmark, it localizes WHICH sources leak
-    into which (mirror sites, cross-posted content, shared boilerplate)
-    so curation can drop the redundant source rather than dedup doc by
-    doc.
-
-    Returns (source_a, source_b, n_a, n_b, n_common, jaccard,
-    overlap_coef); pairs with zero shared shingles are absent.
-
-    Scale shape: ONE corpus scan — text reduces immediately to distinct
-    (source, shingle-digest) rows (shingles travel as xxhash64 digests,
-    never text, gotcha 9). That frame feeds both the per-source counts
-    and the per-shingle source sets, so it is localCheckpointed once
-    (gotchas 16/24 — it is NARROW, two longs per row, safe to
-    materialize, gotcha 36). Per-shingle source sets are bounded by the
-    number of DISTINCT SOURCES S — a corpus-composition property
-    (10–10^3 in practice), not a function of corpus size — so the pair
-    expansion is ≤ S(S-1)/2 per shingle and the collect_set buffer is
-    S-bounded. Per-source counts are S rows and broadcast back. For
-    S beyond ~10^3, roll sources up (e.g. to eTLD+1 groups) upstream.
-    """
-    staged = _spread_small_input(df).select(
-        F.col(source_col).alias("src"),
-        # digests computed straight from the word tuples (no shingle
-        # strings, no per-doc array_distinct — the stream below is
-        # .distinct()-ed globally)
-        word_shingle_hashes(_ws_words(F.col(text_col)), shingle_k).alias(
-            "__cs_ss"
-        ),
-    )
-    # EAGER checkpoint, deliberately unlike the gotcha-24 default: the
-    # per-source count frames re-enter the plan as BROADCAST subqueries,
-    # and Spark evaluates broadcast jobs concurrently — two lazy
-    # consumers race to compute this frame before either persists it,
-    # doubling the corpus scan (caught by the accumulator plan gate).
-    sh = (
-        staged.select("src", F.explode_outer("__cs_ss").alias("h"))  # gotcha 43
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    per = sh.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
-    sets = sh.groupBy("h").agg(F.sort_array(F.collect_set("src")).alias("srcs"))
-    pairs = (
-        sets.filter(F.size("srcs") >= 2)
-        .select(
-            # outer: size >= 2 makes the expansion non-empty (gotcha 43)
-            F.explode_outer(
-                F.expr(
-                    "flatten(transform(srcs, (a, i) -> "
-                    "transform(slice(srcs, i + 2, size(srcs) - i - 1), "
-                    "b -> struct(a AS source_a, b AS source_b))))"
-                )
-            ).alias("__p")
-        )
-        .groupBy(
-            F.col("__p.source_a").alias("source_a"),
-            F.col("__p.source_b").alias("source_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    pa = per.select(F.col("src").alias("source_a"), F.col("n").alias("n_a"))
-    pb = per.select(F.col("src").alias("source_b"), F.col("n").alias("n_b"))
-    union = F.col("n_a") + F.col("n_b") - F.col("n_common")
-    return (
-        pairs.join(F.broadcast(pa), "source_a")
-        .join(F.broadcast(pb), "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_a",
-            "n_b",
-            "n_common",
-            F.round(F.col("n_common") / union, 6).alias("jaccard"),
-            F.round(F.col("n_common") / F.least("n_a", "n_b"), 6).alias(
-                "overlap_coef"
-            ),
-        )
-    )
-
-
-def duplicate_group_size_histogram(
-    df: DataFrame, cols: list[str] | None = None
-) -> DataFrame:
-    """Distribution of exact-duplicate group sizes: for each group size
-    (1 = unique, 2 = one copy, ...) the number of content groups, the
-    documents they account for, and that share of the corpus. The
-    monitoring rollup over exact_duplicate_groups — a drifting tail
-    (growing mass at size ≥ 2) is the earliest signal of a scraper loop
-    or a mirror joining the crawl, visible without materializing any
-    per-document output.
-
-    Scale shape: ONE scan → digest hash-agg (map-side combine) → a
-    second agg on group_size whose cardinality is tiny (≤ max group
-    size). The histogram frame is localCheckpointed (narrow, bounded)
-    because the corpus-share denominator re-reads it (gotchas 16/24).
-    """
-    cols = cols or ["text"]
-    sizes = (
-        df.select(content_hash(*cols).alias("__d"))
-        .groupBy("__d")
-        .agg(F.count(F.lit(1)).alias("group_size"))
-    )
-    hist = (
-        sizes.groupBy("group_size")
-        .agg(F.count(F.lit(1)).alias("n_groups"))
-        .withColumn("n_docs", F.col("group_size") * F.col("n_groups"))
-        # eager: `total` re-enters the plan as a BROADCAST subquery while
-        # hist is also the stream side — a lazy checkpoint races the
-        # concurrent broadcast job into double-computing the digest
-        # aggregate (gotcha 44; r5 ADVICE item)
-        .localCheckpoint(eager=True)
-    )
-    total = hist.agg(F.sum("n_docs").alias("__t"))
-    return hist.crossJoin(F.broadcast(total)).select(
-        "group_size",
-        "n_groups",
-        "n_docs",
-        F.round(F.col("n_docs") / F.col("__t"), 6).alias("frac_docs"),
-    )
 
 
 def cluster_survivors(

@@ -7,6 +7,10 @@ A False flag is exact (no false negatives); a True flag is a hit or a
 false positive, so a caller settles only the True rows with an exact
 join. Bit positions are md5-derived (h1 + i*h2 mod m), so DuckDB
 reproduces the bitmap bit for bit.
+
+No package code calls the Bloom helpers now; they are kept for the
+sketch-then-confirm resume of ROADMAP Direction 1. `content_hash` is
+the digest behind `operators/dedup.py`'s exact dedup.
 """
 
 from __future__ import annotations
@@ -46,8 +50,8 @@ def build_digest_bloom(
     BROADCAST side by `bloom_probe`.
 
     Why: at the continuous-crawl design point the ledger is 10^10-10^12
-    digests (hundreds of GB narrow). `dedup_against_history` must
-    shuffle-join the daily batch against all of it every run. The bloom
+    digests (hundreds of GB narrow). An exact anti-join must shuffle
+    the daily batch against all of it every run. The bloom
     collapses the ledger to m/64 longs (2^30 bits = 16 MiB — broadcast
     range) read ONCE per ledger compaction; the batch then prefilters
     map-side and only the maybe-seen sliver pays the exact anti-join.

@@ -224,18 +224,17 @@ def growth_slope_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 _P31 = (1 << 31) - 1
 
 
-def _duck_minhash_cte(num_hashes: int, seed: int = 42, source: str = "documents") -> str:
-    """DuckDB CTEs reproducing minhash_signature() bit-for-bit (same md5
-    prefix hash, same LCG-derived (a,b) params). `source` must expose
-    (doc_id, text) — pass a prior CTE name to run at other granularities
-    (e.g. exploded paragraphs)."""
+def _duck_minhash_cte(num_hashes: int, seed: int = 42) -> str:
+    """DuckDB CTEs reproducing minhash_signature() bit-for-bit over the
+    documents table (same md5 prefix hash, same LCG-derived (a,b)
+    params)."""
     from dataprofiler_spark.operators.dedup import _minhash_params
 
     sig_exprs = ", ".join(
         f"list_min(list_transform(hs, x -> (x * {a} + {b}) % {_P31})) AS s{i}"
         for i, (a, b) in enumerate(_minhash_params(num_hashes, seed))
     )
-    return f"""w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM {source}),
+    return f"""w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM documents),
 sh AS (SELECT doc_id, CASE WHEN len(ws) >= 3 THEN list_distinct(list_transform(
          generate_series(1, len(ws)-2), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
        ELSE [array_to_string(ws, ' ')] END AS ss FROM w),
@@ -243,15 +242,13 @@ h AS (SELECT doc_id, list_transform(ss, s -> CAST('0x' || substr(md5(s),1,7) AS 
 sig AS (SELECT doc_id, {sig_exprs} FROM h)"""
 
 
-def _lsh_pairs_sql(
-    num_hashes: int = 16, bands: int = 8, prefix: str = "", source: str = "documents"
-) -> str:
+def _lsh_pairs_sql(num_hashes: int = 16, bands: int = 8) -> str:
     rows = num_hashes // bands
     band_selects = "\nUNION ALL\n".join(
         f"""SELECT doc_id, {b} AS band_id, md5({" || ',' || ".join(f"s{b*rows+r}::VARCHAR" for r in range(rows))}) AS band_hash FROM sig"""
         for b in range(bands)
     )
-    return f"""WITH {prefix}{_duck_minhash_cte(num_hashes, source=source)},
+    return f"""WITH {_duck_minhash_cte(num_hashes)},
 bands AS ({band_selects})
 SELECT DISTINCT a.doc_id AS key1, b.doc_id AS key2
 FROM bands a JOIN bands b USING (band_id, band_hash)
@@ -1884,125 +1881,6 @@ def seasonal_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "paragraph_dedup_documents",
-    """WITH synth AS (
-  SELECT a.doc_id, a.text || chr(10) || b.text AS text
-  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
-base AS (SELECT doc_id, str_split(text, chr(10)) AS ps FROM synth),
-ix AS (SELECT doc_id, unnest(generate_series(1, len(ps))) AS i, ps FROM base),
-paras AS (SELECT doc_id, i - 1 AS idx, ps[i] AS para FROM ix WHERE ps[i] <> ''),
-fdoc AS (SELECT para, MIN(doc_id) AS fd FROM paras GROUP BY para),
-firsts AS (SELECT p.para, p.doc_id AS fd, MIN(p.idx) AS fi
-           FROM paras p JOIN fdoc f ON p.para = f.para AND p.doc_id = f.fd
-           GROUP BY p.para, p.doc_id),
-kept AS (SELECT p.doc_id, p.idx, p.para FROM paras p
-         JOIN firsts f ON p.para = f.para AND p.doc_id = f.fd AND p.idx = f.fi),
-agg AS (SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(para, chr(10) ORDER BY idx) AS text_out
-        FROM kept GROUP BY doc_id),
-totals AS (SELECT doc_id, COUNT(*) AS n_paras FROM paras GROUP BY doc_id)
-SELECT s.doc_id,
-       CAST(COALESCE(t.n_paras, 0) AS BIGINT) AS n_paras,
-       CAST(COALESCE(g.n_kept, 0) AS BIGINT) AS n_kept,
-       CAST(COALESCE(t.n_paras, 0) - COALESCE(g.n_kept, 0) AS BIGINT) AS n_removed,
-       COALESCE(g.text_out, '') AS text_out
-FROM synth s LEFT JOIN totals t USING (doc_id) LEFT JOIN agg g USING (doc_id)""",
-)
-def paragraph_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-global paragraph-level exact dedup (C4/RefinedWeb line-dedup)
-    over a synthesized multi-paragraph corpus: doc k = texts of docs k and
-    k+1 joined by newline, so every text occurs in two docs and the
-    first-occurrence rule must strip the second copy. The oracle replays
-    split/first-occurrence/reassembly on paragraph TEXT; the engine
-    decides on xxhash64 digests — same answer, digests never ride the
-    dedup shuffle as text at scale. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    nxt = docs.select(
-        (F.col("doc_id") - F.lit(1)).alias("doc_id"), F.col("text").alias("text2")
-    )
-    synth = (
-        docs.select("doc_id", "text")
-        .join(nxt, "doc_id")
-        .select("doc_id", F.concat_ws("\n", "text", "text2").alias("text"))
-    )
-    return paragraph_dedup(synth, "doc_id")
-
-
-_PARA_LSH_PREFIX = """synth AS (
-  SELECT a.doc_id, a.text || chr(10) || b.text AS text
-  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
-pb AS (SELECT doc_id, string_split(text, chr(10)) AS ps FROM synth),
-pi AS (SELECT doc_id, unnest(generate_series(1, len(ps))) AS i, ps FROM pb),
-paras AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR) AS doc_id,
-                 ps[i] AS text
-          FROM pi WHERE ps[i] <> ''),
-"""
-
-
-@register(
-    "paragraph_near_dup_pairs_documents",
-    _lsh_pairs_sql(prefix=_PARA_LSH_PREFIX, source="paras"),
-)
-def paragraph_near_dup_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy paragraph-level near-dup candidates over the synthesized
-    two-doc-window corpus: every text occurs as a paragraph in two docs,
-    so exact paragraph copies must collide in every band. Same bit-exact
-    minhash SQL replay as the document-level entry, run at paragraph
-    granularity through the parameterized CTE source. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import paragraph_near_dup_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    nxt = docs.select(
-        (F.col("doc_id") - F.lit(1)).alias("doc_id"), F.col("text").alias("text2")
-    )
-    synth = (
-        docs.select("doc_id", "text")
-        .join(nxt, "doc_id")
-        .select("doc_id", F.concat_ws("\n", "text", "text2").alias("text"))
-    )
-    return paragraph_near_dup_pairs(synth, "doc_id", num_hashes=16, bands=8)
-
-
-@register(
-    "remove_duplicated_spans_documents",
-    """WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws
-           FROM documents),
-spbase AS (SELECT doc_id, unnest(generate_series(0, len(ws) - 3)) AS start, ws
-           FROM w WHERE len(ws) >= 3),
-sp AS (SELECT doc_id, start, array_to_string(ws[start + 1 : start + 3], ' ') AS s
-       FROM spbase),
-sdf AS (SELECT s, COUNT(DISTINCT doc_id) AS df_ FROM sp GROUP BY s),
-hot AS (SELECT s FROM sdf WHERE df_ > 2),
-cov AS (SELECT DISTINCT doc_id, start + u AS pos
-        FROM (SELECT sp.doc_id, sp.start, unnest(generate_series(0, 2)) AS u
-              FROM sp JOIN hot USING (s))),
-wr AS (SELECT doc_id, i - 1 AS pos, ws[i] AS wd
-       FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM w)),
-kept AS (SELECT wr.doc_id, wr.pos, wr.wd FROM wr
-         ANTI JOIN cov ON wr.doc_id = cov.doc_id AND wr.pos = cov.pos),
-reb AS (SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(wd, ' ' ORDER BY pos) AS text_out
-        FROM kept GROUP BY doc_id)
-SELECT w.doc_id, CAST(len(ws) AS INT) AS n_words,
-       CAST(len(ws) - COALESCE(reb.n_kept, 0) AS INT) AS n_removed_words,
-       COALESCE(reb.text_out, '') AS text_out
-FROM w LEFT JOIN reb USING (doc_id)""",
-)
-def remove_duplicated_spans_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style duplicated-span removal over the documents corpus (hot
-    3-grams in > 2 docs dropped with overlap-merged coverage). The
-    engine decides on xxhash64 span digests; the oracle replays on span
-    TEXT. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import remove_duplicated_spans
-
-    return remove_duplicated_spans(
-        load_table(spark, sf_dir, "documents"), "doc_id", shingle_k=3, max_span_doc_freq=2
-    )
-
-
-@register(
     "frequent_values_documents",
     """WITH pairs AS (
   SELECT 'lang' AS column_name, CAST(lang AS VARCHAR) AS value FROM documents
@@ -2023,128 +1901,6 @@ def frequent_values_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return frequent_values(docs, ["lang", "source"], k=5)
-
-
-@register(
-    "duplication_weights_documents",
-    """SELECT doc_id,
-       ROUND(1.0 / COUNT(*) OVER (PARTITION BY md5(substr(text, 1, 20))), 6) AS weight
-FROM documents""",
-)
-def duplication_weights_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soft dedup: per-row training weight 1/|exact-dup group| on the
-    20-char content-prefix digest (same group key as
-    dedup_exact_prefix_groups) — downweight duplicates instead of
-    dropping them, so each distinct content contributes unit loss mass.
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import duplication_weights
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select("doc_id", F.substring("text", 1, 20).alias("prefix"))
-    return duplication_weights(staged, ["prefix"]).select("doc_id", "weight")
-
-
-@register(
-    "dedup_against_history_documents",
-    """WITH hist AS (SELECT DISTINCT md5(substr(text, 1, 20)) AS digest
-                 FROM documents WHERE doc_id % 3 = 0),
-newb AS (SELECT doc_id, md5(substr(text, 1, 20)) AS digest
-         FROM documents WHERE doc_id % 3 <> 0),
-coll AS (SELECT digest, MIN(doc_id) AS survivor_doc_id, COUNT(*) AS batch_copies
-         FROM newb GROUP BY digest)
-SELECT digest, survivor_doc_id, batch_copies FROM coll
-WHERE digest NOT IN (SELECT digest FROM hist)""",
-)
-def dedup_against_history_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact dedup of a new ingestion batch (doc_id%3≠0)
-    against the digest ledger of the already-ingested corpus (doc_id%3=0):
-    within-batch collapse + digest-only anti-join — history text never
-    re-read. 20-char prefix digest manufactures cross-snapshot collisions
-    at test scale (same convention as dedup_exact_prefix_groups).
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import dedup_against_history
-    from dataprofiler_spark.plans.bloom import content_hash
-
-    docs = load_table(spark, sf_dir, "documents")
-    prefix = F.substring("text", 1, 20)
-    hist = docs.filter(F.col("doc_id") % 3 == 0).select(
-        content_hash(prefix).alias("digest")
-    )
-    new = docs.filter(F.col("doc_id") % 3 != 0).select(
-        "doc_id", prefix.alias("prefix")
-    )
-    return dedup_against_history(new, hist, ["prefix"], "doc_id")
-
-
-def _near_dup_history_sql(num_hashes: int = 16, bands: int = 8) -> str:
-    rows = num_hashes // bands
-    band_selects = "\nUNION ALL\n".join(
-        f"""SELECT doc_id, {b} AS band_id, md5({" || ',' || ".join(f"s{b*rows+r}::VARCHAR" for r in range(rows))}) AS band_hash FROM sig"""
-        for b in range(bands)
-    )
-    return f"""WITH {_duck_minhash_cte(num_hashes)},
-bands AS ({band_selects}),
-hb AS (SELECT band_id, band_hash, MIN(doc_id) AS hk FROM bands
-       WHERE doc_id % 3 = 0 GROUP BY band_id, band_hash),
-nb AS (SELECT doc_id, band_id, band_hash FROM bands WHERE doc_id % 3 <> 0)
-SELECT nb.doc_id AS key, COUNT(DISTINCT nb.band_id) AS n_hit_bands,
-       MIN(hb.hk) AS example_hist_key
-FROM nb JOIN hb USING (band_id, band_hash) GROUP BY nb.doc_id"""
-
-
-@register("near_dup_history_documents", _near_dup_history_sql())
-def near_dup_history_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental NEAR dedup: new batch (doc_id%3≠0) probed against the
-    historical MinHash band ledger (doc_id%3=0, minhash_band_frame) —
-    bit-exact signature replay in SQL, history pre-aggregated to one row
-    per band bucket before the join (hot-bucket explosion guard).
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import (
-        minhash_band_frame,
-        near_dup_against_history,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    ledger = minhash_band_frame(
-        docs.filter(F.col("doc_id") % 3 == 0), "doc_id", num_hashes=16, bands=8
-    )
-    return near_dup_against_history(
-        docs.filter(F.col("doc_id") % 3 != 0), ledger, "doc_id",
-        num_hashes=16, bands=8,
-    )
-
-
-@register(
-    "dedup_history_bloom_documents",
-    """WITH hist AS (SELECT DISTINCT md5(substr(text, 1, 20)) AS digest
-                 FROM documents WHERE doc_id % 3 = 0),
-newb AS (SELECT doc_id, md5(substr(text, 1, 20)) AS digest
-         FROM documents WHERE doc_id % 3 <> 0),
-coll AS (SELECT digest, MIN(doc_id) AS survivor_doc_id, COUNT(*) AS batch_copies
-         FROM newb GROUP BY digest)
-SELECT digest, survivor_doc_id, batch_copies FROM coll
-WHERE digest NOT IN (SELECT digest FROM hist)""",
-)
-def dedup_history_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Bloom-prefiltered history dedup, adjudicated against the PLAIN
-    exact-dedup oracle (same fixture as dedup_against_history_documents):
-    the bloom fast path must be result-IDENTICAL — no false negatives by
-    construction, false positives resolved by the exact anti-join. At the
-    10^12-digest ledger design point the bloom (one broadcast bitmap,
-    probed map-side) replaces the daily ledger re-shuffle for the
-    mostly-new bulk of each crawl batch. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import dedup_against_history_bloom
-    from dataprofiler_spark.plans.bloom import content_hash
-
-    docs = load_table(spark, sf_dir, "documents")
-    prefix = F.substring("text", 1, 20)
-    hist = docs.filter(F.col("doc_id") % 3 == 0).select(
-        content_hash(prefix).alias("digest")
-    )
-    new = docs.filter(F.col("doc_id") % 3 != 0).select(
-        "doc_id", prefix.alias("prefix")
-    )
-    return dedup_against_history_bloom(new, hist, ["prefix"], "doc_id")
 
 
 @register(
@@ -2174,62 +1930,6 @@ def source_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return category_diversity(load_table(spark, sf_dir, "documents"), "source")
 
 
-@register(
-    "cross_source_overlap_documents",
-    """WITH w AS (SELECT source, list_filter(regexp_split_to_array(text, '\\s+'),
-                x -> x <> '') AS ws FROM documents),
-sh AS (SELECT source, CASE WHEN len(ws) >= 3 THEN list_distinct(list_transform(
-         generate_series(1, len(ws) - 2), i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]))
-       ELSE [array_to_string(ws, ' ')] END AS ss FROM w),
-ex AS (SELECT DISTINCT src, s
-       FROM (SELECT source AS src, unnest(ss) AS s FROM sh)),
-per AS (SELECT src, COUNT(*) AS n FROM ex GROUP BY src),
-common AS (SELECT a.src AS source_a, b.src AS source_b, COUNT(*) AS n_common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.src < b.src
-           GROUP BY a.src, b.src)
-SELECT source_a, source_b, CAST(pa.n AS BIGINT) AS n_a,
-       CAST(pb.n AS BIGINT) AS n_b, CAST(n_common AS BIGINT) AS n_common,
-       ROUND(n_common * 1.0 / (pa.n + pb.n - n_common), 6) AS jaccard,
-       ROUND(n_common * 1.0 / LEAST(pa.n, pb.n), 6) AS overlap_coef
-FROM common JOIN per pa ON pa.src = source_a
-JOIN per pb ON pb.src = source_b""",
-)
-def cross_source_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise distinct-shingle overlap between sources (Jaccard +
-    overlap coefficient): localizes WHICH sources leak into which.
-    Engine decides on xxhash64 digests, oracle replays on shingle text
-    (the convention of the other shingle oracles); the oracle self-join
-    is fine at sf0.01 while the engine uses the S-bounded collect_set
-    expansion.
-    Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import cross_source_overlap
-
-    return cross_source_overlap(load_table(spark, sf_dir, "documents"))
-
-
-@register(
-    "dup_group_size_histogram_documents",
-    """WITH g AS (SELECT text, COUNT(*) AS group_size FROM documents GROUP BY text),
-h AS (SELECT group_size, COUNT(*) AS n_groups FROM g GROUP BY group_size),
-t AS (SELECT SUM(group_size * n_groups) AS tot FROM h)
-SELECT CAST(group_size AS BIGINT) AS group_size,
-       CAST(n_groups AS BIGINT) AS n_groups,
-       CAST(group_size * n_groups AS BIGINT) AS n_docs,
-       ROUND(group_size * n_groups * 1.0 / tot, 6) AS frac_docs
-FROM h CROSS JOIN t""",
-)
-def dup_group_size_histogram_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate group-size distribution over document text — the
-    scraper-loop / mirror-join early-warning rollup (digest hash-agg →
-    tiny histogram agg; no per-doc output). Local-only tail by choice
-    (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import duplicate_group_size_histogram
-
-    return duplicate_group_size_histogram(
-        load_table(spark, sf_dir, "documents"), ["text"]
-    )
-
-
 # --------------------------------------------------------------------------
 # Harvest ordering (gotchas 20/26).
 #
@@ -2257,15 +1957,8 @@ HARVEST_BUDGET = 50
 # (1) entries with no external CORRECTNESS row, in registration order —
 # these MUST lead the window
 _NEVER_HARVESTED = [
-    "paragraph_near_dup_pairs_documents",
-    "remove_duplicated_spans_documents",
     "frequent_values_documents",
-    "duplication_weights_documents",
-    "dedup_against_history_documents",
-    "near_dup_history_documents",
-    "dedup_history_bloom_documents",
     "source_diversity_documents",
-    "cross_source_overlap_documents",
 ]
 
 # (2) green before, but their operator or oracle changed since their last
@@ -2278,18 +1971,18 @@ _CHANGED_THIS_ROUND = [
     "simhash_near_dup_documents",
     "ngram_jaccard_pairs_documents",
     "edit_distance_near_pairs",
-    "paragraph_dedup_documents",
     "psi_chi2_nchars_split",
     "ks_nchars_split",
     "jsd_nchars_split",
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row, then the first twenty-seven tail
+# (3) late entries with no external row, then the first thirty-five tail
 # entries in registration order: every slot freed by deleting registry
-# entries (packing, sampling, similarity, textstats) goes to the head of
-# the tail, in registration order. pivot_lang_by_source and everything
-# registered after it stay in the local-only tail
+# entries (packing, sampling, similarity, textstats, the corpus-level
+# dedup operators) goes to the head of the tail, in registration order.
+# corr_lineitem_by_returnflag and everything registered after it stay in
+# the local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
     "ngram_containment_pairs_documents",
@@ -2320,6 +2013,14 @@ _LATE_NEW = [
     "topk_events_per_user",
     "sessionization_events",
     "revenue_by_nation",
+    "pivot_lang_by_source",
+    "profile_events",
+    "profile_customer",
+    "quantiles_lineitem_by_returnflag",
+    "event_value_deltas",
+    "entropy_source_by_lang",
+    "daily_anomalies_events",
+    "json_extract_events",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

@@ -26,14 +26,15 @@ _CODEGEN_CACHE_ENTRIES = 2000
 def _ensure_driver_jit_flags() -> None:
     """Let HotSpot JIT-compile large generated methods in the local JVM.
 
-    Whole-stage codegen for wide expressions (a 64-term unrolled dot
-    product, the 84-conditional-sum threshold sweep, wide profile
-    aggregates) can emit a single method past HotSpot's huge-method
+    Whole-stage codegen for wide expressions (the one-pass profile
+    aggregate over every column, the constraint suite's one check
+    aggregate) can emit a single method past HotSpot's huge-method
     threshold (~8000 bytecodes); the JVM then refuses to JIT it and the
     hot loop runs in the BYTECODE INTERPRETER — measured 16× on a
-    25 M-pair, 64-dim cosine scoring stage (32.2 s → 2.0 s, see
-    OPTIMIZATION_r06.md). The flag rides JAVA_TOOL_OPTIONS, set only
-    when no JVM exists yet, rather than `spark.driver.extraJavaOptions`:
+    25 M-pair, 64-dim cosine scoring stage of an operator since removed
+    (32.2 s → 2.0 s, see OPTIMIZATION_r06.md). The flag rides
+    JAVA_TOOL_OPTIONS, set only when no JVM exists yet, rather than
+    `spark.driver.extraJavaOptions`:
     a builder-set value of that key does reach the driver JVM, but a
     caller's `extra_conf` entry for the same key (perfbench passes
     `-Xms1g`) replaces ours instead of adding to it.
@@ -61,7 +62,8 @@ def get_spark(
     shuffle coalescing + skew-join splitting), Arrow on (all pandas-UDF
     traffic is Arrow batches), UTC session TZ (oracle comparability),
     a codegen cache that holds a whole validation run's generated
-    classes, so repeated runs and micro-batches reuse them, and no
+    classes, so a later run_validation in the same process (a resume
+    run, a benchmark repeat) reuses them, and no
     per-call Python call-site capture while plans are built.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")

@@ -322,175 +322,6 @@ def test_exact_duplicate_groups_capped_keys(spark):
     assert full[20] == list(range(20))
 
 
-def test_paragraph_dedup_first_occurrence(spark):
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    rows = [
-        (1, "alpha\nbeta\ngamma"),
-        (2, "beta\ndelta"),
-        (3, "delta\n\nalpha\nepsilon"),  # empty pseudo-para dropped
-        (4, ""),  # no non-empty paragraphs at all
-        (5, "beta\nbeta"),  # every copy already seen at doc 1
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    out = {r.doc_id: r for r in paragraph_dedup(df, "doc_id").collect()}
-    assert out[1].text_out == "alpha\nbeta\ngamma" and out[1].n_removed == 0
-    assert out[2].text_out == "delta" and out[2].n_removed == 1
-    assert (out[3].n_paras, out[3].n_kept, out[3].text_out) == (3, 1, "epsilon")
-    assert (out[4].n_paras, out[4].text_out) == (0, "")
-    assert (out[5].n_kept, out[5].n_removed) == (0, 2)
-
-
-def test_paragraph_dedup_within_doc_duplicate(spark):
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    # a paragraph repeated INSIDE one doc keeps only its first index
-    df = spark.createDataFrame(
-        [(7, "x\ny\nx\nz\nx")], "doc_id int, text string"
-    )
-    out = paragraph_dedup(df, "doc_id").collect()[0]
-    assert out.text_out == "x\ny\nz"
-    assert (out.n_paras, out.n_kept, out.n_removed) == (5, 3, 2)
-
-
-def test_paragraph_dedup_string_keys_order(spark):
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    # first occurrence is ordered by (key, idx) under the key's own type
-    # ordering — string keys order lexicographically
-    df = spark.createDataFrame(
-        [("b", "dup"), ("a", "dup\nown")], "doc_id string, text string"
-    )
-    out = {r.doc_id: r for r in paragraph_dedup(df, "doc_id").collect()}
-    assert out["a"].text_out == "dup\nown"
-    assert out["b"].text_out == "" and out["b"].n_removed == 1
-
-
-def test_paragraph_dedup_no_rank_window(spark):
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    df = spark.createDataFrame([(1, "a\nb")], "doc_id int, text string")
-    plan = paragraph_dedup(df, "doc_id")._jdf.queryExecution().executedPlan().toString()
-    # the first-occurrence decision must be an aggregate, never a rank
-    # window over a paragraph's (possibly viral) duplicate set
-    assert "Window" not in plan
-
-
-def test_paragraph_dedup_null_text(spark):
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    df = spark.createDataFrame(
-        [(1, None), (2, "keep\nme")], "doc_id int, text string"
-    )
-    out = {r.doc_id: r for r in paragraph_dedup(df, "doc_id").collect()}
-    assert (out[1].n_paras, out[1].n_kept, out[1].n_removed, out[1].text_out) == (0, 0, 0, "")
-    assert out[2].text_out == "keep\nme"
-
-
-def test_remove_duplicated_spans_basic(spark):
-    from dataprofiler_spark.operators.dedup import remove_duplicated_spans
-
-    rows = [
-        (1, "nav home about contact the real content of page one"),
-        (2, "nav home about contact something different entirely here"),
-        (3, "nav home about contact yet another unique body text"),
-        (4, "totally unrelated short doc"),
-        (5, "tiny"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    out = {r.doc_id: r for r in
-           remove_duplicated_spans(df, "doc_id", shingle_k=3, max_span_doc_freq=2).collect()}
-    # the shared 4-word chrome is covered by two overlapping hot 3-grams
-    assert out[1].text_out == "the real content of page one"
-    assert (out[1].n_words, out[1].n_removed_words) == (10, 4)
-    assert out[2].n_removed_words == 4 and out[3].n_removed_words == 4
-    assert out[4].n_removed_words == 0 and out[5].text_out == "tiny"
-
-
-def test_remove_duplicated_spans_whole_doc_covered(spark):
-    from dataprofiler_spark.operators.dedup import remove_duplicated_spans
-
-    df = spark.createDataFrame(
-        [(i, "all rights reserved") for i in range(4)], "doc_id int, text string"
-    )
-    out = remove_duplicated_spans(df, "doc_id", shingle_k=3, max_span_doc_freq=2).collect()
-    for r in out:
-        assert (r.n_words, r.n_removed_words, r.text_out) == (3, 3, "")
-
-
-def test_paragraph_near_dup_pairs_exact_copies_collide(spark):
-    from dataprofiler_spark.operators.dedup import paragraph_near_dup_pairs
-
-    long_a = "the quick brown fox jumps over the lazy dog tonight"
-    long_b = "completely different paragraph about spark query planning"
-    rows = [
-        (1, long_a + "\n" + long_b),
-        (2, long_a + "\nunrelated filler paragraph of words"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    pairs = {(r.key1, r.key2) for r in
-             paragraph_near_dup_pairs(df, "doc_id", num_hashes=16, bands=8).collect()}
-    assert ("1:0", "2:0") in pairs  # the exact copy collides in every band
-    assert all(not (a.startswith("1:1") and b.startswith("2:1")) for a, b in pairs)
-
-
-def test_duplication_weights_inverse_group_size(spark):
-    """Weight = 1/|exact-dup group|: singletons keep full mass, a pair
-    gets 0.5 each, a triple 0.333333 each; per-group mass sums to 1."""
-    from dataprofiler_spark.operators.dedup import duplication_weights
-
-    rows = [(1, "a"), (2, "b"), (3, "b"), (4, "c"), (5, "c"), (6, "c")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {r.doc_id: r.weight
-           for r in duplication_weights(df, ["text"]).collect()}
-    assert out[1] == 1.0
-    assert out[2] == out[3] == 0.5
-    assert out[4] == out[5] == out[6] == 0.333333
-
-
-def test_cluster_weights_from_dedup_clusters(spark):
-    """cluster_weights composes with the dedup_clusters assignment frame:
-    every member of a near-dup cluster is downweighted by cluster size."""
-    from dataprofiler_spark.operators.dedup import cluster_weights, dedup_clusters
-
-    base = " ".join(f"tok{i}" for i in range(40))
-    b = base.replace("tok5", "x5")
-    c = b.replace("tok35", "y35")
-    df = spark.createDataFrame(
-        [(1, base), (2, b), (3, c)], "doc_id bigint, text string"
-    )
-    clusters = dedup_clusters(df, "doc_id", num_hashes=16, bands=8)
-    out = {r.node: r.weight
-           for r in cluster_weights(clusters, cluster_col="component").collect()}
-    assert out == {1: 0.333333, 2: 0.333333, 3: 0.333333}
-
-
-def test_near_dup_against_history_band_collision(spark):
-    """A new doc that is a near-copy of a historical doc collides with the
-    stored band ledger; unrelated docs do not. Exact copies hit ALL bands."""
-    from dataprofiler_spark.operators.dedup import (
-        minhash_band_frame,
-        near_dup_against_history,
-    )
-
-    base = " ".join(f"tok{i}" for i in range(40))
-    near = base.replace("tok5", "x5")
-    hist = spark.createDataFrame([(100, base)], "doc_id bigint, text string")
-    ledger = minhash_band_frame(hist, "doc_id", num_hashes=16, bands=8)
-    new = spark.createDataFrame(
-        [(200, base),   # exact copy -> all 8 bands hit
-         (201, near),   # near copy -> >=1 band hit
-         (202, " ".join(f"other{i}" for i in range(40)))],  # unrelated
-        "doc_id bigint, text string",
-    )
-    out = {r.key: (r.n_hit_bands, r.example_hist_key)
-           for r in near_dup_against_history(new, ledger, "doc_id",
-                                             num_hashes=16, bands=8).collect()}
-    assert out[200] == (8, 100)
-    assert 201 in out and 1 <= out[201][0] <= 8 and out[201][1] == 100
-    assert 202 not in out
-
-
 def test_minhash_band_frame_matches_signature(spark):
     """The band ledger's hashes must equal md5 over the signature slices —
     the persisted-ledger format and the inline pair path stay in lockstep."""
@@ -508,69 +339,6 @@ def test_minhash_band_frame_matches_signature(spark):
         for b in range(2)
     }
     assert bands == expected
-
-
-def test_cross_source_overlap_hand_computed(spark):
-    """Three sources with one known shared shingle: only the overlapping
-    pair appears, with exact distinct-shingle counts and Jaccard /
-    overlap coefficients."""
-    from dataprofiler_spark.operators.dedup import cross_source_overlap
-
-    rows = [
-        (1, "A", "a b c d"),  # shingles: "a b c", "b c d"
-        (2, "B", "a b c x"),  # shingles: "a b c", "b c x"
-        (3, "C", "z z z q"),  # shingles: "z z z", "z z q" — no overlap
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = cross_source_overlap(df)
-    pairs = {(r.source_a, r.source_b): r for r in out.collect()}
-    assert set(pairs) == {("A", "B")}
-    r = pairs[("A", "B")]
-    assert (r.n_a, r.n_b, r.n_common) == (2, 2, 1)
-    assert r.jaccard == round(1 / 3, 6)
-    assert r.overlap_coef == 0.5
-
-
-def test_cross_source_overlap_whitespace_robust(spark):
-    """Formatting (newlines/tabs) must not change the overlap matrix —
-    the shingles ride the shared whitespace-robust tokenizer."""
-    from dataprofiler_spark.operators.dedup import cross_source_overlap
-
-    clean = spark.createDataFrame(
-        [(1, "A", "a b c d"), (2, "B", "a b c d")],
-        "doc_id long, source string, text string",
-    )
-    messy = spark.createDataFrame(
-        [(1, "A", "a\nb\tc  d"), (2, "B", "a b\n\nc d")],
-        "doc_id long, source string, text string",
-    )
-    a = cross_source_overlap(clean).collect()[0]
-    b = cross_source_overlap(messy).collect()[0]
-    assert (a.n_a, a.n_b, a.n_common, a.jaccard) == (
-        b.n_a,
-        b.n_b,
-        b.n_common,
-        b.jaccard,
-    )
-    assert a.jaccard == 1.0
-
-
-def test_duplicate_group_size_histogram(spark):
-    """[x,x,x,y,y,z] → one size-3 group, one size-2, one size-1, with
-    corpus shares summing to 1."""
-    from dataprofiler_spark.operators.dedup import duplicate_group_size_histogram
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(["x", "x", "x", "y", "y", "z"])],
-        "doc_id long, text string",
-    )
-    rows = {r.group_size: r for r in duplicate_group_size_histogram(df).collect()}
-    assert {k: (rows[k].n_groups, rows[k].n_docs) for k in rows} == {
-        3: (1, 3),
-        2: (1, 2),
-        1: (1, 1),
-    }
-    assert abs(sum(r.frac_docs for r in rows.values()) - 1.0) < 1e-6
 
 
 def test_cluster_survivors_priority_and_ties(spark):

@@ -332,89 +332,6 @@ def test_psi_jsd_match_sql_on_random_histograms(rows):
             assert abs(got_jsd[g] - round(want_jsd[g], 6)) < 2e-6, (g, got_jsd[g], want_jsd[g])
 
 
-_para_corpus = st.lists(
-    st.lists(
-        st.sampled_from(["alpha", "beta", "gamma", "delta", "", "x y z"]),
-        min_size=0,
-        max_size=5,
-    ),
-    min_size=1,
-    max_size=8,
-)
-
-
-@given(_para_corpus)
-@settings(max_examples=6, deadline=None)
-def test_paragraph_dedup_matches_reference(request, corpus):
-    """paragraph_dedup's min(struct(key, idx)) first-occurrence aggregate
-    must equal the sequential first-seen sweep (docs in key order,
-    paragraphs in index order) on random corpora with empty paragraphs
-    and within-doc repeats."""
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.operators.dedup import paragraph_dedup
-
-    rows = [(k, "\n".join(paras)) for k, paras in enumerate(corpus)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n_paras, r.n_kept, r.n_removed, r.text_out)
-        for r in paragraph_dedup(df, "doc_id").collect()
-    }
-
-    seen: set = set()
-    for k, paras in enumerate(corpus):
-        nonempty = [p for p in paras if p != ""]
-        kept = []
-        for p in nonempty:
-            if p not in seen:
-                seen.add(p)
-                kept.append(p)
-        want = (len(nonempty), len(kept), len(nonempty) - len(kept), "\n".join(kept))
-        assert got[k] == want, (k, got[k], want)
-
-
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["a", "b", "c", "d", "e"]), min_size=0, max_size=8),
-        min_size=1,
-        max_size=7,
-    ),
-    st.integers(1, 3),
-)
-@settings(max_examples=6, deadline=None)
-def test_remove_duplicated_spans_matches_reference(request, corpus, max_df):
-    """Span removal (hot 3-gram coverage merge + rebuild) vs a pure-Python
-    sweep on random short corpora."""
-    spark = request.getfixturevalue("spark")
-    from dataprofiler_spark.operators.dedup import remove_duplicated_spans
-
-    k = 3
-    rows = [(i, " ".join(ws)) for i, ws in enumerate(corpus)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n_words, r.n_removed_words, r.text_out)
-        for r in remove_duplicated_spans(
-            df, "doc_id", shingle_k=k, max_span_doc_freq=max_df
-        ).collect()
-    }
-
-    from collections import Counter
-
-    span_docs = Counter()
-    for i, ws in enumerate(corpus):
-        spans = {" ".join(ws[j : j + k]) for j in range(len(ws) - k + 1)}
-        for s in spans:
-            span_docs[s] += 1
-    hot = {s for s, c in span_docs.items() if c > max_df}
-    for i, ws in enumerate(corpus):
-        covered = set()
-        for j in range(len(ws) - k + 1):
-            if " ".join(ws[j : j + k]) in hot:
-                covered.update(range(j, j + k))
-        kept = [w for j, w in enumerate(ws) if j not in covered]
-        want = (len(ws), len(ws) - len(kept), " ".join(kept))
-        assert got[i] == want, (i, got[i], want)
-
-
 # ---------------------------------------------------------------------------
 # Whitespace-robust tokenization (VERDICT r4 wrong #1): the Spark words()
 # helper and its DuckDB oracle mirror (expressions.WORDS_SQL) must agree

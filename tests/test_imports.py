@@ -81,13 +81,12 @@ def _private_module_names(tree):
                 yield node.lineno, name
 
 
-def test_private_module_names_are_used():
-    """A private module-level helper that no package code loads is dead:
-    deleting its last caller left it behind. A use is a `Name` load, an
-    `Attribute` or a from-import anywhere in the package; mentions in
-    comments or docstrings do not count, and neither do tests."""
+def _private_names_defined_and_used(top):
+    """(file:line, name) of every private module-level name defined under
+    `top`, and the set of names its code loads: a `Name` load, an
+    `Attribute` or a from-import. Comments and docstrings do not count."""
     defined, used = [], set()
-    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+    for path in sorted((ROOT / top).rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
         defined += [
             (f"{path.relative_to(ROOT)}:{line}", name)
@@ -100,6 +99,18 @@ def test_private_module_names_are_used():
                 used.add(node.attr)
             elif isinstance(node, ast.ImportFrom):
                 used.update(alias.name for alias in node.names)
-    assert defined, "found no private module-level names"
-    dead = [f"{where}: {name}" for where, name in defined if name not in used]
+    return defined, used
+
+
+def test_private_module_names_are_used():
+    """A private module-level helper that no code of its own tree loads is
+    dead: deleting its last caller left it behind. The package and the
+    tests are checked apart, so a package helper that only a test loads
+    is dead too, and so is a test strategy or fixture helper that no
+    remaining test loads."""
+    dead = []
+    for top in (PACKAGE, "tests"):
+        defined, used = _private_names_defined_and_used(top)
+        assert defined, f"found no private module-level names under {top}"
+        dead += [f"{where}: {name}" for where, name in defined if name not in used]
     assert not dead, "\n".join(dead)

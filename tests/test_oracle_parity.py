@@ -14,8 +14,6 @@ from tests.oracle_utils import TESTDATA, compare
 # measured-slowest parity cases (multi-stage oracles: recursive CTEs,
 # pairwise replays) — the fast lane skips these
 HEAVY = {
-    "paragraph_near_dup_pairs_documents",
-    "remove_duplicated_spans_documents",
     "dedup_clusters_documents",
     "dedup_clusters_string_ids",
     "cluster_survivors_quality",

@@ -411,46 +411,13 @@ def test_drift_by_group_one_aggregate_no_join(spark, tmp_path_factory):
 
 
 def test_round5_composition_ops_plan_shapes(spark):
-    """category_diversity is a single-scan UDF-free aggregate; the
-    dup-size histogram broadcasts its corpus-total (no shuffled join for a
-    one-row denominator)."""
-    from dataprofiler_spark.operators.dedup import duplicate_group_size_histogram
+    """category_diversity is a single-scan UDF-free aggregate."""
     from dataprofiler_spark.operators.profile import category_diversity
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     p = plan_of(category_diversity(docs, "source"))
     assert p.count("Scan parquet") == 1
     assert "EvalPython" not in p
-
-    h = plan_of(duplicate_group_size_histogram(docs, ["text"]))
-    assert "BroadcastNestedLoopJoin" in h  # total rides a broadcast cross join
-    assert "EvalPython" not in h
-
-
-def test_cross_source_overlap_one_scan_broadcast_counts(spark):
-    """cross_source_overlap must execute its corpus scan exactly ONCE
-    (the distinct (source, digest) frame is localCheckpointed and feeds
-    both the per-source counts and the per-shingle sets — accumulator
-    gate, the CC-test technique) and join the S-bounded per-source count
-    frames back BROADCAST."""
-    from dataprofiler_spark.operators.dedup import cross_source_overlap
-
-    acc = spark.sparkContext.accumulator(0)
-
-    @F.udf("string")
-    def tick(s):
-        acc.add(1)
-        return s
-
-    rows = [(1, "A", "a b c d"), (2, "B", "a b c x"), (3, "C", "z z z q")]
-    base = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    df = base.select("doc_id", "source", tick("text").alias("text"))
-    out = cross_source_overlap(df)
-    assert out.count() == 1
-    assert acc.value == len(rows), acc.value
-    p = plan_of(out)
-    assert p.count("BroadcastHashJoin") == 2  # n_a and n_b count joins
-    assert "SortMergeJoin" not in p
 
 
 def test_fertility_and_survivors_plan_shapes(spark):
