@@ -27,7 +27,7 @@ from dataprofiler_spark.operators.profile import ProfileConfig, profile
 from dataprofiler_spark.pipeline import ValidationConfig, run_validation
 from dataprofiler_spark.plans.manifest import Snapshot, snapshot_from_path
 from dataprofiler_spark.report import FORMATTERS, write_report
-from dataprofiler_spark.sinks import append_rows
+from dataprofiler_spark.sinks import append_rows, local_frame
 from dataprofiler_spark.sources.synthetic import gen_sequences, gen_sources_ref
 
 
@@ -252,7 +252,7 @@ def main(argv: list[str] | None = None) -> int:
 
             from dataprofiler_spark.operators.expectations import suggest_expectations
 
-            suite = suggest_expectations(spark.createDataFrame(rows, prof.schema))
+            suite = suggest_expectations(local_frame(spark, rows, prof.schema))
             with open(args.suggest_expectations, "w") as f:
                 json.dump([asdict(e) for e in suite], f, indent=1)
             print(json.dumps({"expectations_written": args.suggest_expectations,

@@ -18,6 +18,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.sinks import local_frame
+
+
 def _as_number(v) -> float | None:
     """Numeric view of an expectation value: int/float (not bool) pass
     through; numeric strings parse; anything else is None (string compare)."""
@@ -96,9 +99,7 @@ def evaluate_expectations(
         # anchor on a literal row so an expectation naming a column absent
         # from the profile FAILS loudly instead of silently emitting
         # nothing (a typo'd column must never read as "all checks passed")
-        anchor = F.broadcast(
-            spark.createDataFrame([(ex.column,)], "column_name string")
-        )
+        anchor = F.broadcast(local_frame(spark, [(ex.column,)], "column_name string"))
         matched = profile_df.filter(F.col("column_name") == ex.column)
         verdict = anchor.join(matched, "column_name", "left").select(
             F.coalesce(F.col("table_name"), F.lit("<missing_column>")).alias("table_name"),

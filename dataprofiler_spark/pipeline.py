@@ -26,7 +26,7 @@ from dataprofiler_spark.plans.manifest import (
     PartitionRecord,
     Snapshot,
 )
-from dataprofiler_spark.sinks import append_rows, sink_filesystem
+from dataprofiler_spark.sinks import append_rows, local_frame, sink_filesystem
 
 
 @dataclass
@@ -95,7 +95,15 @@ def run_validation(
     `validation_verdicts` and `drift_metrics` are written from the rows
     the run has already collected, one parquet file each per run, with no
     Spark job (`sinks.append_rows`). `output_dir` is resolved first, so a
-    location pyarrow cannot write to fails before any Spark job runs."""
+    location pyarrow cannot write to fails before any Spark job runs.
+
+    The collected results come back as local frames built by
+    `sinks.local_frame`: in-JVM `LocalRelation`s whose scan runs no Spark
+    job and no Python worker. The returned `verdicts` and `drift` are
+    always such frames, `profiles` whenever expectations or `output_dir`
+    are set. A run with `exact=False` therefore starts no Python process,
+    and an exact run starts Python workers only for the token-equality
+    kernel."""
     cfg = cfg or ValidationConfig()
     out = sink_filesystem(cfg.output_dir) if cfg.output_dir else None
     manifest = Manifest(cfg.manifest_dir) if cfg.manifest_dir else None
@@ -133,11 +141,11 @@ def run_validation(
     )
     # profiles is aggregate-sized (partitions × columns). When it feeds
     # more than one consumer (expectation verdicts AND the sink write),
-    # collect ONCE and rebuild a local frame — otherwise the profile scan
-    # re-executes per consumer.
+    # collect ONCE and rebuild it as a local frame, whose scan runs no job
+    # and no Python — otherwise the profile scan re-executes per consumer.
     if expectations or cfg.output_dir:
         profile_rows = profiles.collect()
-        profiles = spark.createDataFrame(profile_rows, profiles.schema)
+        profiles = local_frame(spark, profile_rows, profiles.schema)
 
     suite = run_sequence_suite(
         df,
@@ -190,16 +198,17 @@ def run_validation(
     drift = None
     if drifts:
         # drift frames are group-sized (one row per partition). They feed
-        # BOTH the verdict union and the drift sink — collect each once, so
-        # the histogram scans don't re-execute per consumer, and label its
-        # rows with the check. The frame collected must be the one
-        # drift_by_group returned (perfbench/tracing.py attributes that
-        # collect to the drift layer by frame identity).
+        # BOTH the verdict union and the drift sink — collect each once into
+        # one local frame, so the histogram scans don't re-execute per
+        # consumer, and label its rows with the check. The frame collected
+        # must be the one drift_by_group returned (perfbench/tracing.py
+        # attributes that collect to the drift layer by frame identity).
         drift_rows = [(*r, name) for frame, name in drifts for r in frame.collect()]
         # the schema unionByName would give: a field is nullable if it is
         # in any check's frame
         fields = zip(*(frame.schema for frame, _ in drifts))
-        drift = spark.createDataFrame(
+        drift = local_frame(
+            spark,
             drift_rows,
             StructType(
                 [StructField(f[0].name, f[0].dataType, any(g.nullable for g in f)) for f in fields]
@@ -219,9 +228,10 @@ def run_validation(
 
     # verdict matrix is small (partitions × checks) — safe to collect for
     # the manifest + summary (violation ROWS stay distributed/capped).
-    # Collect ONCE and write the sink from the collected rows.
+    # Collect ONCE, write the sink from the collected rows and return them
+    # as a local frame.
     collected = verdicts.collect()
-    verdict_rows = spark.createDataFrame(collected, verdicts.schema)
+    verdict_rows = local_frame(spark, collected, verdicts.schema)
 
     if out is not None:
         # profiles, verdicts and drift are rows on the driver already:

@@ -9,15 +9,17 @@ layout and sizes the fix (a compaction / repartition target).
 Metadata only: the listing comes from the Hadoop FileSystem API (the same
 listing Spark's planner performs) — NO data or footer bytes are read. The
 listing itself is driver-side O(#files); the stats over it are computed
-distributively from a parallelized frame so a 10M-file listing does not
-need driver-side aggregation beyond the list materialization Spark's own
-catalog would hold anyway.
+by Spark from a local frame (`sinks.local_frame`, in-JVM, no Python
+worker) so a 10M-file listing does not need driver-side aggregation
+beyond the list materialization Spark's own catalog would hold anyway.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dataprofiler_spark.sinks import local_frame
 
 
 def list_data_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> DataFrame:
@@ -35,7 +37,7 @@ def list_data_files(spark: SparkSession, path: str, suffix: str = ".parquet") ->
         p = st.getPath().toString()
         if p.endswith(suffix):
             rows.append((p, int(st.getLen())))
-    return spark.createDataFrame(rows or [], "file_path string, file_bytes long")
+    return local_frame(spark, rows, "file_path string, file_bytes long")
 
 
 def file_layout_report(

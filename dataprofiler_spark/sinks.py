@@ -22,6 +22,9 @@ sinks they already hold as collected rows (profiles, verdicts, drift) with
 `append_rows` instead: one pyarrow parquet file per call and no Spark job.
 Spark and DuckDB read a sink directory that mixes those files with
 Spark-written ones as one table.
+
+`local_frame` turns the same driver-local rows into a Spark frame through
+the same Arrow table, so no frame built on the driver is a Python RDD.
 """
 
 from __future__ import annotations
@@ -37,7 +40,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
 from dataprofiler_spark.functions.expressions import partition_month
 
@@ -79,16 +82,43 @@ def sink_filesystem(uri: str) -> tuple[pafs.FileSystem, str]:
     return pafs.FileSystem.from_uri(uri)
 
 
+def _arrow_table(rows: list, schema: StructType) -> pa.Table:
+    """`rows` as an Arrow table whose schema is `schema` mapped by
+    PySpark's own `to_arrow_schema`, so types and nullability are
+    Spark's. A row is a tuple or Row in `schema`'s column order, or a
+    dict keyed by field name (a missing key is NULL)."""
+    names = schema.fieldNames()
+    return pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A Spark frame over driver-local `rows` (as `_arrow_table` takes
+    them; `schema` may be a DDL string).
+
+    The rows go to the JVM as one Arrow table. Up to
+    `spark.sql.execution.arrow.localRelationThreshold` (48 MB) Spark
+    keeps it as a `LocalRelation`: its scan is a `LocalTableScan` that
+    runs no Spark job, and collecting the frame alone runs none at all.
+    Above that the batches stay in a JVM RDD. Neither starts a Python
+    worker, unlike `createDataFrame(list)`, whose rows are a Python RDD
+    that every plan over it scans in Python."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    return spark.createDataFrame(_arrow_table(rows, schema), schema)
+
+
 def append_rows(
     rows: list, schema: StructType, path: str, fs: pafs.FileSystem | None = None
 ) -> str:
-    """Append driver-local `rows` (tuples or Rows in `schema`'s column
-    order) to the parquet sink directory `path` as ONE new file, and
-    return that file's path. No Spark job runs.
+    """Append driver-local `rows` (as `_arrow_table` takes them) to the
+    parquet sink directory `path` as ONE new file, and return that
+    file's path. No Spark job runs.
 
-    The file's arrow schema is `schema` mapped by PySpark's own
-    `to_arrow_schema`, so types and nullability are Spark's. It is
-    written under a hidden name that neither Spark nor a
+    The file holds `_arrow_table(rows, schema)`, so types and
+    nullability are Spark's. It is written under a hidden name that neither Spark nor a
     `**/*.parquet` glob reads, then moved to a unique
     `part-<uuid>.parquet`: the sink stays append-only and a reader never
     sees a partial file. An empty `rows` still writes a 0-row file that
@@ -96,10 +126,7 @@ def append_rows(
     on (from `sink_filesystem`); without it `path` is resolved here."""
     if fs is None:
         fs, path = sink_filesystem(path)
-    names = schema.fieldNames()
-    table = pa.Table.from_pylist(
-        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
+    table = _arrow_table(rows, schema)
     name = f"part-{uuid.uuid4()}.parquet"
     tmp = f"{path}/.{name}.tmp"
     fs.create_dir(path, recursive=True)
@@ -146,7 +173,7 @@ class MetricsStore:
         self, table_names: list[str], scan_time: float | None = None
     ) -> None:
         """S11: snapshot of the table list (reference main.py:679-703)."""
-        df = self.spark.createDataFrame([(t,) for t in sorted(table_names)], "table_name string")
+        df = local_frame(self.spark, [(t,) for t in sorted(table_names)], "table_name string")
         self.append("table_inventory", df, scan_time)
 
     def append_schema_profile(self, spec, scan_time: float | None = None) -> None:
@@ -154,7 +181,7 @@ class MetricsStore:
         377-457 layout) from a TableSpec, via compare.spec_to_rows."""
         from dataprofiler_spark.operators.compare import spec_to_rows
 
-        df = self.spark.createDataFrame(spec_to_rows(spec), _SCHEMA_PROFILE_DDL)
+        df = local_frame(self.spark, spec_to_rows(spec), _SCHEMA_PROFILE_DDL)
         self.append("schema_profiles", df, scan_time)
 
     def append_schema_objects(
@@ -171,7 +198,7 @@ class MetricsStore:
         rows = objects_to_rows(procedures, views, triggers)
         if not rows:
             return
-        df = self.spark.createDataFrame(rows, _SCHEMA_OBJECT_DDL)
+        df = local_frame(self.spark, rows, _SCHEMA_OBJECT_DDL)
         self.append("schema_objects", df, scan_time)
 
     def object_drift(self, other: "MetricsStore") -> DataFrame:

@@ -177,9 +177,15 @@ def gen_sources_ref(spark: SparkSession) -> DataFrame:
     Includes `empty_src`, a registered source with zero sequence rows, to
     exercise the row_count>0 verdict (reference row-count check precedent:
     /root/reference/src/core/profiler.py:91).
+
+    A local frame (`sinks.local_frame`): every scan of it is in-JVM, with
+    no job and no Python worker.
     """
+    # lazy: sinks imports functions.expressions, which imports this module
+    from dataprofiler_spark.sinks import local_frame
+
     rows = [(name, min_len, min_len + spread) for name, _, min_len, spread in SOURCES]
     rows.append(("empty_src", 0, 0))
-    return spark.createDataFrame(
-        rows, "source string, expected_min_tok int, expected_max_tok int"
+    return local_frame(
+        spark, rows, "source string, expected_min_tok int, expected_max_tok int"
     )

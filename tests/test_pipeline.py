@@ -108,14 +108,63 @@ def test_pipeline_single_execution_with_output_dir(spark, tmp_path):
     # the multi-action phase, then both released
     assert calls["persist"] == 2 and calls["unpersist"] == 2
     # profiles, drift and verdicts are local frames over collected rows:
-    # executing them cannot re-run any input scan
-    for frame in (res.profiles, res.drift, res.verdicts):
+    # executing them cannot re-run any input scan, and each is an in-JVM
+    # LocalTableScan whose collect starts no Spark job at all
+    sc = spark.sparkContext
+    for name in ("profiles", "drift", "verdicts"):
+        frame = getattr(res, name)
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "Scan parquet" not in plan and "Exchange" not in plan, plan
+        assert plan.startswith("LocalTableScan"), (name, plan)
+        group = f"local-frame-collect-{name}"
+        sc.setJobGroup(group, f"collect ValidationResult.{name}")
+        try:
+            assert frame.collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
     # sinks still correct
     assert spark.read.parquet(str(tmp_path / "out" / "violations")).count() > 0
     assert spark.read.parquet(str(tmp_path / "out" / "data_profiles")).count() > 0
     assert spark.read.parquet(str(tmp_path / "out" / "drift_metrics")).count() > 0
+
+
+def test_run_ships_no_rows_through_python(spark, tmp_path, monkeypatch):
+    """A sketch run builds every driver-local frame (registered partitions,
+    profiles, drift, verdicts, expectation anchors) from Arrow, not from a
+    Python list: `createDataFrame(list)` parallelizes pickled rows into a
+    Python RDD whose every scan runs a Python worker."""
+    from pyspark import SparkContext
+
+    from dataprofiler_spark.operators.expectations import Expectation
+
+    parallelized = []
+    parallelize = SparkContext.parallelize
+
+    def recording_parallelize(self, *a, **k):
+        parallelized.append(a)
+        return parallelize(self, *a, **k)
+
+    monkeypatch.setattr(SparkContext, "parallelize", recording_parallelize)
+    bad = gen_sequences(spark, 2_000, violations=True)
+    ref = gen_sequences(spark, 2_000)
+    base_hist = histogram(ref, "n_tok", 16.0, group_by=["source"])
+    base_freq = (
+        ref.select("source", F.explode("tokens").alias("bucket"))
+        .groupBy("source", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    res = run_validation(
+        spark, bad, gen_sources_ref(spark), reference=ref,
+        baseline_hist=base_hist, baseline_token_freq=base_freq,
+        expectations=[Expectation("doc_id", "not_null_proportion", ">=", 1.0)],
+        cfg=ValidationConfig(exact=False, output_dir=str(tmp_path / "out")),
+    )
+    assert res.summary["checks_evaluated"] > 0
+    assert {r.check_name for r in res.verdicts.collect()} >= {
+        "n_tok_drift_psi", "token_freq_drift_psi", "ri_source",
+    }
+    assert parallelized == []
 
 
 def test_collected_sinks_written_from_driver(spark, tmp_path, monkeypatch):

@@ -69,10 +69,14 @@ def test_equality_prefilter_shuffles_digests_not_arrays(spark):
     # the join must not ship token arrays through the exchange — the
     # digest projection (xxhash64) happens below the join
     assert "xxhash64" in p
-    # no UDF anywhere in the prefilter suite: verdicts nor violations
+    # no Python anywhere in the prefilter suite, verdicts nor violations:
+    # no UDF, and the registered partitions are a LocalRelation, not a
+    # Python RDD (Scan ExistingRDD)
     suite = run_sequence_suite(a, gen_sources_ref(spark), reference=b, exact=False)
     for frame in (suite.verdicts, suite.violations):
-        assert "ArrowEvalPython" not in plan_of(frame)
+        plan = plan_of(frame)
+        assert "ArrowEvalPython" not in plan
+        assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_equality_full_mode_uses_arrow_udf(spark):
