@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from dataprofiler_spark import get_spark
 from dataprofiler_spark.operators.drift import histogram
-from dataprofiler_spark.operators.profile import ProfileConfig, profile
-from dataprofiler_spark.pipeline import ValidationConfig, run_validation
+from dataprofiler_spark.operators.profile import profile
+from dataprofiler_spark.pipeline import NTOK_BUCKET_WIDTH, ValidationConfig, run_validation
 from dataprofiler_spark.plans.manifest import Snapshot, snapshot_from_path
 from dataprofiler_spark.report import FORMATTERS, write_report
 from dataprofiler_spark.sinks import append_rows, local_frame
@@ -217,7 +217,7 @@ def main(argv: list[str] | None = None) -> int:
         # histogram + token frequencies (the stored-baseline-profile role
         # of FIXTURES.md §2)
         part = [args.partition_col] if args.partition_col in df.columns else []
-        histogram(df, "n_tok", 16.0, group_by=part).write.mode("overwrite").parquet(
+        histogram(df, "n_tok", NTOK_BUCKET_WIDTH, group_by=part).write.mode("overwrite").parquet(
             f"{args.write_baseline}/n_tok_hist"
         )
         if "tokens" in df.columns:
@@ -235,7 +235,7 @@ def main(argv: list[str] | None = None) -> int:
             df,
             args.table_name,
             group_by=[args.partition_col] if args.partition_col in df.columns else None,
-            cfg=ProfileConfig(exact=not args.approx),
+            exact=not args.approx,
         )
         rows = prof.collect()
         write_report(

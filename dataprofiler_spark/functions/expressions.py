@@ -76,8 +76,8 @@ def words(text: Column | str) -> Column:
     with empty pseudo-tokens removed (leading/trailing whitespace and the
     empty string produce [] — callers dividing by size() must nullif-guard
     under ANSI; the DuckDB mirror WORDS_SQL returns NULL on /0, matching).
-    The ONE tokenizer for every word-level operator (dedup shingles,
-    contamination, span removal) and its oracles."""
+    The ONE tokenizer for every word-level operator (the dedup shingles
+    and MinHash signatures) and its oracles."""
     col = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(col, WORD_SPLIT_PATTERN), _nonempty_word)
 

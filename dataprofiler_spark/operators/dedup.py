@@ -2,23 +2,23 @@
 
 Beyond the reference's surface (it has no dedup at all), these are the
 first-class operators a 100 TB corpus pipeline needs: exact dedup,
-MinHash+LSH near-dup, SimHash, and n-gram Jaccard verification. All are
-pure DataFrame plans — the only shuffles are the groupBys/joins stated in
-each docstring; no Python UDFs anywhere.
+MinHash+LSH near-dup candidates, connected components over the candidate
+pairs, and survivor selection per cluster. All are pure DataFrame plans —
+the only shuffles are the groupBys/joins stated in each docstring; no
+Python UDFs anywhere.
 
 Scale design notes:
 * exact dedup: one shuffle on a 128-bit content hash (not the full text).
 * MinHash LSH: signatures are computed map-side from shingle arrays with
   expression-only hashing; the candidate join shuffles (band_id, band_hash)
   keys — O(rows·bands) small fixed-width rows, never text.
-* n-gram Jaccard: the exact verifier; its shingle self-join is guarded by a
-  document-frequency cap on shingles (hot-shingle quadratic blowup is the
-  classic failure at scale).
+* connected components: narrow (id, id) rounds with lineage truncated
+  every round, or a driver union-find below a bounded edge count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -92,126 +92,19 @@ def dedup_exact(df: DataFrame, cols: list[str], key_col: str) -> DataFrame:
     )
 
 
-def word_shingles(
-    text_col: str | Column, k: int = 3, pre_split: bool = False, distinct: bool = True
-) -> Column:
+def word_shingles(text_col: str | Column, k: int = 3) -> Column:
     """Distinct k-word shingles of a whitespace-tokenized text column —
-    pure array expressions (transform over sequence), no UDF.
-
-    PERF: prefer materializing the split as a column and passing it with
-    pre_split=True — referencing the split expression inside the shingle
-    lambda makes Catalyst inline (and codegen re-evaluate) the split per
-    element access.
-
-    distinct=False skips the per-doc array_distinct — an O(n²) string-
-    compare pass per document — for callers that dedup globally anyway
-    (an exploded (key, shingle) .distinct() yields the identical row
-    set, and its shuffle dedups with map-side partial aggregation)."""
-    if pre_split:
-        words = text_col if isinstance(text_col, Column) else F.col(text_col)
-    else:
-        words = _ws_words(text_col)
+    pure array expressions (transform over sequence), no UDF. A document
+    shorter than k words is one shingle: its whole joined text."""
+    words = _ws_words(text_col)
     n = F.size(words)
     shingle = lambda i: F.concat_ws(  # noqa: E731
         " ", *[F.element_at(words, i + j) for j in range(k)]
     )
-    arr = F.when(
-        n >= k, F.transform(F.sequence(F.lit(1), n - (k - 1)), shingle)
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    return F.array_distinct(arr) if distinct else arr
-
-
-def word_shingle_hashes(words: Column, k: int) -> Column:
-    """xxhash64 per k-word shingle computed straight from the word tuple
-    — no shingle STRING is ever allocated (concat_ws built ~50 bytes per
-    shingle just to hash and discard it). Identity is preserved: words
-    cannot contain whitespace (split on \\s+), so the k-tuple ↔ joined
-    string mapping is a bijection and tuple-hash equality ≡ string-hash
-    equality (absent 64-bit collisions, the standing digest convention).
-    The n<k fallback hashes the whole-doc joined string — such shingles
-    only ever compare against other short-doc shingles, exactly as the
-    string form behaved (a k-word string never equals a <k-word one)."""
-    n = F.size(words)
-    sh = lambda i: F.xxhash64(  # noqa: E731
-        *[F.element_at(words, i + j) for j in range(k)]
-    )
-    return F.when(
-        n >= k, F.transform(F.sequence(F.lit(1), n - (k - 1)), sh)
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", words))))
-
-
-def shingle_hash_rows(
-    df: DataFrame, key_col: str, text_col: str, k: int
-) -> DataFrame:
-    """Exploded (key, s) k-shingle xxhash64 rows — the lead-window form
-    of `explode(word_shingle_hashes(...))`, bit-identical output
-    (verified exceptAll both ways = 0 on the 50k-doc corpus).
-
-    Why not the HOF transform: `transform(sequence(...), i ->
-    xxhash64(element_at(w,i), ...))` is CodegenFallback — an interpreted
-    tree-walk of ~12 nodes per shingle measured 1.25 µs/shingle (3.7 s
-    for 2.6M shingles at 32 cores; the gotcha-15 family). Here the words
-    posexplode (codegen Generate), one window per document orders them,
-    lead(1..k-1) assembles each shingle tuple, and xxhash64 runs inside
-    whole-stage codegen: 0.9 s for the same rows (4×). Scale napkin for
-    the added word shuffle vs the saved interpreted CPU at 10^12
-    shingles on 32 nodes: ~30 TB extra narrow-row shuffle ≈ 310 s of
-    NIC time vs ~2,150 s of saved tree-walk CPU at 512 cores — the
-    shuffle is the cheaper side by ~7× (guide §1.3 napkin math), and it
-    doubles as the parallelism spread (no separate _spread_small_input
-    exchange needed).
-
-    Contract: `key_col` must identify documents uniquely (every caller
-    passes a primary doc key). Two rows sharing a key would interleave
-    in one window partition and lead() across copies — ORDER BY pos
-    cannot break that tie. n < k documents take the whole-doc fallback
-    hash, exactly like word_shingle_hashes.
-
-    Single corpus scan (accumulator-gated): the short-doc fallback rides
-    the SAME window stream instead of a second filtered branch — at a
-    short doc's first row every missing lead is NULL and concat_ws
-    SKIPS nulls, so concat_ws(' ', wd, l1..l_{k-1}) reconstructs the
-    whole document string exactly; an empty doc's posexplode_outer row
-    (pos NULL) concat_ws's to '' — both identical to the HOF fallback's
-    xxhash64(concat_ws(' ', words)).
-    """
-    words_f = df.select(
-        F.col(key_col).alias("key"), _ws_words(F.col(text_col)).alias("__w")
-    )
-    # posexplode_outer: the non-outer form's inferred size()>0 filter
-    # re-evaluates the split chain per row (gotcha 43), and outer keeps
-    # empty docs as a (NULL, NULL) row for the fallback case
-    ex = words_f.select(
-        "key", F.posexplode_outer("__w").alias("__pos", "__wd")
-    )
-    if k == 1:
-        return ex.select(
-            "key",
-            F.when(F.col("__pos").isNotNull(), F.xxhash64("__wd"))
-            .otherwise(F.xxhash64(F.lit("")))
-            .alias("s"),
-        )
-    win = Window.partitionBy("key").orderBy("__pos")
-    lead_names = [f"__l{i}" for i in range(1, k)]
-    staged = ex.select(
-        "key",
-        "__pos",
-        "__wd",
-        *[F.lead("__wd", i).over(win).alias(n) for i, n in enumerate(lead_names, 1)],
-    )
-    full = F.col(lead_names[-1]).isNotNull()
-    first = F.col("__pos").isNull() | (F.col("__pos") == 0)
-    return (
-        staged.select(
-            "key",
-            F.when(full, F.xxhash64("__wd", *lead_names))
-            .when(
-                first,
-                F.xxhash64(F.concat_ws(" ", "__wd", *lead_names)),
-            )
-            .alias("s"),
-        )
-        .filter(F.col("s").isNotNull())
+    return F.array_distinct(
+        F.when(
+            n >= k, F.transform(F.sequence(F.lit(1), n - (k - 1)), shingle)
+        ).otherwise(F.array(F.concat_ws(" ", words)))
     )
 
 
@@ -408,159 +301,6 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
         # Spark versions) — any failure degrades to "no spread", which
         # is always correct
         return df
-
-
-def _shingle_pair_counts(
-    df: DataFrame,
-    key_col: str,
-    text_col: str,
-    shingle_k: int,
-    max_shingle_doc_freq: int | None,
-) -> DataFrame:
-    """Shared skeleton of the exact set-overlap pair operators: distinct
-    k-shingles per doc → hot-shingle cap → self-join on shingle digest →
-    (key1, key2, i, na, nb) with i = |A∩B| and na/nb the distinct-shingle
-    set sizes. Jaccard and containment are projections over this frame.
-
-    r6 shape: shingle STRINGS never leave the map side — each shingle
-    reduces to its xxhash64 digest in the same projection that builds it,
-    and the (key, digest) stream is globally .distinct()-ed (replacing
-    the per-doc array_distinct, an O(n²) string-compare pass per doc).
-    What gets localCheckpointed is that narrow post-distinct frame — two
-    longs per row — instead of the r5 shingle-ARRAY frame (~50 bytes per
-    shingle of string payload written + re-read 4×). Set identity: the
-    exploded distinct (key, digest) rows ≡ explode(array_distinct(...))
-    digested, so sizes, doc-freqs and intersections are unchanged
-    (digest-equality in place of string-equality is the standing
-    gotcha-9 convention — the minhash family already counts xxhash64
-    digests). Eager, because the hot set re-enters as a BROADCAST and
-    concurrent broadcast jobs race a lazy checkpoint into double
-    execution (gotcha 44).
-
-    Construction additionally materializes the per-doc size frame
-    (it is consumed by both the na and nb join sides)."""
-    # lead-window shingle rows (see shingle_hash_rows: 4× over the
-    # interpreted HOF transform; its window exchange also spreads a
-    # few-split scan, so no _spread_small_input here)
-    sh = (
-        shingle_hash_rows(df, key_col, text_col, shingle_k)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if max_shingle_doc_freq is not None:
-        # the hot set is small (boilerplate vocabulary) — checkpoint it
-        # eagerly so its aggregate runs once, not once per broadcast copy
-        hot = (
-            sh.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") > max_shingle_doc_freq)
-            .select("s")
-            .localCheckpoint(eager=True)
-        )
-        sh = sh.join(F.broadcast(hot), "s", "left_anti")
-    # sizes is consumed twice (na and nb) — checkpointed so the 6M-row
-    # scan + aggregate runs once, not once per join side (the r6.0 plan
-    # ran the identical subplan twice, ops 28-30/41-43 in
-    # plans/r06/ngram_jaccard_pairs_after.txt)
-    sizes = (
-        sh.groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    other = sh.select(F.col("key").alias("key2"), "s")
-    # The co-occurrence aggregate (~127M narrow rows into ~114M groups
-    # at 50k docs) is the operator's converged floor: a packed
-    # single-long pair key ((key1<<32)+key2) measured bit-identical
-    # results but FLAT wall-clock once the JIT converges (14.5 vs 15.0 s
-    # over 3 fresh-session runs each — an initial 2x reading was
-    # warm-up-order contamination, gotcha 31), so the simpler two-column
-    # groupBy stays.
-    inter = (
-        sh.join(other, "s")
-        .filter(F.col("key") < F.col("key2"))
-        .groupBy(F.col("key").alias("key1"), "key2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("key").alias("key1"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("key").alias("key2"), F.col("n").alias("nb"))
-    return inter.join(sa, "key1").join(sb, "key2")
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.2,
-    max_shingle_doc_freq: int | None = 1000,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs ≥ threshold:
-    explode distinct shingles → self-join on shingle → |∩| / (|A|+|B|-|∩|).
-
-    max_shingle_doc_freq drops shingles appearing in more than N docs
-    before the self-join — the standard guard against quadratic blowup on
-    boilerplate shingles at corpus scale. Defaulted (1000): the uncapped
-    configuration goes quadratic on boilerplate at corpus scale, so opting
-    OUT (None) must be explicit. Note the dropped hot shingles also leave
-    the |A|/|B| set sizes, so Jaccard values shift slightly vs uncapped —
-    the standard approximation trade, disclosed.
-
-    Contract: `key_col` must be unique per row. Rows sharing a key are
-    shingled as one document (shingle_hash_rows orders words per key), so
-    a duplicate key yields phantom shingles spanning the copies and
-    plausible but wrong scores; nothing checks this. Deduplicate or key
-    by a row id first.
-
-    Side effect: CONSTRUCTION runs the corpus scan eagerly (the shared
-    skeleton checkpoints its digest frame eager — r5 ADVICE disclosure;
-    gotcha 44 explains why lazy is unsafe here)."""
-    base = _shingle_pair_counts(df, key_col, text_col, shingle_k, max_shingle_doc_freq)
-    return base.select(
-        "key1",
-        "key2",
-        F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias(
-            "jaccard"
-        ),
-    ).filter(F.col("jaccard") >= threshold)
-
-
-def ngram_containment_pairs(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.8,
-    max_shingle_doc_freq: int | None = 1000,
-) -> DataFrame:
-    """Asymmetric near-dup pairs by shingle CONTAINMENT (Broder):
-    C = |A∩B| / min(|A|, |B|), with the directional ratios alongside.
-    Jaccard is blind to supersets — a document quoted whole inside a page
-    10× its length scores jaccard ≤ ~0.1 but containment 1.0 — so this is
-    the operator for quote-expansion chains, syndicated articles wrapped
-    in differing chrome, and partial mirrors. Same capped one-scan shape
-    as ngram_jaccard_pairs (shared skeleton; the hot-shingle cap bounds
-    the quadratic identically). Construction runs the corpus scan
-    eagerly (shared-skeleton checkpoint — r5 ADVICE disclosure).
-
-    Contract: `key_col` must be unique per row, as for
-    ngram_jaccard_pairs — a duplicate key merges its rows' words into
-    phantom shingles and the scores come out wrong without an error."""
-    base = _shingle_pair_counts(df, key_col, text_col, shingle_k, max_shingle_doc_freq)
-    return base.select(
-        "key1",
-        "key2",
-        F.round(F.col("i") / F.col("na"), 6).alias("containment_1"),
-        F.round(F.col("i") / F.col("nb"), 6).alias("containment_2"),
-        F.round(F.col("i") / F.least("na", "nb"), 6).alias("containment"),
-    ).filter(F.col("containment") >= threshold)
-
-
-def _token_long_hash(w: Column) -> Column:
-    """Portable 60-bit token hash: first 15 hex chars of md5. Chosen over
-    xxhash64 so DuckDB oracles reproduce it bit-for-bit
-    (CAST('0x' || substr(md5(w),1,15) AS BIGINT)); 60 bits stay clear of
-    the int64 sign bit on both engines."""
-    return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
 
 
 #: Edge-count bound for the driver union-find shortcut in the
@@ -881,213 +621,6 @@ def dedup_clusters(
     return cc.select(
         "node", "component", (F.col("node") == F.col("component")).alias("is_survivor")
     )
-
-
-def contamination_check(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 5,
-    broadcast_benchmark: bool = True,
-) -> DataFrame:
-    """Train/test contamination detection: corpus documents sharing ≥1
-    k-word shingle with a benchmark/eval set → (doc_id, n_shared_shingles,
-    n_shingles, overlap_frac). The standard pre-training hygiene check
-    (eval answers leaking into training data).
-
-    Scale shape: benchmark shingles are DISTINCT hashes of a small eval
-    set → broadcast semi-join against the corpus's exploded shingle hashes
-    (no shuffle of the corpus); only 64-bit hashes move, never text. For a
-    large benchmark set, pass broadcast_benchmark=False to fall back to a
-    shuffle join on the shingle hash.
-
-    ONE corpus scan: the per-doc shingle count rides the exploded rows
-    (size of the array computed before the explode) instead of a separate
-    sizes aggregate — referencing the exploded frame from two branches
-    would re-run the whole split+shingle+md5 pipeline twice (CLAUDE.md
-    gotcha 16; plan-gated in tests)."""
-    bench_shingles = (
-        benchmark.select(
-            # gotcha 43; shingles never empty (whole-text fallback)
-            F.explode_outer(word_shingles(F.col(text_col), shingle_k)).alias("s")
-        )
-        .select(_token_long_hash(F.col("s")).alias("h"))
-        .distinct()
-    )
-    if broadcast_benchmark:
-        bench_shingles = F.broadcast(bench_shingles)
-    staged = _spread_small_input(corpus).select(
-        F.col(key_col).alias("key"),
-        word_shingles(F.col(text_col), shingle_k).alias("__sh"),
-    )
-    corpus_shingles = staged.select(
-        "key",
-        F.size("__sh").alias("n_shingles"),
-        F.explode_outer("__sh").alias("s"),  # gotcha 43; never empty
-    ).select("key", "n_shingles", _token_long_hash(F.col("s")).alias("h"))
-    hits = (
-        corpus_shingles.join(bench_shingles, "h")
-        .groupBy("key")
-        .agg(
-            F.count(F.lit(1)).alias("n_shared_shingles"),
-            F.first("n_shingles").alias("n_shingles"),
-        )
-    )
-    return hits.select(
-        F.col("key").alias(key_col),
-        "n_shared_shingles",
-        "n_shingles",
-        F.round(F.col("n_shared_shingles") / F.col("n_shingles"), 6).alias(
-            "overlap_frac"
-        ),
-    )
-
-
-def simhash(text_col: str | Column, bits: int = 60, portable: bool = True) -> Column:
-    """SimHash over whitespace tokens as a bigint, expression-only:
-    per-token hash → ±1 per bit position → sign of the column sum.
-
-    portable=True (default) uses the md5-prefix hash (bits ≤ 60) so DuckDB
-    oracles reproduce the signature bit-for-bit; portable=False swaps in
-    xxhash64 — ~3× cheaper per token, the production choice when
-    cross-engine reproducibility is not required (near-dup quality is
-    equivalent: both are uniform hashes).
-
-    aggregate() folds an array<int> of per-bit counters across tokens —
-    all inside whole-stage codegen, no Python."""
-    if portable and bits > 60:
-        raise ValueError("simhash: bits must be <= 60 (portable hash width)")
-    words = _ws_words(text_col)
-    zero = F.array_repeat(F.lit(0), bits)
-
-    # Hash in a SEPARATE transform stage: the fold below references the
-    # hash `bits` times, and referencing an expression subtree N times
-    # inside a lambda makes codegen re-evaluate it N× (measured 25× slower
-    # with md5 hashed inside the step). A lambda VARIABLE is a bound
-    # reference — free to reference repeatedly.
-    hashes = F.transform(
-        words, (lambda w: _token_long_hash(w)) if portable else (lambda w: F.xxhash64(w))
-    )
-
-    def step(acc, h):
-        # bit positions unrolled in Python: shiftright needs literal ints
-        deltas = F.array(
-            *[((F.shiftright(h, b) % 2 != 0).cast("int") * 2 - 1) for b in range(bits)]
-        )
-        return F.zip_with(acc, deltas, lambda a, d: a + d)
-
-    counters = F.aggregate(hashes, zero, step)
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        bit = F.when(
-            F.element_at(counters, b + 1) > 0,
-            F.shiftleft(F.lit(1).cast("long"), b),
-        ).otherwise(F.lit(0).cast("long"))
-        out = out.bitwiseOR(bit)
-    return out
-
-
-def hamming_bucket_pairs(
-    chunks: DataFrame, max_hamming: int, max_bucket_size: int
-) -> DataFrame:
-    """Shared hamming-LSH candidate machinery over a chunked-hash frame
-    (key, h:long, chunk_id, chunk): bucket on (chunk_id, chunk), expand
-    pairs in-expression (groupBy + sorted collect_list — NOT a self-join,
-    which would recompute the upstream hash pipeline for both sides and
-    shuffle it twice; gotcha 16), verify exact hamming via
-    bit_count(xor). sort_array orders members by key so array order gives
-    key1 < key2 for free. max_bucket_size drops degenerate hot buckets
-    (quadratic in one task at corpus scale — recall trade, disclosed by
-    every LSH path here). Used by simhash (4 x 15-bit chunks), image
-    pHash and audio fingerprints (4 x 16-bit chunks)."""
-    buckets = (
-        chunks.groupBy("chunk_id", "chunk")
-        .agg(F.sort_array(F.collect_list(F.struct("key", "h"))).alias("ms"))
-        .filter((F.size("ms") > 1) & (F.size("ms") <= max_bucket_size))
-    )
-    # outer: size(ms) > 1 makes the expansion non-empty (gotcha 43)
-    pairs = buckets.select(
-        F.explode_outer(
-            F.flatten(
-                F.expr(
-                    "transform(ms, (x, i) -> transform(slice(ms, i + 2, size(ms)), "
-                    "y -> struct(x.key AS key1, y.key AS key2, x.h AS h1, y.h AS h2)))"
-                )
-            )
-        ).alias("p")
-    ).select(
-        "p.key1",
-        "p.key2",
-        F.bit_count(F.col("p.h1").bitwiseXOR(F.col("p.h2"))).alias("hamming"),
-    )
-    return pairs.distinct().filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    key_col: str,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    portable: bool = True,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """SimHash near-dup candidates: docs whose 60-bit simhashes differ in
-    ≤ max_hamming bits. Buckets by 4 × 15-bit chunks (pigeonhole: any pair
-    within hamming ≤3 shares at least one chunk) then verifies exact
-    hamming via bit_count(xor).
-
-    max_bucket_size drops degenerate hot buckets (boilerplate docs sharing
-    a 15-bit chunk) whose pair expansion is quadratic IN ONE TASK at corpus
-    scale — same cap + disclosure as the minhash LSH path. Dropped-bucket
-    pairs are simply not candidates (recall trade, standard at scale); a
-    pair pruned from one hot chunk can still surface via its 3 other
-    chunks.
-
-    Physical shape (measured): signatures via explode(words) → ONE
-    whole-stage-codegen hash aggregation with 60 conditional sums — 7×
-    faster than folding per-row arrays with aggregate()/zip_with (HOF
-    lambdas are interpreted per element and allocate a 60-int array per
-    word). The explode shuffle moves (key, 60 ints) partial-agg rows, not
-    words. Memory stays flat however long the documents are."""
-    bits = 60
-    words = _spread_small_input(df).select(
-        F.col(key_col).alias("key"),
-        F.explode_outer(_ws_words(text_col)).alias("w"),  # gotcha 43
-    ).filter(F.col("w").isNotNull())
-    hashed = words.select(
-        "key", (_token_long_hash(F.col("w")) if portable else F.xxhash64("w")).alias("h")
-    )
-    counters = hashed.groupBy("key").agg(
-        *[
-            F.sum((F.shiftright("h", b) % 2 != 0).cast("int") * 2 - 1).alias(f"c{b}")
-            for b in range(bits)
-        ]
-    )
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out.bitwiseOR(
-            F.when(
-                F.col(f"c{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    sh = counters.select("key", out.alias("h"))
-    chunks = sh.select(
-        "key",
-        "h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_id"),
-                        F.shiftright("h", 15 * i).bitwiseAND(F.lit(0x7FFF)).alias("chunk"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("key", "h", "c.chunk_id", "c.chunk")
-    return hamming_bucket_pairs(chunks, max_hamming, max_bucket_size)
 
 
 def cluster_survivors(

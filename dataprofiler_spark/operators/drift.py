@@ -1,4 +1,4 @@
-"""Distribution-drift detection: histograms, PSI, chi-squared, token-frequency.
+"""Distribution-drift detection: histograms, PSI, chi-squared, token sketches.
 
 The reference's "drift" is metric-delta display and schema/inventory set-diffs
 (/root/reference/dashboard/backend/app.py:429-436, 1094-1177) — it has NO
@@ -6,6 +6,11 @@ distributional test. The north_star requires PSI / chi-squared over n_tok
 histograms and token-frequency sketches vs a stored baseline profile, so this
 module is a designed extension (SURVEY.md §2.4 A15), built as plain DataFrame
 math: no UDF and no join.
+
+Token-frequency drift has no function of its own: `pipeline.run_validation`
+passes the exploded (partition, token) rows to `drift_by_group`, whose merge
+aggregate counts them. `token_count_min_sketch` is the bounded-memory count
+sketch of the same stream.
 
 Scale shape: a histogram of a 10^12-row table is groupBy(bucket) over ~1e3
 buckets → partial aggregation collapses everything map-side. Every
@@ -319,39 +324,6 @@ def categorical_entropy(
     return joined.groupBy(*group_by).agg(
         F.round(-F.sum(p * F.log(p)), 6).alias("entropy"),
         F.count(F.lit(1)).alias("n_classes"),
-    )
-
-
-def token_frequency(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    top_k: int | None = None,
-) -> DataFrame:
-    """Per-token counts via explode + groupBy: (token, cnt).
-
-    At 10^12-row scale explode multiplies rows ~100×, but the groupBy
-    is over a bounded vocab (~50k keys) so map-side partial aggregation
-    collapses the explosion within each task; the shuffle moves only
-    |vocab| × partitions rows. top_k orders by (cnt desc, token) for a
-    deterministic cut."""
-    freq = (
-        df.select(F.explode(tokens_col).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    if top_k is not None:
-        freq = freq.orderBy(F.desc("cnt"), F.asc("token")).limit(top_k)
-    return freq
-
-
-def token_frequency_psi(
-    baseline_freq: DataFrame, current_freq: DataFrame, eps: float = 1e-9
-) -> float:
-    """PSI over token-frequency distributions (north_star drift surface)."""
-    return psi(
-        baseline_freq.withColumnRenamed("token", "bucket"),
-        current_freq.withColumnRenamed("token", "bucket"),
-        eps=eps,
     )
 
 

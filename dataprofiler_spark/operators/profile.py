@@ -34,22 +34,14 @@ Deliberate divergence from the reference (SURVEY.md §4.3): the reference's
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-@dataclass(frozen=True)
-class ProfileConfig:
-    """exact=True for parity tests (small data); exact=False switches
-    distinct→HLL++ and median→approx_percentile for the 10^12-row path."""
-
-    exact: bool = True
-    approx_rsd: float = 0.02
-    prop_decimals: int = 4  # metrics.py:404-405
-    num_decimals: int = 6  # metrics.py:410-413
+#: HLL++ relative standard deviation of the approx-mode distinct count
+APPROX_RSD = 0.02
+PROP_DECIMALS = 4  # metrics.py:404-405
+NUM_DECIMALS = 6  # metrics.py:410-413
 
 
 def is_numeric(dt: T.DataType) -> bool:
@@ -65,23 +57,22 @@ def is_minmax_supported(dt: T.DataType) -> bool:
 
 def _metric_struct(
     field: T.StructField,
-    cfg: ProfileConfig,
-    distinct_col: str | None,
+    exact: bool,
     inline_median: bool = False,
 ) -> Column:
     """Non-distinct aggregates for one column, as a uniform struct (so
     per-column structs can be stacked into an array and exploded to long
-    format). The distinct count is injected from `distinct_col` (a column
-    of the joined distinct pass) in exact mode, or computed inline via
-    HLL++ in approx mode — see `profile` for why."""
+    format). The distinct count is merged from the joined distinct pass
+    in exact mode, or computed inline via HLL++ in approx mode — see
+    `profile` for why."""
     c = F.col(field.name)
     dt = field.dataType
     null_d = F.lit(None).cast("double")
 
     distinct = (
-        F.approx_count_distinct(c, cfg.approx_rsd)
-        if distinct_col is None
-        else F.lit(None)  # merged from the distinct pass after the join
+        F.lit(None)  # merged from the distinct pass after the join
+        if exact
+        else F.approx_count_distinct(c, APPROX_RSD)
     )
 
     if is_minmax_supported(dt):
@@ -100,7 +91,7 @@ def _metric_struct(
 
     if is_numeric(dt):
         avg = F.avg(c)
-        if not cfg.exact:
+        if not exact:
             med = F.percentile_approx(c, F.lit(0.5), F.lit(10_000)).cast("double")
         elif inline_median:
             med = F.percentile(c, F.lit(0.5))
@@ -202,7 +193,7 @@ def profile(
     table_name: str,
     group_by: list[str] | None = None,
     columns: list[str] | None = None,
-    cfg: ProfileConfig | None = None,
+    exact: bool = True,
 ) -> DataFrame:
     """Profile every column of `df` in one distributed pass.
 
@@ -221,8 +212,10 @@ def profile(
     EXPAND (input ×(n_distinct+1)), and mixing that with TypedImperative
     percentile() degrades the whole aggregate to a sort-based fallback —
     measured 6× slower than the two separate purpose-shaped jobs.
+    ``exact=True`` is for parity tests (small data); ``exact=False``
+    switches distinct→HLL++ and median→approx_percentile for the
+    10^12-row path.
     """
-    cfg = cfg or ProfileConfig()
     group_by = group_by or []
     fields = [
         f
@@ -230,7 +223,6 @@ def profile(
         if f.name not in group_by and (columns is None or f.name in columns)
     ]
 
-    distinct_pass = "exact" if cfg.exact else None
     num_ids = [i for i, f in enumerate(fields) if is_numeric(f.dataType)]
     # the split median/distinct pass pays off when several numeric
     # columns share the machinery (measured 12.4 s vs 16.4 s on
@@ -238,17 +230,17 @@ def profile(
     # percentile for 1-2 numeric columns (profile_grouped on the 4 M-row
     # sequence table regressed 5.4 -> 6.3 s) — both paths are bit-equal,
     # so the choice is purely physical
-    use_split_medians = cfg.exact and len(num_ids) >= 3
+    use_split_medians = exact and len(num_ids) >= 3
     aggs = [F.count(F.lit(1)).alias("row_count")]
     aggs += [
-        _metric_struct(f, cfg, distinct_pass, inline_median=not use_split_medians).alias(
+        _metric_struct(f, exact, inline_median=not use_split_medians).alias(
             f"__m_{i}"
         )
         for i, f in enumerate(fields)
     ]
     wide = df.groupBy(*group_by).agg(*aggs)
 
-    if cfg.exact:
+    if exact:
         # Exact distincts for NON-numeric columns only ride the EXPAND
         # pass — numeric columns get their exact distinct count for free
         # from the median unpivot below (one row per distinct value), so
@@ -311,7 +303,7 @@ def profile(
                 )
 
     def _distinct(i: int) -> Column:
-        if not cfg.exact:
+        if not exact:
             return F.col(f"__m_{i}.distinct_count")
         if use_split_medians and is_numeric(fields[i].dataType):
             # from the value-count pass; an all-NULL column has no vc
@@ -340,15 +332,15 @@ def profile(
     rc = F.col("row_count")
     nn = F.col("e.m.not_null_count")
     dc = F.col("e.m.distinct_count")
-    prop = lambda x: F.when(rc > 0, F.round(x / rc, cfg.prop_decimals))  # noqa: E731
-    rnum = lambda x: F.round(x, cfg.num_decimals)  # noqa: E731
-    if cfg.exact:
+    prop = lambda x: F.when(rc > 0, F.round(x / rc, PROP_DECIMALS))  # noqa: E731
+    rnum = lambda x: F.round(x, NUM_DECIMALS)  # noqa: E731
+    if exact:
         is_unique = (dc == nn) & (nn > 0)  # metrics.py:287 exact semantics
     else:
         # HLL++ estimate: exact equality would flap within the rsd band —
         # verdict is "unique within sketch tolerance". The binding check at
         # scale is checks.uniqueness_frame's exact duplicate count.
-        is_unique = (dc >= nn * (1 - 3 * cfg.approx_rsd)) & (nn > 0)
+        is_unique = (dc >= nn * (1 - 3 * APPROX_RSD)) & (nn > 0)
 
     return (
         wide.select(*group_by, rc, F.explode(entries).alias("e"))

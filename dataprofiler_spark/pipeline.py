@@ -19,7 +19,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from dataprofiler_spark.operators.checks import run_sequence_suite
 from dataprofiler_spark.operators.drift import drift_by_group, histogram
-from dataprofiler_spark.operators.profile import ProfileConfig, profile
+from dataprofiler_spark.operators.profile import profile
 from dataprofiler_spark.plans.manifest import (
     NULL_PARTITION,
     Manifest,
@@ -27,6 +27,11 @@ from dataprofiler_spark.plans.manifest import (
     Snapshot,
 )
 from dataprofiler_spark.sinks import append_rows, local_frame, sink_filesystem
+
+#: n_tok histogram bucket width of the drift check. A stored baseline
+#: histogram (cli --write-baseline) must use the same width, or the PSI
+#: compares misaligned buckets.
+NTOK_BUCKET_WIDTH = 16.0
 
 
 @dataclass
@@ -42,7 +47,6 @@ class ValidationConfig:
     # exact metrics and the full-UDF token equality in tests; sketches and
     # the digest-join prefilter (no UDF — the scale path) otherwise
     exact: bool = True
-    drift_bucket_width: float = 16.0  # n_tok histogram bucket
     psi_threshold: float = 0.25  # standard major-shift cut
     output_dir: str | None = None
     manifest_dir: str | None = None
@@ -133,12 +137,7 @@ def run_validation(
         df = df.persist()
         persisted = True
 
-    profiles = profile(
-        df,
-        cfg.table_name,
-        group_by=[cfg.part_col],
-        cfg=ProfileConfig(exact=cfg.exact),
-    )
+    profiles = profile(df, cfg.table_name, group_by=[cfg.part_col], exact=cfg.exact)
     # profiles is aggregate-sized (partitions × columns). When it feeds
     # more than one consumer (expectation verdicts AND the sink write),
     # collect ONCE and rebuild it as a local frame, whose scan runs no job
@@ -174,7 +173,7 @@ def run_validation(
     # (drift_by_group frame, check_name) per drift check
     drifts = []
     if baseline_hist is not None:
-        cur_hist = histogram(df, "n_tok", cfg.drift_bucket_width, group_by=[cfg.part_col])
+        cur_hist = histogram(df, "n_tok", NTOK_BUCKET_WIDTH, group_by=[cfg.part_col])
         drifts.append(
             (drift_by_group(baseline_hist, cur_hist, cfg.part_col), "n_tok_drift_psi")
         )

@@ -17,7 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dataprofiler_spark.operators.profile import ProfileConfig, profile
+from dataprofiler_spark.operators.profile import profile
 from dataprofiler_spark.oracle import profile_sql
 from dataprofiler_spark.sources.tables import load_table
 
@@ -424,63 +424,6 @@ def edit_distance_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ngram_jaccard_pairs_documents",
-    """WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM documents),
-sh_all AS (SELECT doc_id, unnest(CASE WHEN len(ws) >= 3 THEN list_distinct(list_transform(
-        generate_series(1, len(ws)-2), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-       ELSE [array_to_string(ws, ' ')] END) AS s FROM w),
-hot AS (SELECT s FROM sh_all GROUP BY s HAVING COUNT(*) > 1000),
-sh AS (SELECT * FROM sh_all WHERE s NOT IN (SELECT s FROM hot)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-inter AS (SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)
-SELECT key1, key2, ROUND(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = key1 JOIN sizes sb ON sb.doc_id = key2
-WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.2""",
-)
-def ngram_jaccard_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (the verifier for LSH candidates).
-    The hot-shingle doc-frequency cap is ON (operator default, mirrored in
-    the oracle CTE) — the uncapped shape goes quadratic on boilerplate
-    shingles at corpus scale."""
-    from dataprofiler_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", threshold=0.2, max_shingle_doc_freq=1000)
-
-
-@register(
-    "ngram_containment_pairs_documents",
-    """WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM documents),
-sh_all AS (SELECT doc_id, unnest(CASE WHEN len(ws) >= 3 THEN list_distinct(list_transform(
-        generate_series(1, len(ws)-2), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-       ELSE [array_to_string(ws, ' ')] END) AS s FROM w),
-hot AS (SELECT s FROM sh_all GROUP BY s HAVING COUNT(*) > 1000),
-sh AS (SELECT * FROM sh_all WHERE s NOT IN (SELECT s FROM hot)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-inter AS (SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)
-SELECT key1, key2,
-       ROUND(i * 1.0 / sa.n, 6) AS containment_1,
-       ROUND(i * 1.0 / sb.n, 6) AS containment_2,
-       ROUND(i * 1.0 / LEAST(sa.n, sb.n), 6) AS containment
-FROM inter JOIN sizes sa ON sa.doc_id = key1 JOIN sizes sb ON sb.doc_id = key2
-WHERE i * 1.0 / LEAST(sa.n, sb.n) >= 0.5""",
-)
-def ngram_containment_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric (Broder containment) near-dup pairs — supersets and
-    partial mirrors that Jaccard under-scores. Shares the capped
-    pair-count skeleton with the Jaccard entry; only the projection and
-    threshold differ. Window membership: see _HARVEST_FIRST (gotcha 26)."""
-    from dataprofiler_spark.operators.dedup import ngram_containment_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_containment_pairs(
-        docs, "doc_id", threshold=0.5, max_shingle_doc_freq=1000
-    )
-
-
-@register(
     "dedup_exact_prefix_groups",
     """SELECT md5(substr(text, 1, 20)) AS text_hash, COUNT(*) AS copies,
   MIN(doc_id) AS min_key
@@ -496,32 +439,6 @@ def dedup_exact_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("copies"), F.min("doc_id").alias("min_key"))
         .filter(F.col("copies") > 1)
     )
-
-
-def _simhash_pairs_sql(bits: int = 60, max_hamming: int = 3) -> str:
-    """DuckDB oracle reproducing simhash() bit-for-bit: same md5-prefix
-    60-bit token hash, same ±1 bit counters, same sign rule. The oracle
-    verifies ALL pairs (exact); the engine's pigeonhole chunk bucketing is
-    complete for hamming ≤ 3 of 4 chunks, so the results must be equal."""
-    csel = ", ".join(f"SUM(((hv >> {b}) & 1) * 2 - 1) AS c{b}" for b in range(bits))
-    ssel = " + ".join(f"CASE WHEN c{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(bits))
-    return f"""WITH w AS (SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS wd FROM documents),
-h AS (SELECT doc_id, CAST('0x' || substr(md5(wd),1,15) AS BIGINT) AS hv FROM w),
-c AS (SELECT doc_id, {csel} FROM h GROUP BY doc_id),
-s AS (SELECT doc_id, CAST({ssel} AS BIGINT) AS sh FROM c)
-SELECT a.doc_id AS key1, b.doc_id AS key2,
-       CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}"""
-
-
-@register("simhash_near_dup_documents", _simhash_pairs_sql())
-def simhash_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataprofiler_spark.operators.dedup import simhash_near_dup_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = simhash_near_dup_pairs(docs, "doc_id", max_hamming=3)
-    return pairs.select("key1", "key2", F.col("hamming").cast("long").alias("hamming"))
 
 
 # --------------------------------------------------------------------------
@@ -756,13 +673,13 @@ FROM p"""
 
 @register("approx_profile_documents_tolerance", _APPROX_PROFILE_SQL)
 def approx_profile_documents_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ProfileConfig(exact=False) — the one-pass HLL++/percentile_approx
+    """profile(exact=False) — the one-pass HLL++/percentile_approx
     scale configuration — verified against the exact profile: counts are
     value-equal (they stay exact in approx mode); distinct within
     10%+1 of exact (HLL++ rsd=0.02 ⇒ 3σ=6%); median within 1% relative
     (accuracy=10000 ≥ n at test scale)."""
     docs = load_table(spark, sf_dir, "documents")
-    pa = profile(docs, "documents", cfg=ProfileConfig(exact=False)).select(
+    pa = profile(docs, "documents", exact=False).select(
         "column_name",
         "row_count",
         "not_null_count",
@@ -1219,43 +1136,10 @@ def event_value_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-3 additions: contamination, entropy, volume
+# Round-3 additions: entropy, volume
 # anomalies, JSON extraction, correlation matrix — all cheap queries
 # (registered at the end; the heavy oracles sit early in the registry).
 # --------------------------------------------------------------------------
-
-
-def _contamination_sql(shingle_k: int = 5, mod: int = 41) -> str:
-    # shingle → portable 60-bit md5-prefix hash, mirrored from the engine;
-    # benchmark membership is the deterministic doc_id % mod split
-    shingle = " || ' ' || ".join(f"ws[i + {j}]" for j in range(shingle_k))
-    return f"""WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ws FROM documents),
-sh AS (SELECT doc_id, CASE WHEN len(ws) >= {shingle_k} THEN list_distinct(list_transform(
-         generate_series(1, len(ws) - {shingle_k - 1}), i -> {shingle}))
-       ELSE [array_to_string(ws, ' ')] END AS ss FROM w),
-hashed AS (SELECT doc_id, unnest(list_transform(ss,
-         s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS h FROM sh),
-bench AS (SELECT DISTINCT h FROM hashed WHERE doc_id % {mod} = 0),
-corpus AS (SELECT * FROM hashed WHERE doc_id % {mod} <> 0),
-sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM corpus GROUP BY doc_id),
-hits AS (SELECT doc_id, COUNT(*) AS n_shared_shingles
-         FROM corpus JOIN bench USING (h) GROUP BY doc_id)
-SELECT doc_id, n_shared_shingles, n_shingles,
-  ROUND(n_shared_shingles * 1.0 / n_shingles, 6) AS overlap_frac
-FROM hits JOIN sizes USING (doc_id)"""
-
-
-@register("contamination_documents", _contamination_sql())
-def contamination_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test contamination check: corpus docs sharing a 5-gram shingle
-    with a deterministic holdout 'benchmark' slice (doc_id % 41 == 0).
-    Broadcast semi-join of 60-bit shingle hashes — text never shuffles."""
-    from dataprofiler_spark.operators.dedup import contamination_check
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 41 != 0)
-    bench = docs.filter(F.col("doc_id") % 41 == 0)
-    return contamination_check(corpus, bench, shingle_k=5)
 
 
 @register(
@@ -1942,7 +1826,7 @@ def source_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace-robust tokenizer and the explode_outer sweep touched the
 # dedup plans; the drift statistics merge baseline and
 # current with one tagged-union aggregate, not a full-outer join), then
-# (3) two late entries with no external row, followed by the head of the
+# (3) one late entry with no external row, followed by the head of the
 # tail in registration order.
 # Everything stays in the registry — the local parity suite
 # (tests/test_oracle_parity.py) still checks every registered entry; this
@@ -1964,12 +1848,9 @@ _NEVER_HARVESTED = [
 # (2) green before, but their operator or oracle changed since their last
 # external row
 _CHANGED_THIS_ROUND = [
-    "contamination_documents",
     "minhash_lsh_pairs_documents",
     "dedup_clusters_documents",
     "dedup_clusters_string_ids",
-    "simhash_near_dup_documents",
-    "ngram_jaccard_pairs_documents",
     "edit_distance_near_pairs",
     "psi_chi2_nchars_split",
     "ks_nchars_split",
@@ -1977,15 +1858,15 @@ _CHANGED_THIS_ROUND = [
     "wasserstein_nchars_split",
 ]
 
-# (3) late entries with no external row, then the first thirty-five tail
+# (3) a late entry with no external row, then the first thirty-nine tail
 # entries in registration order: every slot freed by deleting registry
 # entries (packing, sampling, similarity, textstats, the corpus-level
-# dedup operators) goes to the head of the tail, in registration order.
-# corr_lineitem_by_returnflag and everything registered after it stay in
+# dedup operators, the SimHash / n-gram-pair / contamination entries)
+# goes to the head of the tail, in registration order.
+# robust_anomalies_events and everything registered after it stay in
 # the local-only tail
 _LATE_NEW = [
     "cluster_survivors_quality",
-    "ngram_containment_pairs_documents",
     "profile_documents",
     "profile_orders",
     "profile_lineitem_by_returnflag",
@@ -2021,6 +1902,10 @@ _LATE_NEW = [
     "entropy_source_by_lang",
     "daily_anomalies_events",
     "json_extract_events",
+    "corr_lineitem_by_returnflag",
+    "incremental_median_nchars",
+    "skew_report_documents_by_source",
+    "pii_summary_documents",
 ]
 
 _HARVEST_FIRST = _NEVER_HARVESTED + _CHANGED_THIS_ROUND + _LATE_NEW

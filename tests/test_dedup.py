@@ -1,5 +1,5 @@
 """Dedup operators: exact groups, MinHash-LSH candidates vs exact Jaccard,
-SimHash hamming, survivor selection."""
+connected components, survivor selection."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,8 +9,6 @@ from dataprofiler_spark.operators.dedup import (
     exact_duplicate_groups,
     lsh_candidate_pairs,
     minhash_signature,
-    ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
     word_shingles,
 )
 
@@ -65,59 +63,6 @@ def test_lsh_candidates_contain_true_pairs(spark, docs):
     assert (1, 2) in pairs  # exact dup always collides
     assert (1, 3) in pairs or (2, 3) in pairs  # near dup collides in ≥1 band
     assert (4, 5) not in pairs  # disjoint docs don't
-
-
-def test_ngram_jaccard_exact_value(spark):
-    # doc1: shingles {a b c, b c d}; doc2: {a b c, b c e} → J = 1/3
-    df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id int, text string")
-    rows = ngram_jaccard_pairs(df, "doc_id", threshold=0.0).collect()
-    assert len(rows) == 1
-    assert rows[0].jaccard == pytest.approx(1 / 3, abs=1e-6)
-
-
-def test_ngram_jaccard_hot_shingle_cap(spark):
-    df = spark.createDataFrame(
-        [(i, "common shingle here unique" + str(i)) for i in range(10)],
-        "doc_id int, text string",
-    )
-    # 'common shingle here' appears in all 10 docs → capped out → no pairs
-    out = ngram_jaccard_pairs(df, "doc_id", threshold=0.0, max_shingle_doc_freq=5)
-    assert out.count() == 0
-
-
-def test_simhash_near_dup(spark):
-    # long docs: one changed word out of 64 → few bit flips (simhash is
-    # noisy on short texts where per-bit margins are ±1)
-    base = " ".join(f"word{i}" for i in range(64))
-    rows = [
-        (1, base),
-        (2, base),  # identical
-        (3, base.replace("word63", "changed")),  # near dup
-        (4, " ".join(f"other{i}" for i in range(64))),  # unrelated
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    pairs = {(r.key1, r.key2): r.hamming for r in
-             simhash_near_dup_pairs(df, "doc_id", max_hamming=16).collect()}
-    assert pairs[(1, 2)] == 0  # identical text → identical simhash
-    assert (1, 3) in pairs and 0 < pairs[(1, 3)] <= 16
-    assert (1, 4) not in pairs
-
-
-def test_simhash_hot_bucket_cap(spark):
-    """A degenerate hot bucket (many identical docs → same simhash → all 4
-    chunks collide) must be dropped by max_bucket_size before the quadratic
-    pair expansion; distinct near-dups in small buckets survive."""
-    hot = [(i, "boiler plate text repeated everywhere") for i in range(20)]
-    base = " ".join(f"word{i}" for i in range(64))
-    rows = hot + [(100, base), (101, base)]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    capped = {
-        (r.key1, r.key2)
-        for r in simhash_near_dup_pairs(df, "doc_id", max_bucket_size=10).collect()
-    }
-    assert capped == {(100, 101)}  # hot bucket dropped, small bucket kept
-    uncapped = simhash_near_dup_pairs(df, "doc_id", max_bucket_size=1000).count()
-    assert uncapped == 20 * 19 // 2 + 1  # the quadratic expansion the cap avoids
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
@@ -181,11 +126,32 @@ def test_connected_components_exhaustion_raises(spark):
 
 
 def test_lsh_on_real_documents(spark):
+    from collections import Counter
+    from itertools import combinations
+
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     cand = lsh_candidate_pairs(docs, "doc_id", num_hashes=16, bands=8)
-    verified = ngram_jaccard_pairs(docs, "doc_id", threshold=0.2)
     cand_pairs = {(r.key1, r.key2) for r in cand.collect()}
-    true_pairs = {(r.key1, r.key2) for r in verified.collect()}
+    # ground truth: exact 3-shingle Jaccard >= 0.2 over every pair,
+    # intersections counted through a shingle -> docs index
+    sets = {
+        r.doc_id: set(r.s)
+        for r in docs.select("doc_id", word_shingles("text", 3).alias("s")).collect()
+    }
+    by_shingle: dict = {}
+    for d, ss in sets.items():
+        for sh in ss:
+            by_shingle.setdefault(sh, []).append(d)
+    inter = Counter(
+        pair
+        for ds in by_shingle.values()
+        for pair in combinations(sorted(ds), 2)
+    )
+    true_pairs = {
+        (a, b)
+        for (a, b), i in inter.items()
+        if i / (len(sets[a]) + len(sets[b]) - i) >= 0.2
+    }
     assert len(true_pairs) == 25  # injected near-dups in testdata
     recall = len(cand_pairs & true_pairs) / len(true_pairs)
     assert recall >= 0.9, f"LSH recall {recall} over {len(cand_pairs)} candidates"
@@ -365,28 +331,6 @@ def test_cluster_survivors_priority_and_ties(spark):
     assert out[10].priority == 5.0 and out[11].component == 1
 
 
-def test_containment_catches_superset_jaccard_misses(spark):
-    """A short doc fully quoted inside a much longer one: containment 1.0
-    while Jaccard stays below any useful threshold — the case the
-    asymmetric operator exists for."""
-    from dataprofiler_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    short = "alpha beta gamma delta epsilon"
-    filler = " ".join(f"w{i} x{i} y{i}" for i in range(30))
-    rows = [(1, short), (2, short + " " + filler)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cont = ngram_containment_pairs(df, "doc_id", threshold=0.8).collect()
-    assert len(cont) == 1
-    r = cont[0]
-    assert r.containment == 1.0  # every shingle of doc 1 is inside doc 2
-    assert r.containment_1 == 1.0 and r.containment_2 < 0.1
-    jac = ngram_jaccard_pairs(df, "doc_id", threshold=0.2).collect()
-    assert jac == []  # Jaccard misses the superset at any sane threshold
-
-
 def test_driver_cc_shortcut_matches_distributed(spark):
     """r6: the driver union-find shortcut must produce EXACTLY the
     distributed loop's labels (node -> min component member), including
@@ -411,63 +355,3 @@ def test_driver_cc_shortcut_matches_distributed(spark):
         finally:
             dedup.CC_DRIVER_EDGE_THRESHOLD = old
         assert fast == slow
-
-
-def test_shingle_hash_rows_matches_hof_form(spark):
-    """The lead-window shingle rows must be BAG-identical to
-    explode(word_shingle_hashes(...)) for every k, including the
-    whole-doc fallback (n < k), empty and whitespace-only docs — the
-    short-doc case rides the same window stream via concat_ws's
-    NULL-skipping, so this differential pins that equivalence."""
-    from pyspark.sql import functions as F
-
-    from dataprofiler_spark.operators.dedup import (
-        _ws_words,
-        shingle_hash_rows,
-        word_shingle_hashes,
-    )
-
-    rows = [
-        (1, ""),
-        (2, "one"),
-        (3, "two words"),
-        (4, "now three words"),
-        (5, "a much longer doc with many words in it"),
-        (6, "   \n\t  "),
-        (7, "a b c d e f g h"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for k in (1, 2, 3, 5):
-        old = df.select(
-            F.col("doc_id").alias("key"),
-            F.explode_outer(
-                word_shingle_hashes(_ws_words(F.col("text")), k)
-            ).alias("s"),
-        )
-        new = shingle_hash_rows(df, "doc_id", "text", k)
-        assert old.exceptAll(new).count() == 0, k
-        assert new.exceptAll(old).count() == 0, k
-
-
-def test_contamination_check_planted_leak(spark):
-    """A corpus doc embedding a benchmark 5-gram is flagged with the right
-    shingle counts; clean docs are absent from the report."""
-    from dataprofiler_spark.operators.dedup import contamination_check
-
-    bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog")],
-        "doc_id bigint, text string",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (1, "intro text then the quick brown fox jumps over and more words here"),
-            (2, "completely unrelated words with no overlap at all in this document"),
-        ],
-        "doc_id bigint, text string",
-    )
-    rows = {r.doc_id: r for r in contamination_check(corpus, bench, shingle_k=5).collect()}
-    assert set(rows) == {1}
-    # 'the quick brown fox jumps' and 'quick brown fox jumps over' both leak
-    assert rows[1].n_shared_shingles == 2
-    assert rows[1].n_shingles == 9  # 13 words -> 9 distinct 5-grams
-    assert rows[1].overlap_frac == pytest.approx(2 / 9, abs=1e-6)

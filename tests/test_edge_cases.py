@@ -4,7 +4,7 @@ a 100 TB pipeline WILL contain somewhere. No crashes, sane outputs."""
 
 import pytest
 
-from dataprofiler_spark.operators.profile import ProfileConfig, profile
+from dataprofiler_spark.operators.profile import profile
 
 
 @pytest.fixture(scope="module")
@@ -13,8 +13,8 @@ def empty_docs(spark):
 
 
 def test_profile_empty_table(spark, empty_docs):
-    for cfg in (ProfileConfig(), ProfileConfig(exact=False)):
-        rows = profile(empty_docs, "t", cfg=cfg).collect()
+    for exact in (True, False):
+        rows = profile(empty_docs, "t", exact=exact).collect()
         assert rows == [] or all(r.row_count == 0 for r in rows)
 
 
@@ -39,13 +39,9 @@ def test_dedup_ops_on_empty_and_unicode(spark, empty_docs):
     from dataprofiler_spark.operators.dedup import (
         connected_components,
         lsh_candidate_pairs,
-        ngram_jaccard_pairs,
-        simhash_near_dup_pairs,
     )
 
     assert lsh_candidate_pairs(empty_docs, "doc_id").count() == 0
-    assert simhash_near_dup_pairs(empty_docs, "doc_id").count() == 0
-    assert ngram_jaccard_pairs(empty_docs, "doc_id").count() == 0
     assert connected_components(
         spark.createDataFrame([], "key1 bigint, key2 bigint")
     ).count() == 0
@@ -55,7 +51,7 @@ def test_dedup_ops_on_empty_and_unicode(spark, empty_docs):
          (3, ""), (4, "中文 文本 去重 测试 中文 文本")],
         "doc_id bigint, text string",
     )
-    pairs = {(r.key1, r.key2) for r in simhash_near_dup_pairs(uni, "doc_id").collect()}
+    pairs = {(r.key1, r.key2) for r in lsh_candidate_pairs(uni, "doc_id").collect()}
     assert (1, 2) in pairs  # identical unicode text → identical signature
 
 
@@ -97,20 +93,12 @@ def test_checks_on_empty_input(spark):
 
 
 def test_round3_ops_on_empty_and_degenerate_inputs(spark):
-    """New round-3 operators must not crash or mis-report on empty frames,
-    single-category entropy, or an empty benchmark set."""
-    from dataprofiler_spark.operators.dedup import (
-        connected_components_star,
-        contamination_check,
-    )
+    """New round-3 operators must not crash or mis-report on empty frames
+    or single-category entropy."""
+    from dataprofiler_spark.operators.dedup import connected_components_star
     from dataprofiler_spark.operators.drift import categorical_entropy
     from dataprofiler_spark.operators.growth import daily_count_anomalies
     empty_docs = spark.createDataFrame([], "doc_id bigint, text string, g string")
-
-    # empty corpus / empty benchmark → empty report, no crash
-    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id bigint, text string")
-    assert contamination_check(empty_docs.drop("g"), docs).count() == 0
-    assert contamination_check(docs, empty_docs.drop("g")).count() == 0
 
     # entropy of a constant column is exactly 0 (one class)
     const = spark.createDataFrame([("x",)] * 5, "v string")

@@ -4,8 +4,6 @@ broadcast for dimension joins, whole-stage codegen on the hot path, salted
 exchanges, digest (not payload) shuffles. A regression that silently
 changes the plan shape fails here even if results stay correct."""
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,7 +13,7 @@ from dataprofiler_spark.operators.checks import (
     run_sequence_suite,
     verdicts_and_violations,
 )
-from dataprofiler_spark.operators.profile import ProfileConfig, profile
+from dataprofiler_spark.operators.profile import profile
 from dataprofiler_spark.sources import gen_sources_ref
 
 SF = "/root/testdata/sf0.01"
@@ -90,7 +88,7 @@ def test_equality_full_mode_uses_arrow_udf(spark):
 
 def test_profile_wholestage_codegen(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = profile(docs, "documents", cfg=ProfileConfig(exact=False))
+    q = profile(docs, "documents", exact=False)
     q.collect()  # AQE reveals codegen spans only in the final executed plan
     p = plan_of(q)
     assert "*(" in p  # '*(n)' node prefixes = whole-stage codegen spans
@@ -99,7 +97,7 @@ def test_profile_wholestage_codegen(spark):
 
 def test_exact_profile_is_two_jobs_joined(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(profile(docs, "documents", group_by=["lang"], cfg=ProfileConfig(exact=True)))
+    p = plan_of(profile(docs, "documents", group_by=["lang"], exact=True))
     assert "Expand" in p  # distinct pass (non-numeric columns)
     # r6: exact medians ride a numeric-column unpivot (Generate explode)
     # feeding percentile's FREQUENCY form — the percentile aggregate must
@@ -131,22 +129,6 @@ def test_lsh_has_single_signature_computation(spark):
     # groupBy-bucket design: exactly one scan of documents (a self-join
     # would show two)
     assert p.count("Scan parquet") == 1
-
-
-def test_simhash_pairs_codegen_agg_no_python(spark):
-    """SimHash signatures must be the explode → whole-stage-codegen hash
-    aggregation shape (the round-2 rewrite): one parquet scan, a partial
-    hash aggregate for the 60 conditional sums, and no Python evaluation
-    anywhere."""
-    from dataprofiler_spark.operators.dedup import simhash_near_dup_pairs
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = simhash_near_dup_pairs(docs, "doc_id")
-    p = plan_of(q)
-    assert p.count("Scan parquet") == 1
-    assert "HashAggregate" in p
-    assert "Generate explode" in p
-    assert "EvalPython" not in p  # no Python — expressions only
 
 
 def test_violation_cap_window_keyed_per_partition(spark):
@@ -211,37 +193,15 @@ def test_connected_components_shuffles_narrow_rows(spark):
 
 def test_new_ops_plan_shapes(spark):
     """Round-3 operators keep their designed physical shapes: the
-    contamination benchmark side and the anomaly stats side are BROADCAST
-    (never a shuffle of the corpus against tiny metadata)."""
-    from dataprofiler_spark.operators.dedup import contamination_check
+    anomaly stats side is BROADCAST (never a shuffle of the events
+    against tiny metadata)."""
     from dataprofiler_spark.operators.growth import daily_count_anomalies
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = docs.filter(F.col("doc_id") % 41 == 0)
-    corpus = docs.filter(F.col("doc_id") % 41 != 0)
-    p = plan_of(contamination_check(corpus, bench))
-    assert "BroadcastHashJoin" in p
-    assert "EvalPython" not in p
 
     ev = spark.createDataFrame(
         [("2024-01-01 10:00:00", "a")], "ts_s string, event_type string"
     ).select(F.col("ts_s").cast("timestamp").alias("ts"), "event_type")
     p = plan_of(daily_count_anomalies(ev, "event_type"))
     assert "BroadcastHashJoin" in p
-
-
-def test_contamination_single_corpus_scan(spark):
-    """contamination_check must scan the corpus ONCE (shingle count rides
-    the exploded rows) — a separate sizes aggregate re-ran the whole
-    split+shingle+md5 pipeline."""
-    from dataprofiler_spark.operators.dedup import contamination_check
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = contamination_check(
-        docs.filter(F.col("doc_id") % 41 != 0), docs.filter(F.col("doc_id") % 41 == 0)
-    )
-    # exactly 2 scans total: one corpus side, one benchmark side
-    assert plan_of(q).count("Scan parquet") == 2
 
 
 def test_round3_addition_plan_shapes(spark):
@@ -443,27 +403,6 @@ def test_fertility_and_survivors_plan_shapes(spark):
     assert s.count("- Window [") == 2
 
 
-def test_pair_family_single_corpus_scan(spark):
-    """After the gotcha-36 redesign, ngram_jaccard_pairs must execute its
-    corpus scan exactly ONCE per call (array-frame checkpoint; every
-    consumer re-derives the explode from the cache) — accumulator gate,
-    the CC-test technique."""
-    from dataprofiler_spark.operators.dedup import ngram_jaccard_pairs
-
-    rows = [(i, f"w{i} x{i} y{i} z{i} common tail here") for i in range(6)]
-    acc = spark.sparkContext.accumulator(0)
-
-    @F.udf("string")
-    def tick(s):
-        acc.add(1)
-        return s
-
-    base = spark.createDataFrame(rows, "doc_id long, text string")
-    df = base.select("doc_id", tick("text").alias("text"))
-    ngram_jaccard_pairs(df, "doc_id", threshold=0.1).count()
-    assert acc.value == len(rows), acc.value
-
-
 def test_profile_split_median_wide_pass_stays_hash_aggregate(spark):
     """ONE var-width field in an aggregation buffer pushes the whole
     shared metric pass from HashAggregate to SortAggregate (gotcha-28
@@ -480,48 +419,9 @@ def test_profile_split_median_wide_pass_stays_hash_aggregate(spark):
         (F.col("id") * 3).cast("double").alias("c"),
         F.col("id").cast("string").alias("s"),
     )
-    out = profile(df, "t", group_by=["g"], cfg=ProfileConfig(exact=True))
+    out = profile(df, "t", group_by=["g"], exact=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan, plan
-
-
-def test_shingle_hash_rows_window_partitions_by_key(spark):
-    """The lead-window shingle stage must hash-partition by the doc key
-    — a global window would funnel the whole corpus through ONE sorted
-    partition at scale (the W-lesson). Pins Exchange hashpartitioning on
-    key and no SinglePartition in the shingle subplan."""
-    from dataprofiler_spark.operators.dedup import shingle_hash_rows
-
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    plan = (
-        shingle_hash_rows(df, "doc_id", "text", 3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SinglePartition" not in plan, plan
-    assert "hashpartitioning(key" in plan, plan
-    assert "windowspecdefinition(key" in plan, plan
-
-
-def test_pair_family_sizes_aggregate_materialized_once(spark):
-    """The per-doc size frame feeds BOTH the na and nb join sides; it is
-    checkpointed at construction so the final plan carries exactly one
-    aggregate (the partial+final pair count) — the r6.0 plan re-ran the
-    identical 6M-row sizes subplan once per join side
-    (plans/r06/ngram_jaccard_pairs_after.txt ops 28-30/41-43)."""
-    from dataprofiler_spark.operators.dedup import ngram_jaccard_pairs
-
-    rows = [(i, f"w{i} x{i} y{i} z{i} common tail here") for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = ngram_jaccard_pairs(df, "doc_id", threshold=0.1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # partial + final of the pair-count aggregate and nothing else:
-    # sizes and the hot-shingle set are pre-materialized RDD scans. Whole
-    # node names only: a substring count would also match
-    # ObjectHashAggregate and miss a fall to SortAggregate
-    nodes = re.findall(r"\b(\w*Aggregate)\(", plan)
-    assert nodes == ["HashAggregate", "HashAggregate"], plan
 
 
 def test_spread_probe_never_executes_shuffled_lineage(spark):
@@ -532,7 +432,7 @@ def test_spread_probe_never_executes_shuffled_lineage(spark):
     raw few-split scan path still spreads."""
     from dataprofiler_spark.operators.dedup import (
         _spread_small_input,
-        ngram_jaccard_pairs,
+        lsh_candidate_pairs,
     )
 
     acc = spark.sparkContext.accumulator(0)
@@ -550,15 +450,16 @@ def test_spread_probe_never_executes_shuffled_lineage(spark):
     keys = base.select(tick("text").alias("text"), "doc_id", "g")
     agg = keys.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
     shuffled = keys.join(agg, "g")
-    # Under AQE, ANY localCheckpoint on shuffled lineage (even
-    # eager=False: toRdd finalizes the adaptive plan, executing its
-    # shuffle stages) runs upstream at construction — the invariant is
-    # EXACTLY ONCE per operator, not zero: the unguarded df.rdd probe
-    # added a second full pass (60 ticks per operator, caught here).
-    op = ngram_jaccard_pairs(shuffled, "doc_id", threshold=0.1)
-    assert acc.value == 30, acc.value
+    # an Exchange in the plan: no probe, no repartition, nothing runs
+    assert _spread_small_input(shuffled) is shuffled
+    assert acc.value == 0, acc.value
+    # the operator that spreads its input stays lazy too, and its one
+    # action scans the shuffled lineage once (the unguarded df.rdd probe
+    # added a second full pass)
+    op = lsh_candidate_pairs(shuffled, "doc_id")
+    assert acc.value == 0, acc.value
     assert op.count() >= 0
-    assert acc.value == 30, "a consumer re-executed the shuffled lineage"
+    assert acc.value == 30, "the shuffled lineage ran more than once"
     # raw small scan still spreads to defaultParallelism
     spread = _spread_small_input(base)
     assert (

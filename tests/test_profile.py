@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dataprofiler_spark.operators.profile import ProfileConfig, profile
+from dataprofiler_spark.operators.profile import profile
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +91,7 @@ def test_empty_table(spark):
 
 def test_approx_mode(spark):
     df = spark.range(0, 5000).selectExpr("id", "cast(id % 97 as double) as v")
-    p = prof_map(profile(df, "t", cfg=ProfileConfig(exact=False)))
+    p = prof_map(profile(df, "t", exact=False))
     assert abs(p["id"].distinct_count - 5000) / 5000 < 0.05  # HLL++ rsd
     assert abs(p["v"].median_value - 48.0) <= 1.0
 
@@ -112,7 +112,7 @@ def test_approx_is_unique_tolerates_hll_error(spark):
     5000 unique ids stay 'unique' even when the estimate is off by a
     percent; a clearly duplicated column stays non-unique."""
     df = spark.range(0, 5000).selectExpr("id", "id % 7 as dup")
-    p = prof_map(profile(df, "t", cfg=ProfileConfig(exact=False)))
+    p = prof_map(profile(df, "t", exact=False))
     assert p["id"].is_unique is True
     assert p["dup"].is_unique is False
 

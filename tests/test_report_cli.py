@@ -304,7 +304,6 @@ def test_cli_profile_sink_written_from_collected_rows(spark, tmp_path, monkeypat
     from pyspark.sql import DataFrameWriter
 
     from dataprofiler_spark.cli import main
-    from dataprofiler_spark.operators.profile import ProfileConfig
     from dataprofiler_spark.sources import gen_sequences
 
     calls = []
@@ -316,7 +315,7 @@ def test_cli_profile_sink_written_from_collected_rows(spark, tmp_path, monkeypat
     sink = spark.read.parquet(str(tmp_path / "out" / "data_profiles"))
     want = profile(
         gen_sequences(spark, 2000), "sequences", group_by=["source"],
-        cfg=ProfileConfig(exact=True),
+        exact=True,
     )
     assert sink.columns == want.columns
     assert sorted(map(tuple, sink.collect()), key=str) == sorted(
